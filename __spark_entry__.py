@@ -3351,7 +3351,8 @@ def _correctness_priority() -> list[str]:
     for path in sorted(_glob.glob(_os.path.join(here, "CORRECTNESS_r*.json"))):
         try:
             rnd = int(path.rsplit("_r", 1)[-1].split(".")[0])
-            rows = _json.load(open(path))
+            with open(path) as fh:
+                rows = _json.load(fh)
         except (OSError, ValueError):
             continue
         if not isinstance(rows, dict):

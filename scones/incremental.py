@@ -496,11 +496,20 @@ def merge_blooms(spark: SparkSession, *bloom_dirs: str) -> DataFrame:
     parameter set — OR-ing words of differently-sized filters would
     produce silent false negatives — and carries the parameters through
     for downstream probe validation.  The check is a row-level
-    raise_error, so it costs no extra job."""
+    raise_error, so it costs no extra job.  Mixing legacy (parameterless)
+    inputs with parameterized ones raises ValueError: the legacy words
+    cannot be checked against the others."""
     frames = [spark.read.parquet(d) for d in bloom_dirs]
-    with_params = all(
+    has_params = [
         "m_bits" in f.columns and "n_hashes" in f.columns for f in frames
-    )
+    ]
+    with_params = all(has_params)
+    if any(has_params) and not with_params:
+        legacy = [d for d, h in zip(bloom_dirs, has_params) if not h]
+        raise ValueError(
+            "merge_blooms: mixed inputs — some carry persisted m_bits/"
+            f"n_hashes and {legacy} do not, so the merge cannot be validated"
+        )
     cols = ["widx", "bits"] + (["m_bits", "n_hashes"] if with_params else [])
     words = frames[0].select(*cols)
     for f in frames[1:]:  # per-dir reads: see read_band_index

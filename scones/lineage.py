@@ -27,6 +27,7 @@ so ``format("iceberg")`` drops in.
 
 from __future__ import annotations
 
+import errno
 import glob as globmod
 import os
 import threading
@@ -55,6 +56,13 @@ _EPOCH_LOCK = threading.Lock()
 #: it may belong to a slow in-flight commit (e.g. the watchdog's
 #: abandoned attempt racing the retry; round-4 ADVICE, low).
 TMP_REAP_GRACE_SEC = 300.0
+
+#: os.link errnos that mean "this filesystem has no hard links" — the
+#: only failures commit() answers with the rename fallback; any other
+#: error propagates and nothing is published.
+_NO_HARD_LINKS = frozenset(
+    {errno.EPERM, errno.EOPNOTSUPP, errno.ENOTSUP, errno.EMLINK, errno.EXDEV}
+)
 
 
 class StaleAttemptError(RuntimeError):
@@ -230,7 +238,14 @@ class LineageStore:
                     f"refusing commit of snapshot {snapshot_id}: "
                     "already published (concurrent writer)"
                 ) from None
-            except OSError:
+            except OSError as e:
+                if e.errno not in _NO_HARD_LINKS:
+                    # a real failure (ENOSPC, EIO, ...): publish nothing
+                    try:
+                        os.remove(tmp)
+                    except OSError:
+                        pass
+                    raise
                 # filesystem without hard links: keep the (process-local
                 # fenced) rename path rather than failing the commit
                 os.replace(tmp, final)

@@ -28,6 +28,39 @@ from pyspark.sql import SparkSession
 # rows ≈ 30 MB per batch — still far above per-row overhead territory.
 ARROW_MAX_RECORDS = 16_384
 
+# JVMs that may be alive at once on one host: the suite's shared session
+# plus the one a subprocess test (or a watchdog rebuild) launches.  With
+# Xms=Xmx and AlwaysPreTouch every heap is resident from the start, so
+# each JVM gets half of its 1/LIVE_JVMS share of RAM; the other half is
+# left for Python workers, off-heap buffers and the OS.
+LIVE_JVMS = 2
+MAX_DEFAULT_HEAP_MB = 12 * 1024
+
+
+def host_mem_bytes(meminfo: str = "/proc/meminfo") -> int:
+    """MemTotal of this host, in bytes."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024  # reported in kB
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when ``SCONES_DRIVER_MEM`` is unset: MemTotal /
+    (2 × LIVE_JVMS), at most 12g, at least 512m."""
+    mb = host_mem_bytes(meminfo) // (2 * LIVE_JVMS) // (1 << 20)
+    return f"{max(512, min(mb, MAX_DEFAULT_HEAP_MB))}m"
+
+
+def default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, else one core per CPU of this host."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    return f"local[{cpus}]"
+
 
 def get_spark(
     master: str | None = None,
@@ -37,19 +70,19 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with scale-appropriate defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to :func:`default_master`; the driver heap is
+    ``$SCONES_DRIVER_MEM`` or else :func:`default_driver_mem`.
     ``shuffle_partitions`` defaults to 2× the local core count — on a real
     cluster you'd size this to total executor cores (AQE coalesces down).
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = default_master()
     if shuffle_partitions is None:
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
         n = n.split(",")[0]  # local[N,maxFailures] form
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
 
-    mem = os.environ.get("SCONES_DRIVER_MEM", "12g")
+    mem = os.environ.get("SCONES_DRIVER_MEM") or default_driver_mem()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

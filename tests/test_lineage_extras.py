@@ -255,6 +255,32 @@ def test_commit_refuses_overwrite_of_published_manifest(tmp_path):
     assert store.read_all().num_rows == 1
 
 
+def test_commit_link_failure_raises_and_publishes_nothing(tmp_path, monkeypatch):
+    """Only "no hard links here" errnos fall back to rename; any other
+    os.link failure (here ENOSPC) fails the commit with nothing published
+    and no tmp debris."""
+    import errno
+    import glob as globmod
+
+    def link_fails(code):
+        def fake_link(src, dst):
+            raise OSError(code, os.strerror(code))
+
+        return fake_link
+
+    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(os, "link", link_fails(errno.ENOSPC))
+    with pytest.raises(OSError) as exc:
+        store.commit(1, _fake_rows(1))
+    assert exc.value.errno == errno.ENOSPC
+    assert store.read_all().num_rows == 0
+    assert not globmod.glob(str(tmp_path / "ckpt" / "lineage" / "*"))
+
+    monkeypatch.setattr(os, "link", link_fails(errno.EXDEV))
+    store.commit(1, _fake_rows(1))  # rename fallback publishes
+    assert store.committed_snapshots() == [1]
+
+
 def test_manifest_compaction_end_to_end_resume_and_time_travel(spark, tmp_path):
     """Compaction under the real pipeline: snapshots land, manifest folds,
     resume stays a no-op and as-of reads are unchanged."""

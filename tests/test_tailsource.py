@@ -261,3 +261,103 @@ def test_range_split_bytes_read_sums_all_units(spark, tmp_path):
     # never a single unit's 250
     assert s["bytes_read"][str(f)] >= 1000
     assert s["bytes_read"][str(f)] < 1100
+
+
+def test_assign_work_units_balanced_and_deterministic():
+    """Greedy largest-first dealing: min(units, n_parts) groups, every unit
+    in exactly one, no group heavier than the lightest by more than its
+    own largest unit, and the same plan for any input order."""
+    import random
+
+    from scones.tailsource import assign_work_units
+
+    rng = random.Random(7)
+    units = [
+        (f"/logs/f{i:02d}.log", 0, rng.randrange(1, 5000), True) for i in range(23)
+    ]
+    for n_parts in (1, 4, 8, 23, 64):
+        groups = assign_work_units(units, n_parts)
+        assert len(groups) == min(len(units), n_parts)
+        assert sorted(u for g in groups for u in g) == sorted(units)
+        loads = [sum(e - s for _, s, e, _ in g) for g in groups]
+        for g, load in zip(groups, loads):
+            assert load - min(loads) <= max(e - s for _, s, e, _ in g)
+        assert assign_work_units(list(reversed(units)), n_parts) == groups
+    assert assign_work_units([], 4) == []
+
+
+def test_units_share_tasks_balanced_by_planned_bytes(spark, tmp_path):
+    """More units than cores: read_tail frames them in exactly
+    min(units, defaultParallelism) partitions, each unit in one partition
+    (the one assign_work_units picked), partitions balanced by planned
+    bytes, and the lines equal the oracle framing of each file."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from scones.oracle import frame_bytes
+    from scones.tailsource import assign_work_units, read_tail, split_work_units
+
+    rng = random.Random(29)
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    n_cores = spark.sparkContext.defaultParallelism
+    work = []
+    for i in range(n_cores + 1):
+        f = logs / f"f{i:02d}.log"
+        body = b"".join(
+            f"{i}.{j} ".encode() + b"w" * rng.randrange(0, 40) + (b"\r\n" if j % 3 == 0 else b"\n")
+            for j in range(rng.randrange(5, 120))
+        )
+        f.write_bytes(body + b"partial")
+        work.append((str(f), 0))
+    big = logs / "big.log"  # short lines: every 600-byte range owns a line
+    big.write_bytes(b"".join(f"big {j}\n".encode() for j in range(500)))
+    work.append((str(big), 0))
+    max_range_bytes = 600
+
+    units = split_work_units(work, max_range_bytes)
+    assert sum(1 for u in units if u[0] == str(big)) > 1
+    assert len(units) > n_cores
+
+    df = read_tail(spark, work, max_range_bytes=max_range_bytes)
+    assert df.rdd.getNumPartitions() == min(len(units), n_cores)
+
+    rows = df.select(
+        "src_file", "line", "hwm", "unit_start", F.spark_partition_id().alias("pid")
+    ).collect()
+    pids: dict[tuple[str, int], set[int]] = {}
+    for r in rows:
+        pids.setdefault((r.src_file, r.unit_start), set()).add(r.pid)
+    planned = {(p, s): e - s for p, s, e, _ in units}
+    assert set(pids) == set(planned)
+    assert all(len(p) == 1 for p in pids.values())
+    where = {k: next(iter(p)) for k, p in pids.items()}
+    groups = assign_work_units(units, n_cores)
+    assert where == {(p, s): g for g, grp in enumerate(groups) for p, s, _, _ in grp}
+
+    loads: dict[int, list[int]] = {}
+    for k, pid in where.items():
+        loads.setdefault(pid, []).append(planned[k])
+    lightest = min(sum(v) for v in loads.values())
+    for sizes in loads.values():
+        assert sum(sizes) - lightest <= max(sizes)
+
+    for path, _ in work:
+        with open(path, "rb") as fh:
+            want = frame_bytes(fh.read())
+        got = sorted(
+            (r.hwm, bytes(r.line)) for r in rows if r.src_file == path and r.line is not None
+        )
+        assert got == list(zip(want.hwms, want.lines)), path
+
+
+def test_tail_snapshot_reports_phase_walls(spark, tmp_path):
+    """run_tail_snapshot reports the same plan/write/audit+commit phase
+    walls as the documents snapshot."""
+    (tmp_path / "logs").mkdir()
+    (tmp_path / "logs" / "a.log").write_bytes(b"one\ntwo\n")
+    s = _snap(spark, tmp_path)
+    assert s["lines"] == 2
+    walls = ("plan_sec", "write_sec", "audit_commit_sec")
+    assert all(isinstance(s[k], float) and s[k] >= 0 for k in walls)
