@@ -53,14 +53,18 @@ class PipelineConfig:
     # a per-doc perplexity side table scored AGAINST THIS MODEL (a real
     # wiki-trained KenLM-style model drops in here)
     lm_model_path: str | None = None
-    extra: dict = field(default_factory=dict)
 
     @classmethod
     def from_json(cls, path: str) -> "PipelineConfig":
+        """Load a config file; a key that names no field is an error, not
+        silently dropped (a misspelt knob would otherwise run with its
+        default)."""
         with open(path) as f:
             raw = json.load(f)
-        known = {k: v for k, v in raw.items() if k in cls.__dataclass_fields__}
-        return cls(**known)
+        unknown = sorted(set(raw) - set(cls.__dataclass_fields__))
+        if unknown:
+            raise ValueError(f"{path}: unknown config keys {unknown}")
+        return cls(**raw)
 
     def to_json(self, path: str) -> None:
         with open(path, "w") as f:

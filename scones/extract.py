@@ -1,4 +1,4 @@
-"""Vectorized framing/extraction over ``html: binary`` columns.
+"""Framing/extraction over ``html: binary`` columns.
 
 This is the Spark-native replacement for the reference's line-framing loop
 (/root/reference/file_reader.go:57-93): split raw bytes on ``\\n``, advance
@@ -18,9 +18,7 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,15 +27,6 @@ from pyspark.sql import functions as F
 _CRLF = re.compile(rb"\r+\n")
 
 EXTRACT_COLS = "extracted binary, n_lines bigint, bytes_read bigint, n_skipped bigint"
-
-
-class _OffsetOverflow(Exception):
-    """Extracted batch would exceed int32 Arrow binary offsets (>2 GiB)."""
-
-
-# Worker-process-global kernel choice (survives across tasks on a reused
-# Python worker): None = not yet calibrated, else bool(use_vectorized).
-_KERNEL_CHOICE: dict[str, bool] = {}
 
 
 def _frame_doc(data: bytes, max_length: int) -> tuple[bytes, int, int, int]:
@@ -65,96 +54,6 @@ def _frame_doc(data: bytes, max_length: int) -> tuple[bytes, int, int, int]:
     return text, len(kept), bytes_read, n_skipped
 
 
-def _frame_batch_vectorized(
-    arr: pa.Array,
-) -> tuple[pa.Array, np.ndarray, np.ndarray]:
-    """Vectorized framing of a whole Arrow binary column (max_length=0).
-
-    Pure numpy over the Arrow buffers — no per-document Python objects:
-      * region of doc i = its bytes up to (incl.) the last newline;
-      * extracted = region minus its final ``\\n`` minus every ``\\r``-run
-        immediately preceding a ``\\n`` (== per-line TrimRight of CR/LF,
-        file_reader.go:80);
-      * bytes_read = region length; n_lines = newline count in region.
-    Returns (extracted BinaryArray, n_lines int64, bytes_read int64).
-    """
-    if arr.null_count:
-        arr = pc.fill_null(arr, b"")
-    arr = pc.cast(arr, pa.large_binary())
-    n = len(arr)
-    offs_all = np.frombuffer(arr.buffers()[1], dtype=np.int64)
-    offs = offs_all[arr.offset : arr.offset + n + 1]
-    base = int(offs[0])
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[base : int(offs[-1])]
-    offs = (offs - base).astype(np.int64)
-    total = data.shape[0]
-    if total == 0:
-        empty = pa.array([b""] * n, pa.binary())
-        z = np.zeros(n, dtype=np.int64)
-        return empty, z.copy(), z.copy()
-
-    nl_pos = np.flatnonzero(data == 10)
-    if nl_pos.size == 0:  # no complete line anywhere in the batch
-        empty = pa.array([b""] * n, pa.binary())
-        z = np.zeros(n, dtype=np.int64)
-        return empty, z.copy(), z.copy()
-    first_idx = np.searchsorted(nl_pos, offs[:-1], "left")
-    last_idx = np.searchsorted(nl_pos, offs[1:], "left") - 1
-    has_nl = last_idx >= first_idx
-    region_end = np.where(has_nl, nl_pos[np.maximum(last_idx, 0)] + 1, offs[:-1])
-    bytes_read = region_end - offs[:-1]
-    n_lines = np.where(has_nl, last_idx - first_idx + 1, 0).astype(np.int64)
-
-    # keep mask: region bytes, minus each region's final \n, minus
-    # \r-runs whose next byte is \n
-    delta = np.zeros(total + 1, dtype=np.int32)
-    np.add.at(delta, offs[:-1], 1)
-    np.add.at(delta, region_end, -1)
-    keep = np.cumsum(delta[:-1]) > 0
-    final_nl = region_end[has_nl] - 1
-    keep[final_nl] = False
-    cr_pos = np.flatnonzero(data == 13)
-    if cr_pos.size:
-        run_starts = np.flatnonzero(np.diff(cr_pos, prepend=-2) > 1)
-        run_ends = np.append(run_starts[1:], cr_pos.size) - 1  # idx into cr_pos
-        end_byte = cr_pos[run_ends] + 1  # byte after each run
-        followed_by_nl = (end_byte < total) & (
-            data[np.minimum(end_byte, total - 1)] == 10
-        )
-        if followed_by_nl.any():
-            crdelta = np.zeros(total + 1, dtype=np.int32)
-            np.add.at(crdelta, cr_pos[run_starts[followed_by_nl]], 1)
-            np.add.at(crdelta, end_byte[followed_by_nl], -1)
-            keep &= ~(np.cumsum(crdelta[:-1]) > 0)
-
-    out_data = data[keep]
-    csum = np.zeros(total + 1, dtype=np.int64)
-    np.cumsum(keep, out=csum[1:])
-    out_offs = csum[np.concatenate(([offs[0]], region_end))]
-    # docs with no newline produce empty output: region_end==start there,
-    # so out_offs is already monotone and correct.
-    if int(out_offs[-1]) > np.iinfo(np.int32).max:
-        # int32 Arrow binary offsets would silently overflow on a >2 GiB
-        # output batch — signal the caller to split the batch (a single
-        # row can never overflow: one Arrow binary cell caps at 2 GiB).
-        raise _OffsetOverflow
-    out_offsets = out_offs.astype(np.int32)
-    # Zero-copy output assembly: both numpy arrays are fresh contiguous
-    # allocations (astype / boolean-mask indexing), so py_buffer wraps
-    # them via the buffer protocol directly — the previous .tobytes()
-    # duplicated the entire output payload (offsets + text bytes) once
-    # more before Arrow ever saw it, a pure memcpy tax on a host whose
-    # DRAM bandwidth is the flagship's bottleneck (A/B in
-    # BENCH/BASELINE.md §Round 5; byte-identity pinned by the golden +
-    # property framing tests either way).
-    extracted = pa.Array.from_buffers(
-        pa.binary(),
-        n,
-        [None, pa.py_buffer(out_offsets), pa.py_buffer(out_data)],
-    )
-    return extracted, n_lines, bytes_read.astype(np.int64)
-
-
 def extract_documents(
     df: DataFrame, max_length: int = 0, html_col: str = "html"
 ) -> DataFrame:
@@ -172,128 +71,30 @@ def extract_documents(
     )
     pass_names = [f.name for f in passthrough]
 
-    import os as _os
-    import time as _time
-
-    # Kernel choice: "1" forces the numpy mask kernel, "0" forces the
-    # per-doc bytes-ops loop, unset/"auto" CALIBRATES once per Python
-    # worker process — both kernels are exact, so the choice is purely
-    # physical.  Calibration slices ~4k rows off the first batch for each
-    # kernel (vectorized timed first so worker warmup noise penalizes IT,
-    # not the loop) and keeps vectorized only if it wins by >25%; the
-    # verdict is cached process-globally so reused workers never re-pay.
-    # (A naive run-both-on-every-task's-first-batch scheme mispicked
-    # under cold-cache noise and cost a measured 1.6-4x regression.)
-    _mode = _os.environ.get("SCONES_VECTORIZED_FRAMING", "auto")
-    _VEC_WIN_MARGIN = 1.25
-    _CAL_ROWS = 4096
-
-    def _loop_arrays(col: pa.Array) -> list[pa.Array]:
-        # per-doc loop of C-speed bytes ops (split/rfind/sub):
-        # single-pass over each doc, minimal auxiliary memory — often
-        # faster than the numpy mask kernel on bandwidth-limited hosts
-        # (the mask kernel touches ~10x the payload in auxiliary arrays).
-        texts: list[bytes] = []
-        n_lines_l: list[int] = []
-        bytes_read_l: list[int] = []
-        n_skipped_l: list[int] = []
-        for data in col.to_pylist():
-            t, nl, br, sk = _frame_doc(data or b"", max_length)
-            texts.append(t)
-            n_lines_l.append(nl)
-            bytes_read_l.append(br)
-            n_skipped_l.append(sk)
-        return [
-            pa.array(texts, pa.binary()),
-            pa.array(n_lines_l, pa.int64()),
-            pa.array(bytes_read_l, pa.int64()),
-            pa.array(n_skipped_l, pa.int64()),
-        ]
-
-    def _vec_arrays(col: pa.Array) -> list[pa.Array]:
-        # vectorized fast path: numpy over the Arrow buffers, zero
-        # per-row Python objects; raises _OffsetOverflow on >2 GiB output
-        extracted, n_lines, bytes_read = _frame_batch_vectorized(col)
-        return [
-            extracted,
-            pa.array(n_lines, pa.int64()),
-            pa.array(bytes_read, pa.int64()),
-            pa.array(np.zeros(len(col), dtype=np.int64), pa.int64()),
-        ]
-
-    def _payload_bytes(col: pa.Array) -> int:
-        return int(pc.sum(pc.binary_length(pc.fill_null(col, b""))).as_py() or 0)
-
-    def _calibrate(batch: pa.RecordBatch) -> None:
-        """Time both kernels on small disjoint slices of ``batch`` and
-        cache the verdict process-globally (pure timing — the slices are
-        re-processed by the winner, so no half-calibrated output).
-
-        The slices are truly disjoint halves: overlapping them would time
-        the loop kernel on cache-warm rows the vectorized kernel just
-        touched (round-2 advice).  Batches too small to split (< 2 rows)
-        skip calibration and default to the loop kernel — at that size
-        kernel choice is irrelevant anyway.
-        """
-        n = batch.num_rows
-        if n < 2:
-            _KERNEL_CHOICE["use_vectorized"] = False
-            return
-        k = min(_CAL_ROWS, n // 2)
-        vec_bps = 0.0
-        t0 = _time.perf_counter()
-        try:
-            c = batch.slice(0, k).column(html_col)
-            _vec_arrays(c)
-            vec_bps = max(_payload_bytes(c), 1) / max(
-                _time.perf_counter() - t0, 1e-9
-            )
-        except _OffsetOverflow:
-            pass
-        c2 = batch.slice(k, k).column(html_col)
-        t1 = _time.perf_counter()
-        _loop_arrays(c2)
-        loop_bps = max(_payload_bytes(c2), 1) / max(
-            _time.perf_counter() - t1, 1e-9
-        )
-        _KERNEL_CHOICE["use_vectorized"] = vec_bps > _VEC_WIN_MARGIN * loop_bps
-
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if max_length > 0 or _mode == "0":
-            use_vectorized = False
-        elif _mode == "1":
-            use_vectorized = True
-        else:
-            use_vectorized = _KERNEL_CHOICE.get("use_vectorized")
-
-        def process(batch: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
-            nonlocal use_vectorized
-            col = batch.column(html_col)
-            if use_vectorized is None:  # auto, first batch in this worker
-                _calibrate(batch)
-                use_vectorized = _KERNEL_CHOICE["use_vectorized"]
-            if max_length > 0:
-                ex_arrays = _loop_arrays(col)
-            elif use_vectorized:
-                try:
-                    ex_arrays = _vec_arrays(col)
-                except _OffsetOverflow:
-                    if batch.num_rows > 1:
-                        mid = batch.num_rows // 2
-                        yield from process(batch.slice(0, mid))
-                        yield from process(batch.slice(mid))
-                        return
-                    ex_arrays = _loop_arrays(col)  # single huge row
-            else:
-                ex_arrays = _loop_arrays(col)
-            arrays = [batch.column(n) for n in pass_names] + ex_arrays
+        # per-doc loop of C-speed bytes ops (split/rfind/sub): one pass
+        # over each doc, minimal auxiliary memory
+        for batch in batches:
+            texts: list[bytes] = []
+            n_lines: list[int] = []
+            bytes_read: list[int] = []
+            n_skipped: list[int] = []
+            for data in batch.column(html_col).to_pylist():
+                t, nl, br, sk = _frame_doc(data or b"", max_length)
+                texts.append(t)
+                n_lines.append(nl)
+                bytes_read.append(br)
+                n_skipped.append(sk)
             yield pa.RecordBatch.from_arrays(
-                arrays,
+                [batch.column(n) for n in pass_names]
+                + [
+                    pa.array(texts, pa.binary()),
+                    pa.array(n_lines, pa.int64()),
+                    pa.array(bytes_read, pa.int64()),
+                    pa.array(n_skipped, pa.int64()),
+                ],
                 pass_names + ["extracted", "n_lines", "bytes_read", "n_skipped"],
             )
-
-        for batch in batches:
-            yield from process(batch)
 
     out = df.mapInArrow(run, out_schema)
     # Lossy string view decoded JVM-side (keeps the Arrow transfer binary-only;

@@ -1,16 +1,25 @@
 """End-to-end pipeline wiring (≈ cmd/butteredscones/butteredscones.go:18-96).
 
-One snapshot run = the reference's full data path re-expressed as a single
-declarative DataFrame plan:
+Every ingest mode runs the one snapshot loop :func:`_run_snapshot` —
+the reference's supervisor loop as one declarative DataFrame plan plus
+driver-side bookkeeping:
 
-    plan new files (lineage anti-join)             ≈ glob + HWM skip (O1/O2)
-    → read parquet (+ _metadata.file_path)         ≈ open + seek
-    → mapInArrow extract (framing, max_length)     ≈ read()/frame (O3/O4/O5)
-    → broadcast host_meta join                     ≈ static fields (O6)
-    → sink_id = crc32(url) % k                     ≈ routing (O9)
-    → observe metrics                              ≈ statistics (O14)
-    → repartition + partitionBy(sink_id) write     ≈ ship (O7/O8/O10)
+    reject knobs the mode cannot honor
+    → plan work from the lineage store             ≈ glob + HWM skip (O1/O2)
+    → read + frame (mapInArrow)                    ≈ open + seek + frame (O3/O4/O5)
+    → static fields                                ≈ decoration (O6)
+    → sink_id route (+ observed metrics)           ≈ routing (O9), statistics (O14)
+    → [spread repartition] + partitionBy(sink_id)  ≈ ship (O7/O8/O10)
+    → audit the written output → lineage rows
+    → dedup index / LM scores (optional side tables)
     → publish lineage (atomic rename)              ≈ ack + Bolt txn (O11)
+    → summary + one persisted metrics row
+
+A mode plugs in a *source* with only what differs: ``plan``, ``read``,
+``route``, ``audit`` (lineage rows + summary fields), the knobs it
+``honors`` and the ``audit_columns`` no static field may overwrite —
+:class:`_DocsSource` for documents / WARC / JSONL (honors every knob),
+:class:`scones.tailsource.TailSource` for tail.
 
 Catalyst handles what the reference hand-built: the scan stage fuses
 extract+enrich+route in one pass over the data (no materialization
@@ -20,7 +29,10 @@ retry channel (O12), the scheduler replaces the reader pool (O13).
 
 from __future__ import annotations
 
+import functools
 import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,9 +40,24 @@ from pyspark.sql import functions as F
 from .config import PipelineConfig
 from .enrich import enrich_broadcast, with_host
 from .extract import extract_documents
+from .jsonl import read_jsonl
 from .lineage import LineageStore, lineage_rows_for, plan_new_files
 from .metrics import observed
-from .route import with_sink_id
+from .route import spread_within_sinks, with_sink_id
+from .warc import read_warc
+
+#: the data knobs of PipelineConfig: a source honors each one or rejects
+#: a non-default value (the others drive the loop and apply to all modes)
+KNOBS = (
+    "host_meta_path",
+    "n_sinks",
+    "max_length",
+    "spread_partitions",
+    "static_fields",
+    "dedup_index",
+    "lm_model_path",
+)
+_DEFAULTS = PipelineConfig(input_glob="", output_dir="", checkpoint_dir="")
 
 
 def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
@@ -40,23 +67,19 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
     default): a snapshot whose input is small relative to the cluster
     would plan fewer splits than cores and leave most of them idle (the
     no-shuffle pipeline's write parallelism == scan parallelism).  Clamp
-    the split size so the scan yields ≈2 splits per core, never above
+    the split size so the scan yields ≈1 split per core, never above
     the 128 MB default (at 100 TB the clamp is a no-op) and never below
-    4 MB (tiny splits = per-task overhead).  On an object store the
+    16 MB (tiny splits = per-task overhead).  On an object store the
     byte total would come from the table catalog, not os.stat.
     """
-    per_core = float(os.environ.get("SCONES_SPLITS_PER_CORE", "1"))
-    if per_core <= 0:
-        return
     total = 0
     for f in files:
         try:
             total += os.path.getsize(f)
         except OSError:
             return  # non-local input: keep defaults
-    cores = spark.sparkContext.defaultParallelism
     open_cost = 256 << 10
-    splits = max(per_core * cores, 1)
+    splits = max(spark.sparkContext.defaultParallelism, 1)
     # 16 MB floor: tasks smaller than that are dominated by fixed
     # per-task cost (python worker handshake, 1 parquet writer per sink,
     # zstd context) — measured 1.4x slower at bench scale.  128 MB
@@ -86,117 +109,114 @@ def _has_part_files(snap_dir: str) -> bool:
     return False
 
 
+def extract_and_enrich(
+    spark: SparkSession, cfg: PipelineConfig, docs: DataFrame
+) -> DataFrame:
+    """(url, html, src_file, ...) documents → framed text + host fields."""
+    df = extract_documents(docs, max_length=cfg.max_length)
+    if cfg.host_meta_path:
+        return enrich_broadcast(df, spark.read.parquet(cfg.host_meta_path))
+    return with_host(df)
+
+
 def build_snapshot_plan(
     spark: SparkSession, cfg: PipelineConfig, files: list[str]
 ) -> DataFrame:
-    """The logical plan for one snapshot over ``files`` (no action run)."""
+    """The documents-mode rows for one snapshot over parquet ``files``:
+    scan → extract → enrich, not yet decorated or routed (no action run)."""
     _tune_input_splits(spark, files)
-    df = (
+    docs = (
         spark.read.parquet(*files)
         .withColumn("src_file", F.col("_metadata.file_path"))
         .drop("text")  # generator-provided expectation; we produce our own
     )
-    df = extract_documents(df, max_length=cfg.max_length)
-    if cfg.host_meta_path:
-        host_meta = spark.read.parquet(cfg.host_meta_path)
-        df = enrich_broadcast(df, host_meta)
-    else:
-        df = with_host(df)
-    for k, v in (cfg.static_fields or {}).items():
-        df = df.withColumn(k, F.lit(v))  # overwrites like the reference
-    return with_sink_id(df, cfg.n_sinks)
+    return extract_and_enrich(spark, cfg, docs)
 
 
-def run_snapshot(
+class _DocsSource:
+    """documents / WARC / JSONL: immutable files admitted whole, framed
+    by the mapInArrow extract, routed by crc32(url).  ``read_docs(spark,
+    files)`` yields raw (url, html, src_file, ...) rows; None = the
+    parquet scan.  Module functions are looked up at call time, so a
+    wrapper installed on ``scones.pipeline`` sees every call."""
+
+    honors = frozenset(KNOBS)
+    audit_columns = frozenset({"src_file", "bytes_read", "sink_id"})
+
+    def __init__(self, mode: str, read_docs=None):
+        self.mode = mode
+        self.read_docs = read_docs
+
+    def idle(self) -> dict:
+        return {"files": [], "rows": 0}
+
+    def plan(self, store: LineageStore, input_glob: str) -> list[str]:
+        return plan_new_files(store, input_glob)
+
+    def read(self, spark: SparkSession, cfg: PipelineConfig, files: list[str]):
+        if self.read_docs is None:
+            return build_snapshot_plan(spark, cfg, files)
+        return extract_and_enrich(spark, cfg, self.read_docs(spark, files))
+
+    def route(self, df: DataFrame, n_sinks: int):
+        return observed(with_sink_id(df, n_sinks))
+
+    def audit(self, written: DataFrame | None, snapshot_id: int, files: list[str]):
+        # zero-row planned files still get a consumed marker
+        rows = lineage_rows_for(written, snapshot_id, planned_files=files)
+        shown = files if len(files) <= 8 else files[:3] + ["..."] + files[-1:]
+        return rows, {"n_files": len(files), "files": shown}
+
+
+def _check_knobs(cfg: PipelineConfig, source) -> None:
+    """Reject, before anything is planned or written, a knob the source
+    cannot honor and a static field that would overwrite a column the
+    offset audit reads."""
+    for knob in KNOBS:
+        value = getattr(cfg, knob)
+        if knob not in source.honors and value != getattr(_DEFAULTS, knob):
+            raise ValueError(f"{source.mode} mode does not honor {knob}={value!r}")
+    clash = sorted(set(cfg.static_fields) & source.audit_columns)
+    if clash:
+        raise ValueError(
+            f"{source.mode} mode: static_fields {clash} would overwrite "
+            "columns the offset audit reads"
+        )
+
+
+def _side_tables(
     spark: SparkSession,
     cfg: PipelineConfig,
-    fail_before_commit: bool = False,
+    store: LineageStore,
+    snapshot_id: int,
+    written: DataFrame,
 ) -> dict:
-    """Process all not-yet-committed input files as one snapshot.
-
-    Returns a summary dict; ``{"snapshot_id": None}`` when nothing new.
-    ``fail_before_commit`` injects a crash between the sink write and the
-    lineage publish (for the resume tests — the reference's
-    crash-between-send-and-ack window, supervisor.go:191-219).
-    """
-    import time as _time
-
-    t_start = _time.perf_counter()
-    store = LineageStore(cfg.checkpoint_dir)
-    store.fence_attempt()  # fence out any abandoned watchdog attempt
-    files = plan_new_files(store, cfg.input_glob)
-    if not files:
-        return {"snapshot_id": None, "files": [], "rows": 0}
-
-    snapshot_id = store.next_snapshot_id()
-    routed = build_snapshot_plan(spark, cfg, files)
-    routed, obs = observed(routed)
-    t_planned = _time.perf_counter()
-
-    # One shuffle: co-locate by sink, spread within sink so a hot sink/host
-    # never lands on a single reducer.
-    if cfg.spread_partitions > 0:
-        from .route import spread_expr
-
-        routed = routed.repartition(
-            cfg.n_sinks * cfg.spread_partitions,
-            F.col("sink_id"),
-            spread_expr("url", cfg.spread_partitions),
-        )
-
-    snap_dir = os.path.join(cfg.output_dir, f"snapshot_id={snapshot_id}")
-    # extracted_str is derivable (cast(extracted as string)) — writing it
-    # would double the payload bytes on every sink.
-    (
-        routed.drop("html", "extracted_str")
-        .write.mode("overwrite")
-        .partitionBy("sink_id")
-        .parquet(snap_dir)
-    )
-    t_written = _time.perf_counter()
-
-    # Lineage from the written output (audit of what actually landed);
-    # zero-row planned files still get a consumed marker.  The empty
-    # case is detected EXPLICITLY (no part-files under snap_dir — an
-    # all-empty snapshot writes only _SUCCESS): any read failure on a
-    # data-bearing snapshot (transient FS error, corrupt footer) must
-    # propagate, never silently commit zero-row consumed markers
-    # (round-2 advice).  On an object store, list via the FS client.
-    if _has_part_files(snap_dir):
-        written = spark.read.parquet(snap_dir)
-        rows = lineage_rows_for(written, snapshot_id, planned_files=files)
-        metrics_empty = False
-    else:
-        rows = lineage_rows_for(None, snapshot_id, planned_files=files)
-        metrics_empty = True
-
-    # Cross-snapshot dedup hook: persist this snapshot's band index and
-    # probe the committed indexes (scones/incremental.py).  Runs before
-    # the lineage commit so the index is durable by the time the
-    # snapshot counts as committed; deterministic overwrite ⇒ a
-    # crash-retry rewrites identical files.
-    dedup_info: dict = {}
-    if cfg.dedup_index and not metrics_empty:
+    """Dedup-index and LM-score hooks, run before the lineage commit so
+    their output is durable once the snapshot counts as committed
+    (deterministic overwrite ⇒ a crash-retry rewrites identical files)."""
+    info: dict = {}
+    if cfg.dedup_index:
+        # Cross-snapshot dedup: persist this snapshot's band index and
+        # probe the committed indexes (scones/incremental.py).
         from .incremental import update_index_and_probe
 
-        dedup_info = update_index_and_probe(
-            spark,
-            cfg.checkpoint_dir,
-            cfg.output_dir,
-            snapshot_id,
-            written,
-            committed_ids=store.committed_snapshots(),
-            threshold=cfg.dedup_threshold,
+        info.update(
+            update_index_and_probe(
+                spark,
+                cfg.checkpoint_dir,
+                cfg.output_dir,
+                snapshot_id,
+                written,
+                committed_ids=store.committed_snapshots(),
+                threshold=cfg.dedup_threshold,
+            )
         )
-
-    # External-LM quality scoring hook (CCNet shape): when the config
-    # names a persisted model (scones.textops.save_lm layout), score
-    # this snapshot's extracted text against it and write the per-doc
-    # perplexity side table — deterministic overwrite, same crash-retry
-    # convention as the dedup index.  The model tables are vocab-sized
-    # (never corpus-sized); unseen text scores via add-one smoothing.
-    lm_info: dict = {}
-    if cfg.lm_model_path and not metrics_empty:
+    if cfg.lm_model_path:
+        # External-LM quality scoring (CCNet shape): score this
+        # snapshot's extracted text against the persisted model
+        # (scones.textops.save_lm layout) into a per-doc perplexity side
+        # table.  The model tables are vocab-sized (never corpus-sized);
+        # unseen text scores via add-one smoothing.
         from .incremental import pipeline_doc_view
         from .textops import lm_perplexity, load_lm
 
@@ -208,43 +228,110 @@ def run_snapshot(
             cfg.checkpoint_dir, "lm_scores", f"snapshot_id={snapshot_id}"
         )
         scores.write.mode("overwrite").parquet(scores_dir)
-        lm_info = {
-            "lm_scores": scores_dir,
-            "n_scored": int(spark.read.parquet(scores_dir).count()),
-        }
+        info["lm_scores"] = scores_dir
+        info["n_scored"] = int(spark.read.parquet(scores_dir).count())
+    return info
+
+
+def _run_snapshot(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    source,
+    fail_before_commit: bool = False,
+) -> dict:
+    """The one snapshot loop every ingest mode runs (module docstring).
+
+    Returns a summary dict: ``snapshot_id``, the source's audit fields,
+    the observed metrics (documents modes), ``output`` and the phase
+    walls; ``{"snapshot_id": None, ...}`` when there was nothing new to
+    commit.  ``fail_before_commit`` injects a crash between the sink
+    write and the lineage publish (for the resume tests — the
+    reference's crash-between-send-and-ack window, supervisor.go:191-219).
+    """
+    _check_knobs(cfg, source)
+    t_start = time.perf_counter()
+    store = LineageStore(cfg.checkpoint_dir)
+    store.fence_attempt()  # fence out any abandoned watchdog attempt
+    work = source.plan(store, cfg.input_glob)
+    if not work:
+        return {"snapshot_id": None, **source.idle()}
+    snapshot_id = store.next_snapshot_id()
+
+    df = source.read(spark, cfg, work)
+    for k, v in cfg.static_fields.items():
+        df = df.withColumn(k, F.lit(v))  # overwrites like the reference
+    routed, obs = source.route(df, cfg.n_sinks)
+    routed = spread_within_sinks(routed, cfg.n_sinks, cfg.spread_partitions)
+    t_planned = time.perf_counter()
+
+    snap_dir = os.path.join(cfg.output_dir, f"snapshot_id={snapshot_id}")
+    # extracted_str is derivable (cast(extracted as string)) — writing it
+    # would double the payload bytes on every sink.
+    (
+        routed.drop("html", "extracted_str")
+        .write.mode("overwrite")
+        .partitionBy("sink_id")
+        .parquet(snap_dir)
+    )
+    t_written = time.perf_counter()
+
+    # Lineage from the written output (audit of what actually landed).
+    # The empty case is detected EXPLICITLY (no part-files under
+    # snap_dir — an empty write leaves only _SUCCESS): any read failure
+    # on a data-bearing snapshot (transient FS error, corrupt footer) must
+    # propagate, never silently commit empty lineage.  On an object
+    # store, list via the FS client.
+    written = spark.read.parquet(snap_dir) if _has_part_files(snap_dir) else None
+    rows, fields = source.audit(written, snapshot_id, work)
+    if not rows:
+        # nothing to commit (a tail whose new bytes hold no complete
+        # line): no snapshot; the same bytes are planned again next time
+        shutil.rmtree(snap_dir, ignore_errors=True)
+        return {"snapshot_id": None, **source.idle()}
+    side = {}
+    if written is not None:
+        side = _side_tables(spark, cfg, store, snapshot_id, written)
 
     if fail_before_commit:
         raise RuntimeError("injected crash between sink write and lineage commit")
 
     store.commit(snapshot_id, rows)
-    t_done = _time.perf_counter()
-    if metrics_empty:
-        # an all-empty snapshot ran zero output tasks → no observed row
-        metrics = {"rows": 0, "payload_bytes": 0, "approx_urls": 0}
-    else:
-        metrics = obs.get
-    summary = {
-        "snapshot_id": snapshot_id,
-        "n_files": len(files),
-        "files": files if len(files) <= 8 else files[:3] + ["..."] + files[-1:],
-        "rows": int(metrics["rows"]),
-        "payload_bytes": int(metrics["payload_bytes"] or 0),
-        "approx_urls": int(metrics["approx_urls"]),
-        "output": snap_dir,
+    t_done = time.perf_counter()
+    summary = {"snapshot_id": snapshot_id, **fields}
+    if obs is not None:
+        # an empty snapshot ran zero output tasks → no observed row
+        m = obs.get if written is not None else {}
+        summary["rows"] = int(m.get("rows", 0))
+        summary["payload_bytes"] = int(m.get("payload_bytes") or 0)
+        summary["approx_urls"] = int(m.get("approx_urls", 0))
+    summary.update(
+        output=snap_dir,
         # phase walls: plan (serial driver), write (the parallel job),
         # audit+commit (serial driver) — for the Amdahl analysis in
         # BENCH/BASELINE.md; at 10^12 rows the serial phases are noise.
-        "plan_sec": t_planned - t_start,
-        "write_sec": t_written - t_planned,
-        "audit_commit_sec": t_done - t_written,
-        **dedup_info,
-        **lm_info,
-    }
-    # durable counters (statistics.go parity, but surviving the process)
+        plan_sec=t_planned - t_start,
+        write_sec=t_written - t_planned,
+        audit_commit_sec=t_done - t_written,
+        **side,
+    )
+    # durable counters (statistics.go parity, but surviving the process);
+    # looked up at call time so a wrapper on scones.statsserver sees it
     from .statsserver import persist_run_metrics
 
     persist_run_metrics(cfg.checkpoint_dir, summary)
     return summary
+
+
+def run_snapshot(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    fail_before_commit: bool = False,
+) -> dict:
+    """Process all not-yet-committed parquet input files as one snapshot.
+
+    Returns a summary dict; ``{"snapshot_id": None}`` when nothing new.
+    """
+    return _run_snapshot(spark, cfg, _DocsSource("documents"), fail_before_commit)
 
 
 def run_warc_snapshot(
@@ -257,9 +344,8 @@ def run_warc_snapshot(
     protocol (shards are immutable → file-granularity admission, like
     the parquet path).
     """
-    from .warc import read_warc
-
-    return _run_docs_snapshot(spark, cfg, read_warc, fail_before_commit)
+    source = _DocsSource("warc", read_warc)
+    return _run_snapshot(spark, cfg, source, fail_before_commit)
 
 
 def run_jsonl_snapshot(
@@ -270,82 +356,8 @@ def run_jsonl_snapshot(
     """JSONL-shard flavor (.jsonl / .jsonl.gz — the other common web-
     corpus distribution format): same lineage/commit protocol; parsing
     is fully JVM-side (see scones/jsonl.py)."""
-    from .jsonl import read_jsonl
-
-    return _run_docs_snapshot(spark, cfg, read_jsonl, fail_before_commit)
-
-
-def _run_docs_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    read_fn,
-    fail_before_commit: bool = False,
-) -> dict:
-    """Shared shard-source snapshot core: ``read_fn(spark, files)`` must
-    yield (url, warc_ts, html binary, lang, src_file, ...) rows; the
-    rest (extract → enrich → route → write → audit → lineage commit) is
-    identical across container formats."""
-    import time as _time
-
-    t_start = _time.perf_counter()
-    store = LineageStore(cfg.checkpoint_dir)
-    store.fence_attempt()  # fence out any abandoned watchdog attempt
-    files = plan_new_files(store, cfg.input_glob)
-    if not files:
-        return {"snapshot_id": None, "files": [], "rows": 0}
-    snapshot_id = store.next_snapshot_id()
-
-    docs = read_fn(spark, files)
-    df = extract_documents(docs, max_length=cfg.max_length)
-    if cfg.host_meta_path:
-        df = enrich_broadcast(df, spark.read.parquet(cfg.host_meta_path))
-    else:
-        df = with_host(df)
-    routed, obs = observed(with_sink_id(df, cfg.n_sinks))
-    t_planned = _time.perf_counter()
-
-    snap_dir = os.path.join(cfg.output_dir, f"snapshot_id={snapshot_id}")
-    (
-        routed.drop("html", "extracted_str")
-        .write.mode("overwrite")
-        .partitionBy("sink_id")
-        .parquet(snap_dir)
-    )
-    t_written = _time.perf_counter()
-
-    # same explicit empty-snapshot detection as run_snapshot (no bare
-    # except — real read failures propagate)
-    if _has_part_files(snap_dir):
-        written = spark.read.parquet(snap_dir)
-        rows = lineage_rows_for(written, snapshot_id, planned_files=files)
-        metrics_empty = False
-    else:
-        rows = lineage_rows_for(None, snapshot_id, planned_files=files)
-        metrics_empty = True
-    if fail_before_commit:
-        raise RuntimeError("injected crash between sink write and lineage commit")
-    store.commit(snapshot_id, rows)
-    t_done = _time.perf_counter()
-    if metrics_empty:
-        metrics = {"rows": 0, "payload_bytes": 0, "approx_urls": 0}
-    else:
-        metrics = obs.get
-    summary = {
-        "snapshot_id": snapshot_id,
-        "n_files": len(files),
-        "files": files if len(files) <= 8 else files[:3] + ["..."] + files[-1:],
-        "rows": int(metrics["rows"]),
-        "payload_bytes": int(metrics["payload_bytes"] or 0),
-        "approx_urls": int(metrics["approx_urls"]),
-        "output": snap_dir,
-        "plan_sec": t_planned - t_start,
-        "write_sec": t_written - t_planned,
-        "audit_commit_sec": t_done - t_written,
-    }
-    from .statsserver import persist_run_metrics
-
-    persist_run_metrics(cfg.checkpoint_dir, summary)
-    return summary
+    source = _DocsSource("jsonl", read_jsonl)
+    return _run_snapshot(spark, cfg, source, fail_before_commit)
 
 
 def snapshot_fn_for_mode(mode: str):
@@ -355,19 +367,9 @@ def snapshot_fn_for_mode(mode: str):
     if mode == "jsonl":
         return run_jsonl_snapshot
     if mode == "tail":
-        from .tailsource import run_tail_snapshot
+        from .tailsource import TailSource
 
-        def run_fn(spark_, cfg_):
-            return run_tail_snapshot(
-                spark_,
-                cfg_.input_glob,
-                cfg_.output_dir,
-                cfg_.checkpoint_dir,
-                n_sinks=cfg_.n_sinks,
-                max_length=cfg_.max_length,
-            )
-
-        return run_fn
+        return functools.partial(_run_snapshot, source=TailSource())
     if mode == "documents":
         return run_snapshot
     raise ValueError(f"unknown pipeline mode: {mode!r}")

@@ -49,6 +49,21 @@ def with_sink_id(df: DataFrame, n_sinks: int, url_col: str = "url") -> DataFrame
     return df.withColumn("sink_id", route_expr(url_col, n_sinks))
 
 
+def spread_within_sinks(
+    routed: DataFrame, n_sinks: int, spread_partitions: int, url_col: str = "url"
+) -> DataFrame:
+    """One shuffle by (sink_id, spread): co-locates each sink's rows while
+    keeping ``spread_partitions``-way parallelism per sink, so a hot sink
+    or host never lands on a single reducer.  0 = no repartition."""
+    if spread_partitions <= 0:
+        return routed
+    return routed.repartition(
+        n_sinks * spread_partitions,
+        F.col("sink_id"),
+        spread_expr(url_col, spread_partitions),
+    )
+
+
 def write_routed(
     df: DataFrame,
     out_dir: str,
@@ -64,13 +79,9 @@ def write_routed(
     With 0, AQE sizes the shuffle.  Overwrite mode keeps the write
     idempotent per snapshot (retry-safe, see lineage.py).
     """
-    routed = with_sink_id(df, n_sinks, url_col)
-    if spread_partitions > 0:
-        routed = routed.repartition(
-            n_sinks * spread_partitions,
-            F.col("sink_id"),
-            spread_expr(url_col, spread_partitions),
-        )
+    routed = spread_within_sinks(
+        with_sink_id(df, n_sinks, url_col), n_sinks, spread_partitions, url_col
+    )
     routed.write.mode("overwrite").partitionBy("sink_id").parquet(out_dir)
 
 

@@ -53,15 +53,18 @@ def metrics_dir(checkpoint_dir: str) -> str:
 def persist_run_metrics(checkpoint_dir: str, summary: dict) -> str | None:
     """Append one metrics row for a completed run (no-op runs skipped).
 
-    ``summary`` is run_snapshot()'s return dict.  Atomic tmp+rename like
-    the lineage publish.
+    ``summary`` is the snapshot core's return dict in any mode:
+    documents / WARC / JSONL count ``rows`` and carry the observed
+    ``payload_bytes`` / ``approx_urls``; tail counts ``lines`` (stored as
+    ``rows``) and observes nothing (0).  Atomic tmp+rename like the
+    lineage publish.
     """
     if summary.get("snapshot_id") is None:
         return None
     row = {
         "run_id": uuid.uuid4().hex,
         "snapshot_id": int(summary["snapshot_id"]),
-        "rows": int(summary.get("rows", 0)),
+        "rows": int(summary.get("rows", summary.get("lines", 0))),
         "payload_bytes": int(summary.get("payload_bytes", 0)),
         "approx_urls": int(summary.get("approx_urls", 0)),
         "n_files": int(summary.get("n_files", len(summary.get("files", [])))),

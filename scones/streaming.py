@@ -20,8 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
-from .enrich import enrich_broadcast, with_host
-from .extract import extract_documents
+from .enrich import with_host
+from .pipeline import extract_and_enrich
 from .route import with_sink_id
 
 CORPUS_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -68,12 +68,7 @@ def stream_source_jsonl(
 def build_stream_plan(
     spark: SparkSession, cfg: PipelineConfig, stream: DataFrame
 ) -> DataFrame:
-    df = extract_documents(stream.drop("text"), max_length=cfg.max_length)
-    if cfg.host_meta_path:
-        host_meta = spark.read.parquet(cfg.host_meta_path)
-        df = enrich_broadcast(df, host_meta)
-    else:
-        df = with_host(df)
+    df = extract_and_enrich(spark, cfg, stream.drop("text"))
     return with_sink_id(df, cfg.n_sinks)
 
 

@@ -7,15 +7,17 @@ frame forward (file_reader.go:57-93), record = {line, host, file, offset}
 (file_reader.go:105-120), commit new offsets only after the sinks accept
 the batch (supervisor.go:210-249).
 
-Spark-side: the driver plans (file, start, end) work units from the
-lineage store and the file sizes observed at plan time; the mapInArrow
-kernel OPENS AND SEEKS each file and reads only ``end - start`` bytes —
-the reference's ``Seek(hwm)`` contract (supervisor.go:315).  A 10 GB
-log that grew by 2 MB costs 2 MB of I/O per snapshot, not 10 GB (the
-round-1 ``binaryFile`` implementation re-read the whole file; the
-bytes-read invariant is pinned in tests/test_tailsource.py).  Framing
-keeps the exact reference semantics: CRLF trim, skip-but-advance,
-partial-line rule.
+The snapshot loop itself (plan → write → audit → commit) is the one core
+in scones.pipeline; this module supplies its tail source,
+:class:`TailSource`.  Spark-side: the driver plans (file, start, end)
+work units from the lineage store and the file sizes observed at plan
+time; the mapInArrow kernel OPENS AND SEEKS each file and reads only
+``end - start`` bytes — the reference's ``Seek(hwm)`` contract
+(supervisor.go:315).  A 10 GB log that grew by 2 MB costs 2 MB of I/O
+per snapshot, not 10 GB (the round-1 ``binaryFile`` implementation
+re-read the whole file; the bytes-read invariant is pinned in
+tests/test_tailsource.py).  Framing keeps the exact reference
+semantics: CRLF trim, skip-but-advance, partial-line rule.
 
 Offset semantics (matches the reference's BoltDB HWM): the committed
 ``offset_end`` is the framed-byte position after the last COMPLETE line,
@@ -47,14 +49,15 @@ from __future__ import annotations
 import glob as globmod
 import heapq
 import os
-import time
 from collections.abc import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .config import PipelineConfig
 from .lineage import LineageStore
+from .pipeline import _run_snapshot
 
 LINE_SCHEMA = (
     "src_file string, line binary, hwm bigint, line_no bigint, "
@@ -246,6 +249,104 @@ def read_tail(
     return ids.mapInArrow(run, LINE_SCHEMA)
 
 
+class TailSource:
+    """Growing log files as a source of the snapshot core
+    (:func:`scones.pipeline._run_snapshot`): work units from the committed
+    high-water marks, lines framed by :func:`read_tail` and decorated
+    with (host, line_str), routed by crc32(file@hwm), audited per unit.
+
+    Honors ``n_sinks``, ``max_length`` and ``static_fields`` (the
+    reference's per-record fields, file_reader.go:112-117).  A line has
+    no url to join host metadata on, spread, dedup or score by, so
+    ``host_meta_path``, ``spread_partitions``, ``dedup_index`` and
+    ``lm_model_path`` are rejected.  :func:`plan_tail_work` is looked up
+    at call time, so a wrapper installed on ``scones.tailsource`` sees
+    every call.
+    """
+
+    mode = "tail"
+    honors = frozenset({"n_sinks", "max_length", "static_fields"})
+    audit_columns = frozenset(
+        {"src_file", "line", "hwm", "frame_end", "bytes_read", "unit_start", "sink_id"}
+    )
+
+    def __init__(self, max_range_bytes: int = 0):
+        self.max_range_bytes = max_range_bytes
+
+    def idle(self) -> dict:
+        return {"lines": 0}
+
+    def plan(self, store: LineageStore, input_glob: str) -> list[tuple[str, int]]:
+        return plan_tail_work(store, input_glob)
+
+    def read(
+        self, spark: SparkSession, cfg: PipelineConfig, work: list[tuple[str, int]]
+    ) -> DataFrame:
+        lines = read_tail(spark, work, cfg.max_length, self.max_range_bytes)
+        return lines.select(
+            "src_file",
+            "line",
+            F.col("line").cast("string").alias("line_str"),
+            "hwm",
+            "line_no",
+            "frame_end",
+            "bytes_read",
+            "unit_start",
+            F.lit(os.uname().nodename).alias("host"),
+        )
+
+    def route(self, df: DataFrame, n_sinks: int):
+        """The route key (src_file, hwm) is unique per line and a pure
+        function of content+provenance — deterministic under retries,
+        unlike the reference's competing-consumer chunk pickup."""
+        key = F.concat("src_file", F.lit("@"), F.col("hwm").cast("string"))
+        sink = F.pmod(F.crc32(F.encode(key, "utf-8")), F.lit(n_sinks))
+        return df.withColumn("sink_id", sink.cast("int")), None
+
+    def audit(self, written: DataFrame | None, snapshot_id: int, work):
+        # exact I/O accounting with range splitting: bytes_read is constant
+        # within a unit, so max-per-unit → sum-per-file is the total bytes
+        # the snapshot actually read from that file (round-2 advice: a bare
+        # per-file max reported one unit's cost when max_range_bytes > 0)
+        agg = (
+            []
+            if written is None
+            else written.groupBy("src_file", "unit_start")
+            .agg(
+                F.count(F.col("line")).alias("n"),  # sentinels don't count
+                F.max("frame_end").alias("frame_end"),
+                F.max("bytes_read").alias("bytes_read"),
+            )
+            .groupBy("src_file")
+            .agg(
+                F.sum("n").alias("n"),
+                F.max("frame_end").alias("frame_end"),
+                F.sum("bytes_read").alias("bytes_read"),
+            )
+            .collect()
+        )
+        starts = dict(work)
+        # files whose new bytes framed nothing complete (only a partial
+        # tail) emit no rows at all — no lineage row, replanned next
+        # snapshot (the ranged read makes that re-plan cost just the
+        # partial bytes)
+        rows = [
+            {
+                "snapshot_id": snapshot_id,
+                "src_file": r["src_file"],
+                "offset_start": starts.get(r["src_file"], 0),
+                "offset_end": int(r["frame_end"]),
+                "row_count": int(r["n"]),
+            }
+            for r in agg
+        ]
+        return rows, {
+            "lines": sum(r["row_count"] for r in rows),
+            "files": [f for f, _ in work],
+            "bytes_read": {r["src_file"]: int(r["bytes_read"]) for r in agg},
+        }
+
+
 def run_tail_snapshot(
     spark: SparkSession,
     input_glob: str,
@@ -257,90 +358,17 @@ def run_tail_snapshot(
     fail_before_commit: bool = False,
 ) -> dict:
     """One incremental tail snapshot: frame new bytes → decorate
-    (host, line_str) → route by crc32(file|hwm) → write → commit offsets.
+    (host, line_str) → route by crc32(file@hwm) → write → commit offsets.
 
-    The route key (src_file, hwm) is unique per line and a pure function
-    of content+provenance — deterministic under retries, unlike the
-    reference's competing-consumer chunk pickup."""
-    t_start = time.perf_counter()
-    store = LineageStore(checkpoint_dir)
-    store.fence_attempt()  # fence out any abandoned watchdog attempt
-    work = plan_tail_work(store, input_glob)
-    if not work:
-        return {"snapshot_id": None, "lines": 0}
-    snapshot_id = store.next_snapshot_id()
-    t_planned = time.perf_counter()
-
-    lines = read_tail(
-        spark, work, max_length=max_length, max_range_bytes=max_range_bytes
+    Returns the snapshot core's summary with ``lines``, ``files``,
+    ``bytes_read`` (per file) and ``output``; ``{"snapshot_id": None,
+    "lines": 0}`` when no complete new line landed."""
+    cfg = PipelineConfig(
+        input_glob,
+        output_dir,
+        checkpoint_dir,
+        n_sinks=n_sinks,
+        max_length=max_length,
+        mode="tail",
     )
-    hostname = os.uname().nodename
-    routed = lines.select(
-        "src_file",
-        "line",
-        F.col("line").cast("string").alias("line_str"),
-        "hwm",
-        "line_no",
-        "frame_end",
-        "bytes_read",
-        "unit_start",
-        F.lit(hostname).alias("host"),
-        F.pmod(
-            F.crc32(F.encode(F.concat("src_file", F.lit("@"), F.col("hwm").cast("string")), "utf-8")),
-            F.lit(n_sinks),
-        ).cast("int").alias("sink_id"),
-    )
-    snap_dir = os.path.join(output_dir, f"snapshot_id={snapshot_id}")
-    routed.write.mode("overwrite").partitionBy("sink_id").parquet(snap_dir)
-    t_written = time.perf_counter()
-
-    written = spark.read.parquet(snap_dir)
-    # exact I/O accounting with range splitting: bytes_read is constant
-    # within a unit, so max-per-unit → sum-per-file is the total bytes
-    # the snapshot actually read from that file (round-2 advice: a bare
-    # per-file max reported one unit's cost when max_range_bytes > 0)
-    agg = (
-        written.groupBy("src_file", "unit_start")
-        .agg(
-            F.count(F.col("line")).alias("n"),  # sentinels don't count
-            F.max("frame_end").alias("frame_end"),
-            F.max("bytes_read").alias("bytes_read"),
-        )
-        .groupBy("src_file")
-        .agg(
-            F.sum("n").alias("n"),
-            F.max("frame_end").alias("frame_end"),
-            F.sum("bytes_read").alias("bytes_read"),
-        )
-        .collect()
-    )
-    if fail_before_commit:
-        raise RuntimeError("injected crash between sink write and offset commit")
-    starts = dict(work)
-    rows = [
-        {
-            "snapshot_id": snapshot_id,
-            "src_file": r["src_file"],
-            "offset_start": starts.get(r["src_file"], 0),
-            "offset_end": int(r["frame_end"]),
-            "row_count": int(r["n"]),
-        }
-        for r in agg
-    ]
-    # files whose new bytes framed nothing complete (only a partial tail)
-    # emit no rows at all — no lineage row, replanned next snapshot (the
-    # ranged read makes that re-plan cost just the partial bytes).
-    store.commit(snapshot_id, rows)
-    t_done = time.perf_counter()
-    return {
-        "snapshot_id": snapshot_id,
-        "lines": int(sum(r["row_count"] for r in rows)),
-        "files": [f for f, _ in work],
-        "output": snap_dir,
-        "bytes_read": {r["src_file"]: int(r["bytes_read"]) for r in agg},
-        # phase walls, as in pipeline.run_snapshot: plan, write (the
-        # framing + sink job), audit+commit
-        "plan_sec": t_planned - t_start,
-        "write_sec": t_written - t_planned,
-        "audit_commit_sec": t_done - t_written,
-    }
+    return _run_snapshot(spark, cfg, TailSource(max_range_bytes), fail_before_commit)

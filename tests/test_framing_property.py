@@ -1,18 +1,16 @@
 """Property-based framing equivalence (hypothesis): for ARBITRARY byte
-strings and max_length values, all three implementations agree:
+strings and max_length values, both implementations agree:
 
   oracle.frame_bytes  (single-threaded reference semantics)
   extract._frame_doc  (the C-call kernel used in the pipeline)
-  extract._frame_batch_vectorized  (the numpy/Arrow backend, max_length=0)
 
 No Spark session needed — these are the pure kernels.
 """
 
-import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from scones.extract import _frame_batch_vectorized, _frame_doc
+from scones.extract import _frame_doc
 from scones.oracle import extract_text, frame_bytes
 
 # bytes heavy in newline/CR to stress the framing edge cases
@@ -31,19 +29,6 @@ def test_frame_doc_matches_oracle(data, max_length):
     assert n_lines == len(f.lines)
     assert bytes_read == f.position
     assert n_skipped == f.skipped
-
-
-@given(docs=st.lists(st.one_of(any_bytes, st.none()), max_size=30))
-@settings(max_examples=150, deadline=None)
-def test_vectorized_batch_matches_oracle(docs):
-    arr = pa.array(docs, pa.binary())
-    extracted, n_lines, bytes_read = _frame_batch_vectorized(arr)
-    for i, d in enumerate(docs):
-        d = d or b""
-        f = frame_bytes(d, 0)
-        assert bytes(extracted[i].as_py()) == extract_text(d)
-        assert n_lines[i] == len(f.lines)
-        assert bytes_read[i] == f.position
 
 
 @given(data=any_bytes)

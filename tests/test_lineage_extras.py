@@ -320,13 +320,14 @@ def test_config_json_roundtrip(tmp_path):
     cfg.to_json(p)
     back = PipelineConfig.from_json(p)
     assert back == cfg
-    # unknown keys in the file are tolerated (forward compat)
+    # an unknown key is rejected loudly, never silently dropped
     import json
 
     raw = json.load(open(p))
     raw["future_knob"] = True
     json.dump(raw, open(p, "w"))
-    assert PipelineConfig.from_json(p).n_sinks == 7
+    with pytest.raises(ValueError, match="future_knob"):
+        PipelineConfig.from_json(p)
 
 
 def test_static_fields_decoration_and_precedence(spark, tmp_path):

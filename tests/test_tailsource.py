@@ -361,3 +361,26 @@ def test_tail_snapshot_reports_phase_walls(spark, tmp_path):
     assert s["lines"] == 2
     walls = ("plan_sec", "write_sec", "audit_commit_sec")
     assert all(isinstance(s[k], float) and s[k] >= 0 for k in walls)
+
+
+def test_partial_line_only_snapshot_is_a_noop(spark, tmp_path):
+    """New bytes that hold no complete line commit nothing: a no-op
+    summary, no lineage, no leftover snapshot directory.  The bytes are
+    planned again, and once the newline lands snapshot 1 frames the
+    whole line."""
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    f = logs / "a.log"
+    f.write_bytes(b"partial line with no newline")
+    s = _snap(spark, tmp_path)
+    assert s["snapshot_id"] is None and s["lines"] == 0
+    store = LineageStore(str(tmp_path / "ckpt"))
+    assert store.committed_snapshots() == []
+    assert not (tmp_path / "out" / "snapshot_id=1").exists()
+    assert plan_tail_work(store, str(logs / "*.log")) == [(str(f), 0)]
+
+    with open(f, "ab") as fh:
+        fh.write(b"\n")
+    s = _snap(spark, tmp_path)
+    assert s["snapshot_id"] == 1 and s["lines"] == 1
+    assert _lines(spark, tmp_path) == [("a.log", b"partial line with no newline", 29)]

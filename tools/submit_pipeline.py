@@ -24,6 +24,7 @@ def main() -> None:
     a = p.parse_args()
 
     from scones.config import PipelineConfig
+    from scones.pipeline import snapshot_fn_for_mode
 
     spark = (
         SparkSession.builder.appName("scones-pipeline")
@@ -35,21 +36,7 @@ def main() -> None:
         .getOrCreate()
     )
     cfg = PipelineConfig.from_json(a.config)
-    if a.mode == "tail":
-        from scones.tailsource import run_tail_snapshot
-
-        summary = run_tail_snapshot(
-            spark,
-            cfg.input_glob,
-            cfg.output_dir,
-            cfg.checkpoint_dir,
-            n_sinks=cfg.n_sinks,
-            max_length=cfg.max_length,
-        )
-    else:
-        from scones.pipeline import run_snapshot
-
-        summary = run_snapshot(spark, cfg)
+    summary = snapshot_fn_for_mode(a.mode)(spark, cfg)
     print(summary)
     spark.stop()
 
