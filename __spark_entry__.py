@@ -2361,9 +2361,8 @@ def dedup_components(spark, sf_dir):
         threshold=0.2,
     )
     # alternating large-star/small-star: diameter-independent round
-    # count — the adversarial-chain-safe production choice (round-2
-    # verdict item 7); min-propagation (dup_components) stays available
-    # for low-diameter cluster graphs.
+    # count, so an adversarial chain of near-dups stays cheap (round-2
+    # verdict item 7).
     return textops.dup_components_star(pairs)
 
 

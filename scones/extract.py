@@ -101,49 +101,3 @@ def extract_documents(
     # the byte-identical contract lives on `extracted`).
     return out.withColumn("extracted_str", F.col("extracted").cast("string"))
 
-
-def explode_lines(
-    df: DataFrame,
-    max_length: int = 0,
-    html_col: str = "html",
-    key_col: str = "url",
-) -> DataFrame:
-    """One output row per emitted line with its high-water mark.
-
-    Mirrors the reference's per-line FileData records (file_reader.go:79-85):
-    (key, line: binary, hwm: byte position after the raw line).  Used by the
-    golden framing tests; the pipeline itself uses :func:`extract_documents`.
-    """
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            keys = batch.column(key_col).to_pylist()
-            html = batch.column(html_col).to_pylist()
-            out_keys: list = []
-            out_lines: list[bytes] = []
-            out_hwms: list[int] = []
-            for key, data in zip(keys, html):
-                data = data or b""
-                pos = 0
-                start = 0
-                while True:
-                    nl = data.find(b"\n", start)
-                    if nl < 0:
-                        break
-                    raw_len = nl + 1 - start
-                    pos += raw_len
-                    if not (max_length > 0 and raw_len > max_length):
-                        out_keys.append(key)
-                        out_lines.append(data[start:nl].rstrip(b"\r\n"))
-                        out_hwms.append(pos)
-                    start = nl + 1
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_keys, pa.string()),
-                    pa.array(out_lines, pa.binary()),
-                    pa.array(out_hwms, pa.int64()),
-                ],
-                [key_col, "line", "hwm"],
-            )
-
-    return df.mapInArrow(run, f"{key_col} string, line binary, hwm bigint")

@@ -146,9 +146,6 @@ def compile_grok(
     return regex, fields
 
 
-_SENTINEL = "\x01"
-
-
 def _typed(c: Column, typ: str | None) -> Column:
     if typ is None:
         return c
@@ -159,55 +156,16 @@ def _typed(c: Column, typ: str | None) -> Column:
 def grok_columns(
     line_col: str | Column,
     pattern: str,
-    one_pass: bool | None = None,
     anchored: bool = False,
 ) -> dict[str, Column]:
-    """Per-field extraction columns (JVM-side, codegen-able).
-
-    Two physical strategies, identical results (equivalence pinned in
-    tests/test_grok.py):
-
-      * per-field ``regexp_extract`` — k regex evaluations per row
-        (the DEFAULT: measured 3.4x faster than one-pass at sf0.1,
-        because Java's lazy-anchored ``^[\\s\\S]*?…[\\s\\S]*$`` wrapper
-        needed for exact replace semantics backtracks more than k
-        plain find()s on short log lines);
-      * one-pass (``one_pass=True``): ONE ``regexp_replace`` packs all
-        groups into a sentinel-delimited string, one ``split`` unpacks —
-        2 regex evaluations per row regardless of field count.  Wins
-        when k is large or lines are long relative to the match.  Rows
-        that already contain the sentinel byte (\\x01) fall back to
-        per-field extraction via a conditional, so the rewrite is exact
-        on every input.
-    """
+    """Per-field extraction columns (JVM-side, codegen-able): one
+    ``regexp_extract`` per field, typed by the field's cast suffix."""
     regex, fields = compile_grok(pattern, anchored=anchored)
     col = F.col(line_col) if isinstance(line_col, str) else line_col
-    if one_pass is None:
-        one_pass = False
-    out: dict[str, Column] = {}
-    if not one_pass:
-        for i, (field, typ) in enumerate(fields, start=1):
-            out[field] = _typed(F.regexp_extract(col, regex, i), typ)
-        return out
-    # [\s\S] (not dotall) so DATA/GREEDYDATA keep their no-newline
-    # semantics while the wrapper still spans multi-line values; the lazy
-    # prefix reproduces regexp_extract's find-FIRST-match behavior.  An
-    # anchored regex already consumes the whole line, so it IS the
-    # replace pattern.
-    wrapper = regex if anchored else r"^[\s\S]*?" + regex + r"[\s\S]*$"
-    replacement = _SENTINEL.join(f"${i}" for i in range(1, len(fields) + 1))
-    clean = ~col.contains(_SENTINEL)
-    packed = F.when(
-        col.rlike(regex) & clean, F.regexp_replace(col, wrapper, replacement)
-    )
-    parts = F.split(packed, _SENTINEL, -1)
-    for i, (field, typ) in enumerate(fields, start=1):
-        c = F.when(packed.isNotNull(), F.element_at(parts, i)).otherwise(
-            # sentinel-containing rows (and non-matches): exact slow path
-            F.regexp_extract(col, regex, i)
-        )
-        out[field] = _typed(c, typ)
-    return out
+    return {
+        field: _typed(F.regexp_extract(col, regex, i), typ)
+        for i, (field, typ) in enumerate(fields, start=1)
+    }
 
 
 def grok_parse(

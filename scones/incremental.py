@@ -377,20 +377,26 @@ def commit_snapshot_with_index(
 BLOOM_WORD_BITS = 63
 
 
+def bloom_position(key: "F.Column", h: int, m_bits: int):
+    """Bit position of hash ``h`` of a key (row-local)."""
+    digest = F.md5(F.concat_ws("|", F.lit(str(h)), key))
+    return F.conv(F.substring(digest, 1, 15), 16, 10).cast("bigint") % m_bits
+
+
 def bloom_positions(key: "F.Column", m_bits: int, n_hashes: int):
     """Array of ``n_hashes`` bit positions for a key (row-local)."""
-    return F.array(
-        *[
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit(str(h)), key)), 1, 15
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % m_bits
-            for h in range(n_hashes)
-        ]
+    return F.array(*[bloom_position(key, h, m_bits) for h in range(n_hashes)])
+
+
+def bloom_word(p: str):
+    """Packed-word index of the bit position in column ``p``."""
+    return F.expr(f"{p} div {BLOOM_WORD_BITS}")
+
+
+def bloom_mask(p: str):
+    """Single-bit mask of the bit position in column ``p`` within its word."""
+    return F.expr(
+        f"shiftleft(CAST(1 AS BIGINT), CAST({p} % {BLOOM_WORD_BITS} AS INT))"
     )
 
 
@@ -409,12 +415,7 @@ def bloom_build(
         )
     )
     return (
-        pos.select(
-            F.expr(f"p div {BLOOM_WORD_BITS}").alias("widx"),
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST(p % {BLOOM_WORD_BITS} AS INT))"
-            ).alias("mask"),
-        )
+        pos.select(bloom_word("p").alias("widx"), bloom_mask("p").alias("mask"))
         .groupBy("widx")
         .agg(F.expr("bit_or(mask)").alias("bits"))
     )
@@ -438,13 +439,7 @@ def bloom_probe(
         F.explode(bloom_positions(F.col(key_col), m_bits, n_hashes)).alias(
             "p"
         ),
-    ).select(
-        id_col,
-        F.expr(f"p div {BLOOM_WORD_BITS}").alias("widx"),
-        F.expr(
-            f"shiftleft(CAST(1 AS BIGINT), CAST(p % {BLOOM_WORD_BITS} AS INT))"
-        ).alias("mask"),
-    )
+    ).select(id_col, bloom_word("p").alias("widx"), bloom_mask("p").alias("mask"))
     joined = pos.join(F.broadcast(bloom), "widx", "left")
     hit = F.col("bits").isNotNull() & (
         F.col("bits").bitwiseAND(F.col("mask")) != 0

@@ -386,7 +386,12 @@ def backlog_report(store: LineageStore, input_glob: str) -> dict:
         "files_committed": len(committed),
         "files_pending": [f for f in discovered if f not in committed],
         "rows_committed": sum(r["row_count"] for r in lineage),
-        "bytes_committed": sum(r["offset_end"] for r in lineage),
+        # per-row byte spans, not offset_end: in tail mode offset_end is a
+        # cumulative high-water mark, so a file committed across N
+        # snapshots would be counted N times
+        "bytes_committed": sum(
+            r["offset_end"] - r["offset_start"] for r in lineage
+        ),
         "snapshots": store.committed_snapshots(),
     }
 

@@ -64,27 +64,6 @@ def spread_within_sinks(
     )
 
 
-def write_routed(
-    df: DataFrame,
-    out_dir: str,
-    n_sinks: int,
-    url_col: str = "url",
-    spread_partitions: int = 0,
-) -> None:
-    """Route and write all sinks in one pass: ``<out_dir>/sink_id=<i>/``.
-
-    ``spread_partitions`` > 0 forces an explicit repartition by
-    (sink_id, crc32(url) spread) before the write — co-locates each sink's
-    rows while keeping ≥ spread_partitions-way parallelism per sink.
-    With 0, AQE sizes the shuffle.  Overwrite mode keeps the write
-    idempotent per snapshot (retry-safe, see lineage.py).
-    """
-    routed = spread_within_sinks(
-        with_sink_id(df, n_sinks, url_col), n_sinks, spread_partitions, url_col
-    )
-    routed.write.mode("overwrite").partitionBy("sink_id").parquet(out_dir)
-
-
 def sink_aggregates(df: DataFrame, n_sinks: int, url_col: str = "url") -> DataFrame:
     """The correctness-contract aggregate: per (sink, lang, host) bucket →
     rows, payload bytes, exact distinct urls.

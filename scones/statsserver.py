@@ -27,7 +27,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .lineage import LineageStore
+from .lineage import LineageStore, backlog_report
 
 METRICS_SCHEMA = pa.schema(
     [
@@ -231,19 +231,7 @@ def stats_payload(
         # per-sink ClientStatistics parity (statistics.go:34-45) — only
         # when the caller wires the routed output dir in
         "sinks": sink_stats(output_dir, footer_cache) if output_dir else {},
-        "backlog": {
-            "files_discovered": len(discovered),
-            "files_committed": len(committed),
-            "files_pending": [f for f in discovered if f not in committed],
-            "rows_committed": sum(r["row_count"] for r in lineage),
-            # per-row byte spans, NOT offset_end: in tail mode offset_end
-            # is a cumulative high-water mark, so a file committed across
-            # N snapshots would be multiply counted (round-2 advice)
-            "bytes_committed": sum(
-                r["offset_end"] - r["offset_start"] for r in lineage
-            ),
-            "snapshots": store.committed_snapshots(),
-        },
+        "backlog": backlog_report(store, input_glob),
     }
 
 

@@ -21,7 +21,9 @@ from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .enrich import with_host
-from .pipeline import extract_and_enrich
+from .incremental import bloom_mask, bloom_position, bloom_word
+from .jsonl import JSONL_SCHEMA, project_jsonl
+from .pipeline import _check_knobs, extract_and_enrich
 from .route import with_sink_id
 
 CORPUS_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -44,30 +46,35 @@ def stream_source_jsonl(
     spark: SparkSession, input_dir: str, max_files: int = 16
 ) -> DataFrame:
     """JSONL flavor of :func:`stream_source` (.jsonl/.jsonl.gz shards
-    landing in a directory): same record contract as the batch path
-    (scones/jsonl.py), same downstream plan — the engine's seen-files
-    log provides the admission state the batch path keeps in lineage."""
-    from .jsonl import JSONL_SCHEMA
-
+    landing in a directory): same record contract and projection as the
+    batch path (:func:`scones.jsonl.project_jsonl`), same downstream
+    plan — the engine's seen-files log provides the admission state the
+    batch path keeps in lineage."""
     raw = (
         spark.readStream.schema(JSONL_SCHEMA)
         .option("maxFilesPerTrigger", max_files)
         .json(input_dir)
     )
-    return raw.where(F.col("url").isNotNull()).select(
-        "url",
-        F.to_timestamp("ts").alias("warc_ts"),
-        F.coalesce(
-            F.unbase64("html_b64"), F.col("html").cast("binary")
-        ).alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        "lang",
-    )
+    return project_jsonl(raw)
+
+
+class _StreamSource:
+    """The snapshot knobs the streaming runners honor: framing, the host
+    join and routing.  Static fields, spread, the dedup index and LM
+    scoring belong to the batch core's write and commit steps, which the
+    engine's file sink replaces here, so they are rejected."""
+
+    mode = "stream"
+    honors = frozenset({"host_meta_path", "n_sinks", "max_length"})
+    audit_columns = frozenset()
 
 
 def build_stream_plan(
     spark: SparkSession, cfg: PipelineConfig, stream: DataFrame
 ) -> DataFrame:
+    """extract → enrich → route over a stream; raises ``ValueError`` for a
+    non-default knob the streaming runners do not honor."""
+    _check_knobs(cfg, _StreamSource)
     df = extract_and_enrich(spark, cfg, stream.drop("text"))
     return with_sink_id(df, cfg.n_sinks)
 
@@ -213,104 +220,6 @@ def stateful_sessionize(events, gap_sec: int = 1800, watermark: str = "1 second"
     )
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs protobuf for its state-server
-    protocol (not shipped in this container) + the RocksDB state store."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # parent package 'google' absent entirely
-        return False
-
-
-def transform_sessionize(events, gap_sec: int = 1800, watermark: str = "1 second"):
-    """Sessionizer on the Spark 4 arbitrary-state v2 API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``) — same
-    semantics as :func:`stateful_sessionize` (which uses the v1
-    ``applyInPandasWithState``): gap-closed sessions emit as discovered,
-    the open tail session rides in ValueState across micro-batches and
-    flushes via an event-time TIMER once the watermark passes
-    last_ts + gap.  v2 advantages: named state slots, explicit timer
-    registry (no single-timeout-per-key limitation), TTL support.
-    Equivalence with the v1 operator is pinned in
-    tests/test_stateful_sessions.py.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap_us = gap_sec * 1_000_000
-    gap_ms = gap_sec * 1_000
-
-    def _emit(user_id, sessions):
-        return pd.DataFrame(
-            {
-                "user_id": [user_id] * len(sessions),
-                "session_start": [
-                    pd.Timestamp(int(s), unit="us") for s, _, _ in sessions
-                ],
-                "session_end": [
-                    pd.Timestamp(int(e), unit="us") for _, e, _ in sessions
-                ],
-                "n_events": [int(n) for _, _, n in sessions],
-            }
-        )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState(
-                "session", "start double, last double, n int"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            ts: list[int] = []
-            for pdf in rows:
-                ts.extend((pdf["ts"].astype("int64") // 1000).tolist())  # µs
-            if not ts:
-                return
-            ts.sort()
-            if self._state.exists():
-                start, last, n = self._state.get()
-            else:
-                start, last, n = float(ts[0]), float(ts[0]), 0
-            closed = []
-            for t in ts:
-                if t - last > gap_us:
-                    closed.append((start, last, n))
-                    start, n = float(t), 0
-                last = float(t)
-                n += 1
-            self._state.update((float(start), float(last), int(n)))
-            # event-time timer: fires when the watermark passes the gap
-            self._handle.registerTimer(int(last // 1000) + gap_ms)
-            if closed:
-                yield _emit(user_id, closed)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            if not self._state.exists():
-                return
-            start, last, n = self._state.get()
-            # stale timers from earlier batches may fire first — only
-            # flush when THIS session's gap has truly elapsed
-            if expiredTimerInfo.getExpiryTimeInMs() >= int(last // 1000) + gap_ms:
-                self._state.clear()
-                yield _emit(user_id, [(start, last, n)])
-
-        def close(self) -> None:
-            pass
-
-    prepared = events.select("user_id", "ts").withWatermark("ts", watermark)
-    return prepared.groupBy("user_id").transformWithStateInPandas(
-        SessionProcessor(), SESSION_OUTPUT_DDL, "append", "eventTime"
-    )
-
-
 def windowed_host_counts(
     stream: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -386,24 +295,11 @@ def streaming_bloom_probe(
     out = stream
     hits = []
     for h in range(n_hashes):
-        p = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.lit(str(h)), F.col(key_col))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % m_bits
-        )
-        out = out.withColumn(f"_p{h}", p)
-        out = out.withColumn(
-            f"_w{h}", F.expr(f"_p{h} div 63")
-        ).withColumn(
-            f"_m{h}",
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), CAST(_p{h} % 63 AS INT))"),
+        p = f"_p{h}"
+        out = (
+            out.withColumn(p, bloom_position(F.col(key_col), h, m_bits))
+            .withColumn(f"_w{h}", bloom_word(p))
+            .withColumn(f"_m{h}", bloom_mask(p))
         )
         side = F.broadcast(
             bloom.select(

@@ -26,10 +26,6 @@ def tokens_col(text_col: str = "text") -> Column:
     return F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("toks", tokens_col(text_col))
-
-
 def token_counts(df: DataFrame) -> DataFrame:
     """Per-document token count + char count (BPE-ish proxy: chars/4)."""
     return df.select(
@@ -395,83 +391,6 @@ def verify_candidate_pairs(
     )
 
 
-def dup_components(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_iter: int = 30,
-    round_counter: list | None = None,
-) -> DataFrame:
-    """Connected components over near-dup pair edges → (doc_id, component).
-
-    Transitive dup clustering: keep-min dedup alone treats A~B, B~C as two
-    independent pairs; components make {A,B,C} one group with component =
-    min doc_id (its canonical representative).
-
-    Algorithm: iterative min-label propagation accelerated by pointer
-    jumping (comp ← comp[comp] each round), the classic Spark/Pregel CC
-    shape — converges in O(log diameter) rounds, each round two shuffles
-    (one neighbor-min groupBy, one label self-join).  ``localCheckpoint``
-    cuts plan lineage per round so the DAG stays flat at any scale.
-    Convergence is detected by the monotone-decreasing label sum — one
-    scalar per round, no per-row diff job.
-
-    Labels are 8-byte ids; the shuffle never carries document bodies.
-    For web-scale graphs with degree skew, cap candidate generation
-    upstream (``max_df`` / LSH band sizes) — the component step itself
-    has no quadratic term.
-    """
-    edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    labels = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("u", "mn").alias("comp"))
-        # lazy: the label_sum action below materializes the checkpoint,
-        # so each round pays ONE job, not a checkpoint job + an agg job
-        .localCheckpoint(eager=False)
-    )
-    # decimal accumulator: with 64-bit hash doc ids, a bigint Σcomp
-    # overflows under ANSI mode at production node counts
-    def label_sum(lab: DataFrame):
-        return lab.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).first()[0]
-
-    cur = label_sum(labels)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        lab_v = labels.select(
-            F.col("u").alias("v"), F.col("comp").alias("comp_v")
-        )
-        prop = sym.join(lab_v, "v").groupBy("u").agg(
-            F.min("comp_v").alias("nbr_min")
-        )
-        stepped = labels.join(prop, "u", "left").select(
-            "u",
-            F.least("comp", F.coalesce("nbr_min", F.col("comp"))).alias("comp"),
-        )
-        jump = stepped.select(
-            F.col("u").alias("comp"), F.col("comp").alias("comp2")
-        )
-        labels = (
-            stepped.join(jump, "comp", "left")
-            .select(
-                "u",
-                F.least("comp", F.coalesce("comp2", F.col("comp"))).alias("comp"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        new = label_sum(labels)
-        if new == cur:
-            break
-        cur = new
-    if round_counter is not None:
-        round_counter.append(rounds)
-    return labels.select(F.col("u").alias("doc_id"), F.col("comp").alias("component"))
-
-
 def dup_components_star(
     pairs: DataFrame,
     id_a: str = "doc_a",
@@ -483,14 +402,20 @@ def dup_components_star(
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) → (doc_id, component = min doc_id of the component).
 
-    Why a second CC besides :func:`dup_components`: min-label propagation
-    with pointer jumping runs O(log d) rounds in the graph DIAMETER — fine
-    for blobby near-dup clusters, but an adversarial chain corpus (each
-    doc near-dups only its neighbor) stretches d to n.  The alternating
-    star algorithm contracts the graph itself each round and converges in
-    O(log² n) rounds regardless of diameter, with the same scale
-    properties: every shuffle carries two 8-byte ids, per-round work is
-    O(|E|), no step collects edges to the driver.
+    Transitive dup clustering: keep-min dedup alone treats A~B, B~C as
+    two independent pairs; components make {A,B,C} one group whose
+    component is its min doc_id (the canonical representative).
+
+    Why alternating stars: plain min-label propagation (even with
+    pointer jumping) needs rounds that grow with the graph DIAMETER —
+    fine for blobby near-dup clusters, but an adversarial chain corpus
+    (each doc near-dups only its neighbor) stretches the diameter to n.
+    The star rounds contract the graph itself and converge in O(log² n)
+    rounds regardless of diameter.  Every shuffle carries two 8-byte ids
+    (never document bodies), per-round work is O(|E|), and no step
+    collects edges to the driver; for web-scale graphs with degree
+    skew, cap candidate generation upstream (``max_df`` / LSH band
+    sizes).
 
       large-star: each node u connects its LARGER neighbors to
         m = min(N(u) ∪ {u})      — keyed on u, one groupBy + one join
@@ -499,12 +424,11 @@ def dup_components_star(
       pointer jump: u→v, v→v2 ⇒ u→min(v,v2) — one extra id-only join
         per round that composes two hops, halving chain depth on top of
         the star contraction (measured on path graphs: 4/5/6 rounds at
-        n=64/256/1024 vs min-propagation's 6/8/10)
+        n=64/256/1024)
 
-    Rounds end when the edge multiset checksum is stable.  Unlike
-    dup_components' label sum (monotone — sum equality IS a fixed
-    point), the star rounds rewrite the edge set non-monotonically, so
-    (count, Σu, Σv) alone could coincide across a real change via an
+    Rounds end when the edge multiset checksum is stable.  The star
+    rounds rewrite the edge set non-monotonically, so (count, Σu, Σv)
+    alone could coincide across a real change via an
     integer-compensating rewrite (round-3 advice).  The checksum
     therefore also folds Σ xxhash64(u, v) — a 64-bit hash-sum of the
     pair multiset that an accidental rewrite cannot preserve — still one

@@ -22,6 +22,25 @@ def duck():
     return con
 
 
+def _union_find_components(edges):
+    """Independent single-threaded reference: {node: min node of its
+    connected component}, by union-find with path halving."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()
@@ -132,13 +151,13 @@ def test_simhash_identical_docs_collide(spark):
 def test_dup_components_transitive_chain(spark):
     """A~B, B~C, C~D must cluster {A,B,C,D} even though A and D share no
     edge — the transitive case keep-min dedup can't express.  Long chain
-    exercises >1 propagation round (pointer jumping)."""
-    from scones.textops import dup_components
+    exercises several contraction rounds."""
+    from scones.textops import dup_components_star
 
     chain = [(i, i + 1) for i in range(10, 30)]  # path graph, diameter 20
     island = [(100, 101)]
     pairs = spark.createDataFrame(chain + island, ["doc_a", "doc_b"])
-    comp = {r.doc_id: r.component for r in dup_components(pairs).collect()}
+    comp = {r.doc_id: r.component for r in dup_components_star(pairs).collect()}
     assert all(comp[i] == 10 for i in range(10, 31))
     assert comp[100] == comp[101] == 100
     assert len(comp) == 23
@@ -173,12 +192,12 @@ def test_simhash_reshape_equals_bit_explode(spark):
 
 
 def test_star_components_match_min_propagation(spark):
-    """large-star/small-star must produce the identical (doc_id,
-    component) labeling as min-propagation on a mixed graph: chains,
-    a blob, islands, singleton-free."""
+    """large-star/small-star must label every node with the min id of its
+    connected component (min-label semantics) on a mixed graph: chains,
+    a blob, islands, singleton-free — checked against a union-find."""
     import random
 
-    from scones.textops import dup_components, dup_components_star
+    from scones.textops import dup_components_star
 
     rng = random.Random(5)
     edges = [(i, i + 1) for i in range(10, 30)]           # chain
@@ -186,32 +205,26 @@ def test_star_components_match_min_propagation(spark):
     edges += [(rng.randrange(200, 240), rng.randrange(200, 240)) for _ in range(40)]
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    want = {r.doc_id: r.component for r in dup_components(pairs).collect()}
     got = {r.doc_id: r.component for r in dup_components_star(pairs).collect()}
-    assert got == want
+    assert got == _union_find_components(edges)
 
 
 def test_star_components_fewer_rounds_on_adversarial_chain(spark):
-    """The chain graph is the adversarial case for diameter-bound CC:
-    the alternating star algorithm must converge in fewer rounds than
-    min-propagation + pointer jumping (round-2 verdict item 7) and still
-    label the whole chain with its min."""
-    from scones.textops import dup_components, dup_components_star
+    """The chain graph is the adversarial case for diameter-bound CC
+    (min-label propagation with pointer jumping took 8 rounds on it):
+    the alternating star algorithm must label the whole chain with its
+    min within 5 rounds, the count measured when this bound was set
+    (round-2 verdict item 7)."""
+    from scones.textops import dup_components_star
 
     n = 256  # diameter 256 chain
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["doc_a", "doc_b"]
     )
-    r_prop: list[int] = []
     r_star: list[int] = []
-    want = {i: 0 for i in range(n + 1)}
-    got_prop = {
-        r.doc_id: r.component
-        for r in dup_components(pairs, max_iter=50, round_counter=r_prop).collect()
-    }
-    got_star = {
+    got = {
         r.doc_id: r.component
         for r in dup_components_star(pairs, round_counter=r_star).collect()
     }
-    assert got_prop == want and got_star == want
-    assert r_star[0] < r_prop[0], (r_star, r_prop)
+    assert got == {i: 0 for i in range(n + 1)}
+    assert r_star[0] <= 5, r_star

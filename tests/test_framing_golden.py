@@ -2,13 +2,15 @@
 
 Each case pins (emitted lines, high-water-mark positions) for byte-exact
 inputs; expectations are the reference's test numbers (6/12, 7/14, 16).
-Both the pure-Python oracle and the Spark mapInArrow extractor must match.
+The pure-Python oracle, the tail source's per-line framer and the
+per-document extractor must all match.
 """
 
 import pytest
 
-from scones.extract import explode_lines, extract_documents
+from scones.extract import extract_documents
 from scones.oracle import extract_text, frame_bytes
+from scones.tailsource import read_tail
 
 # (name, input bytes, max_length, expected lines, expected hwms, final pos)
 CASES = [
@@ -39,18 +41,25 @@ def test_oracle_framing(name, data, maxlen, lines, hwms, pos):
     assert extract_text(data, maxlen) == b"\n".join(lines)
 
 
-def test_spark_explode_lines_matches_golden(spark):
+def test_spark_explode_lines_matches_golden(spark, tmp_path):
+    """Every case, written to a file and framed from offset 0 by the
+    production per-line framer (:func:`scones.tailsource.read_tail`):
+    same lines and hwms, and every row's ``frame_end`` is the final
+    position (a skipped line still advances it)."""
     for maxlen in (0, 8):
         cases = [c for c in CASES if c[2] == maxlen]
-        df = spark.createDataFrame(
-            [(c[0], c[1]) for c in cases], "url string, html binary"
-        )
-        out = explode_lines(df, max_length=maxlen).collect()
+        work = []
+        for name, data, *_ in cases:
+            path = tmp_path / f"{name}.log"
+            path.write_bytes(data)
+            work.append((str(path), 0))
         got = {}
-        for r in out:
-            got.setdefault(r.url, []).append((bytes(r.line), r.hwm))
-        for name, data, _, lines, hwms, _pos in cases:
-            assert got.get(name, []) == list(zip(lines, hwms)), name
+        for r in read_tail(spark, work, max_length=maxlen).collect():
+            got.setdefault(r.src_file, []).append((r.line, r.hwm, r.frame_end))
+        for name, data, _, lines, hwms, pos in cases:
+            rows = got.get(str(tmp_path / f"{name}.log"), [])
+            assert [(ln, h) for ln, h, _ in rows] == list(zip(lines, hwms)), name
+            assert all(end == pos for _, _, end in rows), name
 
 
 def test_spark_extract_documents_matches_golden(spark):

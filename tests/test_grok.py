@@ -54,31 +54,6 @@ def test_grok_patterns_are_groupless():
         assert re.compile(frag).groups == 0, name
 
 
-def test_one_pass_equals_per_field(spark):
-    """The single-regexp-replace strategy must be value-identical to
-    per-field regexp_extract on every input shape: matches, non-matches,
-    prefix/suffix noise, empty DATA, and sentinel-containing lines."""
-    from scones.grok import grok_columns
-
-    lines = [
-        ("2024-03-01 10:00:00 ERROR disk user=7 value=3.25",),
-        ("noise before 2024-03-01 11:30:45 INFO boot user=12 value=100 and after",),
-        ("totally unparseable line",),
-        ("2024-03-01 12:00:00 WARN io\x01evil user=1 value=2",),  # sentinel
-        ("",),
-    ]
-    df = spark.createDataFrame(lines, ["line"])
-    pattern = (
-        "%{TIMESTAMP_ISO8601:ts:ts} %{LOGLEVEL:level} %{WORD:unit} "
-        "user=%{INT:uid:long} value=%{NUMBER:val:double}"
-    )
-    fast = grok_columns("line", pattern, one_pass=True)
-    slow = grok_columns("line", pattern, one_pass=False)
-    a = df.select("line", *[c.alias(f) for f, c in fast.items()]).collect()
-    b = df.select("line", *[c.alias(f) for f, c in slow.items()]).collect()
-    assert a == b
-
-
 def test_composite_apache_and_syslog(spark):
     from scones.grok import grok_parse
 
@@ -129,25 +104,6 @@ def test_anchored_rejects_partial_matches(spark):
     assert loose.count() == 2  # substring semantics: both match
     rows = strict.collect()
     assert len(rows) == 1 and rows[0].line == clean
-
-
-def test_anchored_one_pass_equals_per_field(spark):
-    """The one-pass regexp_replace rewrite must stay exact under
-    anchoring (the wrapper branch changes)."""
-    from scones.grok import grok_columns
-
-    lines = [
-        ('10.0.0.1 GET 200',),
-        ('10.0.0.1 GET 200 junk',),   # anchored: non-match → nulls/empties
-        ('no match at all',),
-    ]
-    df = spark.createDataFrame(lines, ["line"])
-    pat = "%{IP:ip} %{WORD:verb} %{INT:code:int}"
-    fast = grok_columns("line", pat, one_pass=True, anchored=True)
-    slow = grok_columns("line", pat, one_pass=False, anchored=True)
-    a = df.select(*[c.alias(f) for f, c in fast.items()]).collect()
-    b = df.select(*[c.alias(f) for f, c in slow.items()]).collect()
-    assert a == b
 
 
 def test_contributed_patterns_nginx_error(spark):

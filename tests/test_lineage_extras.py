@@ -345,22 +345,6 @@ def test_static_fields_decoration_and_precedence(spark, tmp_path):
     ] and len(rows) == 1
 
 
-def test_write_routed_library_api(spark, tmp_path):
-    from scones.extract import extract_documents
-    from scones.enrich import with_host
-    from scones.route import write_routed
-
-    write_corpus(str(tmp_path / "in"), n_docs=30, n_files=1, seed=62)
-    df = with_host(
-        extract_documents(spark.read.parquet(str(tmp_path / "in") + "/*.parquet"))
-    )
-    out = str(tmp_path / "routed")
-    write_routed(df, out, n_sinks=2, spread_partitions=2)
-    got = spark.read.parquet(out)
-    assert got.count() == 30
-    assert set(r.sink_id for r in got.select("sink_id").distinct().collect()) == {0, 1}
-
-
 def test_spread_defuses_hot_host_skew(spark, tmp_path):
     """Zipfian corpus: hot.example.org carries ≥20% of rows.  The
     routed-write repartition key (sink_id, crc32(url)%spread) must keep

@@ -176,19 +176,16 @@ def test_round2_ops_have_scale_safe_plans(spark):
 
 
 def test_components_shuffles_ids_only(spark):
-    """Both CC variants' iterated joins must carry 8-byte ids, never
-    text: the label relation schema is exactly (doc_id, component)."""
-    from scones.textops import dup_components, dup_components_star
+    """The CC rounds' iterated joins must carry 8-byte ids, never text:
+    the label relation schema is exactly (doc_id, component)."""
+    from scones.textops import dup_components_star
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["doc_a", "doc_b"]
     )
-    for fn in (dup_components, dup_components_star):
-        out = fn(pairs)
-        assert set(out.columns) == {"doc_id", "component"}
-        assert all(
-            f.dataType.simpleString() == "bigint" for f in out.schema.fields
-        )
+    out = dup_components_star(pairs)
+    assert set(out.columns) == {"doc_id", "component"}
+    assert all(f.dataType.simpleString() == "bigint" for f in out.schema.fields)
 
 
 def test_round4_ops_have_scale_safe_plans(spark):

@@ -86,66 +86,3 @@ def test_stateful_sessionize_across_batches(spark, tmp_path):
     assert got <= all_sessions, "emitted a session not in the batch oracle"
     assert len(want_closed) > 50, "corpus must actually produce closed sessions"
 
-
-def test_transform_with_state_sessionize(spark, tmp_path):
-    """The v2 (transformWithStateInPandas) sessionizer obeys the same
-    batch-oracle contract as the v1 operator: every gap-closed session is
-    emitted, every emitted session is real, cross-batch stitching holds.
-
-    Skipped where protobuf is unavailable (the v2 state-server protocol
-    needs it; this container doesn't ship it) — the v1 operator above is
-    the always-runnable path.
-    """
-    import pytest
-
-    from scones.streaming import transform_sessionize, tws_available
-
-    if not tws_available():
-        pytest.skip("transformWithStateInPandas needs protobuf (not in container)")
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    events = duckdb.sql(
-        f"select event_id, ts, user_id from parquet_scan('{src}') order by ts"
-    ).arrow()
-    half = events.num_rows // 2
-    in_dir = tmp_path / "tws_in"
-    in_dir.mkdir()
-    pq.write_table(events.slice(0, half), str(in_dir / "t0.parquet"))
-    pq.write_table(events.slice(half), str(in_dir / "t1.parquet"))
-
-    stream = (
-        spark.readStream.schema("event_id bigint, ts timestamp, user_id bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir))
-    )
-    sessions = transform_sessionize(stream, gap_sec=GAP)
-    # transformWithState requires the RocksDB state store provider
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName("tws_sessions_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
-
-    got = {
-        (r.user_id, r.session_start.isoformat(), r.session_end.isoformat(), r.n_events)
-        for r in spark.sql("select * from tws_sessions_out").collect()
-    }
-    want_closed, all_sessions = _closed_sessions_oracle(src)
-    assert want_closed <= got, "missing gap-closed sessions"
-    assert got <= all_sessions, "emitted a session not in the batch oracle"

@@ -42,9 +42,7 @@ def test_stats_payload_matches_lineage(spark, tmp_path):
     payload = stats_payload(cfg.checkpoint_dir, cfg.input_glob)
     store = LineageStore(cfg.checkpoint_dir)
     rep = backlog_report(store, cfg.input_glob)
-    assert payload["backlog"]["rows_committed"] == rep["rows_committed"]
-    assert payload["backlog"]["files_committed"] == rep["files_committed"]
-    assert payload["backlog"]["files_pending"] == rep["files_pending"]
+    assert payload["backlog"] == rep
     # parquet inputs are consumed whole: no per-file backlog
     assert len(payload["files"]) == 3
     for f in payload["files"].values():

@@ -1,14 +1,19 @@
 """Structured Streaming flavor: availableNow drain + incremental pickup
 + windowed/watermarked aggregation (SURVEY.md §2 O1)."""
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from scones.config import PipelineConfig
 from scones.corpus import CORPUS_SCHEMA, generate_rows
 from scones.oracle import extract_text, route
 from scones.streaming import (
+    graceful_stop,
     run_stream_available_now,
+    run_stream_continuous,
     stream_source,
     windowed_host_counts,
 )
@@ -152,8 +157,6 @@ def test_continuous_mode_picks_up_late_files_and_stops_cleanly(
     without restarting — and graceful_stop drains in-flight work before
     terminating (SIGTERM semantics, supervisor.go:91-94)."""
     import time
-
-    from scones.streaming import graceful_stop, run_stream_continuous
 
     in_dir = tmp_path / "cont_in"
     in_dir.mkdir()
@@ -328,3 +331,33 @@ def test_streaming_bloom_probe_flags_committed_keys(spark, tmp_path):
         ).select("url", "maybe_seen").collect()
     }
     assert b == got
+
+
+@pytest.mark.parametrize(
+    "knob,value",
+    [
+        ("static_fields", {"env": "prod"}),
+        ("spread_partitions", 2),
+        ("dedup_index", True),
+        ("lm_model_path", "lm_model"),
+    ],
+)
+def test_stream_runners_reject_unhonored_knobs(spark, tmp_path, knob, value):
+    """Both streaming runners raise for a knob they would otherwise drop,
+    before a query starts: no output and no checkpoint dir appear."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_files(str(in_dir), generate_rows(10, seed=5), 1)
+    cfg = PipelineConfig(
+        input_glob=str(in_dir / "*.parquet"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        n_sinks=N_SINKS,
+        **{knob: value},
+    )
+    with pytest.raises(ValueError, match=knob):
+        run_stream_available_now(spark, cfg, str(in_dir))
+    with pytest.raises(ValueError, match=knob):
+        graceful_stop(run_stream_continuous(spark, cfg, str(in_dir)))
+    assert not os.path.exists(cfg.output_dir)
+    assert not os.path.exists(cfg.checkpoint_dir)

@@ -384,3 +384,27 @@ def test_partial_line_only_snapshot_is_a_noop(spark, tmp_path):
     s = _snap(spark, tmp_path)
     assert s["snapshot_id"] == 1 and s["lines"] == 1
     assert _lines(spark, tmp_path) == [("a.log", b"partial line with no newline", 29)]
+
+
+def test_backlog_counts_a_growing_file_once(spark, tmp_path):
+    """A file committed over two snapshots (0→12, then 12→30) reports the
+    bytes it framed once: bytes_committed is the file's size, not the sum
+    of its high-water marks, in the lineage report and in the served
+    stats payload."""
+    from scones.lineage import backlog_report
+    from scones.statsserver import stats_payload
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    f = logs / "a.log"
+    f.write_bytes(b"line1\nline2\n")
+    assert _snap(spark, tmp_path)["snapshot_id"] == 1
+    with open(f, "ab") as fh:
+        fh.write(b"line3\nline4\nline5\n")
+    assert _snap(spark, tmp_path)["snapshot_id"] == 2
+
+    glob = str(logs / "*.log")
+    rep = backlog_report(LineageStore(str(tmp_path / "ckpt")), glob)
+    assert rep["bytes_committed"] == 30
+    assert rep["rows_committed"] == 5 and rep["snapshots"] == [1, 2]
+    assert stats_payload(str(tmp_path / "ckpt"), glob)["backlog"] == rep
