@@ -128,8 +128,9 @@ def run_daemon(
 
     Drain is graceful: ``stop_event`` is only checked between snapshot
     attempts, so an in-flight snapshot always finishes (and commits or
-    leaves no state) before exit — the SIGTERM contract the streaming
-    daemon already has (scones/streaming.py).
+    leaves no state) before exit — the reference's SIGTERM contract
+    (supervisor.go:91-94 Stop(): wait for in-flight chunks to be acked);
+    ``python -m scones.pipeline --daemon`` sets the event on SIGTERM/SIGINT.
 
     ``max_snapshots`` / ``max_iterations`` bound the loop for tests and
     one-shot-ish invocations; both default to unbounded like the

@@ -264,7 +264,7 @@ def _update_index_and_probe_locked(
     k: int = 3,
     threshold: float = 0.5,
 ) -> dict:
-    idx_root = os.path.join(checkpoint_dir, "band_index")
+    idx_root = os.path.join(checkpoint_dir, BAND_INDEX_SUBDIR)
     new_docs = pipeline_doc_view(written, snapshot_id)
     write_band_index(
         new_docs,
@@ -333,31 +333,6 @@ def _update_index_and_probe_locked(
         "n_exact_dups": int(n_exact),
         "exact_dups": exact_dir,
     }
-
-
-def commit_snapshot_with_index(
-    docs: DataFrame,
-    root: str,
-    snapshot_id: int,
-    num_hashes: int = 8,
-    band_size: int = 2,
-    k: int = 3,
-) -> str:
-    """Commit a corpus snapshot: write its documents AND its band-index
-    side table under ``root/snapshot=NNN/``.  Later snapshots dedup
-    against the union of committed indexes without re-reading committed
-    document text (except candidate verification lookups).
-    """
-    snap_dir = os.path.join(root, f"snapshot={snapshot_id:06d}")
-    docs.write.mode("overwrite").parquet(os.path.join(snap_dir, "documents"))
-    write_band_index(
-        docs,
-        os.path.join(snap_dir, BAND_INDEX_SUBDIR),
-        num_hashes,
-        band_size,
-        k,
-    )
-    return snap_dir
 
 
 # ---------------------------------------------------------------------------

@@ -33,10 +33,17 @@ from pyspark.sql import functions as F
 JSONL_SCHEMA = "url string, ts string, lang string, html_b64 string, html string"
 
 
-def project_jsonl(raw: DataFrame, *extra: str) -> DataFrame:
-    """Raw JSONL rows (batch or stream) → documents rows (url, warc_ts,
-    html:binary, lang, *extra): drops url-less rows, parses ``ts`` and
-    takes the base64 payload over the plain-text one."""
+def read_jsonl(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+    """JSONL shards → documents DataFrame (url, warc_ts, html:binary,
+    lang, src_file) — the same shape :func:`scones.warc.read_warc`
+    yields, so the snapshot core is format-agnostic.  Drops url-less
+    rows, parses ``ts`` and takes the base64 payload over the plain-text
+    one."""
+    raw = (
+        spark.read.schema(JSONL_SCHEMA)
+        .json(paths)
+        .withColumn("src_file", F.col("_metadata.file_path"))
+    )
     return raw.where(F.col("url").isNotNull()).select(
         "url",
         F.to_timestamp("ts").alias("warc_ts"),
@@ -44,20 +51,8 @@ def project_jsonl(raw: DataFrame, *extra: str) -> DataFrame:
             F.unbase64("html_b64"), F.col("html").cast("binary")
         ).alias("html"),
         "lang",
-        *extra,
+        "src_file",
     )
-
-
-def read_jsonl(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """JSONL shards → documents DataFrame (url, warc_ts, html:binary,
-    lang, src_file) — the same shape :func:`scones.warc.read_warc`
-    yields, so the snapshot core is format-agnostic."""
-    raw = (
-        spark.read.schema(JSONL_SCHEMA)
-        .json(paths)
-        .withColumn("src_file", F.col("_metadata.file_path"))
-    )
-    return project_jsonl(raw, "src_file")
 
 
 def write_jsonl(path: str, records: list[dict], gzip_file: bool = False) -> None:

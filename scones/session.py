@@ -13,10 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Arrow batch size (≈ the reference's spool batching, supervisor.go:46,
-# scaled up for columnar transfer): 64k-row batches measured ~1.4x faster
-# than 10k on the extract path — fewer allocations, fewer page faults,
-# better amortized IPC.
 # Arrow batch size for the Python crossing.  Round 3 re-measured this
 # warm (persistent JVM, per-level affinity): 16k batches are 1.6× faster
 # than 64k at 8 AND 32 concurrent workers and neutral at 2 — a 64k batch

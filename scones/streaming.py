@@ -1,30 +1,24 @@
-"""Structured Streaming flavor of the pipeline (SURVEY.md §2 O1, §7 step 5).
+"""Streaming operators (SURVEY.md §2 O1): a file-source stream over the
+corpus directory, a stateful sessionizer, event-time windowed counts, a
+watermark-bounded dedup and a stateless stream-static Bloom probe.  Each
+operator also runs on a batch frame (or has a batch twin), which is how
+the tests check it.
 
-The reference's continuous tail loop — re-glob every 10-15 s, pick up new
-files/bytes, ship, checkpoint (/root/reference/supervisor.go:56,253-282) —
-maps onto Spark's file streaming source: each micro-batch discovers new
-files, the engine's checkpoint (offset log + file-source seen-files log)
-replaces the BoltDB high-water-mark store, and ``availableNow`` gives the
-"drain everything then stop" batch-incremental mode the tests use (the
-batch lineage table in lineage.py is the other, self-managed flavor).
-
-The transformation plan is the SAME code the batch path uses
-(extract → enrich → route) — one definition, two execution modes.
+Durable ingest is not here.  Every snapshot goes through the one snapshot
+core (``pipeline._run_snapshot``: plan → write → audit → lineage commit →
+metrics row); the reference's run-forever re-glob loop
+(supervisor.go:56,253-282) is ``backoff.run_daemon``
+(``--daemon``) over that core, with SIGTERM draining the in-flight
+snapshot before the loop exits.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .config import PipelineConfig
 from .enrich import with_host
 from .incremental import bloom_mask, bloom_position, bloom_word
-from .jsonl import JSONL_SCHEMA, project_jsonl
-from .pipeline import _check_knobs, extract_and_enrich
-from .route import with_sink_id
 
 CORPUS_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
@@ -40,107 +34,6 @@ def stream_source(spark: SparkSession, input_dir: str, max_files: int = 16) -> D
         .option("maxFilesPerTrigger", max_files)
         .parquet(input_dir)
     )
-
-
-def stream_source_jsonl(
-    spark: SparkSession, input_dir: str, max_files: int = 16
-) -> DataFrame:
-    """JSONL flavor of :func:`stream_source` (.jsonl/.jsonl.gz shards
-    landing in a directory): same record contract and projection as the
-    batch path (:func:`scones.jsonl.project_jsonl`), same downstream
-    plan — the engine's seen-files log provides the admission state the
-    batch path keeps in lineage."""
-    raw = (
-        spark.readStream.schema(JSONL_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .json(input_dir)
-    )
-    return project_jsonl(raw)
-
-
-class _StreamSource:
-    """The snapshot knobs the streaming runners honor: framing, the host
-    join and routing.  Static fields, spread, the dedup index and LM
-    scoring belong to the batch core's write and commit steps, which the
-    engine's file sink replaces here, so they are rejected."""
-
-    mode = "stream"
-    honors = frozenset({"host_meta_path", "n_sinks", "max_length"})
-    audit_columns = frozenset()
-
-
-def build_stream_plan(
-    spark: SparkSession, cfg: PipelineConfig, stream: DataFrame
-) -> DataFrame:
-    """extract → enrich → route over a stream; raises ``ValueError`` for a
-    non-default knob the streaming runners do not honor."""
-    _check_knobs(cfg, _StreamSource)
-    df = extract_and_enrich(spark, cfg, stream.drop("text"))
-    return with_sink_id(df, cfg.n_sinks)
-
-
-def run_stream_available_now(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    input_dir: str,
-    source: DataFrame | None = None,
-) -> None:
-    """Drain all currently-available files into the routed sinks, then stop.
-
-    Exactly-once delivery to the parquet sinks comes from the streaming
-    checkpoint + the file sink's transaction log (_spark_metadata) — the
-    engine-managed analogue of our batch write-audit-publish protocol.
-    ``source`` overrides the default parquet file stream (e.g.
-    :func:`stream_source_jsonl`).
-    """
-    if source is None:
-        source = stream_source(spark, input_dir)
-    routed = build_stream_plan(spark, cfg, source)
-    q = (
-        routed.drop("html", "extracted_str")
-        .writeStream.format("parquet")
-        .option("path", cfg.output_dir)
-        .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, "stream"))
-        .partitionBy("sink_id")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_stream_continuous(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    input_dir: str,
-    trigger_sec: float = 1.0,
-    max_files: int = 16,
-):
-    """Long-running daemon mode: re-discover and ship new files every
-    ``trigger_sec`` — the reference's run-forever loop (GlobRefresh tick,
-    cmd/butteredscones/butteredscones.go:85-95).  Returns the running
-    StreamingQuery; stop it with :func:`graceful_stop`.
-    """
-    routed = build_stream_plan(spark, cfg, stream_source(spark, input_dir, max_files))
-    return (
-        routed.drop("html", "extracted_str")
-        .writeStream.format("parquet")
-        .option("path", cfg.output_dir)
-        .option("checkpointLocation", os.path.join(cfg.checkpoint_dir, "stream"))
-        .partitionBy("sink_id")
-        .trigger(processingTime=f"{trigger_sec} seconds")
-        .start()
-    )
-
-
-def graceful_stop(query, timeout_sec: float = 60.0) -> None:
-    """SIGTERM-drain semantics (supervisor.go:91-94 Stop(): close the
-    request channel, WAIT for in-flight chunks to be acked): process
-    everything already discovered, then stop the trigger loop cleanly.
-    A plain ``stop()`` could abandon a discovered-but-unshipped batch to
-    the next restart; this drains first."""
-    query.processAllAvailable()
-    query.stop()
-    query.awaitTermination(timeout_sec)
 
 
 SESSION_OUTPUT_DDL = (

@@ -39,9 +39,9 @@ fixed setup cost before it reads a byte, including
 CPython 3.11 re-reads the ``pyspark.zip`` directory for each of its
 zipimporters (~0.14 s of CPU per task, measured on a 4-core host).  A
 16-file tail on 4 cores ran 16 tasks; capping at 4 roughly halved the
-snapshot's CPU time.  Giant single files are split into several
-(file, start, end) ranges with ``max_range_bytes`` (see
-:func:`split_work_units`).
+snapshot's CPU time.  A file that grew by more than
+:data:`MAX_UNIT_BYTES` is split into several (file, start, end) ranges
+(see :func:`split_work_units`).
 """
 
 from __future__ import annotations
@@ -58,6 +58,12 @@ from pyspark.sql import functions as F
 from .config import PipelineConfig
 from .lineage import LineageStore
 from .pipeline import _run_snapshot
+
+# Largest byte range one work unit frames.  A unit's lines become one Arrow
+# batch, whose binary offsets are int32, so a unit must stay far under
+# 2 GiB; 256 MiB also bounds one Python worker's read buffer.  A log that
+# grew by more than this between snapshots is framed as several units.
+MAX_UNIT_BYTES = 256 << 20
 
 LINE_SCHEMA = (
     "src_file string, line binary, hwm bigint, line_no bigint, "
@@ -82,12 +88,13 @@ def plan_tail_work(store: LineageStore, input_glob: str) -> list[tuple[str, int]
 
 
 def split_work_units(
-    work: list[tuple[str, int]], max_range_bytes: int = 0
+    work: list[tuple[str, int]], max_range_bytes: int
 ) -> list[tuple[str, int, int, bool]]:
-    """(file, start, end, aligned) units; giant files split into ranges.
+    """(file, start, end, aligned) units, none longer than
+    ``max_range_bytes``.
 
-    With ``max_range_bytes`` > 0 a single multi-GB file parallelizes
-    across tasks (the reference is strictly one reader per file).  Line
+    A single multi-GB file parallelizes across tasks (the reference is
+    strictly one reader per file).  Line
     ownership at boundaries follows the TextInputFormat rule: a line
     belongs to the unit containing its FIRST byte; a non-aligned unit
     scans forward past its first newline, and every unit reads past its
@@ -100,7 +107,7 @@ def split_work_units(
     units: list[tuple[str, int, int, bool]] = []
     for path, start in work:
         end = os.path.getsize(path)
-        if max_range_bytes <= 0 or end - start <= max_range_bytes:
+        if end - start <= max_range_bytes:
             units.append((path, start, end, True))
             continue
         pos = start
@@ -138,7 +145,6 @@ def read_tail(
     spark: SparkSession,
     work: list[tuple[str, int]],
     max_length: int = 0,
-    max_range_bytes: int = 0,
 ) -> DataFrame:
     """One row per newly-framed line across all work units, plus one
     sentinel row (line IS NULL) per unit whose frame advanced without
@@ -146,19 +152,19 @@ def read_tail(
 
     The end offset is pinned at plan time (current size), so a file
     growing mid-job still yields a consistent snapshot; bytes past
-    ``end`` are next snapshot's work.  ``max_range_bytes`` > 0 splits
-    giant files into parallel units (see :func:`split_work_units` for
-    the boundary-ownership rule).
+    ``end`` are next snapshot's work.  A range longer than
+    :data:`MAX_UNIT_BYTES` is split into several units (see
+    :func:`split_work_units` for the boundary-ownership rule).
 
     The units are dealt into ``min(units, defaultParallelism)``
     partitions by :func:`assign_work_units`: partition ``i`` frames
     group ``i``, one unit after another, so a task's fixed Python setup
     cost is paid once per core rather than once per file.  The kernel
     yields one Arrow batch per unit, so a batch never holds more than
-    one unit's lines (Arrow binary offsets are int32: ``max_range_bytes``
+    one unit's lines (Arrow binary offsets are int32: ``MAX_UNIT_BYTES``
     bounds a unit's size).
     """
-    units = split_work_units(work, max_range_bytes)
+    units = split_work_units(work, MAX_UNIT_BYTES)
     groups = assign_work_units(units, spark.sparkContext.defaultParallelism)
 
     def frame_unit(
@@ -270,9 +276,6 @@ class TailSource:
         {"src_file", "line", "hwm", "frame_end", "bytes_read", "unit_start", "sink_id"}
     )
 
-    def __init__(self, max_range_bytes: int = 0):
-        self.max_range_bytes = max_range_bytes
-
     def idle(self) -> dict:
         return {"lines": 0}
 
@@ -282,7 +285,7 @@ class TailSource:
     def read(
         self, spark: SparkSession, cfg: PipelineConfig, work: list[tuple[str, int]]
     ) -> DataFrame:
-        lines = read_tail(spark, work, cfg.max_length, self.max_range_bytes)
+        lines = read_tail(spark, work, cfg.max_length)
         return lines.select(
             "src_file",
             "line",
@@ -307,7 +310,7 @@ class TailSource:
         # exact I/O accounting with range splitting: bytes_read is constant
         # within a unit, so max-per-unit → sum-per-file is the total bytes
         # the snapshot actually read from that file (round-2 advice: a bare
-        # per-file max reported one unit's cost when max_range_bytes > 0)
+        # per-file max reported one unit's cost when a file was split)
         agg = (
             []
             if written is None
@@ -354,7 +357,6 @@ def run_tail_snapshot(
     checkpoint_dir: str,
     n_sinks: int = 2,
     max_length: int = 0,
-    max_range_bytes: int = 0,
     fail_before_commit: bool = False,
 ) -> dict:
     """One incremental tail snapshot: frame new bytes → decorate
@@ -371,4 +373,4 @@ def run_tail_snapshot(
         max_length=max_length,
         mode="tail",
     )
-    return _run_snapshot(spark, cfg, TailSource(max_range_bytes), fail_before_commit)
+    return _run_snapshot(spark, cfg, TailSource(), fail_before_commit)

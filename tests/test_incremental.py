@@ -5,10 +5,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from scones.incremental import (
-    commit_snapshot_with_index,
     incremental_candidates,
     incremental_lsh_pairs,
     read_band_index,
+    write_band_index,
 )
 from scones.textops import minhash_lsh_pairs
 
@@ -17,19 +17,21 @@ SF_DIR = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="module")
 def snapshots(spark, tmp_path_factory):
-    """Snapshot 1 (even doc_ids) committed with its band index;
-    snapshot 2 (odd doc_ids) arrives later."""
+    """Snapshot 1 (even doc_ids) written with its band index;
+    snapshot 2 (odd doc_ids) arrives later.  Each snapshot dir holds
+    ``documents`` and ``band_index`` (8 hashes, bands of 2, 3-shingles)."""
     root = str(tmp_path_factory.mktemp("corpus_root"))
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     )
-    s1 = commit_snapshot_with_index(
-        docs.where(F.col("doc_id") % 2 == 0), root, 1, k=3
-    )
-    s2 = commit_snapshot_with_index(
-        docs.where(F.col("doc_id") % 2 == 1), root, 2, k=3
-    )
-    return root, s1, s2
+    snaps = []
+    for sid in (1, 2):
+        part = docs.where(F.col("doc_id") % 2 == sid - 1)
+        snap_dir = f"{root}/snapshot={sid:06d}"
+        part.write.parquet(f"{snap_dir}/documents")
+        write_band_index(part, f"{snap_dir}/band_index", 8, 2, 3)
+        snaps.append(snap_dir)
+    return root, *snaps
 
 
 def test_candidate_generation_never_reads_committed_text(spark, snapshots):

@@ -4,8 +4,6 @@ core and lineage protocol as the WARC path (scones/jsonl.py)."""
 import base64
 import zlib
 
-from pyspark.sql import functions as F
-
 from scones.jsonl import read_jsonl, write_jsonl
 
 
@@ -138,37 +136,3 @@ def test_export_jsonl_roundtrip(spark, tmp_path):
         ).collect()
     }
     assert back == original
-
-
-def test_stream_jsonl_available_now_incremental(spark, tmp_path, host_meta_path):
-    """Streaming × JSONL: availableNow drain routes shards; a second
-    wave processes only NEW files (engine seen-files log)."""
-    import zlib
-
-    from scones.config import PipelineConfig
-    from scones.streaming import run_stream_available_now, stream_source_jsonl
-
-    in_dir = tmp_path / "in"
-    recs = _recs(0, 24)
-    write_jsonl(str(in_dir / "w0.jsonl"), recs[:12])
-
-    cfg = PipelineConfig(
-        input_glob=str(in_dir / "*.jsonl"),
-        output_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        host_meta_path=host_meta_path,
-        n_sinks=3,
-    )
-    run_stream_available_now(
-        spark, cfg, str(in_dir), source=stream_source_jsonl(spark, str(in_dir))
-    )
-    assert spark.read.parquet(cfg.output_dir).count() == 12
-
-    write_jsonl(str(in_dir / "w1.jsonl.gz"), recs[12:], gzip_file=True)
-    run_stream_available_now(
-        spark, cfg, str(in_dir), source=stream_source_jsonl(spark, str(in_dir))
-    )
-    got = spark.read.parquet(cfg.output_dir)
-    assert got.count() == 24
-    for r in got.select("url", "sink_id").collect():
-        assert int(r.sink_id) == zlib.crc32(r.url.encode()) % 3

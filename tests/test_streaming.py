@@ -1,24 +1,12 @@
-"""Structured Streaming flavor: availableNow drain + incremental pickup
-+ windowed/watermarked aggregation (SURVEY.md §2 O1)."""
-
-import os
+"""Streaming operators (SURVEY.md §2 O1): bounded micro-batches,
+windowed/watermarked aggregation, watermark dedup and the stream-static
+Bloom probe, each checked against a batch twin."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
-from scones.config import PipelineConfig
 from scones.corpus import CORPUS_SCHEMA, generate_rows
-from scones.oracle import extract_text, route
-from scones.streaming import (
-    graceful_stop,
-    run_stream_available_now,
-    run_stream_continuous,
-    stream_source,
-    windowed_host_counts,
-)
-
-N_SINKS = 3
+from scones.streaming import stream_source, windowed_host_counts
 
 
 def _write_files(dirpath, rows, n_files, offset=0):
@@ -30,37 +18,6 @@ def _write_files(dirpath, rows, n_files, offset=0):
                 pa.Table.from_pylist(chunk, schema=CORPUS_SCHEMA),
                 f"{dirpath}/docs_{offset + i:04d}.parquet",
             )
-
-
-def test_stream_available_now_and_incremental(spark, tmp_path, host_meta_path):
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    rows = generate_rows(120, seed=21)
-    _write_files(str(in_dir), rows[:60], 2)
-
-    cfg = PipelineConfig(
-        input_glob=str(in_dir / "*.parquet"),
-        output_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        host_meta_path=host_meta_path,
-        n_sinks=N_SINKS,
-    )
-    run_stream_available_now(spark, cfg, str(in_dir))
-    got = spark.read.parquet(cfg.output_dir)
-    assert got.count() == 60
-
-    # Second wave: only NEW files are processed (checkpointed file log).
-    _write_files(str(in_dir), rows[60:], 2, offset=2)
-    run_stream_available_now(spark, cfg, str(in_dir))
-    result = spark.read.parquet(cfg.output_dir)
-    assert result.count() == 120
-
-    data = {r.url: (bytes(r.extracted), r.sink_id) for r in result.collect()}
-    assert len(data) == 120, "no duplicates across incremental restarts"
-    for row in rows:
-        ext, sink = data[row["url"]]
-        assert ext == extract_text(row["html"])
-        assert sink == route(row["url"], N_SINKS)
 
 
 def test_max_files_per_trigger_bounds_micro_batches(spark, tmp_path):
@@ -147,50 +104,6 @@ def test_windowed_host_counts_matches_batch(spark, tmp_path):
     assert got, "stream emitted nothing"
     for k, v in got.items():
         assert want[k] == v
-
-
-def test_continuous_mode_picks_up_late_files_and_stops_cleanly(
-    spark, tmp_path, host_meta_path
-):
-    """Daemon-mode parity (cmd/butteredscones.go:85-95): a processingTime
-    stream keeps re-globbing — files landing AFTER start are shipped
-    without restarting — and graceful_stop drains in-flight work before
-    terminating (SIGTERM semantics, supervisor.go:91-94)."""
-    import time
-
-    in_dir = tmp_path / "cont_in"
-    in_dir.mkdir()
-    rows = generate_rows(60, seed=71)
-    _write_files(str(in_dir), rows[:30], 1)
-
-    cfg = PipelineConfig(
-        input_glob=str(in_dir / "*.parquet"),
-        output_dir=str(tmp_path / "cont_out"),
-        checkpoint_dir=str(tmp_path / "cont_ckpt"),
-        host_meta_path=host_meta_path,
-        n_sinks=N_SINKS,
-    )
-    q = run_stream_continuous(spark, cfg, str(in_dir), trigger_sec=0.5)
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(cfg.output_dir).count() >= 30:
-                    break
-            except Exception:
-                pass  # sink dir not created yet
-            time.sleep(0.5)
-        # second wave lands while the query is RUNNING
-        _write_files(str(in_dir), rows[30:], 1, offset=1)
-        graceful_stop(q)  # must drain wave 2 before stopping
-    finally:
-        if q.isActive:
-            q.stop()
-    assert not q.isActive
-    got = {r.url: r.sink_id for r in spark.read.parquet(cfg.output_dir).collect()}
-    assert len(got) == 60, "graceful stop must drain files landed mid-run"
-    for row in rows:
-        assert got[row["url"]] == route(row["url"], N_SINKS)
 
 
 def test_backpressure_bounded_batches_under_slow_sink(spark, tmp_path):
@@ -331,33 +244,3 @@ def test_streaming_bloom_probe_flags_committed_keys(spark, tmp_path):
         ).select("url", "maybe_seen").collect()
     }
     assert b == got
-
-
-@pytest.mark.parametrize(
-    "knob,value",
-    [
-        ("static_fields", {"env": "prod"}),
-        ("spread_partitions", 2),
-        ("dedup_index", True),
-        ("lm_model_path", "lm_model"),
-    ],
-)
-def test_stream_runners_reject_unhonored_knobs(spark, tmp_path, knob, value):
-    """Both streaming runners raise for a knob they would otherwise drop,
-    before a query starts: no output and no checkpoint dir appear."""
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    _write_files(str(in_dir), generate_rows(10, seed=5), 1)
-    cfg = PipelineConfig(
-        input_glob=str(in_dir / "*.parquet"),
-        output_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        n_sinks=N_SINKS,
-        **{knob: value},
-    )
-    with pytest.raises(ValueError, match=knob):
-        run_stream_available_now(spark, cfg, str(in_dir))
-    with pytest.raises(ValueError, match=knob):
-        graceful_stop(run_stream_continuous(spark, cfg, str(in_dir)))
-    assert not os.path.exists(cfg.output_dir)
-    assert not os.path.exists(cfg.checkpoint_dir)

@@ -6,6 +6,7 @@ file_reader_test.go golden numbers) to the Spark tail source.
 
 import pytest
 
+from scones import tailsource
 from scones.lineage import LineageStore
 from scones.tailsource import plan_tail_work, run_tail_snapshot
 
@@ -173,7 +174,7 @@ def test_multiple_files_and_new_file_discovery(spark, tmp_path):
     assert sum(per_sink.values()) == 80 and len(per_sink) == N_SINKS
 
 
-def test_range_split_framing_equals_single_unit(spark, tmp_path):
+def test_range_split_framing_equals_single_unit(spark, tmp_path, monkeypatch):
     """Giant-file range splitting must be byte-exact vs one-unit framing:
     same lines, same hwms, same committed offset — across CRLF lines,
     skipped over-long lines, boundary-straddling lines, partial tail."""
@@ -193,7 +194,8 @@ def test_range_split_framing_equals_single_unit(spark, tmp_path):
             parts.append(f"{i}:".encode() + b"y" * rng.randrange(0, 15) + b"\n")
     blob = b"".join(parts) + b"partial tail without newline"
 
-    def run_variant(tag, max_range_bytes):
+    def run_variant(tag, max_unit_bytes):
+        monkeypatch.setattr(tailsource, "MAX_UNIT_BYTES", max_unit_bytes)
         d = tmp_path / tag
         (d / "logs").mkdir(parents=True)
         (d / "logs" / "big.log").write_bytes(blob)
@@ -204,7 +206,6 @@ def test_range_split_framing_equals_single_unit(spark, tmp_path):
             str(d / "ckpt"),
             n_sinks=N_SINKS,
             max_length=16,
-            max_range_bytes=max_range_bytes,
         )
         df = spark.read.parquet(str(d / "out") + "/snapshot_id=*")
         lines = sorted(
@@ -217,7 +218,7 @@ def test_range_split_framing_equals_single_unit(spark, tmp_path):
         )
         return s["lines"], lines, committed
 
-    base = run_variant("single", 0)
+    base = run_variant("single", len(blob))
     for mrb in (64, 257, 1024):
         got = run_variant(f"ranged{mrb}", mrb)
         assert got == base, f"range split {mrb} diverged"
@@ -237,7 +238,7 @@ def test_range_split_parallelizes_one_file(spark, tmp_path):
     assert units[-1] == (str(f), 9, 10, False)
 
 
-def test_range_split_bytes_read_sums_all_units(spark, tmp_path):
+def test_range_split_bytes_read_sums_all_units(spark, tmp_path, monkeypatch):
     """With range splitting, summary bytes_read must be the TOTAL I/O
     across a file's units (max-per-unit → sum-per-file), not one unit's
     max — two equal-sized middle units read identical byte counts and a
@@ -247,13 +248,13 @@ def test_range_split_bytes_read_sums_all_units(spark, tmp_path):
     f = logs / "wide.log"
     line = b"q" * 9 + b"\n"
     f.write_bytes(line * 100)  # 1000 bytes
+    monkeypatch.setattr(tailsource, "MAX_UNIT_BYTES", 250)  # 4 units of 250 bytes
     s = run_tail_snapshot(
         spark,
         str(logs / "*.log"),
         str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
         n_sinks=N_SINKS,
-        max_range_bytes=250,  # 4 units of 250 bytes each
     )
     assert s["lines"] == 100
     # every unit reads its 250-byte range; only boundary sync/straddle
@@ -261,6 +262,44 @@ def test_range_split_bytes_read_sums_all_units(spark, tmp_path):
     # never a single unit's 250
     assert s["bytes_read"][str(f)] >= 1000
     assert s["bytes_read"][str(f)] < 1100
+
+
+def test_cli_tail_mode_splits_a_file_larger_than_a_unit(spark, tmp_path, monkeypatch):
+    """The CLI's tail snapshot (``snapshot_fn_for_mode("tail")``) bounds
+    every work unit by MAX_UNIT_BYTES: a 1000-byte file with the bound at
+    250 is framed as several units, the lines equal the oracle framing,
+    and the committed offset is the oracle's frame position."""
+    from scones.config import PipelineConfig
+    from scones.oracle import frame_bytes
+    from scones.pipeline import snapshot_fn_for_mode
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    f = logs / "wide.log"
+    lines = (f"l{j:03d} ".encode() + b"v" * (j % 7) + b"\n" for j in range(200))
+    blob = b"".join(lines)[:1000]  # ends in a partial line
+    f.write_bytes(blob)
+    monkeypatch.setattr(tailsource, "MAX_UNIT_BYTES", 250)
+    cfg = PipelineConfig(
+        str(logs / "*.log"),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        n_sinks=N_SINKS,
+        mode="tail",
+    )
+    s = snapshot_fn_for_mode("tail")(spark, cfg)
+    want = frame_bytes(blob)
+    assert s["lines"] == len(want.lines)
+
+    df = spark.read.parquet(str(tmp_path / "out") + "/snapshot_id=*")
+    assert df.select("unit_start").distinct().count() > 1
+    got = sorted(
+        (r.hwm, bytes(r.line))
+        for r in df.select("hwm", "line").where("line IS NOT NULL").collect()
+    )
+    assert got == list(zip(want.hwms, want.lines))
+    committed = LineageStore(str(tmp_path / "ckpt")).read_all().to_pylist()
+    assert [r["offset_end"] for r in committed] == [want.position]
 
 
 def test_assign_work_units_balanced_and_deterministic():
@@ -286,7 +325,7 @@ def test_assign_work_units_balanced_and_deterministic():
     assert assign_work_units([], 4) == []
 
 
-def test_units_share_tasks_balanced_by_planned_bytes(spark, tmp_path):
+def test_units_share_tasks_balanced_by_planned_bytes(spark, tmp_path, monkeypatch):
     """More units than cores: read_tail frames them in exactly
     min(units, defaultParallelism) partitions, each unit in one partition
     (the one assign_work_units picked), partitions balanced by planned
@@ -314,13 +353,14 @@ def test_units_share_tasks_balanced_by_planned_bytes(spark, tmp_path):
     big = logs / "big.log"  # short lines: every 600-byte range owns a line
     big.write_bytes(b"".join(f"big {j}\n".encode() for j in range(500)))
     work.append((str(big), 0))
-    max_range_bytes = 600
+    max_unit_bytes = 600
+    monkeypatch.setattr(tailsource, "MAX_UNIT_BYTES", max_unit_bytes)
 
-    units = split_work_units(work, max_range_bytes)
+    units = split_work_units(work, max_unit_bytes)
     assert sum(1 for u in units if u[0] == str(big)) > 1
     assert len(units) > n_cores
 
-    df = read_tail(spark, work, max_range_bytes=max_range_bytes)
+    df = read_tail(spark, work)
     assert df.rdd.getNumPartitions() == min(len(units), n_cores)
 
     rows = df.select(
