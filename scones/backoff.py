@@ -197,8 +197,8 @@ def run_daemon(
             # hung session: kill + relaunch (the bench harness's 900 s
             # FlagshipServer treatment, applied to the production loop),
             # then retry the snapshot under the usual backoff.  A FAILED
-            # relaunch (transient OOM during the 12 GB pre-touch, port
-            # exhaustion) must not kill the supervisor — keep the old
+            # relaunch (transient OOM pre-touching the host-sized heap,
+            # port exhaustion) must not kill the supervisor — keep the old
             # handle; the next attempt will time out again and the
             # relaunch retries under the same backoff, forever, like
             # everything else in this loop.

@@ -27,6 +27,7 @@ so ``format("iceberg")`` drops in.
 
 from __future__ import annotations
 
+import contextlib
 import errno
 import glob as globmod
 import os
@@ -191,69 +192,61 @@ class LineageStore:
         snaps = self.committed_snapshots()
         return (snaps[-1] + 1) if snaps else 1
 
-    def commit(self, snapshot_id: int, rows: list[dict]) -> str:
-        """Publish lineage rows atomically (tmp file + rename = the ACK);
-        auto-fold the manifest once enough loose files accumulate.
+    def _manifest(self, snapshot_id: int) -> str:
+        return os.path.join(self.dir, f"snapshot_{snapshot_id:012d}.parquet")
 
-        The publish is FENCED: under the epoch lock it refuses both a
-        stale attempt (a newer :meth:`fence_attempt` happened — the
-        watchdog relaunched and the abandoned thread woke late) and an
-        overwrite of an already-published ``snapshot_NNN.parquet`` (a
+    @contextlib.contextmanager
+    def fenced(self, snapshot_id: int):
+        """Hold the publish fence for ``snapshot_id``: raise
+        :class:`StaleAttemptError` if this is a stale attempt (a newer
+        :meth:`fence_attempt` happened — the watchdog relaunched and the
+        abandoned thread woke late) or the id is already published (a
         manifest, once published, is immutable — the retry that owns the
-        id committed first).  Either refusal raises
-        :class:`StaleAttemptError`; the loser's tmp file is removed."""
-        table = pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA)
-        final = os.path.join(self.dir, f"snapshot_{snapshot_id:012d}.parquet")
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        pq.write_table(table, tmp, compression="zstd")
+        id committed first).  The body runs under the epoch lock, so no
+        newer attempt can fence in between the check and the body."""
         with _EPOCH_LOCK:
             stale = (
                 self._epoch is not None
                 and _ATTEMPT_EPOCHS.get(self.dir) != self._epoch
             )
-            if stale or os.path.exists(final):
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
+            if stale or os.path.exists(self._manifest(snapshot_id)):
                 why = "superseded attempt" if stale else "already published"
                 raise StaleAttemptError(
                     f"refusing commit of snapshot {snapshot_id}: {why}"
                 )
-            # Publish via os.link: atomic create-if-absent, so the
-            # "published manifests are immutable" fence holds ACROSS
-            # processes too (round-5 ADVICE: the exists()+replace pair
-            # is check-then-act — two daemons on one checkpoint dir
-            # could both pass the check and the second would silently
-            # overwrite).  EEXIST from the loser translates into the
-            # same StaleAttemptError the in-process fence raises.
-            try:
-                os.link(tmp, final)
-            except FileExistsError:
+            yield
+
+    def commit(self, snapshot_id: int, rows: list[dict]) -> str:
+        """Publish lineage rows atomically (tmp file + link = the ACK)
+        under :meth:`fenced`; auto-fold the manifest once enough loose
+        files accumulate.  A refused or failed publish raises and leaves
+        no tmp file."""
+        table = pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA)
+        final = self._manifest(snapshot_id)
+        tmp = final + f".tmp-{uuid.uuid4().hex}"
+        pq.write_table(table, tmp, compression="zstd")
+        try:
+            with self.fenced(snapshot_id):
+                # os.link is an atomic create-if-absent, so published
+                # manifests stay immutable ACROSS processes too (two
+                # daemons on one checkpoint dir): the loser's EEXIST is
+                # the same StaleAttemptError the in-process fence raises.
                 try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-                raise StaleAttemptError(
-                    f"refusing commit of snapshot {snapshot_id}: "
-                    "already published (concurrent writer)"
-                ) from None
-            except OSError as e:
-                if e.errno not in _NO_HARD_LINKS:
-                    # a real failure (ENOSPC, EIO, ...): publish nothing
-                    try:
-                        os.remove(tmp)
-                    except OSError:
-                        pass
-                    raise
-                # filesystem without hard links: keep the (process-local
-                # fenced) rename path rather than failing the commit
-                os.replace(tmp, final)
-            else:
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
+                    os.link(tmp, final)
+                except FileExistsError:
+                    raise StaleAttemptError(
+                        f"refusing commit of snapshot {snapshot_id}: "
+                        "already published (concurrent writer)"
+                    ) from None
+                except OSError as e:
+                    if e.errno not in _NO_HARD_LINKS:
+                        raise  # a real failure (ENOSPC, EIO, ...)
+                    # filesystem without hard links: keep the (process-
+                    # local fenced) rename path rather than failing
+                    os.replace(tmp, final)
+        finally:
+            with contextlib.suppress(OSError):
+                os.remove(tmp)
         if (
             self.compact_threshold > 0
             and len(self._loose_files()) >= self.compact_threshold

@@ -25,6 +25,8 @@ import shutil
 
 from pyspark.sql import SparkSession
 
+from .lineage import LineageStore
+
 
 def _dir_stats(snap_dir: str) -> tuple[int, int]:
     """(total parquet bytes, parquet file count) under a snapshot dir."""
@@ -157,12 +159,13 @@ def consolidate_indexes(
     spark: SparkSession, checkpoint_dir: str, lock_timeout_sec: float = 600.0
 ) -> dict:
     """Fold the per-snapshot dedup-index side tables (band_index /
-    fp_index / bloom_index, one ``snapshot_id=N`` dir per commit) into
-    ONE dir under the HIGHEST committed id — the same fold trick as the
-    lineage manifest: probes list dirs by committed id and skip missing
-    ones, so a consolidated dir under max(N) containing the union of
-    1..N rows answers every probe identically while day-N read cost
-    drops from N directory opens to one.  Bloom words merge by bit_or
+    fp_index / bloom_index, one ``snapshot_id=N`` dir per snapshot) of
+    the committed snapshots into ONE dir under the HIGHEST of them —
+    the same fold trick as the lineage manifest: probes list dirs by
+    committed id and skip missing ones, so a consolidated dir under
+    max(N) containing the union of 1..N rows answers every probe
+    identically while day-N read cost drops from N directory opens to
+    one.  Bloom words merge by bit_or
     (filters compose by OR).
 
     Safety mirrors :func:`compact_snapshot`: the union lands in a
@@ -199,6 +202,7 @@ def _consolidate_indexes_locked(
         merge_blooms,
     )
 
+    committed = LineageStore(checkpoint_dir).committed_snapshots()
     out: dict = {}
     for sub, kind in (
         (BAND_INDEX_SUBDIR, "band"),
@@ -208,22 +212,25 @@ def _consolidate_indexes_locked(
         root = os.path.join(checkpoint_dir, sub)
         if not os.path.isdir(root):
             continue
-        dirs = sorted(
-            d for d in os.listdir(root) if d.startswith("snapshot_id=")
-        )
-        if len(dirs) < 2:
-            out[kind] = 0
-            continue
-        ids = [int(d.split("=")[1]) for d in dirs]
-        paths = [os.path.join(root, d) for d in dirs]
-        target = os.path.join(root, f"snapshot_id={max(ids)}")
-        tmp = os.path.join(root, ".consolidating")
-        old = target + ".old"
         # crash recovery FIRST (compact_snapshot recipe): a death
         # between the two swap renames leaves old/ but no target/ —
         # restore before any cleanup, else the max-id index is lost.
-        if os.path.isdir(old) and not os.path.isdir(target):
-            os.rename(old, target)
+        for old in globmod.glob(os.path.join(root, "snapshot_id=*.old")):
+            if not os.path.isdir(old[: -len(".old")]):
+                os.rename(old, old[: -len(".old")])
+        # only committed snapshots' indexes fold: an uncommitted dir (a
+        # crashed attempt's) is rewritten by its rerun and stays put
+        paths = [
+            p
+            for i in committed
+            if os.path.isdir(p := os.path.join(root, f"snapshot_id={i}"))
+        ]
+        if len(paths) < 2:
+            out[kind] = 0
+            continue
+        target = paths[-1]
+        tmp = os.path.join(root, ".consolidating")
+        old = target + ".old"
         for stale in (tmp, old):
             shutil.rmtree(stale, ignore_errors=True)
 
@@ -273,7 +280,7 @@ def _consolidate_indexes_locked(
         for p in paths:
             if p != target:
                 shutil.rmtree(p)
-        out[kind] = len(dirs)
+        out[kind] = len(paths)
     return out
 if __name__ == "__main__":  # pragma: no cover
     main()

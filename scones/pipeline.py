@@ -12,8 +12,8 @@ driver-side bookkeeping:
     → [spread repartition] + partitionBy(sink_id)  ≈ ship (O7/O8/O10)
     → audit the written output → lineage rows
     → dedup index / LM scores (optional side tables)
-    → publish lineage (atomic rename)              ≈ ack + Bolt txn (O11)
     → summary + one persisted metrics row
+    → publish lineage (atomic link)                ≈ ack + Bolt txn (O11)
 
 A mode plugs in a *source* with only what differs: ``plan``, ``read``,
 ``route``, ``audit`` (lineage rows + summary fields), the knobs it
@@ -233,20 +233,17 @@ def _side_tables(
     return info
 
 
-def _run_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    source,
-    fail_before_commit: bool = False,
-) -> dict:
+def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     """The one snapshot loop every ingest mode runs (module docstring).
 
     Returns a summary dict: ``snapshot_id``, the source's audit fields,
     the observed metrics (documents modes), ``output`` and the phase
     walls; ``{"snapshot_id": None, ...}`` when there was nothing new to
-    commit.  ``fail_before_commit`` injects a crash between the sink
-    write and the lineage publish (for the resume tests — the
-    reference's crash-between-send-and-ack window, supervisor.go:191-219).
+    commit.  The metrics row is written before the lineage publish, so
+    a process that dies anywhere leaves either an uncommitted snapshot
+    (rerun under the same id, its row replaced) or a committed one with
+    its row — the reference's crash-between-send-and-ack window,
+    supervisor.go:191-219.
     """
     _check_knobs(cfg, source)
     t_start = time.perf_counter()
@@ -292,11 +289,6 @@ def _run_snapshot(
     if written is not None:
         side = _side_tables(spark, cfg, store, snapshot_id, written)
 
-    if fail_before_commit:
-        raise RuntimeError("injected crash between sink write and lineage commit")
-
-    store.commit(snapshot_id, rows)
-    t_done = time.perf_counter()
     summary = {"snapshot_id": snapshot_id, **fields}
     if obs is not None:
         # an empty snapshot ran zero output tasks → no observed row
@@ -307,57 +299,49 @@ def _run_snapshot(
     summary.update(
         output=snap_dir,
         # phase walls: plan (serial driver), write (the parallel job),
-        # audit+commit (serial driver) — for the Amdahl analysis in
-        # BENCH/BASELINE.md; at 10^12 rows the serial phases are noise.
+        # audit+commit (serial driver, up to the metrics row) — for the
+        # Amdahl analysis in BENCH/BASELINE.md; at 10^12 rows the serial
+        # phases are noise.
         plan_sec=t_planned - t_start,
         write_sec=t_written - t_planned,
-        audit_commit_sec=t_done - t_written,
+        audit_commit_sec=time.perf_counter() - t_written,
         **side,
     )
-    # durable counters (statistics.go parity, but surviving the process);
+    # durable counters (statistics.go parity) land BEFORE the publish,
+    # under its fence, so no death can lose a committed snapshot's row;
     # looked up at call time so a wrapper on scones.statsserver sees it
     from .statsserver import persist_run_metrics
 
-    persist_run_metrics(cfg.checkpoint_dir, summary)
+    with store.fenced(snapshot_id):
+        persist_run_metrics(cfg.checkpoint_dir, summary)
+    store.commit(snapshot_id, rows)
     return summary
 
 
-def run_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    fail_before_commit: bool = False,
-) -> dict:
+def run_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """Process all not-yet-committed parquet input files as one snapshot.
 
     Returns a summary dict; ``{"snapshot_id": None}`` when nothing new.
     """
-    return _run_snapshot(spark, cfg, _DocsSource("documents"), fail_before_commit)
+    return _run_snapshot(spark, cfg, _DocsSource("documents"))
 
 
-def run_warc_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    fail_before_commit: bool = False,
-) -> dict:
+def run_warc_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """WARC-shard flavor of :func:`run_snapshot`: Common-Crawl-style
     containers in, routed parquet sinks out, same lineage/commit
     protocol (shards are immutable → file-granularity admission, like
     the parquet path).
     """
     source = _DocsSource("warc", read_warc)
-    return _run_snapshot(spark, cfg, source, fail_before_commit)
+    return _run_snapshot(spark, cfg, source)
 
 
-def run_jsonl_snapshot(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    fail_before_commit: bool = False,
-) -> dict:
+def run_jsonl_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """JSONL-shard flavor (.jsonl / .jsonl.gz — the other common web-
     corpus distribution format): same lineage/commit protocol; parsing
     is fully JVM-side (see scones/jsonl.py)."""
     source = _DocsSource("jsonl", read_jsonl)
-    return _run_snapshot(spark, cfg, source, fail_before_commit)
+    return _run_snapshot(spark, cfg, source)
 
 
 def snapshot_fn_for_mode(mode: str):

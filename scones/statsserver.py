@@ -51,13 +51,14 @@ def metrics_dir(checkpoint_dir: str) -> str:
 
 
 def persist_run_metrics(checkpoint_dir: str, summary: dict) -> str | None:
-    """Append one metrics row for a completed run (no-op runs skipped).
+    """Write the metrics row of one snapshot (no-op runs skipped).
 
     ``summary`` is the snapshot core's return dict in any mode:
     documents / WARC / JSONL count ``rows`` and carry the observed
     ``payload_bytes`` / ``approx_urls``; tail counts ``lines`` (stored as
-    ``rows``) and observes nothing (0).  Atomic tmp+rename like the
-    lineage publish.
+    ``rows``) and observes nothing (0).  Written before the lineage
+    publish, named by snapshot id, by tmp + rename: a rerun of an
+    uncommitted snapshot replaces its own row.
     """
     if summary.get("snapshot_id") is None:
         return None
@@ -73,7 +74,7 @@ def persist_run_metrics(checkpoint_dir: str, summary: dict) -> str | None:
         "audit_commit_sec": float(summary.get("audit_commit_sec", 0.0)),
     }
     d = metrics_dir(checkpoint_dir)
-    final = os.path.join(d, f"run_{row['snapshot_id']:012d}_{row['run_id']}.parquet")
+    final = os.path.join(d, f"run_{row['snapshot_id']:012d}.parquet")
     tmp = final + ".tmp"
     pq.write_table(pa.Table.from_pylist([row], schema=METRICS_SCHEMA), tmp)
     os.replace(tmp, final)
@@ -81,10 +82,14 @@ def persist_run_metrics(checkpoint_dir: str, summary: dict) -> str | None:
 
 
 def read_run_metrics(checkpoint_dir: str) -> list[dict]:
+    """The metrics rows of committed snapshots; a row whose snapshot
+    never published (the process died first) is not a run."""
     files = sorted(globmod.glob(os.path.join(metrics_dir(checkpoint_dir), "run_*.parquet")))
     if not files:
         return []
-    return pa.concat_tables([pq.read_table(f) for f in files]).to_pylist()
+    committed = set(LineageStore(checkpoint_dir).committed_snapshots())
+    rows = pa.concat_tables([pq.read_table(f) for f in files]).to_pylist()
+    return [r for r in rows if r["snapshot_id"] in committed]
 
 
 class FooterCache:
@@ -125,7 +130,9 @@ class FooterCache:
             self._rows.pop(gone, None)
 
 
-def sink_stats(output_dir: str, cache: FooterCache | None = None) -> dict[str, dict]:
+def sink_stats(
+    output_dir: str, committed: list[int], cache: FooterCache | None = None
+) -> dict[str, dict]:
     """Per-sink live counters (statistics.go:34-45 ClientStatistics
     parity: status / lines_sent / last_send_time / last_chunk_size).
 
@@ -135,8 +142,11 @@ def sink_stats(output_dir: str, cache: FooterCache | None = None) -> dict[str, d
     — with already-seen footers served from ``cache`` so steady-state
     polls are O(changed files), not O(all files).
     A sink here is a routed partition directory ``sink_id=K``; the last
-    chunk is the newest committed snapshot that wrote to it.
+    chunk is the newest committed snapshot that wrote to it.  Only the
+    ``committed`` snapshot ids count: a crashed attempt's output was
+    never sent.
     """
+    committed = set(committed)
     sinks: dict[int, dict] = {}
     paths = sorted(
         globmod.glob(
@@ -152,6 +162,8 @@ def sink_stats(output_dir: str, cache: FooterCache | None = None) -> dict[str, d
             sink_id = int(os.path.basename(sink_dir).split("=", 1)[1])
             snapshot_id = int(os.path.basename(snap_dir).split("=", 1)[1])
         except ValueError:
+            continue
+        if snapshot_id not in committed:
             continue
         try:
             st = os.stat(path)
@@ -230,7 +242,11 @@ def stats_payload(
         "files": files,
         # per-sink ClientStatistics parity (statistics.go:34-45) — only
         # when the caller wires the routed output dir in
-        "sinks": sink_stats(output_dir, footer_cache) if output_dir else {},
+        "sinks": (
+            sink_stats(output_dir, store.committed_snapshots(), footer_cache)
+            if output_dir
+            else {}
+        ),
         "backlog": backlog_report(store, input_glob),
     }
 

@@ -357,7 +357,6 @@ def run_tail_snapshot(
     checkpoint_dir: str,
     n_sinks: int = 2,
     max_length: int = 0,
-    fail_before_commit: bool = False,
 ) -> dict:
     """One incremental tail snapshot: frame new bytes → decorate
     (host, line_str) → route by crc32(file@hwm) → write → commit offsets.
@@ -373,4 +372,4 @@ def run_tail_snapshot(
         max_length=max_length,
         mode="tail",
     )
-    return _run_snapshot(spark, cfg, TailSource(), fail_before_commit)
+    return _run_snapshot(spark, cfg, TailSource())

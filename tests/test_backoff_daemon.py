@@ -42,18 +42,28 @@ def _cfg(tmp_path, corpus_dir, host_meta_path, n_sinks=3):
 
 
 def test_daemon_retries_failed_snapshot_exactly_once_committed(
-    spark, tmp_path, corpus_dir, host_meta_path
+    spark, tmp_path, corpus_dir, host_meta_path, monkeypatch
 ):
     """Injected failure between sink write and lineage commit → the
     daemon backs off (50 ms, the reference's retry minimum,
     supervisor.go:171) and reruns; the SAME snapshot id commits exactly
     once with the full row count — effectively-once at the job level."""
+    from scones.lineage import LineageStore
+
     cfg = _cfg(tmp_path, corpus_dir, host_meta_path)
     attempts = []
+    real_commit = LineageStore.commit
+
+    def flaky_commit(self, snapshot_id, rows):
+        if len(attempts) == 1:
+            raise RuntimeError("injected crash between sink write and commit")
+        return real_commit(self, snapshot_id, rows)
+
+    monkeypatch.setattr(LineageStore, "commit", flaky_commit)
 
     def flaky_run(spark_, cfg_):
         attempts.append(1)
-        return run_snapshot(spark_, cfg_, fail_before_commit=len(attempts) == 1)
+        return run_snapshot(spark_, cfg_)
 
     sleeps = []
     done = run_daemon(
@@ -71,8 +81,6 @@ def test_daemon_retries_failed_snapshot_exactly_once_committed(
     out = spark.read.parquet(done[0]["output"])
     assert out.count() == 400
     # lineage committed exactly one snapshot
-    from scones.lineage import LineageStore
-
     store = LineageStore(cfg.checkpoint_dir)
     assert store.committed_snapshots() == [1]
 

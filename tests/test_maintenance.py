@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from scones.config import PipelineConfig
 from scones.corpus import write_corpus, write_host_meta
+from scones.lineage import LineageStore
 from scones.maintenance import compact_snapshot
 from scones.pipeline import run_snapshot
 
@@ -135,6 +136,16 @@ def test_flagship_server_read_timeout_kills_hung_proc():
     assert srv.proc.poll() is not None
 
 
+def _commit(ck, *ids):
+    """Publish lineage for ``ids``: index dirs fold only once committed."""
+    store = LineageStore(str(ck))
+    for sid in ids:
+        store.commit(sid, [{
+            "snapshot_id": sid, "src_file": f"/in/f{sid}.parquet",
+            "offset_start": 0, "offset_end": 1, "row_count": 1,
+        }])
+
+
 def test_consolidate_indexes_fold_preserves_probes(spark, tmp_path):
     """Three committed snapshots' band/fp/bloom index dirs fold into one
     under the highest id; every probe answers identically afterwards
@@ -165,6 +176,7 @@ def test_consolidate_indexes_fold_preserves_probes(spark, tmp_path):
             str(ck / "bloom_index" / f"snapshot_id={sid}"),
         )
 
+    _commit(ck, 1, 2, 3)
     band_dirs = [str(ck / "band_index" / f"snapshot_id={s}") for s in (1, 2, 3)]
     before_bands = {
         tuple(r) for r in read_band_index(spark, *band_dirs).collect()
@@ -237,6 +249,7 @@ def test_consolidation_crash_window_leaves_probe_correct_state(spark, tmp_path):
         str(ck / "bloom_index" / "snapshot_id=1"),
         str(ck / "bloom_index" / "snapshot_id=2"),
     )
+    _commit(ck, 1, 2)
     probe_docs = docs.select(
         F.concat(F.lit("9#"), F.col("doc_id")).alias("doc_id"), "text"
     )
@@ -253,6 +266,36 @@ def test_consolidation_crash_window_leaves_probe_correct_state(spark, tmp_path):
     # after the self-healing fold: single dir, UNDUPLICATED rows
     fp = spark.read.parquet(str(ck / "fp_index" / "snapshot_id=2"))
     assert fp.count() == 6
+
+
+def test_consolidation_leaves_uncommitted_index_untouched(spark, tmp_path):
+    """A crashed attempt writes its index dir before its lineage commit.
+    Consolidation folds only the committed snapshots' dirs (under the
+    highest committed id) and leaves the uncommitted one in place, so
+    the rerun that overwrites it cannot take the committed rows along."""
+    from scones.incremental import read_band_index, write_band_index
+    from scones.maintenance import consolidate_indexes
+
+    ck = tmp_path / "ckpt"
+    band = lambda sid: str(ck / "band_index" / f"snapshot_id={sid}")  # noqa: E731
+    rows = {}
+    for sid in (1, 2, 3):
+        docs = spark.createDataFrame(
+            [(f"{sid}#{i}", f"snapshot {sid} doc {i} w{i} x{i}") for i in range(6)],
+            ["doc_id", "text"],
+        )
+        write_band_index(docs, band(sid))
+        rows[sid] = {tuple(r) for r in read_band_index(spark, band(sid)).collect()}
+    _commit(ck, 1, 2)
+
+    assert consolidate_indexes(spark, str(ck)) == {"band": 2}
+    assert sorted(os.listdir(ck / "band_index")) == [
+        "snapshot_id=2",
+        "snapshot_id=3",
+    ]
+    got = {tuple(r) for r in read_band_index(spark, band(2)).collect()}
+    assert got == rows[1] | rows[2]
+    assert {tuple(r) for r in read_band_index(spark, band(3)).collect()} == rows[3]
 
 
 def test_consolidation_respects_index_lock(spark, tmp_path):

@@ -43,7 +43,13 @@ def _routed_urls(spark, cfg):
     return out
 
 
-def test_incremental_snapshots_and_resume(spark, tmp_path, host_meta_path):
+def _crash_commit(self, snapshot_id, rows):
+    raise RuntimeError("injected crash between sink write and lineage commit")
+
+
+def test_incremental_snapshots_and_resume(
+    spark, tmp_path, host_meta_path, monkeypatch
+):
     from scones.corpus import generate_rows
 
     cfg = _cfg(tmp_path, host_meta_path)
@@ -75,8 +81,11 @@ def test_incremental_snapshots_and_resume(spark, tmp_path, host_meta_path):
             pa.Table.from_pylist(rows[i * per : (i + 1) * per], schema=CORPUS_SCHEMA),
             f"{in_dir}/docs_{i:04d}.parquet",
         )
-    with pytest.raises(RuntimeError, match="injected crash"):
-        run_snapshot(spark, cfg, fail_before_commit=True)
+    with monkeypatch.context() as m, pytest.raises(
+        RuntimeError, match="injected crash"
+    ):
+        m.setattr(LineageStore, "commit", _crash_commit)
+        run_snapshot(spark, cfg)
 
     # Orphan snapshot dir exists but is NOT visible to committed readers.
     assert os.path.isdir(str(tmp_path / "out" / "snapshot_id=2"))

@@ -4,6 +4,7 @@ effect visible in the output — or rejected before anything is planned,
 written or committed."""
 
 import base64
+import glob as globmod
 import os
 
 import pytest
@@ -191,3 +192,33 @@ def test_tail_snapshot_persists_one_metrics_row(spark, tmp_path):
     assert metrics[0]["snapshot_id"] == s["snapshot_id"] == 1
     assert metrics[0]["rows"] == s["lines"] == N_DOCS + 1
     assert metrics[0]["n_files"] == 1
+
+
+def test_metrics_row_is_the_summary_and_fenced_out_attempts_write_none(
+    spark, tmp_path, monkeypatch
+):
+    """The metrics row lands before the lineage publish, under the same
+    fence: an attempt a newer one has fenced out (the watchdog's
+    abandoned thread) writes no row, and the row the next attempt
+    writes carries the summary's values."""
+    import scones.pipeline
+    from scones.lineage import LineageStore, StaleAttemptError
+
+    cfg = _cfg(tmp_path, "documents", _write_inputs("documents", tmp_path))
+    real = scones.pipeline._has_part_files
+
+    def superseded(snap_dir):
+        LineageStore(cfg.checkpoint_dir).fence_attempt()  # a newer attempt
+        return real(snap_dir)
+
+    with monkeypatch.context() as m, pytest.raises(StaleAttemptError):
+        m.setattr(scones.pipeline, "_has_part_files", superseded)
+        snapshot_fn_for_mode("documents")(spark, cfg)
+    assert not globmod.glob(os.path.join(cfg.checkpoint_dir, "metrics", "run_*"))
+
+    s = snapshot_fn_for_mode("documents")(spark, cfg)
+    (row,) = read_run_metrics(cfg.checkpoint_dir)
+    for k in ("snapshot_id", "rows", "payload_bytes", "approx_urls"):
+        assert row[k] == s[k]
+    for k in ("plan_sec", "write_sec", "audit_commit_sec"):
+        assert row[k] == pytest.approx(s[k])

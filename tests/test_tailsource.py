@@ -82,13 +82,22 @@ def test_max_length_skip_but_advance(spark, tmp_path):
     assert _lines(spark, tmp_path) == [("long.log", b"line2", 16)]
 
 
-def test_crash_between_write_and_commit_resumes_exactly(spark, tmp_path):
+def test_crash_between_write_and_commit_resumes_exactly(
+    spark, tmp_path, monkeypatch
+):
     logs = tmp_path / "logs"
     logs.mkdir()
     (logs / "a.log").write_bytes(b"a1\na2\n")
     (logs / "b.log").write_bytes(b"b1\n")
-    with pytest.raises(RuntimeError, match="injected crash"):
-        _snap(spark, tmp_path, fail_before_commit=True)
+
+    def crash(self, snapshot_id, rows):
+        raise RuntimeError("injected crash between write and commit")
+
+    with monkeypatch.context() as m, pytest.raises(
+        RuntimeError, match="injected crash"
+    ):
+        m.setattr(LineageStore, "commit", crash)
+        _snap(spark, tmp_path)
     # nothing committed → full replan, same snapshot id, no dupes
     s = _snap(spark, tmp_path)
     assert s["snapshot_id"] == 1 and s["lines"] == 3
