@@ -344,8 +344,13 @@ def run_jsonl_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     return _run_snapshot(spark, cfg, source)
 
 
+# Every ingest mode :func:`snapshot_fn_for_mode` runs; both CLIs take
+# their ``--mode`` choices from here.
+MODES = ("documents", "tail", "warc", "jsonl")
+
+
 def snapshot_fn_for_mode(mode: str):
-    """The per-mode snapshot runner (documents | tail | warc | jsonl)."""
+    """The per-mode snapshot runner, one per name in :data:`MODES`."""
     if mode == "warc":
         return run_warc_snapshot
     if mode == "jsonl":
@@ -435,7 +440,7 @@ def main() -> None:  # pragma: no cover — spark-submit entry point
     p.add_argument("--config", required=True)
     p.add_argument(
         "--mode",
-        choices=["documents", "tail", "warc", "jsonl"],
+        choices=MODES,
         default=None,
         help="override the config's mode.  documents: parquet corpus "
         "snapshots; tail: raw log files with byte-offset resume (the "

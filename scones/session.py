@@ -24,6 +24,39 @@ from pyspark.sql import SparkSession
 # rows ≈ 30 MB per batch — still far above per-row overhead territory.
 ARROW_MAX_RECORDS = 16_384
 
+# Spark's generated-class cache (a static conf: it is read when the
+# session is built).  Spark's default of 100 entries is smaller than the
+# code one repeated operation needs, and LRU eviction then recompiles
+# most of it every time.  Measured distinct generated classes per
+# operation: 123-131 for a pass of the four curation queries (local[4]
+# and local[8]), 24 for a documents snapshot, 23 for a tail snapshot.
+# At 100 entries every curation pass after the first compiled 88-113
+# classes again with Janino, and the JVM then JIT-compiled each reloaded
+# class from scratch; at 1024 a pass after the first compiles 0-4, and
+# a pass costs about 30% less CPU.  The symptom of an undersized cache
+# is a repeated pass that compiles again: compare
+# ``org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+# .getCount()`` before and after it.
+CODEGEN_CACHE_ENTRIES = 1024
+
+# The SQL-level settings every scones session carries, whoever builds it:
+# ``get_spark`` here, or the spark-submit entry (tools/submit_pipeline.py),
+# whose launcher owns master, memory and JVM options.
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
+    "spark.sql.parquet.compression.codec": "zstd",
+    # zstd level 1: measured 14% faster sink writes for +7% size vs
+    # level 3 (snappy was 18% faster but +57% size — wrong trade at
+    # 100 TB storage scale)
+    "spark.hadoop.parquet.compression.codec.zstd.level": "1",
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+}
+
 # JVMs that may be alive at once on one host: the suite's shared session
 # plus the one a subprocess test (or a watchdog rebuild) launches.  With
 # Xms=Xmx and AlwaysPreTouch every heap is resident from the start, so
@@ -58,6 +91,13 @@ def default_master() -> str:
     return f"local[{cpus}]"
 
 
+def apply_sql_conf(builder):
+    """``builder`` with every :data:`SQL_CONF` setting applied."""
+    for k, v in SQL_CONF.items():
+        builder = builder.config(k, v)
+    return builder
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "scones",
@@ -68,8 +108,10 @@ def get_spark(
 
     ``master`` defaults to :func:`default_master`; the driver heap is
     ``$SCONES_DRIVER_MEM`` or else :func:`default_driver_mem`.
-    ``shuffle_partitions`` defaults to 2× the local core count — on a real
-    cluster you'd size this to total executor cores (AQE coalesces down).
+    ``shuffle_partitions`` defaults to N (at least 8) for ``local[N]``,
+    and to 32 for ``local[*]`` or a non-local master — on a real cluster
+    you'd size this to total executor cores (AQE coalesces down).  Every
+    session carries :data:`SQL_CONF`; ``extra_conf`` is applied last.
     """
     if master is None:
         master = default_master()
@@ -79,23 +121,10 @@ def get_spark(
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
 
     mem = os.environ.get("SCONES_DRIVER_MEM") or default_driver_mem()
-    builder = (
+    builder = apply_sql_conf(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
-        )
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        # zstd level 1: measured 14% faster sink writes for +7% size vs
-        # level 3 (snappy was 18% faster but +57% size — wrong trade at
-        # 100 TB storage scale)
-        .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", mem)
         # Xms=Xmx + AlwaysPreTouch: on this virtualized host, faulting in

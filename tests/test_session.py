@@ -1,7 +1,10 @@
-"""Session defaults are sized from the host, not hard-coded."""
+"""Session defaults are sized from the host, not hard-coded, and every
+entry point builds its session with the same SQL settings."""
 
 import os
+from types import SimpleNamespace
 
+from scones import session
 from scones.session import default_driver_mem, default_master, host_mem_bytes
 
 
@@ -40,3 +43,73 @@ def test_default_master_from_cpu_count(monkeypatch):
 def test_session_heap_is_explicit_env_or_host_default(spark):
     want = os.environ.get("SCONES_DRIVER_MEM") or default_driver_mem()
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
+def test_repeated_pass_compiles_almost_nothing(spark, tmp_path):
+    """A session compiles each generated class once: a third pass of the
+    curation queries finds its classes in Spark's codegen cache.  With
+    Spark's 100-entry default the cache thrashes and every pass compiles
+    about 110 classes again."""
+    import __spark_entry__ as entry
+    from scones.corpus import write_zipf_documents
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES
+    )
+    write_zipf_documents(str(tmp_path), n_docs=200, seed=3)
+    queries = entry.queries()
+    names = (
+        "clean_corpus",
+        "dedup_near_keep_min",
+        "substring_dedup_clean",
+        "lm_perplexity",
+    )
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+    for _ in range(2):
+        for q in names:
+            queries[q](spark, str(tmp_path)).collect()
+    before = compiles.getCount()
+    for q in names:
+        queries[q](spark, str(tmp_path)).collect()
+    assert compiles.getCount() - before < 20
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records every setting."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def master(self, master):
+        return self.config("spark.master", master)
+
+    def appName(self, name):
+        return self.config("spark.app.name", name)
+
+    def getOrCreate(self):
+        return self
+
+
+def test_submit_entry_builds_the_same_sql_settings(monkeypatch):
+    """tools/submit_pipeline.py and get_spark apply one set of SQL
+    settings, and the submit tool accepts every mode the pipeline runs."""
+    from scones.pipeline import MODES, snapshot_fn_for_mode
+    from tools import submit_pipeline as submit
+
+    submitted = submit.build_session(_RecordingBuilder()).conf
+    local = _RecordingBuilder()
+    local.sparkContext = SimpleNamespace(setLogLevel=lambda level: None)
+    monkeypatch.setattr(session.SparkSession, "builder", local)
+    session.get_spark(master="local[2]")
+    for key, value in session.SQL_CONF.items():
+        assert submitted[key] == local.conf[key] == value, key
+
+    for mode in MODES:
+        snapshot_fn_for_mode(mode)
+        assert submit.parse_args(["--config", "c.json", "--mode", mode]).mode == mode
+    assert submit.parse_args(["--config", "c.json"]).mode is None

@@ -6,8 +6,9 @@ Usage:
     spark-submit --master <cluster> --py-files /tmp/scones.zip \
         tools/submit_pipeline.py --config pipeline.json [--mode tail]
 
-Inside spark-submit the session already exists (built by the launcher
-with the cluster's master/conf); we only attach our SQL-level settings.
+Here the launcher owns master, memory and JVM options (the cluster's
+conf); the session gets the same SQL-level settings as ``get_spark``
+(``scones.session.SQL_CONF``).
 """
 
 from __future__ import annotations
@@ -16,27 +17,33 @@ import argparse
 
 from pyspark.sql import SparkSession
 
+from scones.config import PipelineConfig
+from scones.pipeline import MODES, snapshot_fn_for_mode
+from scones.session import apply_sql_conf
 
-def main() -> None:
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p = argparse.ArgumentParser()
     p.add_argument("--config", required=True)
-    p.add_argument("--mode", choices=["documents", "tail"], default="documents")
-    a = p.parse_args()
-
-    from scones.config import PipelineConfig
-    from scones.pipeline import snapshot_fn_for_mode
-
-    spark = (
-        SparkSession.builder.appName("scones-pipeline")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.hadoop.parquet.compression.codec.zstd.level", "1")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .getOrCreate()
+    p.add_argument(
+        "--mode", choices=MODES, default=None, help="override the config's mode"
     )
+    return p.parse_args(argv)
+
+
+def build_session(builder=None) -> SparkSession:
+    if builder is None:
+        builder = SparkSession.builder
+    return apply_sql_conf(builder.appName("scones-pipeline")).getOrCreate()
+
+
+def main() -> None:
+    a = parse_args()
     cfg = PipelineConfig.from_json(a.config)
-    summary = snapshot_fn_for_mode(a.mode)(spark, cfg)
+    if a.mode is not None:
+        cfg.mode = a.mode
+    spark = build_session()
+    summary = snapshot_fn_for_mode(cfg.mode)(spark, cfg)
     print(summary)
     spark.stop()
 
