@@ -1950,13 +1950,7 @@ _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in textops.STOPWORDS) + "]"
     """,
 )
 def token_counts(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.size(textops.tokens_col()).alias("n_tokens"),
-        F.length("text").alias("n_chars"),
-        F.floor(F.length("text") / 4).cast("bigint").alias("approx_bpe_tokens"),
-    )
+    return textops.token_counts(_t(spark, sf_dir, "documents"))
 
 
 @_q(
@@ -2561,8 +2555,7 @@ def curation_gate_query(spark, sf_dir):
     return textops.curation_gate(_t(spark, sf_dir, "documents"))
 
 
-# Batch gap-based sessionization over the events table — the backfill
-# twin of the streaming applyInPandasWithState sessionizer; the oracle
+# Batch gap-based sessionization over the events table; the oracle
 # replays the same two-window definition.
 @_q(
     "event_sessions",
@@ -2952,7 +2945,7 @@ def bloom_dedup_probe_query(spark, sf_dir):
 # Multimodal plumbing: binary payload → Arrow-batched featurization via
 # mapInPandas.  The deterministic fake decoder (md5 fingerprint + fake
 # dims) makes the whole plumbing oracle-checkable; a real codec drops in
-# via scones.mediaops.register_decoder.
+# as extract_media_features(decoder=...).
 @_q(
     "media_features",
     """

@@ -194,14 +194,13 @@ def run_daemon(
             else:
                 summary = run_fn(spark, cfg)
         except SnapshotTimeout as exc:
-            # hung session: kill + relaunch (the bench harness's 900 s
-            # FlagshipServer treatment, applied to the production loop),
-            # then retry the snapshot under the usual backoff.  A FAILED
-            # relaunch (transient OOM pre-touching the host-sized heap,
-            # port exhaustion) must not kill the supervisor — keep the old
-            # handle; the next attempt will time out again and the
-            # relaunch retries under the same backoff, forever, like
-            # everything else in this loop.
+            # hung session: kill + relaunch (a hung JVM never answers,
+            # so reap it rather than wait), then retry the snapshot under
+            # the usual backoff.  A FAILED relaunch (transient OOM
+            # pre-touching the host-sized heap, port exhaustion) must not
+            # kill the supervisor — keep the old handle; the next attempt
+            # will time out again and the relaunch retries under the same
+            # backoff, forever, like everything else in this loop.
             relaunch_err = None
             try:
                 spark = session_factory(spark)

@@ -1,10 +1,9 @@
 """Batch event-stream operators over the ``events`` table.
 
-The streaming side of sessionization lives in scones/streaming.py
-(``applyInPandasWithState`` with event-time timeout); this module is its
-BATCH twin — the backfill/replay path a lambda architecture runs over
-the historical store.  Same session definition, so the two layers'
-outputs are comparable.
+Sessionization, windowed rates and the like run as batch queries over
+the stored events: the backfill/replay path over the historical store.
+Continuous ingest is the snapshot core under ``--daemon``; there is no
+separate streaming engine.
 
 Reference parity: the reference has no event semantics (it ships log
 lines); sessionization is part of the "operations a large-scale
@@ -241,11 +240,10 @@ def event_rate_windows(
     value_col: str = "value",
 ) -> DataFrame:
     """Tumbling-window event rates: per (group, window) count + value
-    sum — the batch twin of streaming.windowed_host_counts, built on
-    Spark's native ``F.window`` (epoch-aligned tumbling buckets, the
-    same alignment as DuckDB's ``time_bucket``).  One map-side-
-    combinable groupBy; the window struct is a row-local projection,
-    not a window FUNCTION — no sort, no per-group state.
+    sum, built on Spark's native ``F.window`` (epoch-aligned tumbling
+    buckets, the same alignment as DuckDB's ``time_bucket``).  One
+    map-side-combinable groupBy; the window struct is a row-local
+    projection, not a window FUNCTION — no sort, no per-group state.
     """
     return (
         df.groupBy(group_col, F.window(ts_col, window_duration).alias("w"))

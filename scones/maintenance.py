@@ -125,7 +125,8 @@ def compact_snapshot(
     }
 
 
-def main() -> None:  # pragma: no cover — CLI entry point
+def main(argv: list[str] | None = None) -> None:
+    """CLI entry point; the arguments are checked before a JVM launches."""
     import argparse
 
     from .session import get_spark
@@ -141,13 +142,13 @@ def main() -> None:  # pragma: no cover — CLI entry point
         metavar="CHECKPOINT_DIR",
         help="fold per-snapshot band/fp/bloom index dirs into one",
     )
-    a = p.parse_args()
+    a = p.parse_args(argv)
+    if not a.consolidate_indexes and (not a.output_dir or a.snapshot_id is None):
+        p.error("--output-dir and --snapshot-id required for compaction")
     spark = get_spark(app_name="scones-maintenance")
     if a.consolidate_indexes:
         print(consolidate_indexes(spark, a.consolidate_indexes))
         return
-    if not a.output_dir or a.snapshot_id is None:
-        p.error("--output-dir and --snapshot-id required for compaction")
     print(
         compact_snapshot(
             spark, a.output_dir, a.snapshot_id, a.target_mb << 20

@@ -6,8 +6,8 @@ is environment-dependent (no image/audio libs in this container), so:
 
   * the Spark-side plumbing — schema, Arrow batching via mapInPandas,
     partition behavior, UDF signatures — is REAL and tested;
-  * the codec itself is pluggable: :func:`register_decoder` installs a
-    real decoder; the default raises ``NotImplementedError``; tests use
+  * the codec itself is pluggable: a caller passes a real decoder as
+    ``decoder=``; the default raises ``NotImplementedError``; tests use
     :func:`fake_decoder`, a deterministic stand-in (md5-derived features)
     so results are reproducible and oracle-checkable.
 
@@ -32,18 +32,11 @@ MEDIA_FEATURE_SCHEMA = (
 # A decoder maps raw bytes -> (feature_fingerprint, width, height).
 Decoder = Callable[[bytes, str], tuple[str, int, int]]
 
-_decoder: Decoder | None = None
-
-
-def register_decoder(fn: Decoder) -> None:
-    global _decoder
-    _decoder = fn
-
 
 def default_decoder(data: bytes, media_type: str) -> tuple[str, int, int]:
     raise NotImplementedError(
         "real image/audio decode needs codec libraries not present in this "
-        "environment; register one with scones.mediaops.register_decoder"
+        "environment; pass one as extract_media_features(decoder=...)"
     )
 
 
@@ -68,7 +61,7 @@ def extract_media_features(
     decoder runs per payload inside the batch — the standard shape for
     CPU-heavy multimodal featurization.
     """
-    chosen = decoder or _decoder or default_decoder
+    chosen = decoder or default_decoder
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -169,9 +169,16 @@ class _DocsSource:
 
 
 def _check_knobs(cfg: PipelineConfig, source) -> None:
-    """Reject, before anything is planned or written, a knob the source
-    cannot honor and a static field that would overwrite a column the
-    offset audit reads."""
+    """Reject, before anything is planned or written, an out-of-range
+    knob, a knob the source cannot honor and a static field that would
+    overwrite a column the offset audit reads."""
+    # n_sinks < 1 would fail mid-write (pmod by zero) or route to sinks
+    # the crc32 % n_sinks contract never names; a negative max_length or
+    # spread_partitions would silently mean "off"
+    for knob, low in (("n_sinks", 1), ("max_length", 0), ("spread_partitions", 0)):
+        value = getattr(cfg, knob)
+        if value < low:
+            raise ValueError(f"{knob}={value!r} is out of range (must be >= {low})")
     for knob in KNOBS:
         value = getattr(cfg, knob)
         if knob not in source.honors and value != getattr(_DEFAULTS, knob):
@@ -323,7 +330,7 @@ def run_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     Returns a summary dict; ``{"snapshot_id": None}`` when nothing new.
     """
-    return _run_snapshot(spark, cfg, _DocsSource("documents"))
+    return _run_snapshot(spark, cfg, source_for_mode("documents"))
 
 
 def run_warc_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
@@ -332,21 +339,34 @@ def run_warc_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     protocol (shards are immutable → file-granularity admission, like
     the parquet path).
     """
-    source = _DocsSource("warc", read_warc)
-    return _run_snapshot(spark, cfg, source)
+    return _run_snapshot(spark, cfg, source_for_mode("warc"))
 
 
 def run_jsonl_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """JSONL-shard flavor (.jsonl / .jsonl.gz — the other common web-
     corpus distribution format): same lineage/commit protocol; parsing
     is fully JVM-side (see scones/jsonl.py)."""
-    source = _DocsSource("jsonl", read_jsonl)
-    return _run_snapshot(spark, cfg, source)
+    return _run_snapshot(spark, cfg, source_for_mode("jsonl"))
 
 
 # Every ingest mode :func:`snapshot_fn_for_mode` runs; both CLIs take
 # their ``--mode`` choices from here.
 MODES = ("documents", "tail", "warc", "jsonl")
+
+
+def source_for_mode(mode: str):
+    """The source :func:`_run_snapshot` takes, one per name in :data:`MODES`."""
+    if mode == "documents":
+        return _DocsSource("documents")
+    if mode == "warc":
+        return _DocsSource("warc", read_warc)
+    if mode == "jsonl":
+        return _DocsSource("jsonl", read_jsonl)
+    if mode == "tail":
+        from .tailsource import TailSource
+
+        return TailSource()
+    raise ValueError(f"unknown pipeline mode: {mode!r}")
 
 
 def snapshot_fn_for_mode(mode: str):
@@ -355,13 +375,9 @@ def snapshot_fn_for_mode(mode: str):
         return run_warc_snapshot
     if mode == "jsonl":
         return run_jsonl_snapshot
-    if mode == "tail":
-        from .tailsource import TailSource
-
-        return functools.partial(_run_snapshot, source=TailSource())
     if mode == "documents":
         return run_snapshot
-    raise ValueError(f"unknown pipeline mode: {mode!r}")
+    return functools.partial(_run_snapshot, source=source_for_mode(mode))
 
 
 def run_from_config(
@@ -380,7 +396,10 @@ def run_from_config(
 
     Returns ``(summaries, stats_server_or_None)``; the caller owns
     stopping the server (it serves live state while the pipeline runs).
+    A config the mode rejects raises ``ValueError`` here, before the
+    server starts — the daemon would otherwise retry it forever.
     """
+    _check_knobs(cfg, source_for_mode(cfg.mode))
     srv = None
     if cfg.stats_port is not None:
         from .statsserver import StatisticsServer

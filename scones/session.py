@@ -158,8 +158,7 @@ def rebuild_session(old: SparkSession | None, **get_spark_kwargs) -> SparkSessio
       1. ``old.stop()`` is attempted on a side thread with a short join
          (a healthy JVM stops cleanly; a hung one is abandoned);
       2. the py4j gateway is shut down and its JVM child process killed
-         (the same treatment bench.py's FlagshipServer gives a hung
-         server: "hung or dead either way, reap the JVM");
+         (hung or dead either way, reap the JVM);
       3. pyspark's process-global gateway/context singletons are cleared
          so :func:`get_spark` launches a NEW JVM instead of reattaching
          to the dead gateway.

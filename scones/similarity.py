@@ -574,136 +574,3 @@ def label_centroids(
         F.count(F.lit(1)).alias("n_vecs"),
         F.round(F.sum("xd").cast("double") / F.count(F.lit(1)), 6).alias("c"),
     )
-
-
-def _assign_lists(
-    df: DataFrame, cents: DataFrame
-) -> DataFrame:
-    """(vec_id, cid) list assignment with the same row-local argmax
-    fold as _ivf_search (zero exchanges); centroid norms are hoisted
-    into the broadcast array exactly as there."""
-    cent_arr = cents.agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct("cid", "c_emb", norm("c_emb").alias("c_norm"))
-            )
-        ).alias("cents")
-    )
-    sims = F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            (
-                -(
-                    dot(F.col("embedding"), c["c_emb"])
-                    / (F.col("emb_norm") * c["c_norm"])
-                )
-            ).alias("neg_sim"),
-            c["cid"].alias("cid"),
-        ),
-    )
-    return (
-        df.crossJoin(F.broadcast(cent_arr))
-        .withColumn("emb_norm", norm("embedding"))
-        .withColumn("cid", F.array_min(sims)["cid"])
-        .select("vec_id", "cid")
-    )
-
-
-def save_ivf_index(
-    df: DataFrame,
-    index_dir: str,
-    n_centroids: int = 8,
-    max_iter: int = 10,
-    seed: int = 42,
-) -> None:
-    """Train learned IVF centroids ONCE and persist the index: the
-    centroid table plus every vector's list assignment, PARTITIONED BY
-    cid — so a later probe reads only its n_probe lists' partitions
-    (the similarity twin of the persisted minhash band index:
-    train/assign offline at commit time, probe cheaply forever).
-    Deterministic overwrite (same KMeans seed) — crash-retry rewrites
-    identical files.
-    """
-    import os
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = df.sparkSession
-    train = df.select(
-        array_to_vector(F.col("embedding").cast("array<double>")).alias(
-            "features"
-        )
-    )
-    km = KMeans(
-        k=n_centroids, maxIter=max_iter, seed=seed, distanceMeasure="cosine"
-    ).fit(train)
-    cents = spark.createDataFrame(
-        [(i, [float(v) for v in c]) for i, c in enumerate(km.clusterCenters())],
-        "cid int, c_emb array<double>",
-    )
-    cents.write.mode("overwrite").parquet(os.path.join(index_dir, "centroids"))
-    (
-        _assign_lists(df, cents)
-        .repartition("cid")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(os.path.join(index_dir, "assignments"))
-    )
-
-
-def ann_ivf_topk_persisted(
-    df: DataFrame,
-    index_dir: str,
-    query_vec_id: int = 0,
-    k: int = 10,
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF search against a PERSISTED index (:func:`save_ivf_index`) —
-    no training, no corpus-wide assignment pass: the query ranks the
-    (tiny) centroid table, the probed list ids prune the cid-partitioned
-    assignment table statically (the n_probe cids are collected driver-
-    side — n_probe ints, metadata-scale), and candidate embeddings come
-    back via an id semi-join against the corpus (point lookups; at
-    scale the corpus is bucketed by vec_id).  Results are identical to
-    :func:`ann_ivf_topk_learned` at equal parameters — pinned in
-    tests.
-    """
-    import os
-
-    spark = df.sparkSession
-    cents = spark.read.parquet(os.path.join(index_dir, "centroids"))
-    assigned = spark.read.parquet(os.path.join(index_dir, "assignments"))
-    q = df.where(F.col("vec_id") == query_vec_id).select("embedding")
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("c_sim", cosine("embedding", "c_emb"))
-        .orderBy(F.col("c_sim").desc(), F.col("cid").asc())
-        .limit(n_probe)
-        .select(
-            "cid",
-            F.col("embedding").alias("q_emb"),
-            norm("embedding").alias("q_norm"),
-        )
-    )
-    probed_cids = [r["cid"] for r in probes.select("cid").collect()]
-    cand_ids = assigned.where(F.col("cid").isin(probed_cids)).select(
-        "vec_id", "cid"
-    )
-    cands = df.join(cand_ids, "vec_id").where(
-        F.col("vec_id") != query_vec_id
-    )
-    return (
-        cands.join(F.broadcast(probes), "cid")
-        .select(
-            "vec_id",
-            "label",
-            F.round(
-                dot("embedding", "q_emb")
-                / (norm("embedding") * F.col("q_norm")),
-                6,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(k)
-    )

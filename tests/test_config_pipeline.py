@@ -8,6 +8,8 @@ import json
 import os
 import urllib.request
 
+import pytest
+
 from scones.config import PipelineConfig
 from scones.corpus import write_corpus, write_host_meta
 from scones.pipeline import run_from_config, snapshot_fn_for_mode
@@ -136,3 +138,30 @@ def test_lm_model_path_scoring_hook(spark, tmp_path):
     )
     s2 = run_snapshot(spark, cfg2)
     assert "lm_scores" not in s2 and "n_scored" not in s2
+
+
+@pytest.mark.parametrize("mode,knob,value", [
+    ("tail", "host_meta_path", "/dims/host_meta.parquet"),
+    ("documents", "n_sinks", 0),
+])
+def test_daemon_rejects_config_before_the_loop(tmp_path, mode, knob, value):
+    """A config the snapshot core rejects is not a transient failure: the
+    daemon would retry it under backoff forever.  run_from_config raises
+    before the stats server or the loop starts (no Spark session needed)."""
+    cfg = PipelineConfig(
+        input_glob=str(tmp_path / "in" / "*"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        mode=mode,
+        daemon=True,
+        stats_port=0,
+        **{knob: value},
+    )
+    events, sleeps = [], []
+    with pytest.raises(ValueError, match=knob):
+        run_from_config(
+            None, cfg, on_event=events.append, max_iterations=3,
+            sleep_fn=sleeps.append,
+        )
+    assert events == [] and sleeps == []  # no endpoint, no retry
+    assert not (tmp_path / "ckpt").exists()

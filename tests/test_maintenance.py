@@ -111,29 +111,22 @@ def test_compact_recovers_crash_between_swap_renames(spark, tmp_path):
     assert spark.read.parquet(snap).count() == 120
 
 
-def test_flagship_server_read_timeout_kills_hung_proc():
-    """bench harness: a server that produces no output within the read
-    timeout is killed and reported dead (round-3 incident: a hung JVM
-    deadlocked the whole bench)."""
-    import subprocess
-
+def test_cli_usage_error_launches_no_jvm(monkeypatch, capsys):
+    """A compaction call without --output-dir/--snapshot-id is a usage
+    error, reported before any SparkSession is built."""
     import pytest
 
-    import bench
+    import scones.maintenance
+    import scones.session
 
-    srv = object.__new__(bench.FlagshipServer)
-    srv.master = "local[1]"
-    srv.proc = subprocess.Popen(
-        ["sleep", "300"],
-        stdin=subprocess.PIPE,
-        stdout=subprocess.PIPE,
-        text=True,
-    )
-    srv.READ_TIMEOUT_SEC = 1
-    with pytest.raises(RuntimeError, match="died or hung"):
-        srv._read_json()
-    srv.proc.wait(timeout=10)
-    assert srv.proc.poll() is not None
+    def no_spark(**_):
+        raise AssertionError("get_spark called for a usage error")
+
+    monkeypatch.setattr(scones.session, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        scones.maintenance.main([])
+    assert exc.value.code == 2
+    assert "--output-dir and --snapshot-id required" in capsys.readouterr().err
 
 
 def _commit(ck, *ids):

@@ -268,45 +268,3 @@ def test_label_centroids_plan_partial_agg(spark):
     assert "partial" in plan
     assert "CartesianProduct" not in plan
     assert plan.count("Exchange") == 1
-
-
-def test_persisted_ivf_index_matches_learned_search(spark, tmp_path):
-    """save_ivf_index + ann_ivf_topk_persisted must return exactly the
-    rows ann_ivf_topk_learned computes inline (same centroids — same
-    KMeans seed; same assignment fold; same probe), and the probe must
-    read ONLY the probed cids' assignment partitions."""
-    from scones.similarity import (
-        ann_ivf_topk_learned,
-        ann_ivf_topk_persisted,
-        save_ivf_index,
-    )
-
-    df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    idx = str(tmp_path / "ivf")
-    save_ivf_index(df, idx, n_centroids=6, max_iter=5, seed=7)
-
-    inline = ann_ivf_topk_learned(
-        df, query_vec_id=3, k=8, n_centroids=6, n_probe=2, max_iter=5, seed=7
-    ).collect()
-    persisted_df = ann_ivf_topk_persisted(
-        df, idx, query_vec_id=3, k=8, n_probe=2
-    )
-    persisted = persisted_df.collect()
-    assert [tuple(r) for r in inline] == [tuple(r) for r in persisted]
-
-    # static partition pruning: the assignment scan carries a
-    # PartitionFilters entry on cid (inputFiles() ignores pushdown, so
-    # assert on the executed plan)
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        persisted_df.explain("formatted")
-    plan = buf.getvalue()
-    scans = plan.split("Scan parquet")
-    assign_scan = next(sec for sec in scans if "assignments" in sec)
-    pf = next(
-        ln for ln in assign_scan.splitlines() if "PartitionFilters" in ln
-    )
-    assert "cid" in pf and "IN" in pf.upper(), pf

@@ -155,6 +155,26 @@ def test_static_field_may_not_overwrite_audit_column(spark, tmp_path, mode, colu
     assert not (tmp_path / "out").exists() and not (tmp_path / "ckpt").exists()
 
 
+@pytest.mark.parametrize("mode,knob,value", [
+    ("documents", "n_sinks", 0),
+    ("documents", "n_sinks", -3),
+    ("documents", "max_length", -1),
+    ("documents", "spread_partitions", -1),
+    ("tail", "n_sinks", 0),
+    ("tail", "max_length", -1),
+])
+def test_out_of_range_knob_rejected(spark, tmp_path, mode, knob, value):
+    """Rejected before the snapshot id is taken: n_sinks=0 would fail in
+    the write task, n_sinks=-3 would route to {0, 1, 2} where the
+    oracle's crc32 % -3 names {0, -1, -2}, and a negative max_length or
+    spread_partitions would silently mean "off"."""
+    cfg = _cfg(tmp_path, mode, _write_inputs(mode, tmp_path), **{knob: value})
+    with pytest.raises(ValueError, match=f"{knob}={value} is out of range"):
+        snapshot_fn_for_mode(mode)(spark, cfg)
+    # no snapshot_id= dir, no lineage row, no metrics row
+    assert not (tmp_path / "out").exists() and not (tmp_path / "ckpt").exists()
+
+
 def test_warc_static_fields_and_dedup_index(spark, tmp_path):
     cfg = _cfg(
         tmp_path,
