@@ -14,7 +14,9 @@ file's documents.  Commit protocol = write-audit-publish:
   1. routed sink data is written to ``<out>/snapshot_id=N/`` with
      mode=overwrite (idempotent under retry — N is deterministic);
   2. only after every sink write succeeds is the lineage parquet published
-     via atomic rename (the ACK, ≈ lumberjack/client.go:124-136);
+     via atomic link (the ACK, ≈ lumberjack/client.go:124-136); its footer
+     carries the snapshot's run row, so rows and counters commit together
+     (one Bolt transaction, bolt_snapshotter.go:44-62);
   3. planning reads the committed lineage and anti-joins the input file
      listing, so a crash between (1) and (2) reprocesses those files into
      the SAME snapshot id, overwriting the partial output — no dupes, no
@@ -30,6 +32,7 @@ from __future__ import annotations
 import contextlib
 import errno
 import glob as globmod
+import json
 import os
 import threading
 import time
@@ -88,14 +91,19 @@ LINEAGE_SCHEMA = pa.schema(
     ]
 )
 
+#: the parquet key-value metadata key of a snapshot manifest's run row
+#: (JSON), the Iceberg snapshot-summary analogue
+RUN_KEY = b"scones.run"
+
 
 class LineageStore:
     """Driver-side manifest of committed snapshots (small metadata).
 
     Storage layout: one ``snapshot_{id}.parquet`` per commit (the atomic
-    publish unit), periodically FOLDED into a ``base_{id}.parquet``
-    covering every snapshot ≤ id — so a long-running daemon's planning
-    cycle reads O(1) manifest files, not O(snapshots) (round-3 verdict
+    publish unit, its run row in the footer), periodically FOLDED into a
+    ``base_{id}.parquet`` plus a ``runs_{id}.parquet`` covering every
+    snapshot ≤ id — so a long-running daemon's planning cycle and stats
+    poll read O(1) manifest files, not O(snapshots) (round-3 verdict
     item 2; the reference's BoltDB is likewise one keyed store, not a
     file per transaction, bolt_snapshotter.go:44-62).  Readers take the
     newest base plus only the loose snapshot files ABOVE its fold point;
@@ -133,7 +141,7 @@ class LineageStore:
 
     @staticmethod
     def _id_of(path: str) -> int:
-        """snapshot_000000000042.parquet / base_000000000042.parquet → 42."""
+        """snapshot_/base_/runs_000000000042.parquet → 42."""
         stem = os.path.basename(path).rsplit(".", 1)[0]
         return int(stem.split("_", 1)[1])
 
@@ -151,33 +159,58 @@ class LineageStore:
         fold = self._id_of(base)
         return [base] + [f for f in loose if self._id_of(f) > fold]
 
+    def _runs_file(self, fold: int) -> str:
+        return os.path.join(self.dir, f"runs_{fold:012d}.parquet")
+
+    def _read(self, read):
+        """``read(files)`` over one listing of :meth:`_files`, re-listed
+        (bounded) when a concurrent :meth:`compact_manifest` deleted a
+        listed file after publishing its base — e.g. the stats HTTP thread
+        polling while the daemon commits."""
+        for attempt in range(3):
+            try:
+                return read(self._files())
+            except FileNotFoundError:
+                if attempt == 2:
+                    raise
+        raise AssertionError("unreachable")
+
+    def _lineage(self, files: list[str], columns: list[str] | None) -> pa.Table:
+        if not files:
+            t = LINEAGE_SCHEMA.empty_table()
+            return t.select(columns) if columns else t
+        return pa.concat_tables([pq.read_table(f, columns=columns) for f in files])
+
+    def _runs(self, files: list[str]) -> list[dict]:
+        out: list[dict] = []
+        for f in files:
+            if os.path.basename(f).startswith("base_"):
+                try:
+                    folded = pq.read_table(self._runs_file(self._id_of(f)))
+                except FileNotFoundError:
+                    if os.path.exists(f):
+                        continue  # a base folded before runs were kept
+                    raise  # a concurrent fold replaced it: re-list
+                out.extend(json.loads(r) for r in folded.column("run").to_pylist())
+            else:
+                meta = pq.read_schema(f).metadata or {}
+                if RUN_KEY in meta:
+                    out.append(json.loads(meta[RUN_KEY]))
+        return out
+
     def read_all(self, columns: list[str] | None = None) -> pa.Table:
         """Manifest scan.  Lineage is metadata (one row per source file
         per snapshot): at 10^7 input files this is ~hundreds of MB, so
         reads are column-projected; beyond that the store would be an
         Iceberg/Delta table and these scans become metadata queries —
-        the thin interface here is the swap point.
+        the thin interface here is the swap point."""
+        return self._read(lambda files: self._lineage(files, columns))
 
-        Tolerates racing a concurrent :meth:`compact_manifest`: the fold
-        publishes its base atomically and THEN deletes the files it
-        shadowed, so a reader whose listing predates the fold can hit a
-        just-deleted loose file (e.g. the stats HTTP thread polling while
-        the daemon commits).  Re-listing after the publish sees a
-        consistent view — retry, bounded.
-        """
-        for attempt in range(3):
-            files = self._files()
-            if not files:
-                t = LINEAGE_SCHEMA.empty_table()
-                return t.select(columns) if columns else t
-            try:
-                return pa.concat_tables(
-                    [pq.read_table(f, columns=columns) for f in files]
-                )
-            except FileNotFoundError:
-                if attempt == 2:
-                    raise
-        raise AssertionError("unreachable")
+    def runs(self) -> list[dict]:
+        """The run rows of the committed snapshots, in snapshot order:
+        the folded runs file of the newest base plus the footers of the
+        loose manifests above its fold point (never their row data)."""
+        return self._read(self._runs)
 
     def committed_snapshots(self) -> list[int]:
         t = self.read_all(columns=["snapshot_id"])
@@ -195,38 +228,35 @@ class LineageStore:
     def _manifest(self, snapshot_id: int) -> str:
         return os.path.join(self.dir, f"snapshot_{snapshot_id:012d}.parquet")
 
-    @contextlib.contextmanager
-    def fenced(self, snapshot_id: int):
-        """Hold the publish fence for ``snapshot_id``: raise
-        :class:`StaleAttemptError` if this is a stale attempt (a newer
-        :meth:`fence_attempt` happened — the watchdog relaunched and the
-        abandoned thread woke late) or the id is already published (a
-        manifest, once published, is immutable — the retry that owns the
-        id committed first).  The body runs under the epoch lock, so no
-        newer attempt can fence in between the check and the body."""
-        with _EPOCH_LOCK:
-            stale = (
-                self._epoch is not None
-                and _ATTEMPT_EPOCHS.get(self.dir) != self._epoch
-            )
-            if stale or os.path.exists(self._manifest(snapshot_id)):
-                why = "superseded attempt" if stale else "already published"
-                raise StaleAttemptError(
-                    f"refusing commit of snapshot {snapshot_id}: {why}"
-                )
-            yield
-
-    def commit(self, snapshot_id: int, rows: list[dict]) -> str:
-        """Publish lineage rows atomically (tmp file + link = the ACK)
-        under :meth:`fenced`; auto-fold the manifest once enough loose
-        files accumulate.  A refused or failed publish raises and leaves
-        no tmp file."""
+    def commit(
+        self, snapshot_id: int, rows: list[dict], run: dict | None = None
+    ) -> str:
+        """Publish lineage rows and ``run`` (the snapshot's run row, JSON
+        under :data:`RUN_KEY` in the footer) atomically: tmp file + link
+        = the ACK; auto-fold once enough loose files accumulate.  Raises
+        :class:`StaleAttemptError` for a stale attempt (a newer
+        :meth:`fence_attempt`: the watchdog relaunched and the abandoned
+        thread woke late) or an id already published (manifests are
+        immutable).  A refused or failed publish leaves no tmp file."""
         table = pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA)
+        if run is not None:
+            table = table.replace_schema_metadata({RUN_KEY: json.dumps(run)})
         final = self._manifest(snapshot_id)
         tmp = final + f".tmp-{uuid.uuid4().hex}"
         pq.write_table(table, tmp, compression="zstd")
         try:
-            with self.fenced(snapshot_id):
+            # under the epoch lock, so no newer attempt can fence in
+            # between the check and the link
+            with _EPOCH_LOCK:
+                stale = (
+                    self._epoch is not None
+                    and _ATTEMPT_EPOCHS.get(self.dir) != self._epoch
+                )
+                if stale or os.path.exists(final):
+                    why = "superseded attempt" if stale else "already published"
+                    raise StaleAttemptError(
+                        f"refusing commit of snapshot {snapshot_id}: {why}"
+                    )
                 # os.link is an atomic create-if-absent, so published
                 # manifests stay immutable ACROSS processes too (two
                 # daemons on one checkpoint dir): the loser's EEXIST is
@@ -255,13 +285,16 @@ class LineageStore:
         return final
 
     def compact_manifest(self) -> dict:
-        """Fold every currently-visible manifest row into one base file.
+        """Fold every currently-visible manifest row into one base file,
+        and every run row into the base's ``runs_<fold>.parquet``.
 
         Returns {"files_before", "files_after", "fold_point", "rows"}.
         Idempotent and crash-safe: publish-new-base-then-delete; stale
         loose files ≤ the fold point (and older bases) are invisible to
         readers the moment the rename lands, and physically removed here
-        or on the next call.
+        or on the next call.  The runs file lands before its base, so a
+        reader never sees a base without its runs.  (Not in the base's
+        footer: 10^4 runs there make it megabytes, paid by every read.)
         """
         # crash debris: a commit/fold that died before its atomic rename
         # leaves a .tmp-<uuid> file no reader ever sees; reap only files
@@ -277,24 +310,24 @@ class LineageStore:
             except OSError:
                 pass
         files_before = self._files()
-        table = self.read_all()
-        if table.num_rows == 0 and not files_before:
-            return {
-                "files_before": 0,
-                "files_after": 0,
-                "fold_point": 0,
-                "rows": 0,
-            }
+        if not files_before:
+            return {"files_before": 0, "files_after": 0, "fold_point": 0, "rows": 0}
+        table = self._lineage(files_before, None)
+        runs = pa.table({"run": [json.dumps(r) for r in self._runs(files_before)]})
         snap_ids = table.column("snapshot_id").to_pylist()
         fold = max(snap_ids) if snap_ids else 0
         final = os.path.join(self.dir, f"base_{fold:012d}.parquet")
-        tmp = final + f".tmp-{uuid.uuid4().hex}"
-        pq.write_table(table, tmp, compression="zstd")
-        os.replace(tmp, final)  # the publish: readers switch here
-        # physical cleanup of everything the new base shadows
-        for f in globmod.glob(os.path.join(self.dir, "base_*.parquet")):
-            if f != final and self._id_of(f) <= fold:
-                os.remove(f)
+        for t, path in ((runs, self._runs_file(fold)), (table, final)):
+            tmp = path + f".tmp-{uuid.uuid4().hex}"
+            pq.write_table(t, tmp, compression="zstd")
+            os.replace(tmp, path)  # the base's rename is the publish
+        # physical cleanup of everything the new base shadows; bases go
+        # before runs files, so a missing runs file next to a live base
+        # means it was folded before runs were kept
+        for kind in ("base", "runs"):
+            for f in globmod.glob(os.path.join(self.dir, f"{kind}_*.parquet")):
+                if self._id_of(f) < fold:
+                    os.remove(f)
         for f in self._loose_files():
             if self._id_of(f) <= fold:
                 os.remove(f)
@@ -385,7 +418,7 @@ def backlog_report(store: LineageStore, input_glob: str) -> dict:
         "bytes_committed": sum(
             r["offset_end"] - r["offset_start"] for r in lineage
         ),
-        "snapshots": store.committed_snapshots(),
+        "snapshots": sorted({r["snapshot_id"] for r in lineage}),
     }
 
 

@@ -12,8 +12,7 @@ driver-side bookkeeping:
     → [spread repartition] + partitionBy(sink_id)  ≈ ship (O7/O8/O10)
     → audit the written output → lineage rows
     → dedup index / LM scores (optional side tables)
-    → summary + one persisted metrics row
-    → publish lineage (atomic link)                ≈ ack + Bolt txn (O11)
+    → publish lineage + the run row (one link)     ≈ ack + Bolt txn (O11/O14)
 
 A mode plugs in a *source* with only what differs: ``plan``, ``read``,
 ``route``, ``audit`` (lineage rows + summary fields), the knobs it
@@ -29,9 +28,12 @@ retry channel (O12), the scheduler replaces the reader pool (O13).
 
 from __future__ import annotations
 
+import argparse
 import functools
 import os
 import shutil
+import signal
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +46,7 @@ from .jsonl import read_jsonl
 from .lineage import LineageStore, lineage_rows_for, plan_new_files
 from .metrics import observed
 from .route import spread_within_sinks, with_sink_id
+from .session import get_spark
 from .warc import read_warc
 
 #: the data knobs of PipelineConfig: a source honors each one or rejects
@@ -246,10 +249,10 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     Returns a summary dict: ``snapshot_id``, the source's audit fields,
     the observed metrics (documents modes), ``output`` and the phase
     walls; ``{"snapshot_id": None, ...}`` when there was nothing new to
-    commit.  The metrics row is written before the lineage publish, so
-    a process that dies anywhere leaves either an uncommitted snapshot
-    (rerun under the same id, its row replaced) or a committed one with
-    its row — the reference's crash-between-send-and-ack window,
+    commit.  The run row is published inside the lineage manifest, so a
+    process that dies anywhere leaves either an uncommitted snapshot
+    (no manifest, no row; rerun under the same id) or a committed one
+    with its row — the reference's crash-between-send-and-ack window,
     supervisor.go:191-219.
     """
     _check_knobs(cfg, source)
@@ -306,7 +309,7 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     summary.update(
         output=snap_dir,
         # phase walls: plan (serial driver), write (the parallel job),
-        # audit+commit (serial driver, up to the metrics row) — for the
+        # audit+commit (serial driver, up to the run row) — for the
         # Amdahl analysis in BENCH/BASELINE.md; at 10^12 rows the serial
         # phases are noise.
         plan_sec=t_planned - t_start,
@@ -314,14 +317,12 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
         audit_commit_sec=time.perf_counter() - t_written,
         **side,
     )
-    # durable counters (statistics.go parity) land BEFORE the publish,
-    # under its fence, so no death can lose a committed snapshot's row;
-    # looked up at call time so a wrapper on scones.statsserver sees it
+    # durable counters (statistics.go parity) commit with the lineage
+    # rows, in one publish; looked up at call time so a wrapper on
+    # scones.statsserver sees it
     from .statsserver import persist_run_metrics
 
-    with store.fenced(snapshot_id):
-        persist_run_metrics(cfg.checkpoint_dir, summary)
-    store.commit(snapshot_id, rows)
+    store.commit(snapshot_id, rows, run=persist_run_metrics(summary))
     return summary
 
 
@@ -349,8 +350,8 @@ def run_jsonl_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     return _run_snapshot(spark, cfg, source_for_mode("jsonl"))
 
 
-# Every ingest mode :func:`snapshot_fn_for_mode` runs; both CLIs take
-# their ``--mode`` choices from here.
+# Every ingest mode :func:`snapshot_fn_for_mode` runs; the CLI's
+# ``--mode`` choices come from here.
 MODES = ("documents", "tail", "warc", "jsonl")
 
 
@@ -450,11 +451,9 @@ def run_from_config(
     return summaries, srv
 
 
-def main() -> None:  # pragma: no cover — spark-submit entry point
-    import argparse
-
-    from .session import get_spark
-
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    """The flags of both CLI entries: ``python -m scones.pipeline`` and
+    the spark-submit entry (tools/submit_pipeline.py)."""
     p = argparse.ArgumentParser(description="scones pipeline (spark-submit)")
     p.add_argument("--config", required=True)
     p.add_argument(
@@ -492,7 +491,16 @@ def main() -> None:  # pragma: no cover — spark-submit entry point
         help="hung-JVM watchdog: abandon a snapshot attempt after this "
         "many seconds, relaunch the SparkSession and retry under backoff",
     )
-    a = p.parse_args()
+    return p.parse_args(argv)
+
+
+def main(build_session=None) -> None:
+    """The CLI body of both entries: flags over the config, then
+    :func:`run_from_config`.  ``build_session()`` makes the session: by
+    default :func:`scones.session.get_spark` (a local master sized from
+    the host); the spark-submit entry passes one that leaves master and
+    memory to the launcher."""
+    a = parse_args()
     cfg = PipelineConfig.from_json(a.config)
     # CLI overrides on top of the declarative config
     if a.mode is not None:
@@ -507,13 +515,10 @@ def main() -> None:  # pragma: no cover — spark-submit entry point
     if cfg.daemon:
         # install BEFORE the (slow) JVM launch: a TERM during startup
         # must also drain, not die mid-initialization
-        import signal
-        import threading
-
         stop = threading.Event()
         for sig in (signal.SIGTERM, signal.SIGINT):
             signal.signal(sig, lambda *_: stop.set())
-    spark = get_spark(app_name="scones-pipeline")
+    spark = build_session() if build_session else get_spark(app_name="scones-pipeline")
     summaries, srv = run_from_config(
         spark,
         cfg,

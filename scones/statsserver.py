@@ -5,9 +5,9 @@ served as JSON over HTTP (statistics_server.go:16-39) reporting
 per-client counters and per-file position vs snapshot_position
 (statistics.go:34-75, 140-187).  The Spark-native equivalents:
 
-  * per-run ``observe()`` counters are PERSISTED as a ``metrics`` parquet
-    table under the checkpoint dir (the reference's counters die with the
-    process; ours survive it — each run appends one row);
+  * per-run ``observe()`` counters are PERSISTED as the run row each
+    snapshot's lineage manifest carries (the reference's counters die
+    with the process; ours commit with the snapshot they count);
   * the live endpoint recomputes file state on each GET (the reference
     ``os.Stat``s every file per request, statistics.go:140-159): per file
     size-on-disk vs committed offset — the gap is the unacked backlog;
@@ -21,7 +21,6 @@ import glob as globmod
 import json
 import os
 import threading
-import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pyarrow as pa
@@ -29,41 +28,17 @@ import pyarrow.parquet as pq
 
 from .lineage import LineageStore, backlog_report
 
-METRICS_SCHEMA = pa.schema(
-    [
-        ("run_id", pa.string()),
-        ("snapshot_id", pa.int64()),
-        ("rows", pa.int64()),
-        ("payload_bytes", pa.int64()),
-        ("approx_urls", pa.int64()),
-        ("n_files", pa.int64()),
-        ("plan_sec", pa.float64()),
-        ("write_sec", pa.float64()),
-        ("audit_commit_sec", pa.float64()),
-    ]
-)
-
-
-def metrics_dir(checkpoint_dir: str) -> str:
-    d = os.path.join(checkpoint_dir, "metrics")
-    os.makedirs(d, exist_ok=True)
-    return d
-
-
-def persist_run_metrics(checkpoint_dir: str, summary: dict) -> str | None:
-    """Write the metrics row of one snapshot (no-op runs skipped).
+def persist_run_metrics(summary: dict) -> dict:
+    """Build the run row of one committed snapshot, the row
+    :meth:`LineageStore.commit` publishes in the snapshot's manifest
+    (read back with :meth:`LineageStore.runs`).
 
     ``summary`` is the snapshot core's return dict in any mode:
     documents / WARC / JSONL count ``rows`` and carry the observed
     ``payload_bytes`` / ``approx_urls``; tail counts ``lines`` (stored as
-    ``rows``) and observes nothing (0).  Written before the lineage
-    publish, named by snapshot id, by tmp + rename: a rerun of an
-    uncommitted snapshot replaces its own row.
+    ``rows``) and observes nothing (0).
     """
-    if summary.get("snapshot_id") is None:
-        return None
-    row = {
-        "run_id": uuid.uuid4().hex,
+    return {
         "snapshot_id": int(summary["snapshot_id"]),
         "rows": int(summary.get("rows", summary.get("lines", 0))),
         "payload_bytes": int(summary.get("payload_bytes", 0)),
@@ -73,23 +48,6 @@ def persist_run_metrics(checkpoint_dir: str, summary: dict) -> str | None:
         "write_sec": float(summary.get("write_sec", 0.0)),
         "audit_commit_sec": float(summary.get("audit_commit_sec", 0.0)),
     }
-    d = metrics_dir(checkpoint_dir)
-    final = os.path.join(d, f"run_{row['snapshot_id']:012d}.parquet")
-    tmp = final + ".tmp"
-    pq.write_table(pa.Table.from_pylist([row], schema=METRICS_SCHEMA), tmp)
-    os.replace(tmp, final)
-    return final
-
-
-def read_run_metrics(checkpoint_dir: str) -> list[dict]:
-    """The metrics rows of committed snapshots; a row whose snapshot
-    never published (the process died first) is not a run."""
-    files = sorted(globmod.glob(os.path.join(metrics_dir(checkpoint_dir), "run_*.parquet")))
-    if not files:
-        return []
-    committed = set(LineageStore(checkpoint_dir).committed_snapshots())
-    rows = pa.concat_tables([pq.read_table(f) for f in files]).to_pylist()
-    return [r for r in rows if r["snapshot_id"] in committed]
 
 
 class FooterCache:
@@ -236,14 +194,15 @@ def stats_payload(
             "backlog_bytes": max(size, 0) - c["position"] if size >= 0 else 0,
             "snapshots": sorted(set(c["snapshots"])),
         }
-    runs = read_run_metrics(checkpoint_dir)
     return {
-        "runs": runs,
+        "runs": store.runs(),
         "files": files,
         # per-sink ClientStatistics parity (statistics.go:34-45) — only
         # when the caller wires the routed output dir in
         "sinks": (
-            sink_stats(output_dir, store.committed_snapshots(), footer_cache)
+            sink_stats(
+                output_dir, [r["snapshot_id"] for r in lineage], footer_cache
+            )
             if output_dir
             else {}
         ),

@@ -54,10 +54,10 @@ def test_daemon_retries_failed_snapshot_exactly_once_committed(
     attempts = []
     real_commit = LineageStore.commit
 
-    def flaky_commit(self, snapshot_id, rows):
+    def flaky_commit(self, snapshot_id, rows, run=None):
         if len(attempts) == 1:
             raise RuntimeError("injected crash between sink write and commit")
-        return real_commit(self, snapshot_id, rows)
+        return real_commit(self, snapshot_id, rows, run)
 
     monkeypatch.setattr(LineageStore, "commit", flaky_commit)
 

@@ -11,7 +11,8 @@ reference's BoltDB high-water-mark resume (supervisor.go:191-249):
   * exactly-once output against the oracle (framing and crc32 routing);
   * lineage continuity: contiguous snapshot ids, each file (documents)
     or byte range (tail) committed once;
-  * one metrics row per committed snapshot;
+  * one run row per committed snapshot, equal to the summary that
+    committed it;
   * per-sink stats that count committed rows only — before and after
     the resume.
 """
@@ -30,7 +31,7 @@ from scones.corpus import CORPUS_SCHEMA, generate_rows
 from scones.lineage import LineageStore, read_committed
 from scones.oracle import frame_bytes, simulate_pipeline
 from scones.pipeline import snapshot_fn_for_mode
-from scones.statsserver import read_run_metrics, stats_payload
+from scones.statsserver import persist_run_metrics, stats_payload
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 N_SINKS = 3
@@ -61,8 +62,8 @@ os.link = die
     # the lineage manifest is published; nothing after it runs
     "after_publish": """
 real = LineageStore.commit
-def killed(self, *a):
-    real(self, *a)
+def killed(self, *a, **k):
+    real(self, *a, **k)
     die()
 LineageStore.commit = killed
 """,
@@ -115,13 +116,17 @@ def _die_in_child(tmp_path, cfg, point):
     )
 
 
-def _assert_counters(cfg):
-    """One metrics row per committed snapshot; the per-sink counters sum
-    to the committed row count (crash leftovers were never sent)."""
+def _assert_counters(cfg, *summaries):
+    """One run row per committed snapshot, equal to each given summary's;
+    the per-sink counters sum to the committed row count (crash leftovers
+    were never sent)."""
     store = LineageStore(cfg.checkpoint_dir)
     committed = store.committed_snapshots()
-    runs = read_run_metrics(cfg.checkpoint_dir)
-    assert sorted(r["snapshot_id"] for r in runs) == committed
+    runs = store.runs()
+    assert [r["snapshot_id"] for r in runs] == committed
+    for s in summaries:
+        assert runs[committed.index(s["snapshot_id"])] == persist_run_metrics(s)
+    assert not os.path.exists(os.path.join(cfg.checkpoint_dir, "metrics"))
     sinks = stats_payload(cfg.checkpoint_dir, cfg.input_glob, cfg.output_dir)[
         "sinks"
     ]
@@ -182,18 +187,21 @@ def test_documents_crash_resume(spark, tmp_path, host_meta_path, point):
     run = snapshot_fn_for_mode(cfg.mode)
     rows, per = generate_rows(160, seed=23), 40
     _write_docs(str(tmp_path / "in"), rows, 0, 2, per)
-    assert run(spark, cfg)["snapshot_id"] == 1
+    first = run(spark, cfg)
+    assert first["snapshot_id"] == 1
     _write_docs(str(tmp_path / "in"), rows, 2, 4, per)
 
     _die_in_child(tmp_path, cfg, point)
     _assert_died_at(cfg, point, 2)
-    _assert_counters(cfg)
+    _assert_counters(cfg, first)
 
     resumed = run(spark, cfg)
     if point == "after_publish":
         assert resumed["snapshot_id"] is None  # already committed
+        summaries = (first,)
     else:
         assert resumed["snapshot_id"] == 2 and resumed["rows"] == 2 * per
+        summaries = (first, resumed)
 
     store = LineageStore(cfg.checkpoint_dir)
     routed = {}
@@ -213,7 +221,7 @@ def test_documents_crash_resume(spark, tmp_path, host_meta_path, point):
         f"docs_{i:04d}.parquet" for i in range(4)
     ]
     assert all(len(v) == 1 and v[0]["row_count"] == per for v in by_file.values())
-    _assert_counters(cfg)
+    _assert_counters(cfg, *summaries)
 
 
 @pytest.mark.parametrize("point", ["after_write", "before_publish"])
@@ -230,7 +238,8 @@ def test_tail_crash_resume(spark, tmp_path, point):
     run = snapshot_fn_for_mode(cfg.mode)
     (logs / "a.log").write_bytes(b"".join(b"a%d\n" % i for i in range(30)) + b"a-part")
     (logs / "b.log").write_bytes(b"".join(b"b%d\r\n" % i for i in range(20)))
-    assert run(spark, cfg)["snapshot_id"] == 1
+    first = run(spark, cfg)
+    assert first["snapshot_id"] == 1
     # the log grows: the partial line completes, more lines land
     with open(logs / "a.log", "ab") as fh:
         fh.write(b"ial\n" + b"".join(b"a%d\n" % i for i in range(30, 70)))
@@ -239,9 +248,10 @@ def test_tail_crash_resume(spark, tmp_path, point):
 
     _die_in_child(tmp_path, cfg, point)
     _assert_died_at(cfg, point, 2)
-    _assert_counters(cfg)
+    _assert_counters(cfg, first)
 
-    assert run(spark, cfg)["snapshot_id"] == 2
+    resumed = run(spark, cfg)
+    assert resumed["snapshot_id"] == 2
 
     store = LineageStore(cfg.checkpoint_dir)
     got = sorted(
@@ -263,4 +273,4 @@ def test_tail_crash_resume(spark, tmp_path, point):
         spans = by_file[str(f)]
         assert [r["snapshot_id"] for r in spans] == [1, 2]
         assert spans[-1]["offset_end"] == frame_bytes(f.read_bytes()).position
-    _assert_counters(cfg)
+    _assert_counters(cfg, first, resumed)

@@ -209,6 +209,80 @@ def test_manifest_compaction_crash_between_publish_and_cleanup(tmp_path):
     assert not globmod.glob(str(tmp_path / "ckpt" / "lineage" / "*.tmp-*"))
 
 
+def test_manifest_fold_crash_keeps_one_run_per_snapshot(tmp_path, monkeypatch):
+    """The fold publishes runs_<fold> before base_<fold>.  A fold that
+    dies between the two leaves readers on the old base with its old
+    runs; one that dies after the base, before cleanup, leaves them on
+    the new base with its new runs.  Either way runs() holds exactly one
+    row per committed snapshot, and the next fold cleans up."""
+
+    class Died(Exception):
+        pass
+
+    def run_of(sid):
+        return {"snapshot_id": sid, "rows": 10, "plan_sec": sid / 3}
+
+    def dies_at(name, pred):
+        real = getattr(os, name)
+
+        def fn(path, *a):
+            if pred(os.path.basename(a[0] if a else path)):
+                raise Died(name)
+            return real(path, *a)
+
+        return fn
+
+    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    for sid in range(1, 6):
+        store.commit(sid, _fake_rows(sid), run=run_of(sid))
+    store.compact_manifest()  # base_5 + runs_5
+    for sid in range(6, 9):
+        store.commit(sid, _fake_rows(sid), run=run_of(sid))
+    want = [run_of(sid) for sid in range(1, 9)]
+
+    def on_disk():
+        return sorted(f for f in os.listdir(store.dir) if ".tmp-" not in f)
+
+    # dies after runs_8 is published, before base_8
+    with monkeypatch.context() as m, pytest.raises(Died):
+        m.setattr(os, "replace", dies_at("replace", lambda f: f.startswith("base_")))
+        store.compact_manifest()
+    assert "runs_000000000008.parquet" in on_disk()
+    assert os.path.basename(store._files()[0]) == "base_000000000005.parquet"
+    assert store.runs() == want
+    assert store.committed_snapshots() == list(range(1, 9))
+
+    # dies after base_8 is published, before any cleanup
+    with monkeypatch.context() as m, pytest.raises(Died):
+        m.setattr(os, "remove", dies_at("remove", lambda f: ".tmp-" not in f))
+        store.compact_manifest()
+    assert {"base_000000000005.parquet", "runs_000000000005.parquet",
+            "snapshot_000000000006.parquet"} <= set(on_disk())
+    assert store._files() == [os.path.join(store.dir, "base_000000000008.parquet")]
+    assert store.runs() == want
+    assert store.committed_snapshots() == list(range(1, 9))
+
+    store.compact_manifest()
+    assert on_disk() == ["base_000000000008.parquet", "runs_000000000008.parquet"]
+    assert store.runs() == want
+
+
+def test_base_without_runs_file_still_reads_and_folds(tmp_path):
+    """A base folded before runs were kept has no runs file: its runs
+    are not recovered (there is no migration), but runs(), commits and
+    the next fold keep working."""
+    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    for sid in range(1, 4):
+        store.commit(sid, _fake_rows(sid), run={"snapshot_id": sid})
+    store.compact_manifest()
+    os.remove(os.path.join(store.dir, "runs_000000000003.parquet"))
+    store.commit(4, _fake_rows(4), run={"snapshot_id": 4})
+    assert store.runs() == [{"snapshot_id": 4}]
+    store.compact_manifest()
+    assert store.runs() == [{"snapshot_id": 4}]
+    assert store.committed_snapshots() == [1, 2, 3, 4]
+
+
 def test_commit_fencing_refuses_stale_attempt(tmp_path):
     """The watchdog race (round-4 ADVICE, medium): an abandoned attempt
     that wakes AFTER the retry committed the same snapshot id must not

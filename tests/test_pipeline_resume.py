@@ -43,7 +43,7 @@ def _routed_urls(spark, cfg):
     return out
 
 
-def _crash_commit(self, snapshot_id, rows):
+def _crash_commit(self, snapshot_id, rows, run=None):
     raise RuntimeError("injected crash between sink write and lineage commit")
 
 

@@ -97,8 +97,9 @@ class _RecordingBuilder:
 
 def test_submit_entry_builds_the_same_sql_settings(monkeypatch):
     """tools/submit_pipeline.py and get_spark apply one set of SQL
-    settings, and the submit tool accepts every mode the pipeline runs."""
-    from scones.pipeline import MODES, snapshot_fn_for_mode
+    settings, and the shared CLI parser accepts every mode the pipeline
+    runs."""
+    from scones.pipeline import MODES, parse_args, snapshot_fn_for_mode
     from tools import submit_pipeline as submit
 
     submitted = submit.build_session(_RecordingBuilder()).conf
@@ -111,5 +112,45 @@ def test_submit_entry_builds_the_same_sql_settings(monkeypatch):
 
     for mode in MODES:
         snapshot_fn_for_mode(mode)
-        assert submit.parse_args(["--config", "c.json", "--mode", mode]).mode == mode
-    assert submit.parse_args(["--config", "c.json"]).mode is None
+        assert parse_args(["--config", "c.json", "--mode", mode]).mode == mode
+    assert parse_args(["--config", "c.json"]).mode is None
+
+
+def test_submit_entry_runs_the_config_it_is_given(tmp_path, monkeypatch):
+    """The spark-submit entry hands its config to run_from_config whole:
+    a daemon config reaches it as a daemon, with a drain event wired to
+    SIGTERM, on the session the submit entry builds."""
+    import signal
+    import sys
+
+    import scones.pipeline
+    from scones.config import PipelineConfig
+    from tools import submit_pipeline as submit
+
+    cfg = PipelineConfig(
+        input_glob=str(tmp_path / "in" / "*.log"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        mode="tail",
+        daemon=True,
+        stats_port=0,
+        snapshot_timeout_sec=30.0,
+        poll_max_sec=2.0,
+    )
+    cfg_path = str(tmp_path / "cfg.json")
+    cfg.to_json(cfg_path)
+    seen, handlers = {}, {}
+
+    def run_from_config(spark, cfg, stop_event=None, on_event=None):
+        seen.update(spark=spark, cfg=cfg, stop_event=stop_event)
+        return [], None
+
+    built = SimpleNamespace(stop=lambda: None)
+    monkeypatch.setattr(scones.pipeline, "run_from_config", run_from_config)
+    monkeypatch.setattr(submit, "build_session", lambda: built)
+    monkeypatch.setattr(signal, "signal", handlers.__setitem__)
+    monkeypatch.setattr(sys, "argv", ["submit_pipeline.py", "--config", cfg_path])
+    submit.main()
+    assert seen.get("cfg") == cfg, "run_from_config never saw the config"
+    assert seen["spark"] is built
+    assert seen["stop_event"] is not None and signal.SIGTERM in handlers

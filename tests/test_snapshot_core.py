@@ -4,7 +4,6 @@ effect visible in the output — or rejected before anything is planned,
 written or committed."""
 
 import base64
-import glob as globmod
 import os
 
 import pytest
@@ -13,7 +12,8 @@ from scones.config import PipelineConfig
 from scones.corpus import generate_rows, write_corpus, write_host_meta
 from scones.jsonl import write_jsonl
 from scones.pipeline import KNOBS, snapshot_fn_for_mode
-from scones.statsserver import read_run_metrics
+from scones.lineage import LineageStore
+from scones.statsserver import persist_run_metrics
 from scones.warc import write_warc
 
 MODES = ("documents", "warc", "jsonl", "tail")
@@ -171,7 +171,7 @@ def test_out_of_range_knob_rejected(spark, tmp_path, mode, knob, value):
     cfg = _cfg(tmp_path, mode, _write_inputs(mode, tmp_path), **{knob: value})
     with pytest.raises(ValueError, match=f"{knob}={value} is out of range"):
         snapshot_fn_for_mode(mode)(spark, cfg)
-    # no snapshot_id= dir, no lineage row, no metrics row
+    # no snapshot_id= dir, no lineage row, no run row
     assert not (tmp_path / "out").exists() and not (tmp_path / "ckpt").exists()
 
 
@@ -206,23 +206,25 @@ def test_tail_snapshot_persists_one_metrics_row(spark, tmp_path):
     from scones.tailsource import run_tail_snapshot
 
     glob = _write_inputs("tail", tmp_path)
-    s = run_tail_snapshot(spark, glob, str(tmp_path / "out"), str(tmp_path / "ckpt"))
-    metrics = read_run_metrics(str(tmp_path / "ckpt"))
-    assert len(metrics) == 1
-    assert metrics[0]["snapshot_id"] == s["snapshot_id"] == 1
-    assert metrics[0]["rows"] == s["lines"] == N_DOCS + 1
-    assert metrics[0]["n_files"] == 1
+    ckpt = str(tmp_path / "ckpt")
+    s = run_tail_snapshot(spark, glob, str(tmp_path / "out"), ckpt)
+    (row,) = LineageStore(ckpt).runs()
+    assert row == persist_run_metrics(s)
+    assert row["snapshot_id"] == s["snapshot_id"] == 1
+    assert row["rows"] == s["lines"] == N_DOCS + 1
+    assert row["n_files"] == 1
+    assert not os.path.exists(os.path.join(ckpt, "metrics"))
 
 
 def test_metrics_row_is_the_summary_and_fenced_out_attempts_write_none(
     spark, tmp_path, monkeypatch
 ):
-    """The metrics row lands before the lineage publish, under the same
+    """The run row is published inside the lineage manifest, under its
     fence: an attempt a newer one has fenced out (the watchdog's
-    abandoned thread) writes no row, and the row the next attempt
-    writes carries the summary's values."""
+    abandoned thread) publishes no row, and the row the next attempt
+    publishes carries the summary's values."""
     import scones.pipeline
-    from scones.lineage import LineageStore, StaleAttemptError
+    from scones.lineage import StaleAttemptError
 
     cfg = _cfg(tmp_path, "documents", _write_inputs("documents", tmp_path))
     real = scones.pipeline._has_part_files
@@ -234,11 +236,13 @@ def test_metrics_row_is_the_summary_and_fenced_out_attempts_write_none(
     with monkeypatch.context() as m, pytest.raises(StaleAttemptError):
         m.setattr(scones.pipeline, "_has_part_files", superseded)
         snapshot_fn_for_mode("documents")(spark, cfg)
-    assert not globmod.glob(os.path.join(cfg.checkpoint_dir, "metrics", "run_*"))
+    assert LineageStore(cfg.checkpoint_dir).runs() == []
 
     s = snapshot_fn_for_mode("documents")(spark, cfg)
-    (row,) = read_run_metrics(cfg.checkpoint_dir)
+    (row,) = LineageStore(cfg.checkpoint_dir).runs()
+    assert row == persist_run_metrics(s)
     for k in ("snapshot_id", "rows", "payload_bytes", "approx_urls"):
         assert row[k] == s[k]
     for k in ("plan_sec", "write_sec", "audit_commit_sec"):
-        assert row[k] == pytest.approx(s[k])
+        assert row[k] == s[k]
+    assert not os.path.exists(os.path.join(cfg.checkpoint_dir, "metrics"))

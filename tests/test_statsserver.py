@@ -1,5 +1,5 @@
-"""Metrics persistence + HTTP statistics endpoint (statistics_server.go
-parity): served JSON equals the lineage-derived state."""
+"""Run rows + HTTP statistics endpoint (statistics_server.go parity):
+served JSON equals the lineage-derived state."""
 
 import json
 import urllib.request
@@ -8,7 +8,7 @@ from scones.config import PipelineConfig
 from scones.corpus import write_corpus
 from scones.lineage import LineageStore, backlog_report
 from scones.pipeline import run_snapshot
-from scones.statsserver import StatisticsServer, read_run_metrics, stats_payload
+from scones.statsserver import StatisticsServer, persist_run_metrics, stats_payload
 
 
 def _cfg(tmp_path):
@@ -25,14 +25,15 @@ def test_run_metrics_persisted_per_run(spark, tmp_path):
     cfg = _cfg(tmp_path)
     write_corpus(str(tmp_path / "in"), n_docs=30, n_files=2, seed=81)
     s1 = run_snapshot(spark, cfg)
-    runs = read_run_metrics(cfg.checkpoint_dir)
-    assert len(runs) == 1
+    runs = LineageStore(cfg.checkpoint_dir).runs()
+    assert runs == [persist_run_metrics(s1)]
     assert runs[0]["snapshot_id"] == s1["snapshot_id"]
     assert runs[0]["rows"] == 30
     assert runs[0]["payload_bytes"] == s1["payload_bytes"]
+    assert stats_payload(cfg.checkpoint_dir, cfg.input_glob)["runs"] == runs
     # no-op run appends nothing
     run_snapshot(spark, cfg)
-    assert len(read_run_metrics(cfg.checkpoint_dir)) == 1
+    assert LineageStore(cfg.checkpoint_dir).runs() == runs
 
 
 def test_stats_payload_matches_lineage(spark, tmp_path):
@@ -251,3 +252,40 @@ def test_footer_cache_second_request_reads_zero_footers(spark, tmp_path):
         assert srv.footer_cache.reads == reads_after_first + new_parts
     finally:
         srv.stop()
+
+
+def test_poll_opens_stay_flat_as_history_grows(tmp_path, monkeypatch):
+    """A stats poll reads the newest manifest base, its runs file and the
+    loose manifests above the fold, never the whole history: after
+    2·T + 5 and 4·T + 5 commits (T = the fold threshold) one poll opens
+    the same number of parquet files."""
+    import pyarrow.parquet as pq
+
+    T = LineageStore.COMPACT_THRESHOLD
+    loose = 5
+    ckpt = str(tmp_path / "ckpt")
+    store = LineageStore(ckpt)
+    opens = []
+    for name in ("read_table", "read_schema", "ParquetFile"):
+        real = getattr(pq, name)
+        monkeypatch.setattr(
+            pq, name, lambda *a, _real=real, **k: opens.append(1) or _real(*a, **k)
+        )
+
+    def commit_up_to(n):
+        for sid in range(store.next_snapshot_id(), n + 1):
+            store.commit(sid, [{
+                "snapshot_id": sid, "src_file": f"/in/{sid}.log",
+                "offset_start": 0, "offset_end": 10, "row_count": 1,
+            }], run={"snapshot_id": sid, "rows": 1})
+
+    counts = []
+    for n in (2 * T + loose, 4 * T + loose):
+        commit_up_to(n)
+        assert len(store._loose_files()) == loose
+        opens.clear()
+        payload = stats_payload(ckpt, str(tmp_path / "*.log"), str(tmp_path / "out"))
+        counts.append(len(opens))
+        assert [r["snapshot_id"] for r in payload["runs"]] == list(range(1, n + 1))
+        assert [r["snapshot_id"] for r in store.runs()] == list(range(1, n + 1))
+    assert counts[0] == counts[1] <= 3 * (loose + 1) + 1

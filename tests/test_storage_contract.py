@@ -9,11 +9,13 @@ replace LineageStore + the module functions without touching callers.
 
 Contract surface (what a swap must provide):
   * plan(ning):   plan_new_files(store, input_glob) -> list[str]
-  * commit:       store.commit(snapshot_id, rows) — atomic publish
+  * commit:       store.commit(snapshot_id, rows, run) — atomic publish of
+                  the lineage rows and the snapshot's run row
   * read:         read_committed(spark, store, output_dir, as_of_snapshot)
   * vacuum:       vacuum_orphans(store, output_dir) -> removed paths
   * maintenance:  store.compact_manifest() — fold metadata, O(1) planning
   * metadata:     committed_snapshots / processed_files / next_snapshot_id
+                  / runs
 """
 
 import inspect
@@ -47,8 +49,9 @@ def test_module_surface_pinned():
     assert _params(lineage.backlog_report) == ["store", "input_glob"]
 
     store_methods = {
-        "commit": ["self", "snapshot_id", "rows"],
+        "commit": ["self", "snapshot_id", "rows", "run"],
         "committed_snapshots": ["self"],
+        "runs": ["self"],
         "processed_files": ["self"],
         "next_snapshot_id": ["self"],
         "read_all": ["self", "columns"],

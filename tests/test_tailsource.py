@@ -90,7 +90,7 @@ def test_crash_between_write_and_commit_resumes_exactly(
     (logs / "a.log").write_bytes(b"a1\na2\n")
     (logs / "b.log").write_bytes(b"b1\n")
 
-    def crash(self, snapshot_id, rows):
+    def crash(self, snapshot_id, rows, run=None):
         raise RuntimeError("injected crash between write and commit")
 
     with monkeypatch.context() as m, pytest.raises(

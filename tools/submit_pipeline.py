@@ -4,31 +4,21 @@
 Usage:
     zip -r /tmp/scones.zip scones
     spark-submit --master <cluster> --py-files /tmp/scones.zip \
-        tools/submit_pipeline.py --config pipeline.json [--mode tail]
+        tools/submit_pipeline.py --config pipeline.json [--mode tail] [--daemon]
 
-Here the launcher owns master, memory and JVM options (the cluster's
-conf); the session gets the same SQL-level settings as ``get_spark``
+The flags and the run are those of ``python -m scones.pipeline``
+(``scones.pipeline.main``); only the session differs.  Here the launcher
+owns master, memory and JVM options (the cluster's conf); the session
+gets the same SQL-level settings as ``get_spark``
 (``scones.session.SQL_CONF``).
 """
 
 from __future__ import annotations
 
-import argparse
-
 from pyspark.sql import SparkSession
 
-from scones.config import PipelineConfig
-from scones.pipeline import MODES, snapshot_fn_for_mode
+from scones import pipeline
 from scones.session import apply_sql_conf
-
-
-def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
-    p = argparse.ArgumentParser()
-    p.add_argument("--config", required=True)
-    p.add_argument(
-        "--mode", choices=MODES, default=None, help="override the config's mode"
-    )
-    return p.parse_args(argv)
 
 
 def build_session(builder=None) -> SparkSession:
@@ -38,14 +28,7 @@ def build_session(builder=None) -> SparkSession:
 
 
 def main() -> None:
-    a = parse_args()
-    cfg = PipelineConfig.from_json(a.config)
-    if a.mode is not None:
-        cfg.mode = a.mode
-    spark = build_session()
-    summary = snapshot_fn_for_mode(cfg.mode)(spark, cfg)
-    print(summary)
-    spark.stop()
+    pipeline.main(build_session)
 
 
 if __name__ == "__main__":
