@@ -10,12 +10,13 @@ driver-side bookkeeping:
     → static fields                                ≈ decoration (O6)
     → sink_id route (+ observed metrics)           ≈ routing (O9), statistics (O14)
     → [spread repartition] + partitionBy(sink_id)  ≈ ship (O7/O8/O10)
-    → audit the written output → lineage rows
+    → audit what landed → lineage rows
     → dedup index / LM scores (optional side tables)
     → publish lineage + the run row (one link)     ≈ ack + Bolt txn (O11/O14)
 
 A mode plugs in a *source* with only what differs: ``plan``, ``read``,
-``route``, ``audit`` (lineage rows + summary fields), the knobs it
+``route``, ``audit`` (lineage rows + summary fields from the snapshot's
+landed parts, given the written frame's schema), the knobs it
 ``honors`` and the ``audit_columns`` no static field may overwrite —
 :class:`_DocsSource` for documents / WARC / JSONL (honors every knob),
 :class:`scones.tailsource.TailSource` for tail.
@@ -164,7 +165,17 @@ class _DocsSource:
     def route(self, df: DataFrame, n_sinks: int):
         return observed(with_sink_id(df, n_sinks))
 
-    def audit(self, written: DataFrame | None, snapshot_id: int, files: list[str]):
+    def audit(
+        self,
+        spark: SparkSession,
+        landed: str | None,
+        schema,
+        snapshot_id: int,
+        files: list[str],
+    ):
+        written = None
+        if landed is not None:
+            written = spark.read.schema(schema).parquet(landed)
         # zero-row planned files still get a consumed marker
         rows = lineage_rows_for(written, snapshot_id, planned_files=files)
         shown = files if len(files) <= 8 else files[:3] + ["..."] + files[-1:]
@@ -199,12 +210,16 @@ def _side_tables(
     cfg: PipelineConfig,
     store: LineageStore,
     snapshot_id: int,
-    written: DataFrame,
+    landed: str,
+    schema,
 ) -> dict:
     """Dedup-index and LM-score hooks, run before the lineage commit so
     their output is durable once the snapshot counts as committed
-    (deterministic overwrite ⇒ a crash-retry rewrites identical files)."""
+    (deterministic overwrite ⇒ a crash-retry rewrites identical files).
+    Both read the landed parts of ``landed`` with the written frame's
+    ``schema``."""
     info: dict = {}
+    written = spark.read.schema(schema).parquet(landed)
     if cfg.dedup_index:
         # Cross-snapshot dedup: persist this snapshot's band index and
         # probe the committed indexes (scones/incremental.py).
@@ -274,12 +289,8 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     snap_dir = os.path.join(cfg.output_dir, f"snapshot_id={snapshot_id}")
     # extracted_str is derivable (cast(extracted as string)) — writing it
     # would double the payload bytes on every sink.
-    (
-        routed.drop("html", "extracted_str")
-        .write.mode("overwrite")
-        .partitionBy("sink_id")
-        .parquet(snap_dir)
-    )
+    out = routed.drop("html", "extracted_str")
+    out.write.mode("overwrite").partitionBy("sink_id").parquet(snap_dir)
     t_written = time.perf_counter()
 
     # Lineage from the written output (audit of what actually landed).
@@ -288,21 +299,21 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     # on a data-bearing snapshot (transient FS error, corrupt footer) must
     # propagate, never silently commit empty lineage.  On an object
     # store, list via the FS client.
-    written = spark.read.parquet(snap_dir) if _has_part_files(snap_dir) else None
-    rows, fields = source.audit(written, snapshot_id, work)
+    landed = snap_dir if _has_part_files(snap_dir) else None
+    rows, fields = source.audit(spark, landed, out.schema, snapshot_id, work)
     if not rows:
         # nothing to commit (a tail whose new bytes hold no complete
         # line): no snapshot; the same bytes are planned again next time
         shutil.rmtree(snap_dir, ignore_errors=True)
         return {"snapshot_id": None, **source.idle()}
     side = {}
-    if written is not None:
-        side = _side_tables(spark, cfg, store, snapshot_id, written)
+    if landed is not None and (cfg.dedup_index or cfg.lm_model_path):
+        side = _side_tables(spark, cfg, store, snapshot_id, landed, out.schema)
 
     summary = {"snapshot_id": snapshot_id, **fields}
     if obs is not None:
         # an empty snapshot ran zero output tasks → no observed row
-        m = obs.get if written is not None else {}
+        m = obs.get if landed is not None else {}
         summary["rows"] = int(m.get("rows", 0))
         summary["payload_bytes"] = int(m.get("payload_bytes") or 0)
         summary["approx_urls"] = int(m.get("approx_urls", 0))

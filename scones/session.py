@@ -39,6 +39,23 @@ ARROW_MAX_RECORDS = 16_384
 # .getCount()`` before and after it.
 CODEGEN_CACHE_ENTRIES = 1024
 
+# Python worker daemon (scones/pydaemon.py).  Spark puts pyspark.zip
+# (1,328 entries), py4j's source zip and the spark-core jar at the front
+# of a Python worker's import path, and pyspark's worker calls
+# ``importlib.invalidate_caches()`` before every task.  On CPython 3.11
+# and 3.12 that call re-reads the central directory of each of the 16 zip
+# importers the worker has cached by then: 0.18-0.28 s of CPU per task,
+# paid by every mapInArrow task of every mode (measured on a 4-core host).
+# The daemon drops those archives when the rest of the path resolves the
+# same pyspark, and the call then costs well under a millisecond.  CPython
+# 3.13 re-reads a zip's directory lazily, so there the call is already
+# cheap; the shorter path stays correct across an interpreter upgrade.
+# Only local sessions (:func:`get_spark` on a ``local`` master) start
+# workers from it: there they run on the driver's host with its import
+# path.  A cluster executor's daemon starts before any task has fetched
+# ``--py-files``, so ``scones`` may not import there yet.
+PYTHON_DAEMON_MODULE = "scones.pydaemon"
+
 # The SQL-level settings every scones session carries, whoever builds it:
 # ``get_spark`` here, or the spark-submit entry (tools/submit_pipeline.py),
 # whose launcher owns master, memory and JVM options.
@@ -111,7 +128,8 @@ def get_spark(
     ``shuffle_partitions`` defaults to N (at least 8) for ``local[N]``,
     and to 32 for ``local[*]`` or a non-local master — on a real cluster
     you'd size this to total executor cores (AQE coalesces down).  Every
-    session carries :data:`SQL_CONF`; ``extra_conf`` is applied last.
+    session carries :data:`SQL_CONF`, a local one also
+    :data:`PYTHON_DAEMON_MODULE`; ``extra_conf`` is applied last.
     """
     if master is None:
         master = default_master()
@@ -140,6 +158,8 @@ def get_spark(
         )
         .config("spark.executor.extraJavaOptions", "-XX:+AlwaysPreTouch")
     )
+    if master.startswith("local"):
+        builder = builder.config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -190,6 +210,9 @@ def rebuild_session(old: SparkSession | None, **get_spark_kwargs) -> SparkSessio
             if proc is not None:
                 try:
                     proc.kill()
+                    # reap it: a killed child nobody waits for stays a
+                    # zombie, and its pid still answers signal 0
+                    proc.wait(timeout=15)
                 except Exception:
                     pass
     # Clear the process-global singletons so the next builder relaunches.

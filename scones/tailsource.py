@@ -33,15 +33,23 @@ Scale note: one snapshot's work units go to at most
 ``defaultParallelism`` tasks, balanced by planned bytes (``end - start``)
 with a deterministic greedy assignment (:func:`assign_work_units`); each
 unit is still framed by one sequential reader, as in the reference.
-One task per unit would be simpler but is slow: every Python task pays a
-fixed setup cost before it reads a byte, including
+Every Python task pays a fixed setup cost before it reads a byte; a
+16-file tail on 4 cores ran 16 tasks, and capping at 4 roughly halved
+the snapshot's CPU time.  Most of that cost was
 ``importlib.invalidate_caches()`` in pyspark's worker setup, which on
-CPython 3.11 re-reads the ``pyspark.zip`` directory for each of its
-zipimporters (~0.14 s of CPU per task, measured on a 4-core host).  A
-16-file tail on 4 cores ran 16 tasks; capping at 4 roughly halved the
-snapshot's CPU time.  A file that grew by more than
+CPython <= 3.12 re-reads the directory of every zip on the worker's path
+(pyspark.zip, py4j's zip, the spark-core jar): 0.18-0.28 s of CPU per
+task on a 4-core host.  In a local session the scones worker daemon
+(scones/pydaemon.py) starts workers without those archives, and the
+call then costs well under a millisecond.  A file that grew by more than
 :data:`MAX_UNIT_BYTES` is split into several (file, start, end) ranges
 (see :func:`split_work_units`).
+
+The audit reads what landed with pyarrow on the driver, one batch at a
+time, not with Spark jobs: tail mode opens local paths on the host that
+writes the logs, so it is a one-host source, and a snapshot holds only
+the lines appended since the last commit.  The snapshot then runs one
+Spark job, the write.
 """
 
 from __future__ import annotations
@@ -52,6 +60,8 @@ import os
 from collections.abc import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -259,7 +269,7 @@ class TailSource:
     """Growing log files as a source of the snapshot core
     (:func:`scones.pipeline._run_snapshot`): work units from the committed
     high-water marks, lines framed by :func:`read_tail` and decorated
-    with (host, line_str), routed by crc32(file@hwm), audited per unit.
+    with the host, routed by crc32(file@hwm), audited per unit.
 
     Honors ``n_sinks``, ``max_length`` and ``static_fields`` (the
     reference's per-record fields, file_reader.go:112-117).  A line has
@@ -273,7 +283,16 @@ class TailSource:
     mode = "tail"
     honors = frozenset({"n_sinks", "max_length", "static_fields"})
     audit_columns = frozenset(
-        {"src_file", "line", "hwm", "frame_end", "bytes_read", "unit_start", "sink_id"}
+        {
+            "src_file",
+            "line",
+            "hwm",
+            "line_no",
+            "frame_end",
+            "bytes_read",
+            "unit_start",
+            "sink_id",
+        }
     )
 
     def idle(self) -> dict:
@@ -289,7 +308,6 @@ class TailSource:
         return lines.select(
             "src_file",
             "line",
-            F.col("line").cast("string").alias("line_str"),
             "hwm",
             "line_no",
             "frame_end",
@@ -306,28 +324,42 @@ class TailSource:
         sink = F.pmod(F.crc32(F.encode(key, "utf-8")), F.lit(n_sinks))
         return df.withColumn("sink_id", sink.cast("int")), None
 
-    def audit(self, written: DataFrame | None, snapshot_id: int, work):
-        # exact I/O accounting with range splitting: bytes_read is constant
+    def audit(
+        self, spark: SparkSession, landed: str | None, schema, snapshot_id: int, work
+    ):
+        # per (file, unit): lines (the sentinel, line_no 0, is no line;
+        # counting rows, not max(line_no), shows a lost row), the frame
+        # end and the unit's ranged-read cost.  bytes_read is constant
         # within a unit, so max-per-unit → sum-per-file is the total bytes
-        # the snapshot actually read from that file (round-2 advice: a bare
-        # per-file max reported one unit's cost when a file was split)
-        agg = (
-            []
-            if written is None
-            else written.groupBy("src_file", "unit_start")
-            .agg(
-                F.count(F.col("line")).alias("n"),  # sentinels don't count
-                F.max("frame_end").alias("frame_end"),
-                F.max("bytes_read").alias("bytes_read"),
-            )
-            .groupBy("src_file")
-            .agg(
-                F.sum("n").alias("n"),
-                F.max("frame_end").alias("frame_end"),
-                F.sum("bytes_read").alias("bytes_read"),
-            )
-            .collect()
-        )
+        # the snapshot read from that file, however it was split.
+        units: dict[tuple[str, int], list[int]] = {}
+        if landed is not None:
+            # default ignore_prefixes skip _temporary and _SUCCESS
+            dataset = pads.dataset(landed, format="parquet", partitioning="hive")
+            cols = ["src_file", "unit_start", "line_no", "frame_end", "bytes_read"]
+            for batch in dataset.to_batches(columns=cols):
+                counted = batch.append_column(
+                    "n", pc.cast(pc.greater(batch.column("line_no"), 0), pa.int64())
+                )
+                part = (
+                    pa.Table.from_batches([counted])
+                    .group_by(["src_file", "unit_start"])
+                    .aggregate(
+                        [("n", "sum"), ("frame_end", "max"), ("bytes_read", "max")]
+                    )
+                    .to_pylist()
+                )
+                for r in part:
+                    u = units.setdefault((r["src_file"], r["unit_start"]), [0, 0, 0])
+                    u[0] += r["n_sum"]
+                    u[1] = max(u[1], r["frame_end_max"])
+                    u[2] = max(u[2], r["bytes_read_max"])
+        files: dict[str, list[int]] = {}
+        for (path, _), (n, frame_end, bytes_read) in units.items():
+            f = files.setdefault(path, [0, 0, 0])
+            f[0] += n
+            f[1] = max(f[1], frame_end)
+            f[2] += bytes_read
         starts = dict(work)
         # files whose new bytes framed nothing complete (only a partial
         # tail) emit no rows at all — no lineage row, replanned next
@@ -336,17 +368,17 @@ class TailSource:
         rows = [
             {
                 "snapshot_id": snapshot_id,
-                "src_file": r["src_file"],
-                "offset_start": starts.get(r["src_file"], 0),
-                "offset_end": int(r["frame_end"]),
-                "row_count": int(r["n"]),
+                "src_file": path,
+                "offset_start": starts.get(path, 0),
+                "offset_end": frame_end,
+                "row_count": n,
             }
-            for r in agg
+            for path, (n, frame_end, _) in sorted(files.items())
         ]
         return rows, {
             "lines": sum(r["row_count"] for r in rows),
             "files": [f for f, _ in work],
-            "bytes_read": {r["src_file"]: int(r["bytes_read"]) for r in agg},
+            "bytes_read": {path: f[2] for path, f in files.items()},
         }
 
 
@@ -358,8 +390,8 @@ def run_tail_snapshot(
     n_sinks: int = 2,
     max_length: int = 0,
 ) -> dict:
-    """One incremental tail snapshot: frame new bytes → decorate
-    (host, line_str) → route by crc32(file@hwm) → write → commit offsets.
+    """One incremental tail snapshot: frame new bytes → decorate with the
+    host → route by crc32(file@hwm) → write → commit offsets.
 
     Returns the snapshot core's summary with ``lines``, ``files``,
     ``bytes_read`` (per file) and ``output``; ``{"snapshot_id": None,

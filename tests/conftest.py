@@ -1,9 +1,16 @@
 import os
 import sys
+import uuid
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python workers import scones too (the worker daemon is scones.pydaemon),
+# so the checkout goes on PYTHONPATH before the JVM that forks them starts.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+)
 
 from scones.session import get_spark  # noqa: E402
 
@@ -38,3 +45,24 @@ def host_meta_path(tmp_path_factory):
 
     d = tmp_path_factory.mktemp("dims")
     return write_host_meta(str(d / "host_meta.parquet"), seed=42)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a job group of its own and
+    returns (its result, the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        # job events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

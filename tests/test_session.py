@@ -116,6 +116,24 @@ def test_submit_entry_builds_the_same_sql_settings(monkeypatch):
     assert parse_args(["--config", "c.json"]).mode is None
 
 
+def test_only_a_local_session_starts_workers_from_the_scones_daemon(monkeypatch):
+    """A local session's workers run on the driver's host and import
+    ``scones`` from its path, so they start from scones.pydaemon.  A
+    cluster executor's daemon starts before any task fetched
+    ``--py-files``, so neither the spark-submit entry nor a non-local
+    ``get_spark`` session sets the daemon module."""
+    from tools import submit_pipeline as submit
+
+    key = "spark.python.daemon.module"
+    assert key not in submit.build_session(_RecordingBuilder()).conf
+    for master, daemon in (("local[2]", "scones.pydaemon"), ("spark://h:7077", None)):
+        builder = _RecordingBuilder()
+        builder.sparkContext = SimpleNamespace(setLogLevel=lambda level: None)
+        monkeypatch.setattr(session.SparkSession, "builder", builder)
+        session.get_spark(master=master)
+        assert builder.conf.get(key) == daemon, master
+
+
 def test_submit_entry_runs_the_config_it_is_given(tmp_path, monkeypatch):
     """The spark-submit entry hands its config to run_from_config whole:
     a daemon config reaches it as a daemon, with a drain event wired to

@@ -246,3 +246,15 @@ def test_metrics_row_is_the_summary_and_fenced_out_attempts_write_none(
     for k in ("plan_sec", "write_sec", "audit_commit_sec"):
         assert row[k] == s[k]
     assert not os.path.exists(os.path.join(cfg.checkpoint_dir, "metrics"))
+
+
+def test_documents_read_back_runs_no_schema_job(spark, tmp_path, count_jobs):
+    """A documents snapshot runs 4 Spark jobs: the input scan's schema
+    job, the write, and the lineage aggregate's two (AQE runs its shuffle
+    as a job of its own).  The audit reads the landed parts with a known
+    schema, so it runs no schema-inference job of its own."""
+    cfg = _cfg(tmp_path, "documents", _write_inputs("documents", tmp_path))
+    s, jobs = count_jobs(lambda: snapshot_fn_for_mode("documents")(spark, cfg))
+    assert jobs == 4
+    committed = LineageStore(cfg.checkpoint_dir).read_all().to_pylist()
+    assert [r["row_count"] for r in committed] == [N_DOCS] == [s["rows"]]

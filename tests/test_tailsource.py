@@ -412,6 +412,37 @@ def test_tail_snapshot_reports_phase_walls(spark, tmp_path):
     assert all(isinstance(s[k], float) and s[k] >= 0 for k in walls)
 
 
+def test_tail_snapshot_runs_one_spark_job(spark, tmp_path, count_jobs):
+    """A tail snapshot runs one Spark job, the write: the audit reads the
+    landed parts with pyarrow on the driver.  The lineage rows it commits
+    are the per-file line counts and frame ends."""
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    for i in range(3):
+        (logs / f"f{i}.log").write_bytes(b"".join(b"l%d\n" % j for j in range(10 + i)))
+    s, jobs = count_jobs(lambda: _snap(spark, tmp_path))
+    assert jobs == 1
+    assert s["lines"] == 33
+    committed = LineageStore(str(tmp_path / "ckpt")).read_all().to_pylist()
+    assert sorted((r["src_file"], r["offset_end"], r["row_count"]) for r in committed) == [
+        (str(logs / "f0.log"), 30, 10),
+        (str(logs / "f1.log"), 34, 11),
+        (str(logs / "f2.log"), 38, 12),
+    ]
+
+
+def test_tail_sinks_write_each_line_once(spark, tmp_path):
+    """The sinks carry each line once, as ``line``: no string copy of it
+    is written (it would double a snapshot's payload bytes)."""
+    (tmp_path / "logs").mkdir()
+    (tmp_path / "logs" / "a.log").write_bytes(b"one\ntwo\n")
+    s = _snap(spark, tmp_path)
+    assert set(spark.read.parquet(s["output"]).columns) == {
+        "src_file", "line", "hwm", "line_no", "frame_end", "bytes_read",
+        "unit_start", "host", "sink_id",
+    }
+
+
 def test_partial_line_only_snapshot_is_a_noop(spark, tmp_path):
     """New bytes that hold no complete line commit nothing: a no-op
     summary, no lineage, no leftover snapshot directory.  The bytes are
