@@ -9,24 +9,37 @@ trailing partial line.  Semantics are pinned byte-for-byte against
 
 Implementation: ``DataFrame.mapInArrow`` — data moves JVM→Python as Arrow
 record batches; the kernel runs C-speed ``bytes`` operations per document
-(split / join / one regex sub), no per-row Python UDF registration and no
+(split / join / replace), no per-row Python UDF registration and no
 per-line Python loop on the fast path (max_length == 0).
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Trailing-\r-before-\n collapses to \n: equivalent to per-line
-# bytes.TrimRight(line, "\r\n") after splitting on \n (file_reader.go:80).
-_CRLF = re.compile(rb"\r+\n")
-
 EXTRACT_COLS = "extracted binary, n_lines bigint, bytes_read bigint, n_skipped bigint"
+
+#: bytes.replace passes :func:`_trim_cr` makes before it trims per line;
+#: each pass shortens every CR run before a newline by one, and web text's
+#: runs are one CR long
+_CR_PASSES = 4
+
+
+def _trim_cr(text: bytes) -> bytes:
+    """Per-line ``bytes.TrimRight(line, "\\r\\n")`` (file_reader.go:80)
+    over ``\\n``-joined lines: every CR run before a newline goes, and so
+    does the final line's trailing one.  A few C-speed ``bytes.replace``
+    passes do it; a longer run falls back to a per-line trim, so a doc of
+    CR runs costs linear time, not one pass per CR."""
+    for _ in range(_CR_PASSES):
+        if b"\r\n" not in text:
+            return text.rstrip(b"\r")
+        text = text.replace(b"\r\n", b"\n")
+    return b"\n".join(line.rstrip(b"\r") for line in text.split(b"\n"))
 
 
 def _frame_doc(data: bytes, max_length: int) -> tuple[bytes, int, int, int]:
@@ -34,23 +47,23 @@ def _frame_doc(data: bytes, max_length: int) -> tuple[bytes, int, int, int]:
 
     Fast path (max_length == 0): no per-line work at all — the framed
     region is everything up to the last newline, and per-line CR/LF
-    trimming collapses to one regex sub over the region (every line
-    boundary is a ``\\n``, so trailing ``\\r+`` before it is exactly the
-    per-line TrimRight), plus an rstrip for the region's final line.
+    trimming collapses to :func:`_trim_cr` over the region (every line
+    boundary is a ``\\n``, so a CR run before it is exactly what the
+    per-line TrimRight removes).
     """
     if max_length <= 0:
         end = data.rfind(b"\n") + 1
         if end == 0:
             return b"", 0, 0, 0
         n_lines = data.count(b"\n", 0, end)
-        text = _CRLF.sub(b"\n", data[: end - 1]).rstrip(b"\r")
+        text = _trim_cr(data[: end - 1])
         return text, n_lines, end, 0
     parts = data.split(b"\n")
     tail = parts.pop()  # partial trailing line: not emitted, not counted
     bytes_read = len(data) - len(tail)
     kept = [p for p in parts if len(p) + 1 <= max_length]
     n_skipped = len(parts) - len(kept)
-    text = _CRLF.sub(b"\n", b"\n".join(kept)).rstrip(b"\r")
+    text = _trim_cr(b"\n".join(kept))
     return text, len(kept), bytes_read, n_skipped
 
 
@@ -72,7 +85,7 @@ def extract_documents(
     pass_names = [f.name for f in passthrough]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # per-doc loop of C-speed bytes ops (split/rfind/sub): one pass
+        # per-doc loop of C-speed bytes ops (split/rfind/replace): one pass
         # over each doc, minimal auxiliary memory
         for batch in batches:
             texts: list[bytes] = []

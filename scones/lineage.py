@@ -39,9 +39,9 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Attempt fencing for the watchdog path (round-4 ADVICE, medium): the
 # daemon ABANDONS a hung snapshot attempt (backoff.py), but that thread
@@ -351,39 +351,52 @@ def plan_new_files(store: LineageStore, input_glob: str) -> list[str]:
 
 
 def lineage_rows_for(
-    df: DataFrame | None,
+    landed: str | None,
     snapshot_id: int,
     planned_files: list[str] | None = None,
 ) -> list[dict]:
-    """Aggregate per-file lineage from an extracted DataFrame.
+    """Per-file lineage from a snapshot's landed parts, read on the driver.
 
-    ``df`` must carry ``src_file`` and ``bytes_read`` columns (extract.py).
-    offset_end = sum of framed bytes = the file's high-water-mark analog.
+    ``landed`` is the snapshot dir whose parquet parts carry ``src_file``
+    and ``bytes_read`` (extract.py), or None when nothing landed.  Its
+    two columns are read with pyarrow one batch at a time, so the audit
+    runs no Spark job: a documents, WARC or JSONL snapshot runs only its
+    write job (plus the host-meta broadcast when it enriches).  Per
+    file: row_count = all its rows, offset_end = the sum of framed bytes
+    = the file's high-water-mark analog.
 
     ``planned_files``: every file this snapshot planned.  Files that
     produced ZERO output rows (e.g. an empty input parquet) still get a
     lineage row (row_count=0) — otherwise they would never be marked
     consumed and be re-admitted on every run.
     """
-    agg = (
-        []
-        if df is None
-        else df.groupBy("src_file")
-        .agg(
-            F.count("*").alias("row_count"),
-            F.sum("bytes_read").alias("offset_end"),
-        )
-        .collect()
-    )
+    totals: dict[str, list[int]] = {}  # src_file -> [row_count, offset_end]
+    if landed is not None:
+        # default ignore_prefixes skip _SUCCESS and Spark's .crc files
+        dataset = pads.dataset(landed, format="parquet")
+        for batch in dataset.to_batches(columns=["src_file", "bytes_read"]):
+            part = (
+                pa.Table.from_batches([batch])
+                .group_by("src_file")
+                .aggregate([([], "count_all"), ("bytes_read", "sum")])
+            )
+            for src, n, nbytes in zip(
+                part.column("src_file").to_pylist(),
+                part.column("count_all").to_pylist(),
+                part.column("bytes_read_sum").to_pylist(),
+            ):
+                t = totals.setdefault(src, [0, 0])
+                t[0] += n
+                t[1] += nbytes or 0
     rows = [
         {
             "snapshot_id": snapshot_id,
-            "src_file": normalize_path(r["src_file"]),
+            "src_file": normalize_path(src),
             "offset_start": 0,
-            "offset_end": int(r["offset_end"] or 0),
-            "row_count": int(r["row_count"]),
+            "offset_end": offset_end,
+            "row_count": row_count,
         }
-        for r in agg
+        for src, (row_count, offset_end) in sorted(totals.items())
     ]
     seen = {r["src_file"] for r in rows}
     for f in planned_files or []:

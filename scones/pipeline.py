@@ -16,10 +16,16 @@ driver-side bookkeeping:
 
 A mode plugs in a *source* with only what differs: ``plan``, ``read``,
 ``route``, ``audit`` (lineage rows + summary fields from the snapshot's
-landed parts, given the written frame's schema), the knobs it
+landed parts, read with pyarrow on the driver), the knobs it
 ``honors`` and the ``audit_columns`` no static field may overwrite —
 :class:`_DocsSource` for documents / WARC / JSONL (honors every knob),
 :class:`scones.tailsource.TailSource` for tail.
+
+A snapshot runs only the Spark jobs its output needs: the write, plus
+the host-meta broadcast when ``host_meta_path`` is set (and the side
+tables' own when ``dedup_index`` or ``lm_model_path`` is).  Parquet
+inputs are read with the schema of one footer, read on the driver (no
+inference job), and the audit reads what landed on the driver.
 
 Catalyst handles what the reference hand-built: the scan stage fuses
 extract+enrich+route in one pass over the data (no materialization
@@ -31,14 +37,20 @@ from __future__ import annotations
 
 import argparse
 import functools
+import json
 import os
 import shutil
 import signal
 import threading
 import time
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from .config import PipelineConfig
 from .enrich import enrich_broadcast, with_host
@@ -62,6 +74,10 @@ KNOBS = (
     "lm_model_path",
 )
 _DEFAULTS = PipelineConfig(input_glob="", output_dir="", checkpoint_dir="")
+
+#: the parquet footer key under which a Spark writer stores its schema
+#: (ParquetReadSupport.SPARK_METADATA_KEY); Spark's inference prefers it
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
@@ -113,13 +129,48 @@ def _has_part_files(snap_dir: str) -> bool:
     return False
 
 
+def _footer_schema(path: str) -> StructType | None:
+    """The schema Spark's non-merging parquet inference gives ``path`` (a
+    local file, or a directory of parts), read from one footer on the
+    driver: Spark's own when a Spark writer stored it, else the Arrow
+    schema converted.  None where the footer cannot say; Spark then
+    infers it (one job)."""
+    if not os.path.exists(path):
+        return None  # not a local path: Spark lists and reads it
+    parts = pads.dataset(path, format="parquet").files
+    if not parts:
+        return None
+    arrow = pq.read_schema(parts[0])
+    stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        return StructType.fromJson(json.loads(stored))
+    if any(pa.types.is_timestamp(f.type) and f.type.tz is None for f in arrow):
+        # Spark reads an INT96 timestamp as timestamp and an INT64 one
+        # without UTC adjustment as timestamp_ntz; Arrow shows neither
+        return None
+    try:
+        return from_arrow_schema(arrow)
+    except TypeError:  # an Arrow type with no Spark twin
+        return None
+
+
+def _read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without its schema-inference job:
+    the schema comes from the first path's footer (:func:`_footer_schema`),
+    as Spark's own inference takes it from one file.  Spark reads every
+    column nullable either way."""
+    schema = _footer_schema(paths[0])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
 def extract_and_enrich(
     spark: SparkSession, cfg: PipelineConfig, docs: DataFrame
 ) -> DataFrame:
     """(url, html, src_file, ...) documents → framed text + host fields."""
     df = extract_documents(docs, max_length=cfg.max_length)
     if cfg.host_meta_path:
-        return enrich_broadcast(df, spark.read.parquet(cfg.host_meta_path))
+        return enrich_broadcast(df, _read_parquet(spark, [cfg.host_meta_path]))
     return with_host(df)
 
 
@@ -127,10 +178,10 @@ def build_snapshot_plan(
     spark: SparkSession, cfg: PipelineConfig, files: list[str]
 ) -> DataFrame:
     """The documents-mode rows for one snapshot over parquet ``files``:
-    scan → extract → enrich, not yet decorated or routed (no action run)."""
+    scan → extract → enrich, not yet decorated or routed (no job run)."""
     _tune_input_splits(spark, files)
     docs = (
-        spark.read.parquet(*files)
+        _read_parquet(spark, files)
         .withColumn("src_file", F.col("_metadata.file_path"))
         .drop("text")  # generator-provided expectation; we produce our own
     )
@@ -165,19 +216,9 @@ class _DocsSource:
     def route(self, df: DataFrame, n_sinks: int):
         return observed(with_sink_id(df, n_sinks))
 
-    def audit(
-        self,
-        spark: SparkSession,
-        landed: str | None,
-        schema,
-        snapshot_id: int,
-        files: list[str],
-    ):
-        written = None
-        if landed is not None:
-            written = spark.read.schema(schema).parquet(landed)
+    def audit(self, landed: str | None, snapshot_id: int, files: list[str]):
         # zero-row planned files still get a consumed marker
-        rows = lineage_rows_for(written, snapshot_id, planned_files=files)
+        rows = lineage_rows_for(landed, snapshot_id, planned_files=files)
         shown = files if len(files) <= 8 else files[:3] + ["..."] + files[-1:]
         return rows, {"n_files": len(files), "files": shown}
 
@@ -300,7 +341,7 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     # propagate, never silently commit empty lineage.  On an object
     # store, list via the FS client.
     landed = snap_dir if _has_part_files(snap_dir) else None
-    rows, fields = source.audit(spark, landed, out.schema, snapshot_id, work)
+    rows, fields = source.audit(landed, snapshot_id, work)
     if not rows:
         # nothing to commit (a tail whose new bytes hold no complete
         # line): no snapshot; the same bytes are planned again next time

@@ -184,13 +184,24 @@ def rebuild_session(old: SparkSession | None, **get_spark_kwargs) -> SparkSessio
          to the dead gateway.
 
     On a real cluster this is the cluster manager's supervise/restart;
-    in local mode the driver has to be its own supervisor.
+    in local mode the driver has to be its own supervisor.  A gateway
+    with no child process (``proc`` None) belongs to a launcher such as
+    spark-submit: this process can neither kill nor relaunch that JVM
+    (a new session would reconnect to the gateway it just shut down),
+    so nothing is torn down and the driver exits non-zero instead, for
+    the cluster manager to restart it.
     """
     import threading
 
     from pyspark import SparkContext
     from pyspark.sql import SparkSession as _SS
 
+    gw = getattr(SparkContext, "_gateway", None)
+    if gw is not None and getattr(gw, "proc", None) is None:
+        raise SystemExit(
+            "scones: the Spark session hung and its JVM belongs to the "
+            "launcher; exiting so the cluster manager restarts the driver"
+        )
     master = None
     if old is not None:
         try:
@@ -200,21 +211,18 @@ def rebuild_session(old: SparkSession | None, **get_spark_kwargs) -> SparkSessio
         t = threading.Thread(target=old.stop, daemon=True)
         t.start()
         t.join(timeout=15)  # a hung JVM blocks stop(); don't wait on it
-        gw = getattr(SparkContext, "_gateway", None)
         if gw is not None:
             try:
                 gw.shutdown()
             except Exception:
                 pass
-            proc = getattr(gw, "proc", None)
-            if proc is not None:
-                try:
-                    proc.kill()
-                    # reap it: a killed child nobody waits for stays a
-                    # zombie, and its pid still answers signal 0
-                    proc.wait(timeout=15)
-                except Exception:
-                    pass
+            try:
+                gw.proc.kill()
+                # reap it: a killed child nobody waits for stays a
+                # zombie, and its pid still answers signal 0
+                gw.proc.wait(timeout=15)
+            except Exception:
+                pass
     # Clear the process-global singletons so the next builder relaunches.
     # Hold SparkContext._lock while resetting (round-4 ADVICE): the
     # abandoned attempt thread may still be mid-py4j-call against these

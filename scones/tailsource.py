@@ -324,9 +324,7 @@ class TailSource:
         sink = F.pmod(F.crc32(F.encode(key, "utf-8")), F.lit(n_sinks))
         return df.withColumn("sink_id", sink.cast("int")), None
 
-    def audit(
-        self, spark: SparkSession, landed: str | None, schema, snapshot_id: int, work
-    ):
+    def audit(self, landed: str | None, snapshot_id: int, work):
         # per (file, unit): lines (the sentinel, line_no 0, is no line;
         # counting rows, not max(line_no), shows a lost row), the frame
         # end and the unit's ranged-read cost.  bytes_read is constant

@@ -9,6 +9,8 @@ stop request drains cleanly.
 
 import os
 
+import pytest
+
 from scones.backoff import ExponentialBackoff, run_daemon
 from scones.config import PipelineConfig
 from scones.pipeline import run_snapshot
@@ -217,6 +219,62 @@ def test_watchdog_abandons_hung_attempt_restarts_session_commits_once(
     assert done[0]["rows"] == 400
     # committed EXACTLY once despite two abandoned attempts
     assert LineageStore(cfg.checkpoint_dir).committed_snapshots() == [1]
+
+
+def test_watchdog_exits_when_the_launcher_owns_the_jvm(tmp_path, monkeypatch):
+    """Under spark-submit pyspark's gateway has no child process: the
+    launcher owns the JVM.  A hung attempt then neither tears the session
+    down nor relaunches it (a relaunch would reconnect to the gateway the
+    teardown shut down); the daemon ends with a non-zero exit for the
+    cluster manager to restart the driver, instead of retrying forever.
+    Spark-free: a fake gateway and session."""
+    import threading
+
+    from pyspark import SparkContext
+
+    import scones.session
+
+    calls = []
+
+    class Gateway:
+        proc = None  # connected to a launcher's JVM, not a child
+
+        def shutdown(self):
+            calls.append("shutdown")
+
+    class Session:
+        def stop(self):
+            calls.append("stop")
+
+    monkeypatch.setattr(SparkContext, "_gateway", Gateway())
+    monkeypatch.setattr(scones.session, "get_spark", lambda **_: calls.append("launch"))
+    release = threading.Event()
+    attempts = []
+
+    def stalling_run(spark_, cfg_):
+        attempts.append(spark_)
+        release.wait()
+
+    cfg = PipelineConfig(
+        input_glob=str(tmp_path / "in" / "*.parquet"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    try:
+        with pytest.raises(SystemExit) as exited:
+            run_daemon(
+                Session(),
+                cfg,
+                run_fn=stalling_run,
+                max_iterations=3,
+                sleep_fn=lambda s: None,
+                snapshot_timeout_sec=0.2,
+            )
+    finally:
+        release.set()
+    assert exited.value.code not in (None, 0)  # a str code exits with 1
+    assert len(attempts) == 1
+    assert calls == []
 
 
 def test_watchdog_real_session_rebuild_subprocess(tmp_path):

@@ -7,6 +7,7 @@ strings and max_length values, both implementations agree:
 No Spark session needed — these are the pure kernels.
 """
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -48,3 +49,25 @@ def test_framing_invariants(data):
     text = extract_text(data)
     refr = frame_bytes(text + b"\n" if text or f.lines else b"", 0)
     assert refr.lines == f.lines
+
+
+CR_CASES = {
+    "cr_cr_lf": b"one\r\r\ntwo\n",
+    "crlf_crlf": b"one\r\n\r\ntwo\r\n",
+    "three_crs_mid_doc": b"one\ntwo\r\r\r\nthree\n",
+    "trailing_cr": b"one\ntwo\r",
+    "lone_cr_no_newline": b"one\rtwo",
+    "empty": b"",
+    # more CRs in a run than bytes.replace passes: the per-line fallback
+    "long_cr_run": b"a\r\nb" + b"\r" * 50 + b"\nc\r\r\n" + b"\r" * 3 + b"d\r\n",
+}
+
+
+@pytest.mark.parametrize("max_length", [0, 3, 100])
+@pytest.mark.parametrize("name", list(CR_CASES))
+def test_cr_runs_match_oracle(name, max_length):
+    data = CR_CASES[name]
+    text, n_lines, bytes_read, n_skipped = _frame_doc(data, max_length)
+    f = frame_bytes(data, max_length)
+    assert text == b"\n".join(f.lines)
+    assert (n_lines, bytes_read, n_skipped) == (len(f.lines), f.position, f.skipped)

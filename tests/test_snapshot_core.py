@@ -248,13 +248,108 @@ def test_metrics_row_is_the_summary_and_fenced_out_attempts_write_none(
     assert not os.path.exists(os.path.join(cfg.checkpoint_dir, "metrics"))
 
 
-def test_documents_read_back_runs_no_schema_job(spark, tmp_path, count_jobs):
-    """A documents snapshot runs 4 Spark jobs: the input scan's schema
-    job, the write, and the lineage aggregate's two (AQE runs its shuffle
-    as a job of its own).  The audit reads the landed parts with a known
-    schema, so it runs no schema-inference job of its own."""
-    cfg = _cfg(tmp_path, "documents", _write_inputs("documents", tmp_path))
-    s, jobs = count_jobs(lambda: snapshot_fn_for_mode("documents")(spark, cfg))
-    assert jobs == 4
+JOBS = [("documents", False, 1), ("documents", True, 2), ("warc", False, 1), ("jsonl", False, 1)]
+
+
+@pytest.mark.parametrize(
+    "mode,host_meta,want",
+    JOBS,
+    ids=[f"{m}{'-host_meta' if h else ''}" for m, h, _ in JOBS],
+)
+def test_snapshot_runs_only_its_write_jobs(spark, tmp_path, count_jobs, mode, host_meta, want):
+    """A documents, WARC or JSONL snapshot runs the write job, plus the
+    host-meta broadcast when ``host_meta_path`` is set.  Parquet inputs
+    are read with their footer's schema (no inference job) and the audit
+    reads the landed parts on the driver (no aggregate jobs)."""
+    knobs = {}
+    if host_meta:
+        knobs["host_meta_path"] = write_host_meta(str(tmp_path / "dims" / "host_meta.parquet"))
+    cfg = _cfg(tmp_path, mode, _write_inputs(mode, tmp_path), **knobs)
+    s, jobs = count_jobs(lambda: snapshot_fn_for_mode(mode)(spark, cfg))
+    assert jobs == want
     committed = LineageStore(cfg.checkpoint_dir).read_all().to_pylist()
     assert [r["row_count"] for r in committed] == [N_DOCS] == [s["rows"]]
+
+
+def _parquet_fixtures(spark, d) -> list[str]:
+    """The parquet files the documents tests write: a corpus file, host
+    metadata, zero-row CORPUS_SCHEMA files, and a Spark-written dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from scones.corpus import CORPUS_SCHEMA
+
+    paths = write_corpus(str(d / "in"), n_docs=10, n_files=1, seed=3)
+    paths.append(write_host_meta(str(d / "dims" / "host_meta.parquet")))
+    empty = str(d / "in" / "empty.parquet")
+    pq.write_table(pa.Table.from_pylist([], schema=CORPUS_SCHEMA), empty)
+    sliced = str(d / "in" / "sliced.parquet")
+    pq.write_table(pa.Table.from_pylist(generate_rows(1, seed=1), schema=CORPUS_SCHEMA).slice(0, 0), sliced)
+    spark_dir = str(d / "spark_written")
+    spark.read.parquet(paths[0]).write.parquet(spark_dir)
+    return paths + [empty, sliced, spark_dir]
+
+
+def test_footer_schema_is_the_inferred_schema(spark, tmp_path):
+    from scones.pipeline import _footer_schema
+
+    for path in _parquet_fixtures(spark, tmp_path):
+        derived = _footer_schema(path)
+        inferred = spark.read.parquet(path).schema
+        # a Spark writer stores its columns' nullability; Spark reads
+        # every file column as nullable
+        assert spark.read.schema(derived).parquet(path).schema == inferred, path
+        if not path.endswith("spark_written"):
+            assert derived == inferred, path
+
+
+def test_footer_schema_leaves_to_spark_what_the_footer_cannot_say(tmp_path):
+    """A naive timestamp (INT96 reads as timestamp, INT64 as
+    timestamp_ntz), an Arrow type with no Spark twin and a non-local path
+    get no derived schema: Spark infers those."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from scones.pipeline import _footer_schema
+
+    for name, col in (
+        ("naive_ts", pa.array([0], pa.timestamp("us"))),
+        ("unsigned", pa.array([1], pa.uint32())),
+    ):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"c": col}), path)
+        assert _footer_schema(path) is None, name
+    assert _footer_schema("s3a://bucket/docs.parquet") is None
+
+
+def test_driver_audit_equals_the_spark_aggregate(spark, tmp_path):
+    """The lineage rows the driver audit commits equal the Spark
+    ``groupBy(src_file)`` aggregate over the landed parts: several input
+    files per sink, a zero-row input file (its marker), and a doc with no
+    newline (it lands with bytes_read 0)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+    from scones.corpus import CORPUS_SCHEMA
+    from scones.lineage import normalize_path
+
+    src = tmp_path / "in"
+    write_corpus(str(src), n_docs=60, n_files=3, seed=9)
+    pq.write_table(pa.Table.from_pylist([], schema=CORPUS_SCHEMA), str(src / "empty.parquet"))
+    (lone,) = generate_rows(1, seed=10)
+    lone["html"] = b"<p>no newline at all</p>"
+    pq.write_table(pa.Table.from_pylist([lone], schema=CORPUS_SCHEMA), str(src / "lone.parquet"))
+    cfg = _cfg(tmp_path, "documents", str(src / "*.parquet"), spread_partitions=4)
+    s = snapshot_fn_for_mode("documents")(spark, cfg)
+    assert max(_part_files(s["output"]).values()) > 1
+
+    agg = (
+        spark.read.parquet(s["output"])
+        .groupBy("src_file")
+        .agg(F.count("*").alias("row_count"), F.sum("bytes_read").alias("offset_end"))
+        .collect()
+    )
+    want = {(normalize_path(r["src_file"]), int(r["offset_end"] or 0), r["row_count"]) for r in agg}
+    want.add((str(src / "empty.parquet"), 0, 0))
+    committed = LineageStore(cfg.checkpoint_dir).read_all().to_pylist()
+    got = [(r["src_file"], r["offset_end"], r["row_count"]) for r in committed]
+    assert len(got) == len(want) == 5 and set(got) == want
+    assert (str(src / "lone.parquet"), 0, 1) in want

@@ -42,7 +42,7 @@ def test_module_surface_pinned():
     ]
     assert _params(vacuum_orphans) == ["store", "output_dir"]
     assert _params(lineage.lineage_rows_for) == [
-        "df",
+        "landed",
         "snapshot_id",
         "planned_files",
     ]
