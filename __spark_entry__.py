@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from scones import similarity, textops
 from scones.extract import extract_documents
+from scones.footer import read_parquet
 from scones.route import with_sink_id
 
 _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -34,7 +35,9 @@ def _q(name: str, sql: str | None = None):
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Table ``name`` of ``sf_dir``, read with its footer's schema (no
+    inference job) where ``sf_dir`` is local."""
+    return read_parquet(spark, [f"{sf_dir}/{name}.parquet"])
 
 
 def _parquet_rows(path: str) -> int:

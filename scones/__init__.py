@@ -15,6 +15,7 @@ Modules:
     oracle    single-threaded pure-Python reference extractor + router
     corpus    deterministic synthetic Common-Crawl-style corpus generator
     extract   vectorized framing/extraction (mapInArrow; zero per-row Python UDFs)
+    footer    parquet reads with one footer's schema (no inference job)
     enrich    broadcast lookup join keyed on url host, hot-key salting
     route     deterministic hash routing + partitioned fan-out writes
     lineage   snapshot/offset lineage table, exact resume (≈ bolt_snapshotter.go)

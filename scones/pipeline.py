@@ -4,7 +4,7 @@ Every ingest mode runs the one snapshot loop :func:`_run_snapshot` —
 the reference's supervisor loop as one declarative DataFrame plan plus
 driver-side bookkeeping:
 
-    reject knobs the mode cannot honor
+    reject knobs the mode cannot honor and paths off this host
     → plan work from the lineage store             ≈ glob + HWM skip (O1/O2)
     → read + frame (mapInArrow)                    ≈ open + seek + frame (O3/O4/O5)
     → static fields                                ≈ decoration (O6)
@@ -36,25 +36,22 @@ retry channel (O12), the scheduler replaces the reader pool (O13).
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import functools
-import json
 import os
+import re
 import shutil
 import signal
 import threading
 import time
 
-import pyarrow as pa
-import pyarrow.dataset as pads
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import StructType
 
 from .config import PipelineConfig
 from .enrich import enrich_broadcast, with_host
 from .extract import extract_documents
+from .footer import read_parquet
 from .jsonl import read_jsonl
 from .lineage import LineageStore, lineage_rows_for, plan_new_files
 from .metrics import observed
@@ -74,10 +71,6 @@ KNOBS = (
     "lm_model_path",
 )
 _DEFAULTS = PipelineConfig(input_glob="", output_dir="", checkpoint_dir="")
-
-#: the parquet footer key under which a Spark writer stores its schema
-#: (ParquetReadSupport.SPARK_METADATA_KEY); Spark's inference prefers it
-_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
@@ -129,48 +122,13 @@ def _has_part_files(snap_dir: str) -> bool:
     return False
 
 
-def _footer_schema(path: str) -> StructType | None:
-    """The schema Spark's non-merging parquet inference gives ``path`` (a
-    local file, or a directory of parts), read from one footer on the
-    driver: Spark's own when a Spark writer stored it, else the Arrow
-    schema converted.  None where the footer cannot say; Spark then
-    infers it (one job)."""
-    if not os.path.exists(path):
-        return None  # not a local path: Spark lists and reads it
-    parts = pads.dataset(path, format="parquet").files
-    if not parts:
-        return None
-    arrow = pq.read_schema(parts[0])
-    stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    if stored is not None:
-        return StructType.fromJson(json.loads(stored))
-    if any(pa.types.is_timestamp(f.type) and f.type.tz is None for f in arrow):
-        # Spark reads an INT96 timestamp as timestamp and an INT64 one
-        # without UTC adjustment as timestamp_ntz; Arrow shows neither
-        return None
-    try:
-        return from_arrow_schema(arrow)
-    except TypeError:  # an Arrow type with no Spark twin
-        return None
-
-
-def _read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """``spark.read.parquet(*paths)`` without its schema-inference job:
-    the schema comes from the first path's footer (:func:`_footer_schema`),
-    as Spark's own inference takes it from one file.  Spark reads every
-    column nullable either way."""
-    schema = _footer_schema(paths[0])
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*paths)
-
-
 def extract_and_enrich(
     spark: SparkSession, cfg: PipelineConfig, docs: DataFrame
 ) -> DataFrame:
     """(url, html, src_file, ...) documents → framed text + host fields."""
     df = extract_documents(docs, max_length=cfg.max_length)
     if cfg.host_meta_path:
-        return enrich_broadcast(df, _read_parquet(spark, [cfg.host_meta_path]))
+        return enrich_broadcast(df, read_parquet(spark, [cfg.host_meta_path]))
     return with_host(df)
 
 
@@ -181,7 +139,7 @@ def build_snapshot_plan(
     scan → extract → enrich, not yet decorated or routed (no job run)."""
     _tune_input_splits(spark, files)
     docs = (
-        _read_parquet(spark, files)
+        read_parquet(spark, files)
         .withColumn("src_file", F.col("_metadata.file_path"))
         .drop("text")  # generator-provided expectation; we produce our own
     )
@@ -223,10 +181,55 @@ class _DocsSource:
         return rows, {"n_files": len(files), "files": shown}
 
 
-def _check_knobs(cfg: PipelineConfig, source) -> None:
+#: the knobs that name a path the driver itself lists, reads, links or
+#: writes (os.walk, glob, os.link, pyarrow's local filesystem)
+PATH_KNOBS = (
+    "input_glob",
+    "output_dir",
+    "checkpoint_dir",
+    "host_meta_path",
+    "lm_model_path",
+)
+_URI_SCHEME = re.compile(r"([A-Za-z][A-Za-z0-9+.-]*):/")
+
+
+def _local_path(knob: str, value: str) -> str:
+    """``value`` as a local path: a ``file:`` URI loses its scheme, and
+    any other scheme raises (the driver's file calls would see nothing
+    there, and a snapshot would commit zero-row lineage for rows that
+    landed)."""
+    m = _URI_SCHEME.match(value)
+    if m is None:
+        return value
+    if m.group(1).lower() == "file":
+        rest = value[m.end() - 1 :]
+        if rest.startswith("//"):  # file://host/path: only this host
+            host, _, path = rest[2:].partition("/")
+            if host in ("", "localhost"):
+                return "/" + path
+        else:
+            return rest
+    raise ValueError(
+        f"{knob}={value!r}: only local paths and file:// URIs on this "
+        "host are supported; the driver lists, links and audits this "
+        "path with local file calls, which find nothing elsewhere"
+    )
+
+
+def _check_knobs(cfg: PipelineConfig, source) -> PipelineConfig:
     """Reject, before anything is planned or written, an out-of-range
-    knob, a knob the source cannot honor and a static field that would
-    overwrite a column the offset audit reads."""
+    knob, a knob the source cannot honor, a static field that would
+    overwrite a column the offset audit reads and a path knob on a
+    filesystem other than the local one.  Returns ``cfg`` with its
+    ``file://`` path knobs as plain paths."""
+    cfg = dataclasses.replace(
+        cfg,
+        **{
+            knob: _local_path(knob, value)
+            for knob in PATH_KNOBS
+            if (value := getattr(cfg, knob))
+        },
+    )
     # n_sinks < 1 would fail mid-write (pmod by zero) or route to sinks
     # the crc32 % n_sinks contract never names; a negative max_length or
     # spread_partitions would silently mean "off"
@@ -244,6 +247,7 @@ def _check_knobs(cfg: PipelineConfig, source) -> None:
             f"{source.mode} mode: static_fields {clash} would overwrite "
             "columns the offset audit reads"
         )
+    return cfg
 
 
 def _side_tables(
@@ -311,7 +315,7 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     with its row — the reference's crash-between-send-and-ack window,
     supervisor.go:191-219.
     """
-    _check_knobs(cfg, source)
+    cfg = _check_knobs(cfg, source)
     t_start = time.perf_counter()
     store = LineageStore(cfg.checkpoint_dir)
     store.fence_attempt()  # fence out any abandoned watchdog attempt
@@ -452,7 +456,7 @@ def run_from_config(
     A config the mode rejects raises ``ValueError`` here, before the
     server starts — the daemon would otherwise retry it forever.
     """
-    _check_knobs(cfg, source_for_mode(cfg.mode))
+    cfg = _check_knobs(cfg, source_for_mode(cfg.mode))
     srv = None
     if cfg.stats_port is not None:
         from .statsserver import StatisticsServer

@@ -1,10 +1,23 @@
 """Training-data text operations over the ``documents`` table.
 
 Everything here is built from JVM-side ``pyspark.sql.functions`` (no
-Python UDFs) so it rides whole-stage codegen, and each op is paired with
-an ANSI-SQL oracle in __spark_entry__.py so DuckDB can replicate it
-bit-for-bit (md5 is the cross-engine hash; xxhash64 variants are the
-scale path where noted).
+Python UDFs), and each op is paired with an ANSI-SQL oracle in
+__spark_entry__.py so DuckDB can replicate it bit-for-bit (md5 is the
+cross-engine hash; xxhash64 variants are the scale path where noted).
+
+JVM-side is not the same as compiled.  The lambda of a higher-order
+function (``transform``, ``filter``, ``aggregate``) runs in Spark's
+expression interpreter, one array element at a time: those expressions
+are ``CodegenFallback``, so the generated code of their stage calls out
+to the interpreter for them.  The hot kernels of the curation
+queries therefore use none: tokens are ``array_remove`` of ``split``,
+shingles one lookahead ``regexp_extract_all``, token windows and
+bigrams ``arrays_zip`` of ``slice``s exploded by the caller.  Where an
+op keeps a lambda, its array is projected as a column before it: an
+expression pasted into a lambda body is evaluated again for every
+element, and Catalyst does not eliminate common subexpressions inside
+lambda bodies (measured 5-8× on the window hash when it still used
+one).
 
 Token contract shared by every op (and by the oracles): tokens are the
 non-empty pieces of splitting ``text`` on single spaces.
@@ -22,8 +35,10 @@ STOPWORDS = [
 
 
 def tokens_col(text_col: str = "text") -> Column:
-    """Non-empty space-split tokens (shared contract with the SQL oracle)."""
-    return F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
+    """Non-empty space-split tokens (shared contract with the SQL oracle).
+    ``split`` never yields a null piece, so removing ``""`` is the whole
+    filter."""
+    return F.array_remove(F.split(F.col(text_col), " "), "")
 
 
 def token_counts(df: DataFrame) -> DataFrame:
@@ -142,26 +157,15 @@ def dedup_exact(df: DataFrame) -> DataFrame:
 def shingles(df: DataFrame, k: int = 3) -> DataFrame:
     """Distinct k-word shingles per document (doc_id, shingle).
 
-    Tokens are PROJECTED ONCE before the shingle lambda: inlining
-    tokens_col() pastes the split+filter into every element_at call
-    (k per shingle, ~n shingles per doc) — an O(n²k) re-evaluation
-    Catalyst does not eliminate inside lambda bodies (see
-    _window_occurrences; same fix, measured 5-8×)."""
-    df = df.select("doc_id", tokens_col().alias("_sh_toks"))
-    toks = F.col("_sh_toks")
-    sh = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(k)]
-        ),
-    )
-    out = df.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.when(F.size(toks) >= k, sh).otherwise(F.array()))
-        ).alias("shingle"),
-    )
-    return out
+    With runs of spaces collapsed to one, a shingle starts at the start
+    of the text or after a space, and the lookahead captures it without
+    consuming it, so the shingles overlap.  ``array_distinct`` over
+    strings dedups with a hash set; over the zipped token structs it
+    would compare elements pairwise."""
+    one_spaced = F.regexp_replace(F.col("text"), " +", " ")
+    starts = "(?:^| )(?=([^ ]+" + " [^ ]+" * (k - 1) + "))"
+    sh = F.regexp_extract_all(one_spaced, F.lit(starts), 1)
+    return df.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
 def ngram_jaccard_pairs(
@@ -827,7 +831,7 @@ def span_dedup(
     payload-free beyond the md5 keys.
     """
     # words projected ONCE before the span lambda (the lambda-inlining
-    # pitfall — see shingles()): slice() over the raw split expression
+    # pitfall — see the module docstring): slice() over the raw split expression
     # would re-split the text per span.
     staged = df.select(
         id_col, F.split(F.col(text_col), " ").alias("_sd_words")
@@ -958,7 +962,7 @@ def train_lm(df: DataFrame, text_col: str = "text") -> LmModel:
     words = F.split(F.col(text_col), " ")
     bigrams_of = _bigrams_expr(text_col)
     doc_bigrams = df.select(F.explode(bigrams_of).alias("bg")).select(
-        F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2")
+        *_bigram_rows(F.col("bg"))
     )
     bigram_counts = doc_bigrams.groupBy("w1", "w2").agg(
         F.count("*").alias("c_bigram")
@@ -995,12 +999,18 @@ def load_lm(spark, path: str) -> LmModel:
     )
 
 
-def _bigrams_expr(text_col: str):
-    return F.expr(
-        f"transform(arrays_zip(slice(split({text_col}, ' '), 1, "
-        f"size(split({text_col}, ' ')) - 1), slice(split({text_col}, ' '), 2, "
-        f"size(split({text_col}, ' ')) - 1)), p -> struct(p['0'] as w1, p['1'] as w2))"
-    )
+def _bigrams_expr(text_col: str) -> Column:
+    """Adjacent pairs of the space-split pieces of ``text_col`` (empty
+    pieces included), as an array of arrays_zip's ``struct<0, 1>``: the
+    caller explodes it and names the fields w1 and w2."""
+    words = F.split(F.col(text_col), " ")
+    n = F.size(words) - 1
+    return F.arrays_zip(F.slice(words, 1, n), F.slice(words, 2, n))
+
+
+def _bigram_rows(bg: Column) -> list[Column]:
+    """w1 and w2 of one exploded :func:`_bigrams_expr` element."""
+    return [bg["0"].alias("w1"), bg["1"].alias("w2")]
 
 
 def lm_perplexity(
@@ -1034,7 +1044,7 @@ def lm_perplexity(
     """
     doc_bigrams = df.select(
         id_col, F.explode(_bigrams_expr(text_col)).alias("bg")
-    ).select(id_col, F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    ).select(id_col, *_bigram_rows(F.col("bg")))
 
     if model is None:
         model = train_lm(df, text_col=text_col)
@@ -1570,7 +1580,7 @@ def dedup_lines_within_doc(
     # lines/norms are PROJECTED as columns before the indexed lambda:
     # inlining them would re-evaluate the whole split+transform for
     # every element_at access (the lambda-inlining pitfall documented
-    # at shingles()/_window_occurrences — Catalyst does not
+    # in the module docstring — Catalyst does not
     # subexpression-eliminate inside lambda bodies).
     staged = df.select(
         id_col,
@@ -1689,7 +1699,7 @@ def quality_classifier(
     from pyspark.sql.functions import broadcast
 
     # tokens projected ONCE before the bigram lambda (the
-    # lambda-inlining pitfall — see shingles()): element_at over the
+    # lambda-inlining pitfall — see the module docstring): element_at over the
     # raw tokens_col() expression would re-split the text per bigram.
     staged = df.select(id_col, tokens_col(text_col).alias("_qc_toks"))
     toks = F.col("_qc_toks")
@@ -1927,45 +1937,24 @@ def _window_occurrences(
     8-byte (16 hex nibbles) md5 prefix of the space-joined window
     (row-local).
 
-    Tokens are PROJECTED ONCE before the window lambda: inlining
-    tokens_col() would paste the split+filter into every element_at
-    call (k per window, ~n windows per doc) — an O(n²k) re-evaluation
-    Catalyst does not eliminate inside lambda bodies (measured 5-8×
-    on this op)."""
+    Token j of window i is element i of the slice that starts at token
+    j: zipping the k slices of length n - k + 1 lines up every window as
+    one struct, and posexplode numbers them.  The tokens are
+    projected once, as a column, so the k slices share one split."""
     df = df.select(id_col, tokens_col(text_col).alias("_w_toks"))
     toks = F.col("_w_toks")
+    n_windows = F.greatest(F.size(toks) - k + 1, F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(toks, j + 1, n_windows) for j in range(k)])
+    w = F.col("w")
     # wh is the BINARY unhex of the 16-hex-char md5 prefix: the same
     # equality classes at 8 bytes instead of a 16-char string — narrower
     # group/join keys through the whole dup-window family (§2.3)
-    win = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.struct(
-            (i + 1).cast("int").alias("pos"),
-            F.unhex(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            " ",
-                            *[
-                                F.element_at(toks, (i + j + 1).cast("int"))
-                                for j in range(k)
-                            ],
-                        )
-                    ),
-                    1,
-                    16,
-                )
-            ).alias("wh"),
-        ),
+    wh = F.unhex(
+        F.substring(F.md5(F.concat_ws(" ", *[w[str(j)] for j in range(k)])), 1, 16)
     )
-    return df.select(
-        id_col,
-        F.explode(
-            F.when(F.size(toks) >= k, win).otherwise(
-                F.array().cast("array<struct<pos:int,wh:binary>>")
-            )
-        ).alias("w"),
-    ).select(id_col, F.col("w.pos").alias("pos"), F.col("w.wh").alias("wh"))
+    return df.select(id_col, F.posexplode(zipped).alias("i", "w")).select(
+        id_col, (F.col("i") + 1).alias("pos"), wh.alias("wh")
+    )
 
 
 def _dup_window_occurrences(
@@ -2295,28 +2284,30 @@ def substring_dedup_clean(
         .agg(F.sort_array(F.collect_list("pos")).alias("dps"))
     )
     toks = tokens_col(text_col)
-    joined = df.select(id_col, toks.alias("toks")).join(
-        dup_pos, id_col, "left"
-    )
-    covered = F.array_distinct(
-        F.flatten(
-            F.transform(
-                F.coalesce(F.col("dps"), F.array().cast("array<int>")),
-                lambda p: F.sequence(p, p + k - 1),
-            )
-        )
+    # the covered-index set is projected once per doc, as a column: built
+    # inside the filter lambda it would be rebuilt for every token; a doc
+    # with no duplicated window (no dps) keeps its tokens unfiltered
+    staged = df.select(id_col, toks.alias("toks")).join(dup_pos, id_col, "left")
+    staged = staged.select(
+        id_col,
+        "toks",
+        F.array_distinct(
+            F.flatten(F.transform("dps", lambda p: F.sequence(p, p + k - 1)))
+        ).alias("_cov"),
     )
     kept = F.filter(
-        F.col("toks"),
-        lambda x, i: ~F.array_contains(covered, (i + 1).cast("int")),
+        "toks", lambda x, i: ~F.array_contains(F.col("_cov"), (i + 1).cast("int"))
     )
-    return joined.select(
+    staged = staged.select(
         id_col,
-        F.concat_ws(" ", kept).alias("clean_text"),
+        "toks",
+        F.when(F.col("_cov").isNull(), F.col("toks")).otherwise(kept).alias("_kept"),
+    )
+    return staged.select(
+        id_col,
+        F.concat_ws(" ", "_kept").alias("clean_text"),
         F.size("toks").cast("bigint").alias("n_tokens"),
-        (F.size("toks") - F.size(kept)).cast("bigint").alias(
-            "n_tokens_removed"
-        ),
+        (F.size("toks") - F.size("_kept")).cast("bigint").alias("n_tokens_removed"),
     )
 
 

@@ -165,3 +165,70 @@ def test_daemon_rejects_config_before_the_loop(tmp_path, mode, knob, value):
         )
     assert events == [] and sleeps == []  # no endpoint, no retry
     assert not (tmp_path / "ckpt").exists()
+
+
+PATH_KNOBS = ("input_glob", "output_dir", "checkpoint_dir", "host_meta_path", "lm_model_path")
+
+
+def _path_cfg(tmp_path, **over) -> PipelineConfig:
+    paths = {
+        "input_glob": str(tmp_path / "in" / "*.parquet"),
+        "output_dir": str(tmp_path / "out"),
+        "checkpoint_dir": str(tmp_path / "ckpt"),
+        "host_meta_path": str(tmp_path / "dims" / "host_meta.parquet"),
+        "lm_model_path": str(tmp_path / "model"),
+    }
+    return PipelineConfig(daemon=True, stats_port=0, **{**paths, **over})
+
+
+@pytest.mark.parametrize("knob", PATH_KNOBS)
+def test_path_knob_on_another_filesystem_is_refused(tmp_path, knob):
+    """The driver lists, links and audits every path knob with local file
+    calls, which see nothing on an object store: a knob with any scheme
+    but ``file:`` raises before anything starts or is written (no Spark
+    session needed)."""
+    cfg = _path_cfg(tmp_path, **{knob: f"s3a://bucket/{knob}"})
+    events, sleeps = [], []
+    with pytest.raises(ValueError, match=knob):
+        run_from_config(
+            None, cfg, on_event=events.append, max_iterations=3,
+            sleep_fn=sleeps.append,
+        )
+    assert events == [] and sleeps == []
+    assert not (tmp_path / "ckpt").exists() and not (tmp_path / "out").exists()
+
+
+@pytest.mark.parametrize("knob", PATH_KNOBS)
+def test_path_knob_file_uri_becomes_a_path(tmp_path, knob):
+    from scones.pipeline import _check_knobs, source_for_mode
+
+    plain = _path_cfg(tmp_path)
+    local = getattr(plain, knob)
+    for uri in (f"file://{local}", f"file:{local}", f"file://localhost{local}"):
+        cfg = _check_knobs(_path_cfg(tmp_path, **{knob: uri}), source_for_mode("documents"))
+        assert cfg == plain, uri
+    with pytest.raises(ValueError, match=knob):
+        _check_knobs(
+            _path_cfg(tmp_path, **{knob: f"file://otherhost{local}"}),
+            source_for_mode("documents"),
+        )
+
+
+def test_file_uri_output_dir_commits_the_rows_that_landed(spark, tmp_path):
+    """A ``file://`` output_dir is audited like its path: the committed
+    lineage counts the rows that landed."""
+    from scones.lineage import LineageStore
+    from scones.pipeline import run_snapshot
+
+    write_corpus(str(tmp_path / "in"), n_docs=30, n_files=2, seed=5)
+    cfg = PipelineConfig(
+        input_glob=f"file://{tmp_path}/in/*.parquet",
+        output_dir=f"file://{tmp_path}/out",
+        checkpoint_dir=f"file://{tmp_path}/ckpt",
+        n_sinks=2,
+    )
+    s = run_snapshot(spark, cfg)
+    assert s["snapshot_id"] == 1 and s["rows"] == 30
+    assert s["output"] == f"{tmp_path}/out/snapshot_id=1"
+    rows = LineageStore(str(tmp_path / "ckpt")).read_all().to_pylist()
+    assert sum(r["row_count"] for r in rows) == 30

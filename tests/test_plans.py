@@ -353,3 +353,34 @@ def test_tpch_q6_pushes_all_predicates_to_scan(spark):
     for col in ("l_shipdate", "l_discount", "l_quantity"):
         assert col in scan, scan
     assert plan.count("HashAggregate") >= 2
+
+
+@pytest.mark.parametrize("name", ["clean_corpus", "dedup_near_keep_min", "lm_perplexity"])
+def test_curation_kernels_have_no_lambda(spark, monkeypatch, name):
+    """A higher-order function's lambda runs in the expression
+    interpreter, one array element at a time: the token, shingle and
+    bigram kernels of these queries use none.  A local checkpoint would
+    hide the plan below it, so the checkpoints are skipped here."""
+    frame = type(spark.range(1))
+    monkeypatch.setattr(frame, "localCheckpoint", lambda self, eager=True: self)
+    df = entrymod.queries()[name](spark, SF_DIR)
+    assert "lambdafunction" not in _optimized(df)
+
+
+@pytest.mark.parametrize(
+    "name", ["clean_corpus", "dedup_near_keep_min", "substring_dedup_clean", "lm_perplexity"]
+)
+def test_building_a_curation_query_runs_no_job(spark, count_jobs, name):
+    """The documents table is read with its footer's schema: building the
+    query runs no schema-inference job, nor any other."""
+    _, jobs = count_jobs(lambda: entrymod.queries()[name](spark, SF_DIR))
+    assert jobs == 0
+
+
+def test_non_local_table_is_left_to_spark_inference(spark, count_jobs):
+    """Where the driver cannot open the footer (``sf_dir`` given as a
+    URI, as an object store's would be), ``_t`` leaves the schema to
+    Spark's inference job, and the table reads the same."""
+    df, jobs = count_jobs(lambda: entrymod._t(spark, f"file://{SF_DIR}", "documents"))
+    assert jobs == 1
+    assert df.schema == entrymod._t(spark, SF_DIR, "documents").schema

@@ -290,10 +290,10 @@ def _parquet_fixtures(spark, d) -> list[str]:
 
 
 def test_footer_schema_is_the_inferred_schema(spark, tmp_path):
-    from scones.pipeline import _footer_schema
+    from scones.footer import footer_schema
 
     for path in _parquet_fixtures(spark, tmp_path):
-        derived = _footer_schema(path)
+        derived = footer_schema(path)
         inferred = spark.read.parquet(path).schema
         # a Spark writer stores its columns' nullability; Spark reads
         # every file column as nullable
@@ -308,7 +308,7 @@ def test_footer_schema_leaves_to_spark_what_the_footer_cannot_say(tmp_path):
     get no derived schema: Spark infers those."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from scones.pipeline import _footer_schema
+    from scones.footer import footer_schema
 
     for name, col in (
         ("naive_ts", pa.array([0], pa.timestamp("us"))),
@@ -316,8 +316,8 @@ def test_footer_schema_leaves_to_spark_what_the_footer_cannot_say(tmp_path):
     ):
         path = str(tmp_path / f"{name}.parquet")
         pq.write_table(pa.table({"c": col}), path)
-        assert _footer_schema(path) is None, name
-    assert _footer_schema("s3a://bucket/docs.parquet") is None
+        assert footer_schema(path) is None, name
+    assert footer_schema("s3a://bucket/docs.parquet") is None
 
 
 def test_driver_audit_equals_the_spark_aggregate(spark, tmp_path):
