@@ -39,6 +39,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -119,11 +120,8 @@ class LineageStore:
     #: operator action.  ``0`` disables auto-compaction.
     COMPACT_THRESHOLD = 64
 
-    def __init__(self, checkpoint_dir: str, compact_threshold: int | None = None):
+    def __init__(self, checkpoint_dir: str):
         self.dir = os.path.join(checkpoint_dir, "lineage")
-        self.compact_threshold = (
-            self.COMPACT_THRESHOLD if compact_threshold is None else compact_threshold
-        )
         self._epoch: int | None = None  # set by fence_attempt()
         os.makedirs(self.dir, exist_ok=True)
 
@@ -278,8 +276,8 @@ class LineageStore:
             with contextlib.suppress(OSError):
                 os.remove(tmp)
         if (
-            self.compact_threshold > 0
-            and len(self._loose_files()) >= self.compact_threshold
+            self.COMPACT_THRESHOLD > 0
+            and len(self._loose_files()) >= self.COMPACT_THRESHOLD
         ):
             self.compact_manifest()
         return final
@@ -413,26 +411,74 @@ def lineage_rows_for(
     return rows
 
 
-def backlog_report(store: LineageStore, input_glob: str) -> dict:
-    """Discovered-vs-committed gap (≈ the statistics endpoint's
-    ``position − snapshot_position`` per file, statistics.go:56-75):
-    how much input exists that no committed snapshot covers."""
-    discovered = sorted(globmod.glob(input_glob))
-    lineage = store.read_all().to_pylist()
-    committed = {r["src_file"] for r in lineage}
+def committed_files(store: LineageStore) -> dict[str, dict]:
+    """Each committed file's state, folded from one read of the lineage:
+    ``position`` = its high-water mark (max ``offset_end``), ``rows``,
+    ``bytes`` = the sum of its committed spans and ``snapshots``, the
+    sorted ids that committed it.  Spans, not ``offset_end``: in tail
+    mode ``offset_end`` is cumulative, so a file committed across N
+    snapshots would be counted N times."""
+    t = store.read_all()
+    t = t.append_column("span", pc.subtract(t["offset_end"], t["offset_start"]))
+    g = t.group_by("src_file").aggregate(
+        [
+            ("offset_end", "max"),
+            ("row_count", "sum"),
+            ("span", "sum"),
+            ("snapshot_id", "distinct"),
+        ]
+    )
+    cols = ("src_file", "offset_end_max", "row_count_sum", "span_sum")
+    rows = zip(*(g[c].to_pylist() for c in (*cols, "snapshot_id_distinct")))
     return {
-        "files_discovered": len(discovered),
-        "files_committed": len(committed),
-        "files_pending": [f for f in discovered if f not in committed],
-        "rows_committed": sum(r["row_count"] for r in lineage),
-        # per-row byte spans, not offset_end: in tail mode offset_end is a
-        # cumulative high-water mark, so a file committed across N
-        # snapshots would be counted N times
-        "bytes_committed": sum(
-            r["offset_end"] - r["offset_start"] for r in lineage
-        ),
-        "snapshots": sorted({r["snapshot_id"] for r in lineage}),
+        f: {"position": pos, "rows": n, "bytes": nbytes, "snapshots": sorted(ids)}
+        for f, pos, n, nbytes, ids in rows
     }
+
+
+def file_report(store: LineageStore, input_glob: str) -> tuple[dict, dict]:
+    """Per file and in total, what exists against what is committed (≈
+    the statistics endpoint's ``size`` vs ``snapshot_position``,
+    statistics.go:56-75, 140-159), from one read of the lineage and one
+    glob of the input.
+
+    Returns ``(files, backlog)``.  ``files[path]``: ``size`` (live
+    ``os.stat``, -1 once deleted — statistics.go:150-156), ``position``,
+    ``rows_committed``, ``backlog_bytes`` = size - position and
+    ``snapshots``.  ``backlog``: how much input exists that no committed
+    snapshot covers."""
+    state = committed_files(store)
+    discovered = sorted(globmod.glob(input_glob))
+    none = {"position": 0, "rows": 0, "snapshots": []}
+    files = {}
+    for path in sorted(set(discovered) | set(state)):
+        try:
+            size = os.stat(path).st_size
+        except OSError:
+            size = -1  # deleted (the reference reports -1 too)
+        c = state.get(path, none)
+        files[path] = {
+            "size": size,
+            "position": c["position"],
+            "rows_committed": c["rows"],
+            "backlog_bytes": size - c["position"] if size >= 0 else 0,
+            "snapshots": c["snapshots"],
+        }
+    backlog = {
+        "files_discovered": len(discovered),
+        "files_committed": len(state),
+        "files_pending": [f for f in discovered if f not in state],
+        "rows_committed": sum(c["rows"] for c in state.values()),
+        "bytes_committed": sum(c["bytes"] for c in state.values()),
+        "snapshots": sorted({i for c in state.values() for i in c["snapshots"]}),
+    }
+    return files, backlog
+
+
+def backlog_report(store: LineageStore, input_glob: str) -> dict:
+    """The discovered-vs-committed gap: the backlog of
+    :func:`file_report`."""
+    return file_report(store, input_glob)[1]
 
 
 def vacuum_orphans(store: LineageStore, output_dir: str) -> list[str]:

@@ -10,7 +10,7 @@ driver-side bookkeeping:
     → static fields                                ≈ decoration (O6)
     → sink_id route (+ observed metrics)           ≈ routing (O9), statistics (O14)
     → [spread repartition] + partitionBy(sink_id)  ≈ ship (O7/O8/O10)
-    → audit what landed → lineage rows
+    → count what landed per sink, audit it → lineage rows
     → dedup index / LM scores (optional side tables)
     → publish lineage + the run row (one link)     ≈ ack + Bolt txn (O11/O14)
 
@@ -45,6 +45,7 @@ import signal
 import threading
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -108,18 +109,33 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
     spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
 
 
-def _has_part_files(snap_dir: str) -> bool:
-    """True iff the snapshot directory holds at least one parquet part.
+def _count_landed(snap_dir: str, n_sinks: int) -> dict:
+    """What landed in each sink of a written snapshot, from one listing
+    of its ``sink_id=K`` dirs: ``sink_rows`` from each part's footer,
+    ``sink_bytes`` and ``written_at`` (the newest mtime) from its stat,
+    lists indexed by sink id.
 
     An all-empty snapshot (every planned input had zero rows) writes
-    only _SUCCESS; distinguishing that from a failed/unreadable write
-    must be an explicit listing, not an exception guess.
+    only _SUCCESS and counts no bytes; telling that apart from a failed
+    or unreadable write must be this explicit listing, not an exception
+    guess.
     """
-    for root, _, fnames in os.walk(snap_dir):
-        for f in fnames:
-            if f.endswith(".parquet"):
-                return True
-    return False
+    rows, nbytes, written_at = [0] * n_sinks, [0] * n_sinks, [0.0] * n_sinks
+    with os.scandir(snap_dir) as sinks:
+        for sink in sinks:
+            if not sink.name.startswith("sink_id="):
+                continue  # _SUCCESS
+            k = int(sink.name.split("=", 1)[1])
+            with os.scandir(sink.path) as parts:
+                for part in parts:
+                    # Spark's .crc files start with a dot
+                    if part.name.startswith(".") or not part.name.endswith(".parquet"):
+                        continue
+                    st = part.stat()
+                    rows[k] += pq.read_metadata(part.path).num_rows
+                    nbytes[k] += st.st_size
+                    written_at[k] = max(written_at[k], st.st_mtime)
+    return {"sink_rows": rows, "sink_bytes": nbytes, "written_at": written_at}
 
 
 def extract_and_enrich(
@@ -344,7 +360,8 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     # on a data-bearing snapshot (transient FS error, corrupt footer) must
     # propagate, never silently commit empty lineage.  On an object
     # store, list via the FS client.
-    landed = snap_dir if _has_part_files(snap_dir) else None
+    sinks = _count_landed(snap_dir, cfg.n_sinks)
+    landed = snap_dir if any(sinks["sink_bytes"]) else None
     rows, fields = source.audit(landed, snapshot_id, work)
     if not rows:
         # nothing to commit (a tail whose new bytes hold no complete
@@ -355,7 +372,7 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     if landed is not None and (cfg.dedup_index or cfg.lm_model_path):
         side = _side_tables(spark, cfg, store, snapshot_id, landed, out.schema)
 
-    summary = {"snapshot_id": snapshot_id, **fields}
+    summary = {"snapshot_id": snapshot_id, **fields, **sinks}
     if obs is not None:
         # an empty snapshot ran zero output tasks → no observed row
         m = obs.get if landed is not None else {}
@@ -390,22 +407,6 @@ def run_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
     return _run_snapshot(spark, cfg, source_for_mode("documents"))
 
 
-def run_warc_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
-    """WARC-shard flavor of :func:`run_snapshot`: Common-Crawl-style
-    containers in, routed parquet sinks out, same lineage/commit
-    protocol (shards are immutable → file-granularity admission, like
-    the parquet path).
-    """
-    return _run_snapshot(spark, cfg, source_for_mode("warc"))
-
-
-def run_jsonl_snapshot(spark: SparkSession, cfg: PipelineConfig) -> dict:
-    """JSONL-shard flavor (.jsonl / .jsonl.gz — the other common web-
-    corpus distribution format): same lineage/commit protocol; parsing
-    is fully JVM-side (see scones/jsonl.py)."""
-    return _run_snapshot(spark, cfg, source_for_mode("jsonl"))
-
-
 # Every ingest mode :func:`snapshot_fn_for_mode` runs; the CLI's
 # ``--mode`` choices come from here.
 MODES = ("documents", "tail", "warc", "jsonl")
@@ -428,10 +429,6 @@ def source_for_mode(mode: str):
 
 def snapshot_fn_for_mode(mode: str):
     """The per-mode snapshot runner, one per name in :data:`MODES`."""
-    if mode == "warc":
-        return run_warc_snapshot
-    if mode == "jsonl":
-        return run_jsonl_snapshot
     if mode == "documents":
         return run_snapshot
     return functools.partial(_run_snapshot, source=source_for_mode(mode))
@@ -462,10 +459,7 @@ def run_from_config(
         from .statsserver import StatisticsServer
 
         srv = StatisticsServer(
-            cfg.checkpoint_dir,
-            cfg.input_glob,
-            port=cfg.stats_port,
-            output_dir=cfg.output_dir,
+            cfg.checkpoint_dir, cfg.input_glob, port=cfg.stats_port
         ).start()
         if on_event is not None:
             on_event(

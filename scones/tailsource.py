@@ -66,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import PipelineConfig
-from .lineage import LineageStore
+from .lineage import LineageStore, committed_files
 from .pipeline import _run_snapshot
 
 # Largest byte range one work unit frames.  A unit's lines become one Arrow
@@ -85,13 +85,10 @@ def plan_tail_work(store: LineageStore, input_glob: str) -> list[tuple[str, int]
     """(file, start_offset) units: new files start at 0; grown files at
     their committed high-water mark; fully-consumed files are skipped
     (size <= hwm — supervisor.go:308-313)."""
-    lineage = store.read_all().to_pylist()
-    hwm: dict[str, int] = {}
-    for r in lineage:
-        hwm[r["src_file"]] = max(hwm.get(r["src_file"], 0), r["offset_end"])
+    state = committed_files(store)
     work = []
     for path in sorted(globmod.glob(input_glob)):
-        start = hwm.get(path, 0)
+        start = state[path]["position"] if path in state else 0
         if os.path.getsize(path) > start:
             work.append((path, start))
     return work

@@ -12,7 +12,7 @@ are ``CodegenFallback``, so the generated code of their stage calls out
 to the interpreter for them.  The hot kernels of the curation
 queries therefore use none: tokens are ``array_remove`` of ``split``,
 shingles one lookahead ``regexp_extract_all``, token windows and
-bigrams ``arrays_zip`` of ``slice``s exploded by the caller.  Where an
+bigrams ``arrays_zip`` of ``slice``s, exploded or inlined.  Where an
 op keeps a lambda, its array is projected as a column before it: an
 expression pasted into a lambda body is evaluated again for every
 element, and Catalyst does not eliminate common subexpressions inside
@@ -960,10 +960,7 @@ def train_lm(df: DataFrame, text_col: str = "text") -> LmModel:
     unigram table's row count.  The bigram extraction is row-local
     (the same arrays_zip-of-slices expression as scoring)."""
     words = F.split(F.col(text_col), " ")
-    bigrams_of = _bigrams_expr(text_col)
-    doc_bigrams = df.select(F.explode(bigrams_of).alias("bg")).select(
-        *_bigram_rows(F.col("bg"))
-    )
+    doc_bigrams = df.select(_bigrams_expr(text_col))
     bigram_counts = doc_bigrams.groupBy("w1", "w2").agg(
         F.count("*").alias("c_bigram")
     )
@@ -1000,17 +997,15 @@ def load_lm(spark, path: str) -> LmModel:
 
 
 def _bigrams_expr(text_col: str) -> Column:
-    """Adjacent pairs of the space-split pieces of ``text_col`` (empty
-    pieces included), as an array of arrays_zip's ``struct<0, 1>``: the
-    caller explodes it and names the fields w1 and w2."""
-    words = F.split(F.col(text_col), " ")
-    n = F.size(words) - 1
-    return F.arrays_zip(F.slice(words, 1, n), F.slice(words, 2, n))
-
-
-def _bigram_rows(bg: Column) -> list[Column]:
-    """w1 and w2 of one exploded :func:`_bigrams_expr` element."""
-    return [bg["0"].alias("w1"), bg["1"].alias("w2")]
+    """A generator of the adjacent pairs (w1, w2) of the space-split
+    pieces of ``text_col`` (empty pieces included), one row per pair:
+    ``inline`` of an ``arrays_zip`` of two slices.  One SQL-text
+    expression: built from ``F.*`` calls it costs a py4j round trip per
+    call, and the LM builds it twice."""
+    words = f"split({text_col}, ' ')"
+    n = f"size({words}) - 1"
+    pairs = f"arrays_zip(slice({words}, 1, {n}), slice({words}, 2, {n}))"
+    return F.expr(f"inline({pairs}) AS (w1, w2)")
 
 
 def lm_perplexity(
@@ -1042,9 +1037,7 @@ def lm_perplexity(
     a big one hash-joins.  Single-doc-token edge: docs with < 2 tokens
     get H = 0 (no bigrams).
     """
-    doc_bigrams = df.select(
-        id_col, F.explode(_bigrams_expr(text_col)).alias("bg")
-    ).select(id_col, *_bigram_rows(F.col("bg")))
+    doc_bigrams = df.select(id_col, _bigrams_expr(text_col))
 
     if model is None:
         model = train_lm(df, text_col=text_col)

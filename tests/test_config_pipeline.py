@@ -41,16 +41,12 @@ def test_operational_knobs_roundtrip_json(tmp_path):
 def test_mode_dispatch_covers_all_formats():
     import pytest
 
-    from scones.pipeline import (
-        run_jsonl_snapshot,
-        run_snapshot,
-        run_warc_snapshot,
-    )
+    from scones.pipeline import _run_snapshot, run_snapshot
 
     assert snapshot_fn_for_mode("documents") is run_snapshot
-    assert snapshot_fn_for_mode("warc") is run_warc_snapshot
-    assert snapshot_fn_for_mode("jsonl") is run_jsonl_snapshot
-    assert callable(snapshot_fn_for_mode("tail"))
+    for mode in ("tail", "warc", "jsonl"):
+        fn = snapshot_fn_for_mode(mode)
+        assert fn.func is _run_snapshot and fn.keywords["source"].mode == mode
     with pytest.raises(ValueError):
         snapshot_fn_for_mode("nope")
 

@@ -47,13 +47,13 @@ def watch():
     die()
 threading.Thread(target=watch, daemon=True).start()
 """,
-    # the write job finished; nothing audited yet
+    # the write job finished and what landed is counted; nothing audited
     "after_write": """
-real = scones.pipeline._has_part_files
-def killed(snap_dir):
-    real(snap_dir)
+real = scones.pipeline._count_landed
+def killed(*a):
+    real(*a)
     die()
-scones.pipeline._has_part_files = killed
+scones.pipeline._count_landed = killed
 """,
     # the .tmp-<uuid> manifest is written but never linked
     "before_publish": """
@@ -127,9 +127,7 @@ def _assert_counters(cfg, *summaries):
     for s in summaries:
         assert runs[committed.index(s["snapshot_id"])] == persist_run_metrics(s)
     assert not os.path.exists(os.path.join(cfg.checkpoint_dir, "metrics"))
-    sinks = stats_payload(cfg.checkpoint_dir, cfg.input_glob, cfg.output_dir)[
-        "sinks"
-    ]
+    sinks = stats_payload(cfg.checkpoint_dir, cfg.input_glob)["sinks"]
     lineage_rows = sum(store.read_all(columns=["row_count"]).column(0).to_pylist())
     assert sum(s["rows_sent"] for s in sinks.values()) == lineage_rows
 

@@ -57,7 +57,9 @@ def test_jsonl_pipeline_mode_end_to_end(spark, tmp_path):
     framing + routing equality vs the oracle."""
     from scones.config import PipelineConfig
     from scones.oracle import extract_text
-    from scones.pipeline import run_jsonl_snapshot
+    from scones.pipeline import snapshot_fn_for_mode
+
+    run = snapshot_fn_for_mode("jsonl")
 
     recs = _recs(0, 30)
     shards = tmp_path / "shards"
@@ -70,11 +72,11 @@ def test_jsonl_pipeline_mode_end_to_end(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_sinks=3,
     )
-    s1 = run_jsonl_snapshot(spark, cfg)
+    s1 = run(spark, cfg)
     assert s1["snapshot_id"] == 1 and s1["rows"] == 20
-    assert run_jsonl_snapshot(spark, cfg)["snapshot_id"] is None  # no-op rerun
+    assert run(spark, cfg)["snapshot_id"] is None  # no-op rerun
     write_jsonl(str(shards / "s2.jsonl"), recs[20:])
-    s3 = run_jsonl_snapshot(spark, cfg)
+    s3 = run(spark, cfg)
     assert s3["rows"] == 10
 
     got = {
@@ -109,7 +111,9 @@ def test_export_jsonl_roundtrip(spark, tmp_path):
     ingestion contract)."""
     from scones.config import PipelineConfig
     from scones.export import export_jsonl
-    from scones.pipeline import run_jsonl_snapshot
+    from scones.pipeline import snapshot_fn_for_mode
+
+    run = snapshot_fn_for_mode("jsonl")
 
     recs = _recs(0, 20)
     shards = tmp_path / "in"
@@ -120,7 +124,7 @@ def test_export_jsonl_roundtrip(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_sinks=3,
     )
-    s = run_jsonl_snapshot(spark, cfg)
+    s = run(spark, cfg)
     snap_dir = str(tmp_path / "out" / "snapshot_id=1")
     res = export_jsonl(spark, snap_dir, str(tmp_path / "export"))
     assert res["rows"] == s["rows"] == 20

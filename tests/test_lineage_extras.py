@@ -123,11 +123,12 @@ def _fake_rows(sid: int) -> list[dict]:
     ]
 
 
-def test_manifest_compaction_folds_to_one_file(tmp_path):
+def test_manifest_compaction_folds_to_one_file(tmp_path, monkeypatch):
     """50+ per-commit manifests fold into one base; planning afterwards
     reads ≤2 manifest files (base + at most the newest loose commit) and
     every store query is unchanged (round-3 verdict item 2)."""
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    store = LineageStore(str(tmp_path / "ckpt"))
     for sid in range(1, 56):
         store.commit(sid, _fake_rows(sid))
     assert len(store._files()) == 55
@@ -154,10 +155,11 @@ def test_manifest_compaction_folds_to_one_file(tmp_path):
     assert store.committed_snapshots() == list(range(1, 57))
 
 
-def test_manifest_auto_compaction_on_commit(tmp_path):
-    """The daemon path needs no operator action: once ``compact_threshold``
+def test_manifest_auto_compaction_on_commit(tmp_path, monkeypatch):
+    """The daemon path needs no operator action: once ``COMPACT_THRESHOLD``
     loose manifests accumulate, commit() folds them automatically."""
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=10)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 10)
+    store = LineageStore(str(tmp_path / "ckpt"))
     for sid in range(1, 10):
         store.commit(sid, _fake_rows(sid))
     assert len(store._loose_files()) == 9  # below threshold: untouched
@@ -167,13 +169,14 @@ def test_manifest_auto_compaction_on_commit(tmp_path):
     assert store.committed_snapshots() == list(range(1, 11))
 
 
-def test_manifest_compaction_crash_between_publish_and_cleanup(tmp_path):
+def test_manifest_compaction_crash_between_publish_and_cleanup(tmp_path, monkeypatch):
     """A crash after the base rename but before loose-file deletion leaves
     shadowed duplicates on disk; readers must ignore them (fold-point
     rule) and the next compaction removes them."""
     import shutil
 
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    store = LineageStore(str(tmp_path / "ckpt"))
     for sid in range(1, 6):
         store.commit(sid, _fake_rows(sid))
     # simulate the crash: publish the base, but "die" before cleanup by
@@ -232,7 +235,8 @@ def test_manifest_fold_crash_keeps_one_run_per_snapshot(tmp_path, monkeypatch):
 
         return fn
 
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    store = LineageStore(str(tmp_path / "ckpt"))
     for sid in range(1, 6):
         store.commit(sid, _fake_rows(sid), run=run_of(sid))
     store.compact_manifest()  # base_5 + runs_5
@@ -267,11 +271,12 @@ def test_manifest_fold_crash_keeps_one_run_per_snapshot(tmp_path, monkeypatch):
     assert store.runs() == want
 
 
-def test_base_without_runs_file_still_reads_and_folds(tmp_path):
+def test_base_without_runs_file_still_reads_and_folds(tmp_path, monkeypatch):
     """A base folded before runs were kept has no runs file: its runs
     are not recovered (there is no migration), but runs(), commits and
     the next fold keep working."""
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    store = LineageStore(str(tmp_path / "ckpt"))
     for sid in range(1, 4):
         store.commit(sid, _fake_rows(sid), run={"snapshot_id": sid})
     store.compact_manifest()
@@ -283,16 +288,17 @@ def test_base_without_runs_file_still_reads_and_folds(tmp_path):
     assert store.committed_snapshots() == [1, 2, 3, 4]
 
 
-def test_commit_fencing_refuses_stale_attempt(tmp_path):
+def test_commit_fencing_refuses_stale_attempt(tmp_path, monkeypatch):
     """The watchdog race (round-4 ADVICE, medium): an abandoned attempt
     that wakes AFTER the retry committed the same snapshot id must not
     overwrite the retry's manifest with its smaller planned-file set."""
     from scones.lineage import StaleAttemptError
 
-    abandoned = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    abandoned = LineageStore(str(tmp_path / "ckpt"))
     abandoned.fence_attempt()
     # the supervisor relaunches and retries: a NEW store, newer epoch
-    retry = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    retry = LineageStore(str(tmp_path / "ckpt"))
     retry.fence_attempt()
     big = _fake_rows(1) + [
         {
@@ -317,12 +323,13 @@ def test_commit_fencing_refuses_stale_attempt(tmp_path):
     assert not globmod.glob(str(tmp_path / "ckpt" / "lineage" / "*.tmp-*"))
 
 
-def test_commit_refuses_overwrite_of_published_manifest(tmp_path):
+def test_commit_refuses_overwrite_of_published_manifest(tmp_path, monkeypatch):
     """A published snapshot manifest is immutable: even an unfenced store
     (direct harness use) cannot silently replace it."""
     from scones.lineage import StaleAttemptError
 
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    store = LineageStore(str(tmp_path / "ckpt"))
     store.commit(1, _fake_rows(1))
     with pytest.raises(StaleAttemptError):
         store.commit(1, _fake_rows(1))
@@ -342,7 +349,8 @@ def test_commit_link_failure_raises_and_publishes_nothing(tmp_path, monkeypatch)
 
         return fake_link
 
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    store = LineageStore(str(tmp_path / "ckpt"))
     monkeypatch.setattr(os, "link", link_fails(errno.ENOSPC))
     with pytest.raises(OSError) as exc:
         store.commit(1, _fake_rows(1))

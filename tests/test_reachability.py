@@ -26,6 +26,8 @@ KEEP = {
     "simulate_pipeline": "independent oracle of the snapshot pipeline",
     "read_committed": "Iceberg-swap seam pinned by test_storage_contract",
     "vacuum_orphans": "Iceberg-swap seam pinned by test_storage_contract",
+    "backlog_report": "Iceberg-swap seam pinned by test_storage_contract; "
+    "the stats endpoint takes its backlog from file_report",
     "sink_aggregates": "per-sink correctness aggregate; only test_routing "
     "runs it (the sink_aggregates entry query is a hand-built demo)",
     "salted_join": "the paper's hot-host fallback to the broadcast join",

@@ -227,14 +227,14 @@ def test_metrics_row_is_the_summary_and_fenced_out_attempts_write_none(
     from scones.lineage import StaleAttemptError
 
     cfg = _cfg(tmp_path, "documents", _write_inputs("documents", tmp_path))
-    real = scones.pipeline._has_part_files
+    real = scones.pipeline._count_landed
 
-    def superseded(snap_dir):
+    def superseded(*a):
         LineageStore(cfg.checkpoint_dir).fence_attempt()  # a newer attempt
-        return real(snap_dir)
+        return real(*a)
 
     with monkeypatch.context() as m, pytest.raises(StaleAttemptError):
-        m.setattr(scones.pipeline, "_has_part_files", superseded)
+        m.setattr(scones.pipeline, "_count_landed", superseded)
         snapshot_fn_for_mode("documents")(spark, cfg)
     assert LineageStore(cfg.checkpoint_dir).runs() == []
 

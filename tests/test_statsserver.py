@@ -2,6 +2,7 @@
 served JSON equals the lineage-derived state."""
 
 import json
+import os
 import urllib.request
 
 from scones.config import PipelineConfig
@@ -84,8 +85,6 @@ def test_deleted_file_reports_size_minus_one(spark, tmp_path):
     write_corpus(str(tmp_path / "in"), n_docs=10, n_files=1, seed=85)
     run_snapshot(spark, cfg)
     victim = str(tmp_path / "in" / "docs_0000.parquet")
-    import os
-
     os.unlink(victim)
     payload = stats_payload(cfg.checkpoint_dir, cfg.input_glob)
     assert payload["files"][victim]["size"] == -1  # statistics.go:150-156
@@ -99,7 +98,7 @@ def test_per_sink_counters_match_routed_output(spark, tmp_path):
     write_corpus(str(tmp_path / "in"), n_docs=40, n_files=2, seed=86)
     run_snapshot(spark, cfg)
 
-    payload = stats_payload(cfg.checkpoint_dir, cfg.input_glob, cfg.output_dir)
+    payload = stats_payload(cfg.checkpoint_dir, cfg.input_glob)
     truth = {
         str(r["sink_id"]): r["n"]
         for r in spark.read.option("basePath", cfg.output_dir)
@@ -124,7 +123,7 @@ def test_per_sink_counters_match_routed_output(spark, tmp_path):
         str(tmp_path / "in" / "docs_0050.parquet"),
     )
     run_snapshot(spark, cfg)
-    p2 = stats_payload(cfg.checkpoint_dir, cfg.input_glob, cfg.output_dir)
+    p2 = stats_payload(cfg.checkpoint_dir, cfg.input_glob)
     assert sum(s["rows_sent"] for s in p2["sinks"].values()) == 52
     assert sum(
         s["last_chunk_size"]
@@ -133,9 +132,7 @@ def test_per_sink_counters_match_routed_output(spark, tmp_path):
     ) == 12
 
     # the HTTP endpoint serves the same per-sink view
-    srv = StatisticsServer(
-        cfg.checkpoint_dir, cfg.input_glob, output_dir=cfg.output_dir
-    ).start()
+    srv = StatisticsServer(cfg.checkpoint_dir, cfg.input_glob).start()
     try:
         got = json.loads(
             urllib.request.urlopen(
@@ -165,127 +162,124 @@ def test_bytes_committed_sums_spans_not_hwm(tmp_path):
     assert payload["backlog"]["rows_committed"] == 10
 
 
-def test_sink_stats_count_committed_snapshots_only(tmp_path):
-    """A crash leaves routed parts under a snapshot id the lineage never
-    published: they were never sent, so the per-sink counters skip them
-    (read_committed's rule), while a committed snapshot still counts."""
-    import os
-
+def _write_parts(out, sid, rows_per_sink):
+    """One part per sink that got rows under ``out/snapshot_id=sid/``, as
+    a routed write leaves it; returns the snapshot dir."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    out = tmp_path / "out"
-    for sid, n in ((1, 2), (2, 3)):
-        part = out / f"snapshot_id={sid}" / "sink_id=0"
+    snap = os.path.join(out, f"snapshot_id={sid}")
+    os.makedirs(snap)
+    for k, n in enumerate(rows_per_sink):
+        if not n:
+            continue
+        part = os.path.join(snap, f"sink_id={k}")
         os.makedirs(part)
-        urls = pa.table({"url": [f"u{i}" for i in range(n)]})
-        pq.write_table(urls, str(part / "part-0.parquet"))
+        urls = pa.table({"url": [f"u{sid}-{i}" for i in range(n)]})
+        pq.write_table(urls, os.path.join(part, "part-0.parquet"))
+    open(os.path.join(snap, "_SUCCESS"), "w").close()
+    return snap
+
+
+def _commit_landed(store, sid, snap, n_sinks):
+    """Commit snapshot ``sid`` with the run row the snapshot core builds
+    from what landed in ``snap``."""
+    from scones.pipeline import _count_landed
+
+    summary = {"snapshot_id": sid, **_count_landed(snap, n_sinks)}
+    store.commit(sid, [{
+        "snapshot_id": sid, "src_file": f"/in/{sid}.log",
+        "offset_start": 0, "offset_end": 10, "row_count": 1,
+    }], run=persist_run_metrics(summary))
+
+
+def test_sink_stats_count_committed_snapshots_only(tmp_path):
+    """A crash leaves routed parts under a snapshot id the lineage never
+    published: they were never sent, so the per-sink counters skip them,
+    while a committed snapshot still counts.  A run row without sink
+    fields adds nothing."""
+    out = str(tmp_path / "out")
+    snap1 = _write_parts(out, 1, [2, 0])
+    _write_parts(out, 2, [3, 4])  # crash leftover: never committed
     ckpt = str(tmp_path / "ckpt")
-    assert stats_payload(ckpt, str(tmp_path / "*.log"), str(out))["sinks"] == {}
+    assert stats_payload(ckpt, str(tmp_path / "*.log"))["sinks"] == {}
 
-    LineageStore(ckpt).commit(1, [{
-        "snapshot_id": 1, "src_file": "/in/a.parquet",
-        "offset_start": 0, "offset_end": 10, "row_count": 2,
-    }])
-    sinks = stats_payload(ckpt, str(tmp_path / "*.log"), str(out))["sinks"]
-    assert sinks["0"]["rows_sent"] == 2 and sinks["0"]["last_snapshot_id"] == 1
+    store = LineageStore(ckpt)
+    _commit_landed(store, 1, snap1, 2)
+    sinks = stats_payload(ckpt, str(tmp_path / "*.log"))["sinks"]
     assert list(sinks) == ["0"]
-
-
-def test_footer_cache_second_request_reads_zero_footers(spark, tmp_path):
-    """Round-3 verdict item 3: the endpoint must not footer-read every
-    part file on every poll.  With the server's FooterCache, request 2
-    opens ZERO already-seen footers, yields a byte-identical payload,
-    and a new snapshot only costs footer reads for ITS new parts."""
-    from scones.statsserver import FooterCache, sink_stats
-
-    cfg = _cfg(tmp_path)
-    write_corpus(str(tmp_path / "in"), n_docs=40, n_files=2, seed=88)
-    run_snapshot(spark, cfg)
-
-    cache = FooterCache()
-    committed = LineageStore(cfg.checkpoint_dir).committed_snapshots
-    first = sink_stats(cfg.output_dir, committed(), cache)
-    reads_after_first = cache.reads
-    assert reads_after_first > 0
-    second = sink_stats(cfg.output_dir, committed(), cache)
-    assert second == first  # unchanged payload
-    assert cache.reads == reads_after_first  # zero re-reads
-
-    # and matches the uncached computation exactly
-    assert sink_stats(cfg.output_dir, committed()) == first
-
-    # a new snapshot invalidates only its own parts
-    import shutil
-
-    write_corpus(str(tmp_path / "in2"), n_docs=12, n_files=1, seed=89)
-    shutil.copy(
-        str(tmp_path / "in2" / "docs_0000.parquet"),
-        str(tmp_path / "in" / "docs_0050.parquet"),
+    assert sinks["0"]["rows_sent"] == 2 and sinks["0"]["last_snapshot_id"] == 1
+    assert sinks["0"]["bytes_sent"] == os.path.getsize(
+        os.path.join(snap1, "sink_id=0", "part-0.parquet")
     )
-    run_snapshot(spark, cfg)
-    import glob as globmod
-    import os as osmod
 
-    new_parts = len(
-        globmod.glob(
-            osmod.path.join(
-                cfg.output_dir, "snapshot_id=2", "sink_id=*", "*.parquet"
-            )
-        )
-    )
-    third = sink_stats(cfg.output_dir, committed(), cache)
-    assert cache.reads == reads_after_first + new_parts
-    assert sum(s["rows_sent"] for s in third.values()) == 52
-
-    # the server wires one cache across HTTP requests
-    srv = StatisticsServer(
-        cfg.checkpoint_dir, cfg.input_glob, output_dir=cfg.output_dir
-    ).start()
-    try:
-        for _ in range(2):
-            json.loads(
-                urllib.request.urlopen(
-                    f"http://127.0.0.1:{srv.port}/", timeout=10
-                ).read()
-            )
-        assert srv.footer_cache.reads == reads_after_first + new_parts
-    finally:
-        srv.stop()
+    store.commit(2, [], run={"snapshot_id": 2, "rows": 0})
+    assert stats_payload(ckpt, str(tmp_path / "*.log"))["sinks"] == sinks
 
 
 def test_poll_opens_stay_flat_as_history_grows(tmp_path, monkeypatch):
     """A stats poll reads the newest manifest base, its runs file and the
-    loose manifests above the fold, never the whole history: after
-    2·T + 5 and 4·T + 5 commits (T = the fold threshold) one poll opens
-    the same number of parquet files."""
+    loose manifests above the fold, never the whole history, and never
+    the routed output: after 2·T + 5 and 4·T + 5 commits (T = the fold
+    threshold), each with one part per sink, one poll opens the same
+    number of files, none under the output dir, reads the lineage once
+    and globs the input once.  Its per-sink rows are the parts' footer
+    rows."""
+    import glob as globmod
+
     import pyarrow.parquet as pq
 
+    from scones.lineage import file_report
+
     T = LineageStore.COMPACT_THRESHOLD
-    loose = 5
-    ckpt = str(tmp_path / "ckpt")
+    loose, n_sinks = 5, 3
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    input_glob = str(tmp_path / "*.log")
     store = LineageStore(ckpt)
-    opens = []
-    for name in ("read_table", "read_schema", "ParquetFile"):
-        real = getattr(pq, name)
-        monkeypatch.setattr(
-            pq, name, lambda *a, _real=real, **k: opens.append(1) or _real(*a, **k)
-        )
 
     def commit_up_to(n):
         for sid in range(store.next_snapshot_id(), n + 1):
-            store.commit(sid, [{
-                "snapshot_id": sid, "src_file": f"/in/{sid}.log",
-                "offset_start": 0, "offset_end": 10, "row_count": 1,
-            }], run={"snapshot_id": sid, "rows": 1})
+            snap = _write_parts(out, sid, [1 + (sid + k) % 4 for k in range(n_sinks)])
+            _commit_landed(store, sid, snap, n_sinks)
+
+    opened, statted, globbed, reads = [], [], [], []
+    for name in ("read_table", "read_schema", "read_metadata", "ParquetFile"):
+        real = getattr(pq, name)
+        monkeypatch.setattr(
+            pq, name,
+            lambda p, *a, _real=real, **k: opened.append(str(p)) or _real(p, *a, **k),
+        )
+    real_glob = globmod.glob
+    monkeypatch.setattr(
+        globmod, "glob", lambda p, *a, **k: globbed.append(p) or real_glob(p, *a, **k)
+    )
+    real_read_all = LineageStore.read_all
+    monkeypatch.setattr(
+        LineageStore, "read_all",
+        lambda self, *a, **k: reads.append(1) or real_read_all(self, *a, **k),
+    )
+    real_stat = os.stat
+    monkeypatch.setattr(
+        os, "stat", lambda p, *a, **k: statted.append(str(p)) or real_stat(p, *a, **k)
+    )
 
     counts = []
     for n in (2 * T + loose, 4 * T + loose):
         commit_up_to(n)
         assert len(store._loose_files()) == loose
-        opens.clear()
-        payload = stats_payload(ckpt, str(tmp_path / "*.log"), str(tmp_path / "out"))
-        counts.append(len(opens))
+        footer_rows = sum(
+            pq.ParquetFile(p).metadata.num_rows
+            for p in real_glob(os.path.join(out, "snapshot_id=*", "sink_id=*", "*.parquet"))
+        )
+        for seen in (opened, statted, globbed, reads):
+            seen.clear()
+        payload = stats_payload(ckpt, input_glob)
+        assert not [p for p in opened + statted + globbed if p.startswith(out)]
+        counts.append(len(opened))
+        assert globbed.count(input_glob) == 1
+        assert len(reads) == 1
         assert [r["snapshot_id"] for r in payload["runs"]] == list(range(1, n + 1))
         assert [r["snapshot_id"] for r in store.runs()] == list(range(1, n + 1))
+        assert sum(s["rows_sent"] for s in payload["sinks"].values()) == footer_rows
+        assert payload["backlog"] == file_report(store, input_glob)[1]
     assert counts[0] == counts[1] <= 3 * (loose + 1) + 1

@@ -75,11 +75,12 @@ def test_lineage_row_shape_pinned():
     ]
 
 
-def test_commit_publish_is_atomic_and_crash_clean(tmp_path):
+def test_commit_publish_is_atomic_and_crash_clean(tmp_path, monkeypatch):
     """commit() must leave either the published manifest or nothing —
     never a partial file a reader could see (the ACK semantics,
     lumberjack/client.go:124-136)."""
-    store = LineageStore(str(tmp_path / "ckpt"), compact_threshold=0)
+    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
+    store = LineageStore(str(tmp_path / "ckpt"))
     store.commit(
         1,
         [

@@ -171,7 +171,9 @@ def test_warc_pipeline_mode_end_to_end(spark, tmp_path):
     """--mode warc: shards in, routed sinks out, lineage resume —
     incl. gzip members and exact routed-set equality vs the oracle."""
     from scones.config import PipelineConfig
-    from scones.pipeline import run_warc_snapshot
+    from scones.pipeline import snapshot_fn_for_mode
+
+    run = snapshot_fn_for_mode("warc")
 
     ts = datetime(2024, 7, 1, tzinfo=timezone.utc)
     recs = [
@@ -193,12 +195,12 @@ def test_warc_pipeline_mode_end_to_end(spark, tmp_path):
         checkpoint_dir=str(tmp_path / "ckpt"),
         n_sinks=3,
     )
-    s1 = run_warc_snapshot(spark, cfg)
+    s1 = run(spark, cfg)
     assert s1["snapshot_id"] == 1 and s1["rows"] == 20
     # no-op rerun, then a late shard is picked up incrementally
-    assert run_warc_snapshot(spark, cfg)["snapshot_id"] is None
+    assert run(spark, cfg)["snapshot_id"] is None
     write_warc(str(shards / "s2.warc.gz"), recs[20:], gzip_members=True)
-    s3 = run_warc_snapshot(spark, cfg)
+    s3 = run(spark, cfg)
     assert s3["rows"] == 10
 
     got = {
