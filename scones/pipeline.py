@@ -109,33 +109,40 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
     spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
 
 
-def _count_landed(snap_dir: str, n_sinks: int) -> dict:
-    """What landed in each sink of a written snapshot, from one listing
-    of its ``sink_id=K`` dirs: ``sink_rows`` from each part's footer,
+def _count_landed(snap_dir: str, n_sinks: int) -> tuple[str | None, dict]:
+    """What landed in a written snapshot, from one listing of its
+    ``sink_id=K`` dirs: ``landed`` (``snap_dir``, or None when no part
+    landed) and the counters ``sink_rows`` from each part's footer,
     ``sink_bytes`` and ``written_at`` (the newest mtime) from its stat,
     lists indexed by sink id.
 
     An all-empty snapshot (every planned input had zero rows) writes
-    only _SUCCESS and counts no bytes; telling that apart from a failed
-    or unreadable write must be this explicit listing, not an exception
-    guess.
+    only _SUCCESS; telling that apart from a failed or unreadable write
+    must be this explicit listing, not an exception guess.  A row with
+    a null url routes to a null sink, which Spark writes under
+    ``sink_id=__HIVE_DEFAULT_PARTITION__``: its parts count as landed,
+    so the audit commits them, but in no sink's counters.
     """
     rows, nbytes, written_at = [0] * n_sinks, [0] * n_sinks, [0.0] * n_sinks
+    landed = None
     with os.scandir(snap_dir) as sinks:
         for sink in sinks:
             if not sink.name.startswith("sink_id="):
                 continue  # _SUCCESS
-            k = int(sink.name.split("=", 1)[1])
+            k = sink.name.split("=", 1)[1]
+            k = int(k) if k.isdigit() else None
             with os.scandir(sink.path) as parts:
                 for part in parts:
-                    # Spark's .crc files start with a dot
-                    if part.name.startswith(".") or not part.name.endswith(".parquet"):
+                    if not part.name.endswith(".parquet"):
+                        continue
+                    landed = snap_dir
+                    if k is None:
                         continue
                     st = part.stat()
                     rows[k] += pq.read_metadata(part.path).num_rows
                     nbytes[k] += st.st_size
                     written_at[k] = max(written_at[k], st.st_mtime)
-    return {"sink_rows": rows, "sink_bytes": nbytes, "written_at": written_at}
+    return landed, {"sink_rows": rows, "sink_bytes": nbytes, "written_at": written_at}
 
 
 def extract_and_enrich(
@@ -360,8 +367,7 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     # on a data-bearing snapshot (transient FS error, corrupt footer) must
     # propagate, never silently commit empty lineage.  On an object
     # store, list via the FS client.
-    sinks = _count_landed(snap_dir, cfg.n_sinks)
-    landed = snap_dir if any(sinks["sink_bytes"]) else None
+    landed, sinks = _count_landed(snap_dir, cfg.n_sinks)
     rows, fields = source.audit(landed, snapshot_id, work)
     if not rows:
         # nothing to commit (a tail whose new bytes hold no complete

@@ -31,6 +31,10 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .lineage import LineageStore, file_report
 
+# A run row's per-sink lists: folded into ``sinks``, not served per run.
+SINK_FIELDS = ("sink_rows", "sink_bytes", "written_at")
+
+
 def persist_run_metrics(summary: dict) -> dict:
     """Build the run row of one committed snapshot, the row
     :meth:`LineageStore.commit` publishes in the snapshot's manifest
@@ -52,9 +56,7 @@ def persist_run_metrics(summary: dict) -> dict:
         "plan_sec": float(summary.get("plan_sec", 0.0)),
         "write_sec": float(summary.get("write_sec", 0.0)),
         "audit_commit_sec": float(summary.get("audit_commit_sec", 0.0)),
-        "sink_rows": list(summary.get("sink_rows", ())),
-        "sink_bytes": list(summary.get("sink_bytes", ())),
-        "written_at": list(summary.get("written_at", ())),
+        **{f: list(summary.get(f, ())) for f in SINK_FIELDS},
     }
 
 
@@ -65,11 +67,7 @@ def _sink_counters(runs: list[dict]) -> dict[str, dict]:
     part landed there; a run row without sink fields adds nothing."""
     sinks: dict[int, dict] = {}
     for run in runs:
-        counts = zip(
-            run.get("sink_rows", ()),
-            run.get("sink_bytes", ()),
-            run.get("written_at", ()),
-        )
+        counts = zip(*(run.get(f, ()) for f in SINK_FIELDS))
         for k, (n, nbytes, at) in enumerate(counts):
             if not nbytes:
                 continue
@@ -96,12 +94,14 @@ def stats_payload(checkpoint_dir: str, input_glob: str) -> dict:
     """The JSON the endpoint serves (and tests assert against):
     {runs, files, sinks, backlog} — the reference's {clients, files}
     shape with Spark-native meanings.  ``files`` and ``backlog`` are
-    :func:`scones.lineage.file_report`; ``sinks`` folds the run rows."""
+    :func:`scones.lineage.file_report`; ``sinks`` folds the run rows,
+    which ``runs`` serves without their per-sink lists (those would grow
+    the JSON by snapshots × sinks)."""
     store = LineageStore(checkpoint_dir)
     runs = store.runs()
     files, backlog = file_report(store, input_glob)
     return {
-        "runs": runs,
+        "runs": [{k: v for k, v in r.items() if k not in SINK_FIELDS} for r in runs],
         "files": files,
         "sinks": _sink_counters(runs),
         "backlog": backlog,

@@ -9,7 +9,12 @@ from scones.config import PipelineConfig
 from scones.corpus import write_corpus
 from scones.lineage import LineageStore, backlog_report
 from scones.pipeline import run_snapshot
-from scones.statsserver import StatisticsServer, persist_run_metrics, stats_payload
+from scones.statsserver import (
+    SINK_FIELDS,
+    StatisticsServer,
+    persist_run_metrics,
+    stats_payload,
+)
 
 
 def _cfg(tmp_path):
@@ -31,7 +36,12 @@ def test_run_metrics_persisted_per_run(spark, tmp_path):
     assert runs[0]["snapshot_id"] == s1["snapshot_id"]
     assert runs[0]["rows"] == 30
     assert runs[0]["payload_bytes"] == s1["payload_bytes"]
-    assert stats_payload(cfg.checkpoint_dir, cfg.input_glob)["runs"] == runs
+    payload = stats_payload(cfg.checkpoint_dir, cfg.input_glob)
+    # served without the per-sink lists, which only feed ``sinks``
+    assert payload["runs"] == [
+        {k: v for k, v in r.items() if k not in SINK_FIELDS} for r in runs
+    ]
+    assert sum(s["rows_sent"] for s in payload["sinks"].values()) == 30
     # no-op run appends nothing
     run_snapshot(spark, cfg)
     assert LineageStore(cfg.checkpoint_dir).runs() == runs
@@ -186,7 +196,7 @@ def _commit_landed(store, sid, snap, n_sinks):
     from what landed in ``snap``."""
     from scones.pipeline import _count_landed
 
-    summary = {"snapshot_id": sid, **_count_landed(snap, n_sinks)}
+    summary = {"snapshot_id": sid, **_count_landed(snap, n_sinks)[1]}
     store.commit(sid, [{
         "snapshot_id": sid, "src_file": f"/in/{sid}.log",
         "offset_start": 0, "offset_end": 10, "row_count": 1,

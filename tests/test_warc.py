@@ -215,3 +215,41 @@ def test_warc_pipeline_mode_end_to_end(spark, tmp_path):
         ext, sink = got[rec["url"]]
         assert ext == extract_text(rec["html"])
         assert sink == route(rec["url"], 3)
+
+
+def test_warc_record_without_target_uri_commits(spark, tmp_path):
+    """A Common Crawl shard opens with a warcinfo record, which has no
+    WARC-Target-URI.  Its row has a null url and so a null sink, which
+    Spark writes under ``sink_id=__HIVE_DEFAULT_PARTITION__``: the
+    snapshot still commits that row, and no sink's counters hold it."""
+    from scones.config import PipelineConfig
+    from scones.lineage import LineageStore, backlog_report
+    from scones.pipeline import snapshot_fn_for_mode
+    from scones.statsserver import stats_payload
+
+    body = b"software: test\r\n"
+    warcinfo = b"".join([
+        b"WARC/1.0\r\nWARC-Type: warcinfo\r\n",
+        b"WARC-Date: 2024-07-01T00:00:00Z\r\n",
+        f"Content-Length: {len(body)}\r\n\r\n".encode(),
+        body,
+        b"\r\n\r\n",
+    ])
+    shards = tmp_path / "shards"
+    shards.mkdir()
+    write_warc(str(tmp_path / "recs.warc"), _records())
+    (shards / "s0.warc").write_bytes(warcinfo + (tmp_path / "recs.warc").read_bytes())
+    cfg = PipelineConfig(
+        input_glob=str(shards / "*.warc"),
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        n_sinks=2,
+    )
+    s = snapshot_fn_for_mode("warc")(spark, cfg)
+    assert s["snapshot_id"] == 1 and s["rows"] == 4
+    assert (tmp_path / "out/snapshot_id=1/sink_id=__HIVE_DEFAULT_PARTITION__").is_dir()
+    store = LineageStore(cfg.checkpoint_dir)
+    assert store.committed_snapshots() == [1]
+    assert backlog_report(store, cfg.input_glob)["rows_committed"] == 4
+    sinks = stats_payload(cfg.checkpoint_dir, cfg.input_glob)["sinks"]
+    assert sum(v["rows_sent"] for v in sinks.values()) == 3
