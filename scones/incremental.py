@@ -37,6 +37,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scones import layout
 from scones.textops import minhash_bands, verify_candidate_pairs
 
 BAND_INDEX_SUBDIR = "band_index"
@@ -268,16 +269,12 @@ def _update_index_and_probe_locked(
     new_docs = pipeline_doc_view(written, snapshot_id)
     write_band_index(
         new_docs,
-        os.path.join(idx_root, f"snapshot_id={snapshot_id}"),
+        layout.snapshot_dir(idx_root, snapshot_id),
         num_hashes,
         band_size,
         k,
     )
-    committed_idx_dirs = [
-        os.path.join(idx_root, f"snapshot_id={sid}")
-        for sid in committed_ids
-        if os.path.isdir(os.path.join(idx_root, f"snapshot_id={sid}"))
-    ]
+    committed_idx_dirs = list(layout.snapshot_dirs(idx_root, committed_ids).values())
     committed_bands = (
         read_band_index(spark, *committed_idx_dirs)
         if committed_idx_dirs
@@ -287,15 +284,11 @@ def _update_index_and_probe_locked(
         new_docs, committed_bands, num_hashes, band_size, k
     )
     universe = new_docs
-    for sid in committed_ids:
-        d = os.path.join(output_dir, f"snapshot_id={sid}")
-        if os.path.isdir(d):
-            universe = universe.unionByName(
-                pipeline_doc_view(spark.read.parquet(d), sid)
-            )
+    for sid, d in layout.snapshot_dirs(output_dir, committed_ids).items():
+        universe = universe.unionByName(pipeline_doc_view(spark.read.parquet(d), sid))
     pairs = verify_candidate_pairs(cands, universe, k, threshold)
-    pairs_dir = os.path.join(
-        checkpoint_dir, "near_dups", f"snapshot_id={snapshot_id}"
+    pairs_dir = layout.snapshot_dir(
+        os.path.join(checkpoint_dir, "near_dups"), snapshot_id
     )
     pairs.write.mode("overwrite").parquet(pairs_dir)
     n = spark.read.parquet(pairs_dir).count()
@@ -308,22 +301,14 @@ def _update_index_and_probe_locked(
     bloom_root = os.path.join(checkpoint_dir, BLOOM_INDEX_SUBDIR)
     write_exact_index(
         new_docs,
-        os.path.join(fp_root, f"snapshot_id={snapshot_id}"),
-        os.path.join(bloom_root, f"snapshot_id={snapshot_id}"),
+        layout.snapshot_dir(fp_root, snapshot_id),
+        layout.snapshot_dir(bloom_root, snapshot_id),
     )
-    fp_dirs = [
-        os.path.join(fp_root, f"snapshot_id={sid}")
-        for sid in committed_ids
-        if os.path.isdir(os.path.join(fp_root, f"snapshot_id={sid}"))
-    ]
-    bloom_dirs = [
-        os.path.join(bloom_root, f"snapshot_id={sid}")
-        for sid in committed_ids
-        if os.path.isdir(os.path.join(bloom_root, f"snapshot_id={sid}"))
-    ]
+    fp_dirs = list(layout.snapshot_dirs(fp_root, committed_ids).values())
+    bloom_dirs = list(layout.snapshot_dirs(bloom_root, committed_ids).values())
     exact = exact_dups_via_bloom(spark, new_docs, fp_dirs, bloom_dirs)
-    exact_dir = os.path.join(
-        checkpoint_dir, "exact_dups", f"snapshot_id={snapshot_id}"
+    exact_dir = layout.snapshot_dir(
+        os.path.join(checkpoint_dir, "exact_dups"), snapshot_id
     )
     exact.write.mode("overwrite").parquet(exact_dir)
     n_exact = spark.read.parquet(exact_dir).count()
@@ -461,33 +446,16 @@ def merge_blooms(spark: SparkSession, *bloom_dirs: str) -> DataFrame:
     Bloom filters compose by OR, so N snapshots' filters merge into a
     single m/63-row table (still broadcast-sized).
 
-    When every input carries persisted ``m_bits``/``n_hashes`` columns
-    (write_exact_index), the merge VALIDATES that all inputs share one
+    Every input carries its persisted ``m_bits``/``n_hashes`` columns
+    (write_exact_index).  The merge VALIDATES that all inputs share one
     parameter set — OR-ing words of differently-sized filters would
     produce silent false negatives — and carries the parameters through
     for downstream probe validation.  The check is a row-level
-    raise_error, so it costs no extra job.  Mixing legacy (parameterless)
-    inputs with parameterized ones raises ValueError: the legacy words
-    cannot be checked against the others."""
-    frames = [spark.read.parquet(d) for d in bloom_dirs]
-    has_params = [
-        "m_bits" in f.columns and "n_hashes" in f.columns for f in frames
-    ]
-    with_params = all(has_params)
-    if any(has_params) and not with_params:
-        legacy = [d for d, h in zip(bloom_dirs, has_params) if not h]
-        raise ValueError(
-            "merge_blooms: mixed inputs — some carry persisted m_bits/"
-            f"n_hashes and {legacy} do not, so the merge cannot be validated"
-        )
-    cols = ["widx", "bits"] + (["m_bits", "n_hashes"] if with_params else [])
-    words = frames[0].select(*cols)
-    for f in frames[1:]:  # per-dir reads: see read_band_index
-        words = words.unionByName(f.select(*cols))
-    if not with_params:
-        return words.groupBy("widx").agg(
-            F.expr("bit_or(bits)").alias("bits")
-        )
+    raise_error, so it costs no extra job."""
+    cols = ["widx", "bits", "m_bits", "n_hashes"]
+    words = spark.read.parquet(bloom_dirs[0]).select(*cols)
+    for d in bloom_dirs[1:]:  # per-dir reads: see read_band_index
+        words = words.unionByName(spark.read.parquet(d).select(*cols))
     merged = words.groupBy("widx").agg(
         F.expr("bit_or(bits)").alias("bits"),
         F.min("m_bits").alias("_m_lo"),
@@ -544,29 +512,26 @@ def exact_dups_via_bloom(
             "committed_doc", F.lit("")
         ).select("new_doc", "committed_doc")
     bloom = merge_blooms(spark, *committed_bloom_dirs)
-    if "m_bits" in bloom.columns:
-        # persisted parameters must equal the probe's (round-5 ADVICE:
-        # a mismatch silently yields false negatives) — row-level check,
-        # no extra job, fails loudly
-        ok = (F.col("m_bits") == int(m_bits)) & (
-            F.col("n_hashes") == int(n_hashes)
+    # persisted parameters must equal the probe's (round-5 ADVICE: a
+    # mismatch silently yields false negatives) — row-level check, no
+    # extra job, fails loudly
+    ok = (F.col("m_bits") == int(m_bits)) & (F.col("n_hashes") == int(n_hashes))
+    boom = F.raise_error(
+        F.concat(
+            F.lit(
+                "exact_dups_via_bloom: probe parameters "
+                f"(m_bits={int(m_bits)}, n_hashes={int(n_hashes)}) "
+                "do not match the persisted index ("
+            ),
+            F.col("m_bits").cast("string"),
+            F.lit(", "),
+            F.col("n_hashes").cast("string"),
+            F.lit(") — probing would yield false negatives"),
         )
-        boom = F.raise_error(
-            F.concat(
-                F.lit(
-                    "exact_dups_via_bloom: probe parameters "
-                    f"(m_bits={int(m_bits)}, n_hashes={int(n_hashes)}) "
-                    "do not match the persisted index ("
-                ),
-                F.col("m_bits").cast("string"),
-                F.lit(", "),
-                F.col("n_hashes").cast("string"),
-                F.lit(") — probing would yield false negatives"),
-            )
-        )
-        bloom = bloom.select(
-            "widx", F.when(ok, F.col("bits")).otherwise(boom).alias("bits")
-        )
+    )
+    bloom = bloom.select(
+        "widx", F.when(ok, F.col("bits")).otherwise(boom).alias("bits")
+    )
     flagged = (
         bloom_probe(new_fp, bloom, "fp", m_bits, n_hashes, id_col="new_doc")
         .filter(F.col("maybe_seen"))

@@ -40,9 +40,10 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from . import layout
 
 # Attempt fencing for the watchdog path (round-4 ADVICE, medium): the
 # daemon ABANDONS a hung snapshot attempt (backoff.py), but that thread
@@ -183,12 +184,8 @@ class LineageStore:
         out: list[dict] = []
         for f in files:
             if os.path.basename(f).startswith("base_"):
-                try:
-                    folded = pq.read_table(self._runs_file(self._id_of(f)))
-                except FileNotFoundError:
-                    if os.path.exists(f):
-                        continue  # a base folded before runs were kept
-                    raise  # a concurrent fold replaced it: re-list
+                # no runs file: a concurrent fold replaced it; _read re-lists
+                folded = pq.read_table(self._runs_file(self._id_of(f)))
                 out.extend(json.loads(r) for r in folded.column("run").to_pylist())
             else:
                 meta = pq.read_schema(f).metadata or {}
@@ -320,8 +317,7 @@ class LineageStore:
             pq.write_table(t, tmp, compression="zstd")
             os.replace(tmp, path)  # the base's rename is the publish
         # physical cleanup of everything the new base shadows; bases go
-        # before runs files, so a missing runs file next to a live base
-        # means it was folded before runs were kept
+        # before runs files, so a live base always has its runs file
         for kind in ("base", "runs"):
             for f in globmod.glob(os.path.join(self.dir, f"{kind}_*.parquet")):
                 if self._id_of(f) < fold:
@@ -345,19 +341,19 @@ def plan_new_files(store: LineageStore, input_glob: str) -> list[str]:
     immutable we admit at file granularity (offset_end == file end always).
     """
     seen = store.processed_files()
-    return sorted(f for f in globmod.glob(input_glob) if f not in seen)
+    return [f for f in layout.list_inputs(input_glob) if f not in seen]
 
 
 def lineage_rows_for(
-    landed: str | None,
+    landed: list[str],
     snapshot_id: int,
     planned_files: list[str] | None = None,
 ) -> list[dict]:
     """Per-file lineage from a snapshot's landed parts, read on the driver.
 
-    ``landed`` is the snapshot dir whose parquet parts carry ``src_file``
-    and ``bytes_read`` (extract.py), or None when nothing landed.  Its
-    two columns are read with pyarrow one batch at a time, so the audit
+    ``landed``: the part paths :func:`scones.layout.count_landed` listed
+    (empty when nothing landed).  Their ``src_file`` and ``bytes_read``
+    (extract.py) are read with pyarrow one batch at a time, so the audit
     runs no Spark job: a documents, WARC or JSONL snapshot runs only its
     write job (plus the host-meta broadcast when it enriches).  Per
     file: row_count = all its rows, offset_end = the sum of framed bytes
@@ -369,23 +365,20 @@ def lineage_rows_for(
     consumed and be re-admitted on every run.
     """
     totals: dict[str, list[int]] = {}  # src_file -> [row_count, offset_end]
-    if landed is not None:
-        # default ignore_prefixes skip _SUCCESS and Spark's .crc files
-        dataset = pads.dataset(landed, format="parquet")
-        for batch in dataset.to_batches(columns=["src_file", "bytes_read"]):
-            part = (
-                pa.Table.from_batches([batch])
-                .group_by("src_file")
-                .aggregate([([], "count_all"), ("bytes_read", "sum")])
-            )
-            for src, n, nbytes in zip(
-                part.column("src_file").to_pylist(),
-                part.column("count_all").to_pylist(),
-                part.column("bytes_read_sum").to_pylist(),
-            ):
-                t = totals.setdefault(src, [0, 0])
-                t[0] += n
-                t[1] += nbytes or 0
+    for batch in layout.part_batches(landed, ["src_file", "bytes_read"]):
+        part = (
+            pa.Table.from_batches([batch])
+            .group_by("src_file")
+            .aggregate([([], "count_all"), ("bytes_read", "sum")])
+        )
+        for src, n, nbytes in zip(
+            part.column("src_file").to_pylist(),
+            part.column("count_all").to_pylist(),
+            part.column("bytes_read_sum").to_pylist(),
+        ):
+            t = totals.setdefault(src, [0, 0])
+            t[0] += n
+            t[1] += nbytes or 0
     rows = [
         {
             "snapshot_id": snapshot_id,
@@ -411,66 +404,60 @@ def lineage_rows_for(
     return rows
 
 
-def committed_files(store: LineageStore) -> dict[str, dict]:
-    """Each committed file's state, folded from one read of the lineage:
-    ``position`` = its high-water mark (max ``offset_end``), ``rows``,
-    ``bytes`` = the sum of its committed spans and ``snapshots``, the
-    sorted ids that committed it.  Spans, not ``offset_end``: in tail
-    mode ``offset_end`` is cumulative, so a file committed across N
-    snapshots would be counted N times."""
-    t = store.read_all()
+#: a file's snapshots as the ends and a count, not a list that grows
+_SNAPSHOT_FIELDS = ("first_snapshot", "last_snapshot", "n_snapshots")
+
+
+def committed_files(t: pa.Table) -> dict[str, dict]:
+    """Each committed file's state, folded from ``t``, one read of the
+    lineage: ``position`` = its high-water mark (max ``offset_end``),
+    ``rows``, ``bytes`` = the sum of its committed spans, and the
+    :data:`_SNAPSHOT_FIELDS` of the snapshots that committed it.  Spans,
+    not ``offset_end``: in tail mode ``offset_end`` is cumulative, so a
+    file committed across N snapshots would be counted N times."""
     t = t.append_column("span", pc.subtract(t["offset_end"], t["offset_start"]))
-    g = t.group_by("src_file").aggregate(
-        [
-            ("offset_end", "max"),
-            ("row_count", "sum"),
-            ("span", "sum"),
-            ("snapshot_id", "distinct"),
-        ]
-    )
-    cols = ("src_file", "offset_end_max", "row_count_sum", "span_sum")
-    rows = zip(*(g[c].to_pylist() for c in (*cols, "snapshot_id_distinct")))
-    return {
-        f: {"position": pos, "rows": n, "bytes": nbytes, "snapshots": sorted(ids)}
-        for f, pos, n, nbytes, ids in rows
-    }
+    aggs = [("offset_end", "max"), ("row_count", "sum"), ("span", "sum")]
+    ids = [("snapshot_id", fn) for fn in ("min", "max", "count_distinct")]
+    g = t.group_by("src_file").aggregate(aggs + ids)
+    g = g.select([f"{c}_{fn}" for c, fn in aggs + ids] + ["src_file"])
+    names = ["position", "rows", "bytes", *_SNAPSHOT_FIELDS, "src_file"]
+    return {r.pop("src_file"): r for r in g.rename_columns(names).to_pylist()}
 
 
 def file_report(store: LineageStore, input_glob: str) -> tuple[dict, dict]:
     """Per file and in total, what exists against what is committed (≈
     the statistics endpoint's ``size`` vs ``snapshot_position``,
     statistics.go:56-75, 140-159), from one read of the lineage and one
-    glob of the input.
+    listing of the input (:func:`scones.layout.list_inputs`).
 
-    Returns ``(files, backlog)``.  ``files[path]``: ``size`` (live
-    ``os.stat``, -1 once deleted — statistics.go:150-156), ``position``,
-    ``rows_committed``, ``backlog_bytes`` = size - position and
-    ``snapshots``.  ``backlog``: how much input exists that no committed
-    snapshot covers."""
-    state = committed_files(store)
-    discovered = sorted(globmod.glob(input_glob))
-    none = {"position": 0, "rows": 0, "snapshots": []}
+    Returns ``(files, backlog)``.  ``files[path]``: ``size`` (listed; -1,
+    unstatted, once the glob no longer finds it — statistics.go:150-156),
+    ``position``, ``rows_committed``, ``backlog_bytes`` = size - position
+    and :data:`_SNAPSHOT_FIELDS`.  ``backlog``: how much input exists that
+    no committed snapshot covers, ``n_snapshots`` and ``last_snapshot``."""
+    t = store.read_all()
+    state = committed_files(t)
+    sizes = layout.list_inputs(input_glob)
+    none = {"position": 0, "rows": 0, **dict.fromkeys(_SNAPSHOT_FIELDS, 0)}
     files = {}
-    for path in sorted(set(discovered) | set(state)):
-        try:
-            size = os.stat(path).st_size
-        except OSError:
-            size = -1  # deleted (the reference reports -1 too)
+    for path in sorted(sizes.keys() | state.keys()):
+        size = sizes.get(path, -1)  # deleted (the reference reports -1 too)
         c = state.get(path, none)
         files[path] = {
             "size": size,
             "position": c["position"],
             "rows_committed": c["rows"],
             "backlog_bytes": size - c["position"] if size >= 0 else 0,
-            "snapshots": c["snapshots"],
+            **{k: c[k] for k in _SNAPSHOT_FIELDS},
         }
     backlog = {
-        "files_discovered": len(discovered),
+        "files_discovered": len(sizes),
         "files_committed": len(state),
-        "files_pending": [f for f in discovered if f not in state],
+        "files_pending": [f for f in sizes if f not in state],
         "rows_committed": sum(c["rows"] for c in state.values()),
         "bytes_committed": sum(c["bytes"] for c in state.values()),
-        "snapshots": sorted({i for c in state.values() for i in c["snapshots"]}),
+        "n_snapshots": pc.count_distinct(t["snapshot_id"]).as_py(),
+        "last_snapshot": pc.max(t["snapshot_id"]).as_py() or 0,
     }
     return files, backlog
 
@@ -490,11 +477,7 @@ def vacuum_orphans(store: LineageStore, output_dir: str) -> list[str]:
 
     committed = set(store.committed_snapshots())
     removed = []
-    for p in sorted(globmod.glob(os.path.join(output_dir, "snapshot_id=*"))):
-        try:
-            sid = int(p.rsplit("=", 1)[-1])
-        except ValueError:
-            continue
+    for sid, p in layout.snapshot_dirs(output_dir).items():
         if sid not in committed:
             shutil.rmtree(p, ignore_errors=True)
             removed.append(p)
@@ -520,13 +503,7 @@ def read_committed(
     snaps = store.committed_snapshots()
     if as_of_snapshot is not None:
         snaps = [s for s in snaps if s <= as_of_snapshot]
-    if not snaps:
-        return None
-    paths = [
-        p
-        for i in snaps
-        if os.path.isdir(p := os.path.join(output_dir, f"snapshot_id={i}"))
-    ]
+    paths = list(layout.snapshot_dirs(output_dir, snaps).values())
     if not paths:
         return None
     df = spark.read.option("basePath", output_dir).parquet(*paths)

@@ -11,44 +11,28 @@ action run under readers; on an object store the swap would be a
 metadata commit instead of two renames).
 
 Safety: the rewrite lands in a sibling ``.compacting`` directory, its
-row count is verified against the source, and only then is the swap
-performed.  A crash before the swap leaves the original untouched; the
-stale ``.compacting``/``.old`` dirs are cleaned on the next call.
+row count (from part footers, no Spark job) is verified against the
+source, and only then is the swap performed.  A crash before the swap
+leaves the original untouched; the stale ``.compacting``/``.old`` dirs
+are cleaned on the next call.  Dirs are listed by :mod:`scones.layout`.
 """
 
 from __future__ import annotations
 
-import glob as globmod
 import math
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
+from . import layout
 from .lineage import LineageStore
 
 
-def _dir_stats(snap_dir: str) -> tuple[int, int]:
-    """(total parquet bytes, parquet file count) under a snapshot dir."""
-    total = count = 0
-    for root, _, fnames in os.walk(snap_dir):
-        for f in fnames:
-            if f.endswith(".parquet"):
-                count += 1
-                total += os.path.getsize(os.path.join(root, f))
-    return total, count
-
-
-def _dir_rows(snap_dir: str) -> int:
-    """Exact row count from parquet footers — metadata only, no Spark job."""
-    import pyarrow.parquet as pq
-
-    n = 0
-    for root, _, fnames in os.walk(snap_dir):
-        for f in fnames:
-            if f.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return n
+def _rows(parts: list[layout.Part]) -> int:
+    """Exact row count from the parts' footers — metadata only, no Spark job."""
+    return sum(pq.read_metadata(p.path).num_rows for p in parts)
 
 
 def compact_snapshot(
@@ -71,7 +55,7 @@ def compact_snapshot(
 
     Returns {"files_before", "files_after", "rows", "bytes"}.
     """
-    snap = os.path.join(output_dir, f"snapshot_id={snapshot_id}")
+    snap = layout.snapshot_dir(output_dir, snapshot_id)
     tmp = snap + ".compacting"
     old = snap + ".old"
     # Crash recovery BEFORE debris cleanup: a death between the two swap
@@ -84,16 +68,18 @@ def compact_snapshot(
     for stale in (tmp, old):  # crash debris from a prior attempt
         shutil.rmtree(stale, ignore_errors=True)
 
-    total, files_before = _dir_stats(snap)
-    rows_before = _dir_rows(snap)
+    parts = layout.list_parts(snap)
+    rows_before = _rows(parts)
+    sinks: dict[str, int] = {}  # sink dir → its bytes
+    for p in parts:
+        d = os.path.dirname(p.path)
+        sinks[d] = sinks.get(d, 0) + p.size
 
     os.makedirs(tmp, exist_ok=True)  # an all-empty snapshot still swaps
-    sink_dirs = sorted(globmod.glob(os.path.join(snap, "sink_id=*")))
 
     def rewrite_sink(sink_dir: str) -> None:
         sink_name = os.path.basename(sink_dir)
-        sink_bytes, _ = _dir_stats(sink_dir)
-        k = max(1, math.ceil(sink_bytes / max(target_bytes, 1)))
+        k = max(1, math.ceil(sinks[sink_dir] / max(target_bytes, 1)))
         spark.read.parquet(sink_dir).repartition(k).write.mode(
             "overwrite"
         ).parquet(os.path.join(tmp, sink_name))
@@ -104,9 +90,9 @@ def compact_snapshot(
     # no Spark job at all (round-4 review finding).
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=min(8, max(1, len(sink_dirs)))) as ex:
-        list(ex.map(rewrite_sink, sink_dirs))
-    rows_after = _dir_rows(tmp)
+    with ThreadPoolExecutor(max_workers=min(8, max(1, len(sinks)))) as ex:
+        list(ex.map(rewrite_sink, sorted(sinks)))
+    rows_after = _rows(layout.list_parts(tmp))
     if rows_after != rows_before:
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(
@@ -115,13 +101,12 @@ def compact_snapshot(
     os.rename(snap, old)
     os.rename(tmp, snap)
     shutil.rmtree(old, ignore_errors=True)
-    _, files_after = _dir_stats(snap)
     return {
         "snapshot_id": snapshot_id,
-        "files_before": files_before,
-        "files_after": files_after,
+        "files_before": len(parts),
+        "files_after": len(layout.list_parts(snap)),
         "rows": rows_after,
-        "bytes": total,
+        "bytes": sum(p.size for p in parts),
     }
 
 
@@ -176,13 +161,7 @@ def consolidate_indexes(
     consolidated dir renamed in.  A crash before the swap leaves every
     original untouched.
     """
-    from .incremental import (
-        BAND_INDEX_SUBDIR,
-        BLOOM_INDEX_SUBDIR,
-        FP_INDEX_SUBDIR,
-        index_lock,
-        merge_blooms,
-    )
+    from .incremental import index_lock
 
     # EXCLUSIVE index lock (round-5 ADVICE): the swap below momentarily
     # removes the snapshot_id=max dir and later rmtree's source dirs; a
@@ -216,16 +195,14 @@ def _consolidate_indexes_locked(
         # crash recovery FIRST (compact_snapshot recipe): a death
         # between the two swap renames leaves old/ but no target/ —
         # restore before any cleanup, else the max-id index is lost.
-        for old in globmod.glob(os.path.join(root, "snapshot_id=*.old")):
-            if not os.path.isdir(old[: -len(".old")]):
-                os.rename(old, old[: -len(".old")])
+        live = layout.snapshot_dirs(root)
+        for i, old in layout.snapshot_dirs(root, suffix=".old").items():
+            if i not in live:
+                live[i] = layout.snapshot_dir(root, i)
+                os.rename(old, live[i])
         # only committed snapshots' indexes fold: an uncommitted dir (a
         # crashed attempt's) is rewritten by its rerun and stays put
-        paths = [
-            p
-            for i in committed
-            if os.path.isdir(p := os.path.join(root, f"snapshot_id={i}"))
-        ]
+        paths = [live[i] for i in committed if i in live]
         if len(paths) < 2:
             out[kind] = 0
             continue
@@ -266,7 +243,7 @@ def _consolidate_indexes_locked(
                 )
             else:
                 union.write.mode("overwrite").parquet(tmp)
-            if _dir_rows(tmp) != expected_rows:
+            if _rows(layout.list_parts(tmp)) != expected_rows:
                 raise RuntimeError(f"{kind} consolidation verify failed")
 
         # PROMOTE the consolidated dir into the target name first

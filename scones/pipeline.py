@@ -10,7 +10,7 @@ driver-side bookkeeping:
     → static fields                                ≈ decoration (O6)
     → sink_id route (+ observed metrics)           ≈ routing (O9), statistics (O14)
     → [spread repartition] + partitionBy(sink_id)  ≈ ship (O7/O8/O10)
-    → count what landed per sink, audit it → lineage rows
+    → list what landed (scones.layout), count per sink, audit → lineage rows
     → dedup index / LM scores (optional side tables)
     → publish lineage + the run row (one link)     ≈ ack + Bolt txn (O11/O14)
 
@@ -39,16 +39,15 @@ import argparse
 import dataclasses
 import functools
 import os
-import re
 import shutil
 import signal
 import threading
 import time
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import layout
 from .config import PipelineConfig
 from .enrich import enrich_broadcast, with_host
 from .extract import extract_documents
@@ -83,15 +82,9 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
     no-shuffle pipeline's write parallelism == scan parallelism).  Clamp
     the split size so the scan yields ≈1 split per core, never above
     the 128 MB default (at 100 TB the clamp is a no-op) and never below
-    16 MB (tiny splits = per-task overhead).  On an object store the
-    byte total would come from the table catalog, not os.stat.
+    16 MB (tiny splits = per-task overhead).
     """
-    total = 0
-    for f in files:
-        try:
-            total += os.path.getsize(f)
-        except OSError:
-            return  # non-local input: keep defaults
+    total = sum(os.path.getsize(f) for f in files)
     open_cost = 256 << 10
     splits = max(spark.sparkContext.defaultParallelism, 1)
     # 16 MB floor: tasks smaller than that are dominated by fixed
@@ -107,42 +100,6 @@ def _tune_input_splits(spark: SparkSession, files: list[str]) -> None:
     # openCostInBytes (4 MB default) would inflate small files past the
     # split budget and defeat the sizing
     spark.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-
-
-def _count_landed(snap_dir: str, n_sinks: int) -> tuple[str | None, dict]:
-    """What landed in a written snapshot, from one listing of its
-    ``sink_id=K`` dirs: ``landed`` (``snap_dir``, or None when no part
-    landed) and the counters ``sink_rows`` from each part's footer,
-    ``sink_bytes`` and ``written_at`` (the newest mtime) from its stat,
-    lists indexed by sink id.
-
-    An all-empty snapshot (every planned input had zero rows) writes
-    only _SUCCESS; telling that apart from a failed or unreadable write
-    must be this explicit listing, not an exception guess.  A row with
-    a null url routes to a null sink, which Spark writes under
-    ``sink_id=__HIVE_DEFAULT_PARTITION__``: its parts count as landed,
-    so the audit commits them, but in no sink's counters.
-    """
-    rows, nbytes, written_at = [0] * n_sinks, [0] * n_sinks, [0.0] * n_sinks
-    landed = None
-    with os.scandir(snap_dir) as sinks:
-        for sink in sinks:
-            if not sink.name.startswith("sink_id="):
-                continue  # _SUCCESS
-            k = sink.name.split("=", 1)[1]
-            k = int(k) if k.isdigit() else None
-            with os.scandir(sink.path) as parts:
-                for part in parts:
-                    if not part.name.endswith(".parquet"):
-                        continue
-                    landed = snap_dir
-                    if k is None:
-                        continue
-                    st = part.stat()
-                    rows[k] += pq.read_metadata(part.path).num_rows
-                    nbytes[k] += st.st_size
-                    written_at[k] = max(written_at[k], st.st_mtime)
-    return landed, {"sink_rows": rows, "sink_bytes": nbytes, "written_at": written_at}
 
 
 def extract_and_enrich(
@@ -197,7 +154,7 @@ class _DocsSource:
     def route(self, df: DataFrame, n_sinks: int):
         return observed(with_sink_id(df, n_sinks))
 
-    def audit(self, landed: str | None, snapshot_id: int, files: list[str]):
+    def audit(self, landed: list[str], snapshot_id: int, files: list[str]):
         # zero-row planned files still get a consumed marker
         rows = lineage_rows_for(landed, snapshot_id, planned_files=files)
         shown = files if len(files) <= 8 else files[:3] + ["..."] + files[-1:]
@@ -205,7 +162,7 @@ class _DocsSource:
 
 
 #: the knobs that name a path the driver itself lists, reads, links or
-#: writes (os.walk, glob, os.link, pyarrow's local filesystem)
+#: writes (scones.layout's listings, os.link, pyarrow's local filesystem)
 PATH_KNOBS = (
     "input_glob",
     "output_dir",
@@ -213,30 +170,6 @@ PATH_KNOBS = (
     "host_meta_path",
     "lm_model_path",
 )
-_URI_SCHEME = re.compile(r"([A-Za-z][A-Za-z0-9+.-]*):/")
-
-
-def _local_path(knob: str, value: str) -> str:
-    """``value`` as a local path: a ``file:`` URI loses its scheme, and
-    any other scheme raises (the driver's file calls would see nothing
-    there, and a snapshot would commit zero-row lineage for rows that
-    landed)."""
-    m = _URI_SCHEME.match(value)
-    if m is None:
-        return value
-    if m.group(1).lower() == "file":
-        rest = value[m.end() - 1 :]
-        if rest.startswith("//"):  # file://host/path: only this host
-            host, _, path = rest[2:].partition("/")
-            if host in ("", "localhost"):
-                return "/" + path
-        else:
-            return rest
-    raise ValueError(
-        f"{knob}={value!r}: only local paths and file:// URIs on this "
-        "host are supported; the driver lists, links and audits this "
-        "path with local file calls, which find nothing elsewhere"
-    )
 
 
 def _check_knobs(cfg: PipelineConfig, source) -> PipelineConfig:
@@ -248,7 +181,7 @@ def _check_knobs(cfg: PipelineConfig, source) -> PipelineConfig:
     cfg = dataclasses.replace(
         cfg,
         **{
-            knob: _local_path(knob, value)
+            knob: layout._local_path(knob, value)
             for knob in PATH_KNOBS
             if (value := getattr(cfg, knob))
         },
@@ -278,16 +211,16 @@ def _side_tables(
     cfg: PipelineConfig,
     store: LineageStore,
     snapshot_id: int,
-    landed: str,
+    landed: list[str],
     schema,
 ) -> dict:
     """Dedup-index and LM-score hooks, run before the lineage commit so
     their output is durable once the snapshot counts as committed
     (deterministic overwrite ⇒ a crash-retry rewrites identical files).
-    Both read the landed parts of ``landed`` with the written frame's
-    ``schema``."""
+    Both read the ``landed`` parts with the written frame's ``schema``."""
     info: dict = {}
-    written = spark.read.schema(schema).parquet(landed)
+    snap_dir = layout.snapshot_dir(cfg.output_dir, snapshot_id)
+    written = spark.read.schema(schema).option("basePath", snap_dir).parquet(*landed)
     if cfg.dedup_index:
         # Cross-snapshot dedup: persist this snapshot's band index and
         # probe the committed indexes (scones/incremental.py).
@@ -317,8 +250,8 @@ def _side_tables(
         scores = lm_perplexity(
             pipeline_doc_view(written, snapshot_id), model=model
         )
-        scores_dir = os.path.join(
-            cfg.checkpoint_dir, "lm_scores", f"snapshot_id={snapshot_id}"
+        scores_dir = layout.snapshot_dir(
+            os.path.join(cfg.checkpoint_dir, "lm_scores"), snapshot_id
         )
         scores.write.mode("overwrite").parquet(scores_dir)
         info["lm_scores"] = scores_dir
@@ -354,20 +287,19 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
     routed = spread_within_sinks(routed, cfg.n_sinks, cfg.spread_partitions)
     t_planned = time.perf_counter()
 
-    snap_dir = os.path.join(cfg.output_dir, f"snapshot_id={snapshot_id}")
+    snap_dir = layout.snapshot_dir(cfg.output_dir, snapshot_id)
     # extracted_str is derivable (cast(extracted as string)) — writing it
     # would double the payload bytes on every sink.
     out = routed.drop("html", "extracted_str")
     out.write.mode("overwrite").partitionBy("sink_id").parquet(snap_dir)
     t_written = time.perf_counter()
 
-    # Lineage from the written output (audit of what actually landed).
-    # The empty case is detected EXPLICITLY (no part-files under
-    # snap_dir — an empty write leaves only _SUCCESS): any read failure
-    # on a data-bearing snapshot (transient FS error, corrupt footer) must
-    # propagate, never silently commit empty lineage.  On an object
-    # store, list via the FS client.
-    landed, sinks = _count_landed(snap_dir, cfg.n_sinks)
+    # Lineage from the parts this one listing found (audit of what
+    # actually landed).  The empty case is detected EXPLICITLY (an empty
+    # write leaves only _SUCCESS): any read failure on a data-bearing
+    # snapshot (transient FS error, corrupt footer) must propagate,
+    # never silently commit empty lineage.
+    landed, sinks = layout.count_landed(snap_dir, cfg.n_sinks)
     rows, fields = source.audit(landed, snapshot_id, work)
     if not rows:
         # nothing to commit (a tail whose new bytes hold no complete
@@ -375,13 +307,13 @@ def _run_snapshot(spark: SparkSession, cfg: PipelineConfig, source) -> dict:
         shutil.rmtree(snap_dir, ignore_errors=True)
         return {"snapshot_id": None, **source.idle()}
     side = {}
-    if landed is not None and (cfg.dedup_index or cfg.lm_model_path):
+    if landed and (cfg.dedup_index or cfg.lm_model_path):
         side = _side_tables(spark, cfg, store, snapshot_id, landed, out.schema)
 
     summary = {"snapshot_id": snapshot_id, **fields, **sinks}
     if obs is not None:
         # an empty snapshot ran zero output tasks → no observed row
-        m = obs.get if landed is not None else {}
+        m = obs.get if landed else {}
         summary["rows"] = int(m.get("rows", 0))
         summary["payload_bytes"] = int(m.get("payload_bytes") or 0)
         summary["approx_urls"] = int(m.get("approx_urls", 0))

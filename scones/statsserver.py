@@ -13,10 +13,11 @@ per-client counters and per-file position vs snapshot_position
     counted once at commit;
   * the endpoint reads only the checkpoint store and the input: per sink
     it folds the run rows (the reference counts at send time and serves
-    its counters as they stand); per file it stats the input on each GET
-    (as the reference ``os.Stat``s every file per request,
-    statistics.go:140-159) against the committed offset — the gap is the
-    unacked backlog.  It never lists the routed output.  So
+    its counters as they stand); per file it lists the input on each GET
+    (one glob, one stat per file found, as the reference ``os.Stat``s
+    every file per request, statistics.go:140-159) against the committed
+    offset — the gap is the unacked backlog.  It never lists the routed
+    output and serves the newest :data:`RUNS_SERVED` run rows.  So
     ``bytes_sent`` is what a snapshot wrote: a later
     ``maintenance.compact_snapshot`` rewrite does not change it;
   * served by a stdlib ThreadingHTTPServer — no framework, runs next to
@@ -33,6 +34,9 @@ from .lineage import LineageStore, file_report
 
 # A run row's per-sink lists: folded into ``sinks``, not served per run.
 SINK_FIELDS = ("sink_rows", "sink_bytes", "written_at")
+
+#: how many of the newest run rows a poll serves (``sinks`` folds them all)
+RUNS_SERVED = 64
 
 
 def persist_run_metrics(summary: dict) -> dict:
@@ -94,14 +98,17 @@ def stats_payload(checkpoint_dir: str, input_glob: str) -> dict:
     """The JSON the endpoint serves (and tests assert against):
     {runs, files, sinks, backlog} — the reference's {clients, files}
     shape with Spark-native meanings.  ``files`` and ``backlog`` are
-    :func:`scones.lineage.file_report`; ``sinks`` folds the run rows,
-    which ``runs`` serves without their per-sink lists (those would grow
-    the JSON by snapshots × sinks)."""
+    :func:`scones.lineage.file_report`; ``sinks`` folds every run row;
+    ``runs`` serves the newest :data:`RUNS_SERVED` of them without their
+    per-sink lists (those would grow the JSON by snapshots × sinks)."""
     store = LineageStore(checkpoint_dir)
     runs = store.runs()
     files, backlog = file_report(store, input_glob)
     return {
-        "runs": [{k: v for k, v in r.items() if k not in SINK_FIELDS} for r in runs],
+        "runs": [
+            {k: v for k, v in r.items() if k not in SINK_FIELDS}
+            for r in runs[-RUNS_SERVED:]
+        ],
         "files": files,
         "sinks": _sink_counters(runs),
         "backlog": backlog,

@@ -10,9 +10,9 @@ the batch (supervisor.go:210-249).
 The snapshot loop itself (plan → write → audit → commit) is the one core
 in scones.pipeline; this module supplies its tail source,
 :class:`TailSource`.  Spark-side: the driver plans (file, start, end)
-work units from the lineage store and the file sizes observed at plan
-time; the mapInArrow kernel OPENS AND SEEKS each file and reads only
-``end - start`` bytes — the reference's ``Seek(hwm)`` contract
+work units from the lineage store and one listing of the input
+(scones.layout: one glob, one stat per file); the mapInArrow kernel
+OPENS AND SEEKS each file and reads only ``end - start`` bytes — the reference's ``Seek(hwm)`` contract
 (supervisor.go:315).  A 10 GB log that grew by 2 MB costs 2 MB of I/O
 per snapshot, not 10 GB (the round-1 ``binaryFile`` implementation
 re-read the whole file; the bytes-read invariant is pinned in
@@ -45,26 +45,25 @@ call then costs well under a millisecond.  A file that grew by more than
 :data:`MAX_UNIT_BYTES` is split into several (file, start, end) ranges
 (see :func:`split_work_units`).
 
-The audit reads what landed with pyarrow on the driver, one batch at a
-time, not with Spark jobs: tail mode opens local paths on the host that
-writes the logs, so it is a one-host source, and a snapshot holds only
-the lines appended since the last commit.  The snapshot then runs one
+The audit reads the parts the snapshot core listed with pyarrow on the
+driver, one batch at a time, not with Spark jobs: tail mode opens local
+paths on the host that writes the logs, so it is a one-host source, and
+a snapshot holds only the lines appended since the last commit.  The snapshot then runs one
 Spark job, the write.
 """
 
 from __future__ import annotations
 
-import glob as globmod
 import heapq
 import os
 from collections.abc import Iterator
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import layout
 from .config import PipelineConfig
 from .lineage import LineageStore, committed_files
 from .pipeline import _run_snapshot
@@ -75,27 +74,31 @@ from .pipeline import _run_snapshot
 # grew by more than this between snapshots is framed as several units.
 MAX_UNIT_BYTES = 256 << 20
 
+#: (file, start, end) byte ranges to frame, as :func:`plan_tail_work` plans them
+Work = list[tuple[str, int, int]]
+
 LINE_SCHEMA = (
     "src_file string, line binary, hwm bigint, line_no bigint, "
     "frame_end bigint, bytes_read bigint, unit_start bigint"
 )
 
 
-def plan_tail_work(store: LineageStore, input_glob: str) -> list[tuple[str, int]]:
-    """(file, start_offset) units: new files start at 0; grown files at
+def plan_tail_work(store: LineageStore, input_glob: str) -> Work:
+    """(file, start, end) units: new files start at 0; grown files at
     their committed high-water mark; fully-consumed files are skipped
-    (size <= hwm — supervisor.go:308-313)."""
-    state = committed_files(store)
+    (size <= hwm — supervisor.go:308-313).  ``end`` is the size one
+    listing of the input saw, so each file is statted once."""
+    state = committed_files(store.read_all())
     work = []
-    for path in sorted(globmod.glob(input_glob)):
+    for path, size in layout.list_inputs(input_glob).items():
         start = state[path]["position"] if path in state else 0
-        if os.path.getsize(path) > start:
-            work.append((path, start))
+        if size > start:
+            work.append((path, start, size))
     return work
 
 
 def split_work_units(
-    work: list[tuple[str, int]], max_range_bytes: int
+    work: Work, max_range_bytes: int
 ) -> list[tuple[str, int, int, bool]]:
     """(file, start, end, aligned) units, none longer than
     ``max_range_bytes``.
@@ -112,8 +115,7 @@ def split_work_units(
     file start); non-aligned units must newline-sync first.
     """
     units: list[tuple[str, int, int, bool]] = []
-    for path, start in work:
-        end = os.path.getsize(path)
+    for path, start, end in work:
         if end - start <= max_range_bytes:
             units.append((path, start, end, True))
             continue
@@ -150,15 +152,15 @@ def assign_work_units(
 
 def read_tail(
     spark: SparkSession,
-    work: list[tuple[str, int]],
+    work: Work,
     max_length: int = 0,
 ) -> DataFrame:
     """One row per newly-framed line across all work units, plus one
     sentinel row (line IS NULL) per unit whose frame advanced without
     emitting lines.
 
-    The end offset is pinned at plan time (current size), so a file
-    growing mid-job still yields a consistent snapshot; bytes past
+    Each unit's ``end`` is the size :func:`plan_tail_work` listed, so a
+    file growing mid-job still yields a consistent snapshot; bytes past
     ``end`` are next snapshot's work.  A range longer than
     :data:`MAX_UNIT_BYTES` is split into several units (see
     :func:`split_work_units` for the boundary-ownership rule).
@@ -295,12 +297,10 @@ class TailSource:
     def idle(self) -> dict:
         return {"lines": 0}
 
-    def plan(self, store: LineageStore, input_glob: str) -> list[tuple[str, int]]:
+    def plan(self, store: LineageStore, input_glob: str) -> Work:
         return plan_tail_work(store, input_glob)
 
-    def read(
-        self, spark: SparkSession, cfg: PipelineConfig, work: list[tuple[str, int]]
-    ) -> DataFrame:
+    def read(self, spark: SparkSession, cfg: PipelineConfig, work: Work) -> DataFrame:
         lines = read_tail(spark, work, cfg.max_length)
         return lines.select(
             "src_file",
@@ -321,41 +321,38 @@ class TailSource:
         sink = F.pmod(F.crc32(F.encode(key, "utf-8")), F.lit(n_sinks))
         return df.withColumn("sink_id", sink.cast("int")), None
 
-    def audit(self, landed: str | None, snapshot_id: int, work):
+    def audit(self, landed: list[str], snapshot_id: int, work):
         # per (file, unit): lines (the sentinel, line_no 0, is no line;
         # counting rows, not max(line_no), shows a lost row), the frame
         # end and the unit's ranged-read cost.  bytes_read is constant
         # within a unit, so max-per-unit → sum-per-file is the total bytes
         # the snapshot read from that file, however it was split.
         units: dict[tuple[str, int], list[int]] = {}
-        if landed is not None:
-            # default ignore_prefixes skip _temporary and _SUCCESS
-            dataset = pads.dataset(landed, format="parquet", partitioning="hive")
-            cols = ["src_file", "unit_start", "line_no", "frame_end", "bytes_read"]
-            for batch in dataset.to_batches(columns=cols):
-                counted = batch.append_column(
-                    "n", pc.cast(pc.greater(batch.column("line_no"), 0), pa.int64())
+        cols = ["src_file", "unit_start", "line_no", "frame_end", "bytes_read"]
+        for batch in layout.part_batches(landed, cols):
+            counted = batch.append_column(
+                "n", pc.cast(pc.greater(batch.column("line_no"), 0), pa.int64())
+            )
+            part = (
+                pa.Table.from_batches([counted])
+                .group_by(["src_file", "unit_start"])
+                .aggregate(
+                    [("n", "sum"), ("frame_end", "max"), ("bytes_read", "max")]
                 )
-                part = (
-                    pa.Table.from_batches([counted])
-                    .group_by(["src_file", "unit_start"])
-                    .aggregate(
-                        [("n", "sum"), ("frame_end", "max"), ("bytes_read", "max")]
-                    )
-                    .to_pylist()
-                )
-                for r in part:
-                    u = units.setdefault((r["src_file"], r["unit_start"]), [0, 0, 0])
-                    u[0] += r["n_sum"]
-                    u[1] = max(u[1], r["frame_end_max"])
-                    u[2] = max(u[2], r["bytes_read_max"])
+                .to_pylist()
+            )
+            for r in part:
+                u = units.setdefault((r["src_file"], r["unit_start"]), [0, 0, 0])
+                u[0] += r["n_sum"]
+                u[1] = max(u[1], r["frame_end_max"])
+                u[2] = max(u[2], r["bytes_read_max"])
         files: dict[str, list[int]] = {}
         for (path, _), (n, frame_end, bytes_read) in units.items():
             f = files.setdefault(path, [0, 0, 0])
             f[0] += n
             f[1] = max(f[1], frame_end)
             f[2] += bytes_read
-        starts = dict(work)
+        starts = {path: start for path, start, _ in work}
         # files whose new bytes framed nothing complete (only a partial
         # tail) emit no rows at all — no lineage row, replanned next
         # snapshot (the ranged read makes that re-plan cost just the
@@ -372,7 +369,7 @@ class TailSource:
         ]
         return rows, {
             "lines": sum(r["row_count"] for r in rows),
-            "files": [f for f, _ in work],
+            "files": [f for f, *_ in work],
             "bytes_read": {path: f[2] for path, f in files.items()},
         }
 

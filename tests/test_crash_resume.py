@@ -49,11 +49,11 @@ threading.Thread(target=watch, daemon=True).start()
 """,
     # the write job finished and what landed is counted; nothing audited
     "after_write": """
-real = scones.pipeline._count_landed
+real = scones.layout.count_landed
 def killed(*a):
     real(*a)
     die()
-scones.pipeline._count_landed = killed
+scones.layout.count_landed = killed
 """,
     # the .tmp-<uuid> manifest is written but never linked
     "before_publish": """

@@ -52,7 +52,7 @@ def test_spark_explode_lines_matches_golden(spark, tmp_path):
         for name, data, *_ in cases:
             path = tmp_path / f"{name}.log"
             path.write_bytes(data)
-            work.append((str(path), 0))
+            work.append((str(path), 0, len(data)))
         got = {}
         for r in read_tail(spark, work, max_length=maxlen).collect():
             got.setdefault(r.src_file, []).append((r.line, r.hwm, r.frame_end))

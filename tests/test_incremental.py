@@ -293,28 +293,3 @@ def test_bloom_params_persisted_and_validated(spark, tmp_path):
     write_exact_index(docs, fp_b, bl_b, m_bits=1 << 13, n_hashes=3)
     with pytest.raises(Exception, match="inconsistent persisted Bloom"):
         merge_blooms(spark, bl_a, bl_b).collect()
-
-
-def test_merge_blooms_rejects_legacy_mixed_with_parameterized(spark, tmp_path):
-    """A legacy Bloom dir (no persisted m_bits/n_hashes) merged with a
-    parameterized one fails loudly instead of silently dropping the
-    parameter validation; all-legacy inputs still merge."""
-    import pytest
-
-    from scones.incremental import merge_blooms, write_exact_index
-
-    docs = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    )
-    bl_new = str(tmp_path / "bl_new")
-    write_exact_index(docs, str(tmp_path / "fp_new"), bl_new, m_bits=1 << 12)
-    bl_old = str(tmp_path / "bl_old")
-    spark.read.parquet(bl_new).select("widx", "bits").write.parquet(bl_old)
-
-    with pytest.raises(ValueError, match="mixed inputs"):
-        merge_blooms(spark, bl_new, bl_old)
-    with pytest.raises(ValueError, match="mixed inputs"):
-        merge_blooms(spark, bl_old, bl_new)
-    legacy = merge_blooms(spark, bl_old, bl_old)
-    assert legacy.columns == ["widx", "bits"]
-    assert legacy.count() == spark.read.parquet(bl_old).count()

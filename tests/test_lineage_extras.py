@@ -271,23 +271,6 @@ def test_manifest_fold_crash_keeps_one_run_per_snapshot(tmp_path, monkeypatch):
     assert store.runs() == want
 
 
-def test_base_without_runs_file_still_reads_and_folds(tmp_path, monkeypatch):
-    """A base folded before runs were kept has no runs file: its runs
-    are not recovered (there is no migration), but runs(), commits and
-    the next fold keep working."""
-    monkeypatch.setattr(LineageStore, "COMPACT_THRESHOLD", 0)
-    store = LineageStore(str(tmp_path / "ckpt"))
-    for sid in range(1, 4):
-        store.commit(sid, _fake_rows(sid), run={"snapshot_id": sid})
-    store.compact_manifest()
-    os.remove(os.path.join(store.dir, "runs_000000000003.parquet"))
-    store.commit(4, _fake_rows(4), run={"snapshot_id": 4})
-    assert store.runs() == [{"snapshot_id": 4}]
-    store.compact_manifest()
-    assert store.runs() == [{"snapshot_id": 4}]
-    assert store.committed_snapshots() == [1, 2, 3, 4]
-
-
 def test_commit_fencing_refuses_stale_attempt(tmp_path, monkeypatch):
     """The watchdog race (round-4 ADVICE, medium): an abandoned attempt
     that wakes AFTER the retry committed the same snapshot id must not

@@ -223,18 +223,18 @@ def test_metrics_row_is_the_summary_and_fenced_out_attempts_write_none(
     fence: an attempt a newer one has fenced out (the watchdog's
     abandoned thread) publishes no row, and the row the next attempt
     publishes carries the summary's values."""
-    import scones.pipeline
+    import scones.layout
     from scones.lineage import StaleAttemptError
 
     cfg = _cfg(tmp_path, "documents", _write_inputs("documents", tmp_path))
-    real = scones.pipeline._count_landed
+    real = scones.layout.count_landed
 
     def superseded(*a):
         LineageStore(cfg.checkpoint_dir).fence_attempt()  # a newer attempt
         return real(*a)
 
     with monkeypatch.context() as m, pytest.raises(StaleAttemptError):
-        m.setattr(scones.pipeline, "_count_landed", superseded)
+        m.setattr(scones.layout, "count_landed", superseded)
         snapshot_fn_for_mode("documents")(spark, cfg)
     assert LineageStore(cfg.checkpoint_dir).runs() == []
 

@@ -10,6 +10,7 @@ from scones.corpus import write_corpus
 from scones.lineage import LineageStore, backlog_report
 from scones.pipeline import run_snapshot
 from scones.statsserver import (
+    RUNS_SERVED,
     SINK_FIELDS,
     StatisticsServer,
     persist_run_metrics,
@@ -37,9 +38,11 @@ def test_run_metrics_persisted_per_run(spark, tmp_path):
     assert runs[0]["rows"] == 30
     assert runs[0]["payload_bytes"] == s1["payload_bytes"]
     payload = stats_payload(cfg.checkpoint_dir, cfg.input_glob)
-    # served without the per-sink lists, which only feed ``sinks``
+    # the newest runs, served without the per-sink lists, which only
+    # feed ``sinks``
     assert payload["runs"] == [
-        {k: v for k, v in r.items() if k not in SINK_FIELDS} for r in runs
+        {k: v for k, v in r.items() if k not in SINK_FIELDS}
+        for r in runs[-RUNS_SERVED:]
     ]
     assert sum(s["rows_sent"] for s in payload["sinks"].values()) == 30
     # no-op run appends nothing
@@ -58,7 +61,8 @@ def test_stats_payload_matches_lineage(spark, tmp_path):
     # parquet inputs are consumed whole: no per-file backlog
     assert len(payload["files"]) == 3
     for f in payload["files"].values():
-        assert f["rows_committed"] > 0 and f["snapshots"] == [1]
+        assert f["rows_committed"] > 0
+        assert (f["first_snapshot"], f["last_snapshot"], f["n_snapshots"]) == (1, 1, 1)
 
 
 def test_http_endpoint_serves_live_state(spark, tmp_path):
@@ -194,9 +198,9 @@ def _write_parts(out, sid, rows_per_sink):
 def _commit_landed(store, sid, snap, n_sinks):
     """Commit snapshot ``sid`` with the run row the snapshot core builds
     from what landed in ``snap``."""
-    from scones.pipeline import _count_landed
+    from scones.layout import count_landed
 
-    summary = {"snapshot_id": sid, **_count_landed(snap, n_sinks)[1]}
+    summary = {"snapshot_id": sid, **count_landed(snap, n_sinks)[1]}
     store.commit(sid, [{
         "snapshot_id": sid, "src_file": f"/in/{sid}.log",
         "offset_start": 0, "offset_end": 10, "row_count": 1,
@@ -233,8 +237,10 @@ def test_poll_opens_stay_flat_as_history_grows(tmp_path, monkeypatch):
     the routed output: after 2·T + 5 and 4·T + 5 commits (T = the fold
     threshold), each with one part per sink, one poll opens the same
     number of files, none under the output dir, reads the lineage once
-    and globs the input once.  Its per-sink rows are the parts' footer
-    rows."""
+    and globs the input once.  It stats no input path the glob did not
+    return (every committed file here is gone, and reports size -1), serves
+    the newest RUNS_SERVED run rows, and its backlog JSON does not grow.
+    Its per-sink rows are the parts' footer rows."""
     import glob as globmod
 
     import pyarrow.parquet as pq
@@ -273,7 +279,7 @@ def test_poll_opens_stay_flat_as_history_grows(tmp_path, monkeypatch):
         os, "stat", lambda p, *a, **k: statted.append(str(p)) or real_stat(p, *a, **k)
     )
 
-    counts = []
+    counts, backlog_bytes = [], []
     for n in (2 * T + loose, 4 * T + loose):
         commit_up_to(n)
         assert len(store._loose_files()) == loose
@@ -287,9 +293,20 @@ def test_poll_opens_stay_flat_as_history_grows(tmp_path, monkeypatch):
         assert not [p for p in opened + statted + globbed if p.startswith(out)]
         counts.append(len(opened))
         assert globbed.count(input_glob) == 1
+        # the store's own dir aside (LineageStore makes it), a poll stats
+        # only what the input glob returned
+        assert not {p for p in statted if not p.startswith(ckpt)} - set(
+            real_glob(input_glob)
+        )
+        assert len(payload["files"]) == n
+        assert {f["size"] for f in payload["files"].values()} == {-1}
         assert len(reads) == 1
-        assert [r["snapshot_id"] for r in payload["runs"]] == list(range(1, n + 1))
+        assert [r["snapshot_id"] for r in payload["runs"]] == list(
+            range(n - RUNS_SERVED + 1, n + 1)
+        )
+        backlog_bytes.append(len(json.dumps(payload["backlog"])))
         assert [r["snapshot_id"] for r in store.runs()] == list(range(1, n + 1))
         assert sum(s["rows_sent"] for s in payload["sinks"].values()) == footer_rows
         assert payload["backlog"] == file_report(store, input_glob)[1]
     assert counts[0] == counts[1] <= 3 * (loose + 1) + 1
+    assert backlog_bytes[0] == backlog_bytes[1]

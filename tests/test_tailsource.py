@@ -70,7 +70,7 @@ def test_growing_file_resumes_mid_file(spark, tmp_path):
     ]
     # the trailing partial is still unconsumed → file stays planned
     store = LineageStore(str(tmp_path / "ckpt"))
-    assert plan_tail_work(store, str(logs / "*.log")) == [(str(f), 34)]
+    assert plan_tail_work(store, str(logs / "*.log")) == [(str(f), 34, f.stat().st_size)]
 
 
 def test_max_length_skip_but_advance(spark, tmp_path):
@@ -241,7 +241,7 @@ def test_range_split_parallelizes_one_file(spark, tmp_path):
     logs.mkdir()
     f = logs / "wide.log"
     f.write_bytes(b"z" * 9 + b"\n")
-    units = split_work_units([(str(f), 0)], max_range_bytes=3)
+    units = split_work_units([(str(f), 0, 10)], max_range_bytes=3)
     assert len(units) == 4
     assert units[0] == (str(f), 0, 3, True)
     assert units[-1] == (str(f), 9, 10, False)
@@ -358,10 +358,10 @@ def test_units_share_tasks_balanced_by_planned_bytes(spark, tmp_path, monkeypatc
             for j in range(rng.randrange(5, 120))
         )
         f.write_bytes(body + b"partial")
-        work.append((str(f), 0))
+        work.append((str(f), 0, f.stat().st_size))
     big = logs / "big.log"  # short lines: every 600-byte range owns a line
     big.write_bytes(b"".join(f"big {j}\n".encode() for j in range(500)))
-    work.append((str(big), 0))
+    work.append((str(big), 0, big.stat().st_size))
     max_unit_bytes = 600
     monkeypatch.setattr(tailsource, "MAX_UNIT_BYTES", max_unit_bytes)
 
@@ -392,7 +392,7 @@ def test_units_share_tasks_balanced_by_planned_bytes(spark, tmp_path, monkeypatc
     for sizes in loads.values():
         assert sum(sizes) - lightest <= max(sizes)
 
-    for path, _ in work:
+    for path, *_ in work:
         with open(path, "rb") as fh:
             want = frame_bytes(fh.read())
         got = sorted(
@@ -457,7 +457,7 @@ def test_partial_line_only_snapshot_is_a_noop(spark, tmp_path):
     store = LineageStore(str(tmp_path / "ckpt"))
     assert store.committed_snapshots() == []
     assert not (tmp_path / "out" / "snapshot_id=1").exists()
-    assert plan_tail_work(store, str(logs / "*.log")) == [(str(f), 0)]
+    assert plan_tail_work(store, str(logs / "*.log")) == [(str(f), 0, 28)]
 
     with open(f, "ab") as fh:
         fh.write(b"\n")
@@ -486,5 +486,6 @@ def test_backlog_counts_a_growing_file_once(spark, tmp_path):
     glob = str(logs / "*.log")
     rep = backlog_report(LineageStore(str(tmp_path / "ckpt")), glob)
     assert rep["bytes_committed"] == 30
-    assert rep["rows_committed"] == 5 and rep["snapshots"] == [1, 2]
+    assert rep["rows_committed"] == 5
+    assert (rep["n_snapshots"], rep["last_snapshot"]) == (2, 2)
     assert stats_payload(str(tmp_path / "ckpt"), glob)["backlog"] == rep
